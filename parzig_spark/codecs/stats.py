@@ -120,9 +120,9 @@ def column_bloom(arr: pa.Array) -> tuple[str | None, str | None]:
     own). Min/max cannot prune an equality predicate on a column
     uncorrelated with the sort order (e.g. a point lookup on a random-hex
     ``commit`` — every partition's envelope spans the domain); this bloom
-    lets ``prune_manifests`` drop whole partitions before any task is
-    scheduled. (None, None) for unbloomable types or empty/all-null
-    columns. Capacity caps at 128 Kbit (16 KiB bitmap): partitions holding
+    lets the pruning evaluator (plans/prune.py) drop whole partitions
+    before any task is scheduled. (None, None) for unbloomable types or
+    empty/all-null columns. Capacity caps at 128 Kbit (16 KiB bitmap): partitions holding
     more than ~16 k distinct values overload toward higher false-positive
     rates — over-reading only, never row loss.
 
@@ -145,24 +145,30 @@ def column_bloom(arr: pa.Array) -> tuple[str | None, str | None]:
     return (bl, dom) if bl is not None else (None, None)
 
 
+def bloom_key(domain: str, val) -> "np.uint64 | None":
+    """Probe key of ``val`` in a ``domain`` bloom, or None when the pairing
+    cannot be probed soundly (type/domain mismatch, fractional float,
+    integer outside int64) — callers then keep the page/partition."""
+    if domain == "i64":
+        if isinstance(val, bool) or not isinstance(val, (int, float)):
+            return None
+        if isinstance(val, float):
+            if not val.is_integer():
+                return None  # fractional/NaN/inf: min/max handles it
+            val = int(val)
+        if not -(2**63) <= val < 2**63:
+            return None
+        return np.uint64(np.int64(val))
+    if domain == "str" and isinstance(val, str):
+        return np.uint64(string_bloom_key(val.encode()))
+    return None
+
+
 def bloom_may_contain(bloom_b64: str, domain: str, val) -> bool:
     """False only when the bloom PROVES `val` absent from the page; any
     type/domain mismatch conservatively returns True (never unsound)."""
-    if domain == "i64":
-        if isinstance(val, bool) or not isinstance(val, (int, float)):
-            return True
-        if isinstance(val, float):
-            if val != int(val):
-                return True  # min/max handles it; stay conservative
-            val = int(val)
-        if not -(2**63) <= val < 2**63:
-            return True
-        key = np.uint64(np.int64(val))
-    elif domain == "str":
-        if not isinstance(val, str):
-            return True
-        key = np.uint64(string_bloom_key(val.encode()))
-    else:
+    key = bloom_key(domain, val)
+    if key is None:
         return True
     buf = np.frombuffer(base64.b64decode(bloom_b64), np.uint8)
     m = len(buf) * 8  # power of 2 by construction
@@ -230,7 +236,7 @@ def column_distinct(arr: pa.Array) -> str | None:
     Unlike the bloom (false positives) and the truncated string bounds
     (sound but inexact), this set is EXACT, so it supports membership
     proofs in BOTH directions: exclusion (value not in set → prune,
-    decode.prune_manifests) and inclusion (every set value satisfies the
+    plans/prune.py) and inclusion (every set value satisfies the
     predicate → partition fully covered), plus exact COUNT(DISTINCT) by
     unioning sets across partitions (operators/aggregate.py). None =
     unknown (high cardinality or ineligible type); readers must stay

@@ -9,15 +9,17 @@ string, integer lanes), and exact integer ``stat_min``/``stat_max``, so a
 whole-store COUNT or SUM is a METADATA-scale job — at 10^12-file scale an
 O(manifest-rows) aggregation instead of an O(data) scan.
 
-With predicates the store splits three ways per partition, all Spark-side:
+The driver plans the query from the snapshot's stat rows
+(:mod:`plans.prune`) and splits the store three ways per partition:
 
-- **pruned** — the envelope proves no row matches (prune_manifests);
-- **fully covered** — the envelope proves EVERY non-null row matches
-  (`_inclusion_condition`, the dual of exclusion) and the predicate
-  columns carry no nulls: the partition's stats contribute verbatim;
-- **partial** — everything else (plus any partition touched by a
-  merge-on-read delete bitmap): decoded via the normal pruned/paged path,
-  row-filtered, aggregated, and combined with the metadata half.
+- **pruned** — the stats prove no row matches;
+- **fully covered** — the stats prove EVERY row matches, and every
+  aggregate can be read exactly from the partition's stats (``stat_sum``
+  present for SUM, an exact set for COUNT(DISTINCT) and string extrema,
+  single-valued group columns for GROUP BY, no delete bitmap): the
+  partition's stats contribute verbatim, aggregated Spark-side;
+- **partial** — everything else: decoded via the normal pruned/paged
+  path, row-filtered, aggregated, and combined with the metadata half.
 
 Soundness over speed everywhere: a partition that cannot be PROVEN fully
 covered falls to the decode path — never wrong, only slower.
@@ -25,24 +27,47 @@ covered falls to the decode path — never wrong, only slower.
 
 from __future__ import annotations
 
-import os
-
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans import prune
 from ..plans.manifest import ManifestStore
 from .decode import (
-    _DISTINCT_DDL,
     _arrow_target_type,
-    _inclusion_condition,
     _spark_type,
     decode_table,
     predicate_expr,
-    prune_manifests,
+    prune_manifests,  # noqa: F401 — perfbench/tracing.py wraps it by name
 )
 
 _FNS = ("count", "sum", "min", "max", "null_count", "distinct")
+
+# Parsed shape of the stat_distinct JSON (codecs/stats.py column_distinct):
+# a domain tag + the partition's exact sorted distinct values as canonical
+# strings — parsed with from_json in the Spark-side metadata aggregation.
+_DISTINCT_DDL = "struct<d:string,v:array<string>>"
+
+_META_COLS = [
+    "pid", "column", "n_values", "stat_min", "stat_max", "stat_sum",
+    "stat_nulls", "stat_distinct",
+]
+
+
+def _pids_where(stats: pa.Table, pids: np.ndarray, col: str, row_mask: np.ndarray) -> np.ndarray:
+    """Per-pid flags aligned with ``pids``: True where the pid's stat row
+    for ``col`` satisfies ``row_mask`` (a bool mask over ``stats`` rows)."""
+    sel = pc.equal(stats.column("column"), col).to_numpy(zero_copy_only=False) & row_mask
+    return np.isin(pids, stats.column("pid").to_numpy()[sel])
+
+
+def _stat_rows(spark: SparkSession, stats: pa.Table, pids: np.ndarray) -> DataFrame:
+    """The stat rows (``_META_COLS``) of ``pids`` as a Spark DataFrame —
+    the metadata half's input, taken from the driver plan's table."""
+    rows = np.isin(stats.column("pid").to_numpy(), pids)
+    return spark.createDataFrame(stats.select(_META_COLS).filter(pa.array(rows)))
 
 
 def _column_kinds(store: ManifestStore) -> tuple[dict[str, str], dict[str, str]]:
@@ -96,7 +121,7 @@ def aggregate_store(
     Returns a one-row DataFrame with columns named ``{fn}_{column}``
     (``count_star``); with ``return_plan=True``, returns ``(df, plan)``
     where plan reports how many partitions were pruned / answered from
-    metadata / decoded (two metadata-scale count actions).
+    metadata / decoded (read off the driver plan — no extra Spark job).
 
     sum is metadata-eligible on integer-lane columns only (exact decimal
     strings; float sums are order-dependent); min/max are metadata-
@@ -153,92 +178,42 @@ def aggregate_store(
         if col != "*"
     ) and all(kinds.get(g) in ("int", "str") for g in group_by or [])
 
+    # ---- driver plan: prune, then split survivors into fully covered
+    # (answered from stats) and partial (decoded) --------------------------
     snap = store.fresh_snapshot()
-    manifests = spark.read.parquet(snap).select(
-        "pid", "column", "n_values", "stat_min", "stat_max",
-        "stat_bloom", "stat_bloom_dom", "stat_sum", "stat_nulls",
-        "stat_distinct",
-    )
-    if predicates:
-        manifests = prune_manifests(manifests, predicates)
-
-    delete_pids = sorted(store.delete_touched_pids())
-    delete_df = (
-        spark.createDataFrame([(p,) for p in delete_pids], "pid long")
-        if delete_pids
-        else None
-    )
-
-    # ---- classify survivors: fully covered vs partial ----------------------
-    if not meta_capable:
-        full_pids = manifests.select("pid").distinct().limit(0)
-    elif predicates:
-        flags = []
-        for i, (col_name, op, val) in enumerate(predicates):
-            incl = _inclusion_condition(
-                op, val, kinds.get(col_name, "other"), has_distinct=True
-            )
-            flags.append(
-                F.max(
-                    F.when(
-                        (F.col("column") == col_name)
-                        & (F.col("stat_nulls") == 0)
-                        & incl,
-                        1,
-                    ).otherwise(0)
-                ).alias(f"_f{i}")
-            )
-        per_pid = manifests.groupBy("pid").agg(*flags)
-        cond = F.lit(True)
-        for i in range(len(predicates)):
-            cond = cond & (F.col(f"_f{i}") == 1)
-        full_pids = per_pid.filter(cond).select("pid")
-    else:
-        full_pids = manifests.select("pid").distinct()
-    # sum-eligibility per pid: stat_sum present (or the column all-null);
-    # distinct-eligibility: the exact set must be recorded for the column
-    for fn, col in aggs:
-        if fn == "sum":
-            ok = manifests.filter(
-                (F.col("column") == col)
-                & (F.col("stat_sum").isNotNull() | (F.col("stat_nulls") == F.col("n_values")))
-            ).select("pid")
-            full_pids = full_pids.join(ok, on="pid", how="left_semi")
-        elif (
-            fn == "distinct" or (fn in ("min", "max") and kinds.get(col) == "str")
-        ) and kinds.get(col) in ("int", "str"):
-            # exact sets required: for COUNT(DISTINCT) always; for string
-            # extrema (truncated stat_min/stat_max are not exact)
-            ok = manifests.filter(
-                (F.col("column") == col) & F.col("stat_distinct").isNotNull()
-            ).select("pid")
-            full_pids = full_pids.join(ok, on="pid", how="left_semi")
-    # group-eligibility: a partition is metadata-answerable under GROUP BY
-    # only when every group column is provably SINGLE-valued and null-free
-    # there — the whole partition then belongs to one group (the Hive
-    # partition-column case; stores encoded with group_cols matching the
-    # GROUP BY satisfy this for every pure partition)
-    for g in group_by or []:
-        ok = manifests.filter(
-            (F.col("column") == g)
-            & (F.col("stat_nulls") == 0)
-            & F.col("stat_distinct").isNotNull()
-            & (F.size(F.from_json("stat_distinct", _DISTINCT_DDL)["v"]) == 1)
-        ).select("pid")
-        full_pids = full_pids.join(ok, on="pid", how="left_semi")
-    if delete_df is not None:
-        full_pids = full_pids.join(F.broadcast(delete_df), "pid", "left_anti")
-    partial_pids = manifests.select("pid").distinct().join(
-        full_pids, on="pid", how="left_anti"
-    )
+    stats, pids, state = prune.plan(store, snap, predicates)
+    survive = state != prune.EXCLUDED
+    full = survive & (state == prune.COVERED) if meta_capable else np.zeros(len(pids), bool)
+    if meta_capable:
+        nulls = stats.column("stat_nulls").to_numpy(zero_copy_only=False)
+        have_set = stats.column("stat_distinct").is_valid().to_numpy(zero_copy_only=False)
+        for fn, col in aggs:
+            if fn == "sum":
+                # stat_sum present, or the column all-null in that pid
+                has_sum = stats.column("stat_sum").is_valid().to_numpy(zero_copy_only=False)
+                all_null = nulls == stats.column("n_values").to_numpy()
+                full &= _pids_where(stats, pids, col, has_sum | all_null)
+            elif fn == "distinct" or (fn in ("min", "max") and kinds[col] == "str"):
+                # exact sets: COUNT(DISTINCT) always; string extrema too
+                # (the truncated stat_min/stat_max are not exact)
+                full &= _pids_where(stats, pids, col, have_set)
+        # GROUP BY: a pid answers from metadata only when every group column
+        # is provably single-valued and null-free there — the whole
+        # partition then belongs to one group
+        single = prune.set_sizes(stats.column("stat_distinct")) == 1
+        for g in group_by or []:
+            full &= _pids_where(stats, pids, g, single & (nulls == 0))
+        # merge-on-read deletes make the physical stats stale
+        full &= ~np.isin(pids, sorted(store.delete_touched_pids()))
+    partial = survive & ~full
 
     # ---- metadata half -----------------------------------------------------
-    meta_rows = manifests.join(full_pids, on="pid", how="left_semi")
+    meta_rows = _stat_rows(spark, stats, pids[full])
     if group_by:
         # pid -> group key, read from the single-valued stat_distinct set
         # (cast back from the canonical string to the column's own type);
         # every full pid has exactly one value per group column by the
-        # eligibility join above
+        # eligibility rule above
         key_df = None
         for g in group_by:
             kg = meta_rows.filter(
@@ -331,7 +306,8 @@ def aggregate_store(
         | set(group_by or [])
     ) or [ref_col]
     dec = decode_table(
-        spark, store_root, columns=needed, predicates=predicates, pids=partial_pids
+        spark, store_root, columns=needed, predicates=predicates,
+        pids=pids[partial].tolist(),
     )
     if predicates:
         dec = dec.filter(predicate_expr(predicates))
@@ -434,13 +410,10 @@ def aggregate_store(
 
     if not return_plan:
         return out
-    n_total = spark.read.parquet(snap).select("pid").distinct().count()
-    n_surv = manifests.select("pid").distinct().count()
-    n_full = full_pids.count()
     plan = {
-        "pids_total": n_total,
-        "pids_pruned": n_total - n_surv,
-        "pids_metadata": n_full,
-        "pids_decoded": n_surv - n_full,
+        "pids_total": len(pids),
+        "pids_pruned": int((~survive).sum()),
+        "pids_metadata": int(full.sum()),
+        "pids_decoded": int(partial.sum()),
     }
     return out, plan

@@ -7,19 +7,24 @@ decodes one committed partition's column chunks
 kernels replace the per-page decode loop. Column pruning works exactly like
 the reference's readColumn(index): ask for fewer columns and only those
 blobs are opened.
+
+Predicate pruning is planned, never evaluated, here: the driver runs the
+snapshot's stat rows through :mod:`plans.prune` (the one evaluator every
+read path shares) and the decode tasks only see surviving pids; inside a
+PAGED partition ``decode_pid_rows`` asks the same evaluator for the
+surviving pages.
 """
 
 from __future__ import annotations
 
-import datetime
 import json
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..codecs import decode_column
+from ..plans import prune
 from ..plans.manifest import ManifestStore
 
 # Every token the encoder accepts maps to a Spark type (SURVEY §1.2
@@ -192,276 +197,6 @@ def decoded_schema(
     return cols, ", ".join(ddl), casts
 
 
-# LIKE-'p%' matches live in [p, increment_string(p)) — the SAME increment
-# arithmetic that produces the encode-side truncated stat upper bounds, so
-# the prefix interval and the stored bounds can never diverge.
-from ..codecs.stats import increment_string as _prefix_upper  # noqa: E402
-
-
-def _exclusion_condition(op: str, val) -> "F.Column":
-    """Manifest-stats condition under which a pid CANNOT satisfy `op val`.
-
-    String stats are truncated-but-sound (stat_min ≤ true min, stat_max ≥
-    true max — encode.column_minmax), so every exclusion below stays sound
-    on them: a range/prefix that overlaps the true values always overlaps
-    the recorded [stat_min, stat_max] envelope too."""
-    numeric = isinstance(val, (int, float)) and not isinstance(val, bool)
-    # try_cast: a numeric predicate against a non-numeric column's stats
-    # (e.g. lang = 42) nulls out and keeps the partition — the same
-    # conservatism as the executor-side twin — instead of an ANSI cast error
-    lo = F.col("stat_min").try_cast("double") if numeric else F.col("stat_min")
-    hi = F.col("stat_max").try_cast("double") if numeric else F.col("stat_max")
-    v = F.lit(val)
-    if op == ">=":
-        return hi < v
-    if op == ">":
-        return hi <= v
-    if op == "<=":
-        return lo > v
-    if op == "<":
-        return lo >= v
-    if op in ("==", "="):
-        return (hi < v) | (lo > v)
-    if op == "!=":
-        # excludable iff EVERY value equals v: stat_min ≤ true_min and
-        # stat_max ≥ true_max, so stat_min == stat_max == v pins the true
-        # range to exactly [v, v] — sound even on truncated string bounds
-        return (lo == v) & (hi == v)
-    if op in ("startswith", "like_prefix"):
-        # LIKE 'p%': matching strings live in [p, next(p)) where next(p)
-        # increments p's last code point — so a partition is excludable iff
-        # its envelope sits entirely below p or entirely at/above next(p).
-        cond = hi < v
-        upper = _prefix_upper(str(val))
-        if upper is not None:
-            cond = cond | (lo >= F.lit(upper))
-        return cond
-    if op == "in":
-        # excludable iff EVERY listed value is excludable (AND of the
-        # equality exclusions); empty list matches nothing — always exclude
-        conds = [_exclusion_condition("==", v2) for v2 in val]
-        out = F.lit(True)
-        for c in conds:
-            out = out & c
-        return out
-    raise ValueError(f"unsupported predicate op: {op}")
-
-
-# Parsed shape of the stat_distinct JSON (codecs/stats.py column_distinct):
-# a domain tag + the partition's exact sorted distinct values as canonical
-# strings. All consumers parse with from_json — pure Catalyst, metadata
-# scale (one short row per partition×column).
-_DISTINCT_DDL = "struct<d:string,v:array<string>>"
-
-
-def _distinct_canon(val) -> tuple[str, str] | None:
-    """(domain, canonical string) for a predicate literal, or None when the
-    value cannot be matched against a stored set without a lossy coercion
-    (bool, non-integral float, float beyond exact-int range) — callers must
-    then fall back to the min/max/bloom paths (conservative, never wrong)."""
-    if isinstance(val, bool):
-        return None
-    if isinstance(val, str):
-        return "str", val
-    if isinstance(val, int):
-        return "i64", str(val)
-    if isinstance(val, float) and float(val).is_integer() and abs(val) <= 2**53:
-        return "i64", str(int(val))
-    return None
-
-
-def _distinct_exclusion(op: str, val) -> "F.Column | None":
-    """Manifest condition under which the EXACT distinct set proves no row
-    can satisfy `op val` — sharper than both min/max (range-only) and the
-    bloom (false positives): membership here is exact in both directions.
-    None = this op/value pair can't use the set (callers skip the clause).
-
-    The domain tag guard (``d == domain``) refuses cross-type comparisons
-    (an int literal against a string column's set) instead of trusting
-    Spark's implicit casts to agree with the canonical encoding."""
-    s = F.from_json(F.col("stat_distinct"), _DISTINCT_DDL)
-    d, v = s["d"], s["v"]
-    base = F.col("stat_distinct").isNotNull()
-    # an EMPTY set (all-null partition) excludes every op below: NULL rows
-    # satisfy neither equality, ranges, prefixes, nor != (SQL three-valued
-    # logic) — and min/max can't prune these (their bounds are null)
-    empty = F.size(v) == 0
-    if op in ("==", "="):
-        ck = _distinct_canon(val)
-        if ck is None:
-            return base & empty
-        return base & (empty | ((d == ck[0]) & ~F.array_contains(v, ck[1])))
-    if op == "in":
-        vals = list(val)
-        if not vals:
-            return None  # min/max path already excludes the empty IN
-        conds = [_distinct_exclusion("==", v2) for v2 in vals]
-        out = F.lit(True)
-        for c in conds:
-            out = out & c  # every listed value provably absent
-        return base & out
-    if op == "!=":
-        ck = _distinct_canon(val)
-        pinned = F.lit(False)
-        if ck is not None:
-            # every non-null row equals val -> no row satisfies !=
-            pinned = (F.size(v) == 1) & (d == ck[0]) & (v[0] == ck[1])
-        return base & (empty | pinned)
-    if op in ("startswith", "like_prefix"):
-        if not isinstance(val, str):
-            return base & empty
-        return base & (
-            empty | ((d == "str") & ~F.exists(v, lambda x: x.startswith(val)))
-        )
-    if op in ("<", "<=", ">", ">="):
-        # string ranges: set values are EXACT (the 16-char truncated bounds
-        # are not), so "no element satisfies" is a sound exclusion; integer
-        # ranges are already exact via min/max — the empty-set clause is
-        # still worth it there (null bounds prune nothing)
-        if not isinstance(val, str):
-            return base & empty
-        ops = {
-            "<": lambda x: x < F.lit(val),
-            "<=": lambda x: x <= F.lit(val),
-            ">": lambda x: x > F.lit(val),
-            ">=": lambda x: x >= F.lit(val),
-        }
-        return base & (empty | ((d == "str") & ~F.exists(v, ops[op])))
-    return None
-
-
-def _distinct_inclusion(op: str, val) -> "F.Column":
-    """Dual of :func:`_distinct_exclusion`: the EXACT set proves every
-    non-null row satisfies `op val` (``forall`` over the set). This is what
-    makes multi-valued partitions fully coverable under equality/IN/prefix
-    predicates on STRING columns — min/max can only pin single-valued ones
-    (lo == hi) there. ``forall`` over an empty set is True: a partition
-    with no non-null rows is trivially covered (with the caller's
-    stat_nulls == 0 guard that means zero rows — a zero contribution
-    either way). F.lit(False) = unprovable here (caller falls back to the
-    min/max proof or the decode path)."""
-    s = F.from_json(F.col("stat_distinct"), _DISTINCT_DDL)
-    d, v = s["d"], s["v"]
-    base = F.col("stat_distinct").isNotNull()
-    if op in ("==", "="):
-        ck = _distinct_canon(val)
-        if ck is None:
-            return F.lit(False)
-        return base & (d == ck[0]) & F.forall(v, lambda x: x == F.lit(ck[1]))
-    if op == "in":
-        vals = list(val)
-        strs = [x for x in vals if isinstance(x, str)]
-        ints = [
-            str(int(x))
-            for x in vals
-            if (isinstance(x, int) and not isinstance(x, bool))
-            or (isinstance(x, float) and float(x).is_integer() and abs(x) <= 2**53)
-        ]
-        out = F.size(v) == 0  # empty set: covered under either domain
-        if strs:
-            out = out | ((d == "str") & F.forall(v, lambda x: x.isin(strs)))
-        if ints:
-            out = out | ((d == "i64") & F.forall(v, lambda x: x.isin(ints)))
-        return base & out
-    if op == "!=":
-        ck = _distinct_canon(val)
-        if ck is None:
-            return F.lit(False)
-        # exact absence -> every non-null row differs (min/max can only
-        # prove this when the whole range clears the value)
-        return base & (d == ck[0]) & ~F.array_contains(v, ck[1])
-    if not isinstance(val, str):
-        return F.lit(False)
-    if op in ("startswith", "like_prefix"):
-        return base & (d == "str") & F.forall(v, lambda x: x.startswith(val))
-    if op in ("<", "<=", ">", ">="):
-        ops = {
-            "<": lambda x: x < F.lit(val),
-            "<=": lambda x: x <= F.lit(val),
-            ">": lambda x: x > F.lit(val),
-            ">=": lambda x: x >= F.lit(val),
-        }
-        return base & (d == "str") & F.forall(v, ops[op])
-    return F.lit(False)
-
-
-def _inclusion_condition(op: str, val, kind: str, has_distinct: bool = False) -> "F.Column":
-    """Manifest-stats condition under which EVERY non-null row of the
-    partition PROVABLY satisfies `op val` — the dual of
-    :func:`_exclusion_condition`, used by aggregate_store to answer
-    aggregates from metadata alone (a partition is metadata-eligible only
-    when no row-level filtering could change its contribution).
-
-    With ``has_distinct`` (the caller's projection carries
-    ``stat_distinct``), the exact-set proof of :func:`_distinct_inclusion`
-    is OR-ed in — it covers cases the envelope never can (multi-valued
-    string partitions under equality/IN, exact ``!=`` absence).
-
-    ``kind`` is the column's storage lane ("int", "str", or "other"),
-    resolved driver-side from the manifest meta: integer stats strings are
-    exact decimal integers (decimal(38,0) casts are lossless), so every
-    comparison is sound; string stats are truncated-but-sound, so only the
-    equality PIN (stat_min == stat_max == v, provable only when the value
-    fits untruncated) and the prefix interval are usable; anything else
-    conservatively proves nothing (False keeps the partition on the decode
-    path — never wrong, only slower)."""
-    env = _envelope_inclusion(op, val, kind)
-    if has_distinct:
-        return env | _distinct_inclusion(op, val)
-    return env
-
-
-def _envelope_inclusion(op: str, val, kind: str) -> "F.Column":
-    """The min/max-envelope half of :func:`_inclusion_condition`."""
-    if kind == "int":
-        numeric = isinstance(val, (int, float)) and not isinstance(val, bool)
-        if not numeric:
-            return F.lit(False)
-        lo = F.col("stat_min").try_cast("decimal(38,0)")
-        hi = F.col("stat_max").try_cast("decimal(38,0)")
-        v = F.lit(val)
-        if op == ">=":
-            return lo >= v
-        if op == ">":
-            return lo > v
-        if op == "<=":
-            return hi <= v
-        if op == "<":
-            return hi < v
-        if op in ("==", "="):
-            return (lo == v) & (hi == v)
-        if op == "!=":
-            return (hi < v) | (lo > v)
-        if op == "in":
-            vals = list(val)
-            if not vals:
-                return F.lit(False)
-            return (lo == hi) & lo.isin([F.lit(x) for x in vals])
-        return F.lit(False)
-    if kind == "str":
-        if not isinstance(val, str):
-            return F.lit(False)
-        lo, hi, v = F.col("stat_min"), F.col("stat_max"), F.lit(val)
-        if op in ("==", "="):
-            # pin: lo == v needs the TRUE min to equal v (a longer string
-            # sharing the 16-char prefix would leave hi incremented != v)
-            return (lo == v) & (hi == v)
-        if op == "in":
-            vals = [x for x in val if isinstance(x, str)]
-            if not vals or len(vals) != len(list(val)):
-                return F.lit(False)
-            return (lo == hi) & lo.isin([F.lit(x) for x in vals])
-        if op in ("startswith", "like_prefix"):
-            upper = _prefix_upper(str(val))
-            if upper is None:
-                return F.lit(False)
-            # stat_min <= true min and stat_max >= true max, so the stored
-            # envelope inside [p, next(p)) pins every row to the prefix
-            return (lo >= v) & (hi < F.lit(upper))
-        return F.lit(False)
-    return F.lit(False)
-
-
 def predicate_expr(predicates) -> "F.Column":
     """Row-level conjunction for the same (column, op, value) triples
     decode_table prunes with — the residual filter callers apply on the
@@ -491,180 +226,15 @@ def predicate_expr(predicates) -> "F.Column":
     return cond
 
 
-def _page_may_match(
-    op: str, val, pmin, pmax, bloom: str | None = None, bloom_dom: str | None = None
-) -> bool:
-    """Executor-side twin of :func:`_exclusion_condition` for per-page
-    stats: True unless the page's [min, max] envelope — or, for equality,
-    its bloom filter — PROVES no row can satisfy `op val` (missing stats
-    keep the page — never unsound)."""
-    if op == "in":
-        # the page may match iff ANY listed value may match
-        return any(
-            _page_may_match("==", v2, pmin, pmax, bloom, bloom_dom) for v2 in val
-        )
-    if op in ("==", "=") and bloom and bloom_dom:
-        from ..codecs.stats import bloom_may_contain
-
-        if not bloom_may_contain(bloom, bloom_dom, val):
-            return False
-    if pmin is None or pmax is None:
-        return True
-    numeric = isinstance(val, (int, float)) and not isinstance(val, bool)
-    if numeric:
-        try:
-            lo, hi, v = float(pmin), float(pmax), float(val)
-        except (TypeError, ValueError):
-            # numeric predicate against non-numeric stats (string/temporal
-            # column): undecidable here — keep the page, mirroring the
-            # partition-level twin where cast('double') nulls out
-            return True
-    elif isinstance(val, str):
-        lo, hi, v = str(pmin), str(pmax), str(val)
-    elif isinstance(val, datetime.date) and not isinstance(val, datetime.datetime):
-        # date stats are str(datetime.date) == ISO "YYYY-MM-DD": fixed
-        # width, so lexicographic order == chronological order
-        lo, hi, v = str(pmin), str(pmax), val.isoformat()
-    else:
-        # decimal.Decimal, datetime.datetime (tz canonicalization differs
-        # between the stored str() and the literal), bytes, ...: a str()
-        # coercion compares lexicographically against numeric stat strings
-        # and can wrongly prune ('100.00' <= '20') — keep, never guess
-        return True
-    if op == ">=":
-        return not hi < v
-    if op == ">":
-        return not hi <= v
-    if op == "<=":
-        return not lo > v
-    if op == "<":
-        return not lo >= v
-    if op in ("==", "="):
-        return not (hi < v or lo > v)
-    if op == "!=":
-        return not (lo == v and hi == v)
-    if op in ("startswith", "like_prefix"):
-        upper = _prefix_upper(str(val))
-        return not (hi < v or (upper is not None and lo >= upper))
-    return True
-
-
-def _distinct_may_match(op: str, val, sdistinct: "str | None") -> bool:
-    """Python twin of :func:`_distinct_exclusion` for driver-side pruning
-    (the ``parzig`` data source plans partitions without a SparkSession):
-    False only when the partition's EXACT distinct set PROVES no row can
-    satisfy ``op val``; missing sets, cross-domain values, and undecidable
-    ops keep the partition — never unsound."""
-    if sdistinct is None:
-        return True
-    try:
-        rec = json.loads(sdistinct)
-        dom, vals = rec["d"], rec["v"]
-    except (ValueError, KeyError, TypeError):
-        return True
-    if not vals:
-        # no non-null rows: nothing satisfies equality/ranges/prefix/!=
-        return op not in ("==", "=", "in", "!=", "<", "<=", ">", ">=",
-                          "startswith", "like_prefix")
-    if op == "in":
-        items = list(val)
-        return any(_distinct_may_match("==", v2, sdistinct) for v2 in items)
-    ck = _distinct_canon(val)
-    if op in ("==", "="):
-        if ck is None or ck[0] != dom:
-            return True
-        return ck[1] in vals
-    if op == "!=":
-        if ck is None or ck[0] != dom:
-            return True
-        return not (len(vals) == 1 and vals[0] == ck[1])
-    if not isinstance(val, str) or dom != "str":
-        return True
-    if op in ("startswith", "like_prefix"):
-        return any(x.startswith(val) for x in vals)
-    cmp = {
-        "<": lambda x: x < val,
-        "<=": lambda x: x <= val,
-        ">": lambda x: x > val,
-        ">=": lambda x: x >= val,
-    }.get(op)
-    return True if cmp is None else any(cmp(x) for x in vals)
-
-
-def _bloom_absent_udf(vals):
-    """Arrow-batched twin of stats.bloom_may_contain for manifest rows:
-    True only where the partition bloom PROVES every value in `vals`
-    absent (one value for ``==``, the whole list for ``in``). Python-side
-    by necessity (bit probes into a base64 bitmap have no Catalyst
-    expression), but it runs over MANIFEST rows — metadata scale, one
-    short row per (partition, column), never data scale — and each probe
-    is a b64decode plus four bit tests per value."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def absent(bloom: pd.Series, dom: pd.Series) -> pd.Series:
-        from ..codecs.stats import bloom_may_contain
-
-        return pd.Series(
-            [
-                b is not None
-                and d is not None
-                and all(not bloom_may_contain(b, d, v) for v in vals)
-                for b, d in zip(bloom, dom)
-            ],
-            dtype=bool,
-        )
-
-    return absent
-
-
 def prune_manifests(manifests: DataFrame, predicates) -> DataFrame:
-    """Drop whole partitions whose recorded [stat_min, stat_max] ranges
-    cannot satisfy the predicates — the decode-side analog of Parquet
-    row-group statistics skipping (the reference parses Statistics/
-    ColumnIndex but never uses them; SURVEY §4 scopes this as ours).
-
-    Equality predicates additionally consult the partition-level bloom
-    (``stat_bloom``/``stat_bloom_dom``, when the caller's projection carries
-    them) — the BloomFilterHeader analog: a point lookup on a column
-    uncorrelated with the sort order (random-hex ``commit``) prunes to the
-    partitions that can actually contain the value, where every min/max
-    envelope spans the domain and prunes nothing.
-
-    Where the projection carries ``stat_distinct`` (manifest v7), the
-    partition's EXACT distinct-value set is consulted first-class: equality
-    / IN / ``!=`` / prefix / string-range predicates prune on exact
-    membership — no bloom false positives, no truncation slack — and
-    all-null partitions (null min/max, no bloom) prune via the empty set.
-    Pure Catalyst (from_json + array ops), unlike the bloom's Python probe.
-
-    Partition-granular: surviving partitions are decoded WHOLE, so callers
-    still apply the row-level filter afterwards. Missing stats keep the
-    partition (never unsound)."""
-    has_bloom = "stat_bloom" in manifests.columns
-    has_distinct = "stat_distinct" in manifests.columns
-    for col_name, op, val in predicates:
-        cond = F.col("stat_min").isNotNull() & _exclusion_condition(op, val)
-        if has_distinct:
-            dcond = _distinct_exclusion(op, val)
-            if dcond is not None:
-                cond = cond | dcond
-        if has_bloom and op in ("==", "=", "in"):
-            # == probes one value; IN is excludable iff the bloom proves
-            # EVERY listed value absent (an IN with no values excludes
-            # vacuously via the min/max branch above, never reaching here)
-            vals = list(val) if op == "in" else [val]
-            if vals:
-                absent = _bloom_absent_udf(vals)
-                cond = cond | (
-                    F.col("stat_bloom").isNotNull()
-                    & absent(F.col("stat_bloom"), F.col("stat_bloom_dom"))
-                )
-        excluded = manifests.filter(
-            (F.col("column") == col_name) & cond
-        ).select("pid")
-        manifests = manifests.join(excluded, "pid", "left_anti")
-    return manifests
+    """Manifest rows of the pids ``predicates`` cannot exclude — a
+    DataFrame adapter over :mod:`plans.prune` for callers that hold a
+    snapshot as a DataFrame: its stat rows are collected once and planned
+    on the driver. Partition-granular: callers still filter rows."""
+    cols = [c for c in ("meta_json", *prune.STAT_COLS) if c in manifests.columns]
+    stats = manifests.select(*cols).toArrow()
+    keep = prune.survivors(stats, predicates, prune.lanes(stats))
+    return manifests.filter(F.col("pid").isin(keep))
 
 
 def register_store(
@@ -695,16 +265,15 @@ def decode_table(
     predicates: list[tuple] | None = None,
     snapshot: int | None = None,
     since_snapshot: int | None = None,
-    pids: "DataFrame | list[int] | None" = None,
+    pids: list[int] | None = None,
     include_pid_pos: bool = False,
     ref: str | None = None,
 ) -> DataFrame:
     """Decode committed partitions; returns the reconstructed DataFrame.
 
-    ``pids`` restricts the read to the given partition ids (a list, or a
-    DataFrame with a ``pid`` column — kept Spark-side so metadata-scale
-    pid sets never round-trip through the driver); aggregate_store uses
-    this to decode only the partitions its metadata path cannot answer.
+    ``pids`` restricts the read to the listed partition ids;
+    aggregate_store and check_store use this to decode only the partitions
+    their metadata path cannot answer.
 
     ``include_pid_pos`` appends ``_pid``/``_pos`` columns — the partition
     id and the row's PHYSICAL index within it (pre-delete, stable across
@@ -712,14 +281,16 @@ def decode_table(
     stored row forever). upsert_rows joins on these to build its delete
     bitmaps without a second decode.
 
-    Manifests travel Spark-side end to end: the driver reads ONE manifest
-    file for the schema, then `spark.read.parquet` on the compacted
-    snapshot (written here if stale — one driver-side compaction, amortized
-    across decodes) distributes the manifest rows. No O(partitions) driver
-    loop on the decode path.
+    The driver reads ONE manifest file for the schema; `spark.read.parquet`
+    on the compacted snapshot (written here if stale — one driver-side
+    compaction, amortized across decodes) distributes the manifest rows.
+    With ``predicates``, ``since_snapshot`` or ``pids`` the driver first
+    plans the read from the snapshot's stat rows (columnar, through
+    :mod:`plans.prune`) and the manifest rows are filtered once by pid.
 
     ``predicates`` (e.g. ``[("o_orderkey", ">=", 1000)]``) prune whole
-    partitions via manifest min/max stats before any blob is opened;
+    partitions — and, in PAGED stores, pages — via the stored stats
+    (min/max, bloom, exact distinct sets) before any blob is opened;
     callers still apply the row-level filter on the result.
 
     ``snapshot`` pins the read to a historical snapshot version — TIME
@@ -761,40 +332,23 @@ def decode_table(
     else:
         delete_ops = store.committed_delete_ops()
     snap = store.snapshot_path(snapshot) if snapshot is not None else store.fresh_snapshot()
-    manifests = spark.read.parquet(snap).select(
-        "pid", "column", "meta_json", "stat_min", "stat_max",
-        "stat_bloom", "stat_bloom_dom", "stat_distinct",
-    )
-    if since_snapshot is not None:
-        base = store.snapshot_pids(since_snapshot)
-        if base:
-            base_df = spark.createDataFrame([(int(p),) for p in sorted(base)], "pid long")
-            manifests = manifests.join(F.broadcast(base_df), on="pid", how="left_anti")
-    if pids is not None:
-        if isinstance(pids, DataFrame):
-            pid_df = pids.select("pid")
-        else:
-            pid_df = spark.createDataFrame(
-                [(int(p),) for p in sorted(set(pids))], "pid long"
-            )
-        manifests = manifests.join(pid_df, on="pid", how="left_semi")
-    # Prune BEFORE the projection filter: a predicate on a non-projected
-    # column (SELECT doc_id WHERE lang = 'zh') must still see that column's
-    # stats rows to drop partitions.
-    if predicates:
-        manifests = prune_manifests(manifests, predicates)
-    pred_cols = [p[0] for p in (predicates or [])]
+    manifests = spark.read.parquet(snap).select("pid", "column", "meta_json")
+    if predicates or since_snapshot is not None or pids is not None:
+        # plan on the driver from the snapshot's stat rows, then filter the
+        # manifest rows once by pid
+        _stats, all_pids, state = prune.plan(store, snap, predicates)
+        keep = set(all_pids[state != prune.EXCLUDED].tolist())
+        if since_snapshot is not None:
+            keep -= store.snapshot_pids(since_snapshot)
+        if pids is not None:
+            keep &= {int(p) for p in pids}
+        manifests = manifests.filter(F.col("pid").isin(sorted(keep)))
     if columns is not None:
         # predicate columns' rows ride along even when not projected — their
         # per-page stats drive section skipping inside surviving partitions
-        manifests = manifests.filter(
-            F.col("column").isin(sorted(set(columns) | set(pred_cols)))
-        )
-    manifests = manifests.drop(
-        "stat_min", "stat_max", "stat_bloom", "stat_bloom_dom", "stat_distinct"
-    ).repartition(
-        spark.sparkContext.defaultParallelism * 2, "pid"
-    )
+        pred_cols = {p[0] for p in predicates or []}
+        manifests = manifests.filter(F.col("column").isin(sorted(set(columns) | pred_cols)))
+    manifests = manifests.repartition(spark.sparkContext.defaultParallelism * 2, "pid")
 
     def decode_partition(batches):
         """Iterator[pa.RecordBatch] of manifest rows -> decoded row batches
@@ -830,12 +384,13 @@ def decode_pid_rows(
     Pure-Arrow: decoded columns go straight from the numpy kernels into
     Arrow batches, never through pandas objects.
 
-    With predicates + a PAGED store, sections whose per-page [min, max]
-    cannot satisfy every predicate are skipped: paged columns read ONLY
-    the surviving byte ranges off storage (read_blob_ranges) and decode
-    only those sections; unpaged columns decode whole, then slice the
-    same row ranges so every column stays row-aligned (the shared value
-    stride guarantees identical page boundaries across columns).
+    With predicates + a PAGED store, sections whose page entries cannot
+    satisfy every predicate (plans.prune.page_survivors) are skipped:
+    paged columns read ONLY the surviving byte ranges off storage
+    (read_blob_ranges) and decode only those sections; unpaged columns
+    decode whole, then slice the same row ranges so every column stays
+    row-aligned (the shared value stride guarantees identical page
+    boundaries across columns).
     """
     import numpy as np
 
@@ -845,28 +400,9 @@ def decode_pid_rows(
     local = ManifestStore(store_root)
     for pid, by_col in rows.items():
             metas = {name: json.loads(r["meta_json"]) for name, r in by_col.items()}
-            survivors: list[int] | None = None
-            ref_paged: dict | None = None
-            if predicates:
-                keep: set[int] | None = None
-                for col_name, op, val in predicates:
-                    m = metas.get(col_name)
-                    if not m or m.get("codec") != "paged":
-                        continue
-                    ref_paged = m
-                    ok = {
-                        i
-                        for i, p in enumerate(m["pages"])
-                        if _page_may_match(
-                            op, val, p["min"], p["max"],
-                            p.get("bloom"), m.get("bloom_domain"),
-                        )
-                    }
-                    keep = ok if keep is None else (keep & ok)
-                if keep is not None:
-                    survivors = sorted(keep)
-                    if not survivors:
-                        continue  # no section of this partition can match
+            survivors, ref_paged = prune.page_survivors(metas, predicates or [])
+            if survivors == []:
+                continue  # no section of this partition can match
             # merge-on-read deletes: OR this pid's bitmaps across the
             # query's delete-op set; rows decoded below filter through the
             # complement. With page skipping, the mask slices to the same

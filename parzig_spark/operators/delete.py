@@ -41,8 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..codecs import decode_column, decode_u64, encode_u64
+from ..plans import prune
 from ..plans.manifest import ManifestStore
-from .decode import prune_manifests
 
 DELETE_SUMMARY_SCHEMA = "pid long, n_rows long, n_match long, n_new long"
 
@@ -102,16 +102,14 @@ def delete_rows(
         }
     existing_ops = store.committed_delete_ops()
 
+    # stats pruning on the driver: partitions whose stats prove no row can
+    # match write no bitmap
     snap = store.fresh_snapshot()
-    manifests = spark.read.parquet(snap).select(
-        "pid", "column", "meta_json", "stat_min", "stat_max",
-        "stat_bloom", "stat_bloom_dom", "stat_distinct",
-    )
-    # stats pruning: partitions whose envelopes cannot match write no bitmap
-    manifests = prune_manifests(manifests, predicates)
+    _stats, pids, state = prune.plan(store, snap, predicates)
     pred_cols = sorted({p[0] for p in predicates})
-    manifests = manifests.filter(F.col("column").isin(pred_cols)).drop(
-        "stat_min", "stat_max", "stat_bloom", "stat_bloom_dom", "stat_distinct"
+    manifests = spark.read.parquet(snap).select("pid", "column", "meta_json").filter(
+        F.col("pid").isin(pids[state != prune.EXCLUDED].tolist())
+        & F.col("column").isin(pred_cols)
     )
 
     def scan(batches):

@@ -37,12 +37,14 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans import prune
 from ..plans.manifest import ManifestStore
-from .aggregate import _column_kinds
-from .decode import _DISTINCT_DDL, decode_table
+from .aggregate import _DISTINCT_DDL, _column_kinds, _pids_where, _stat_rows
+from .decode import decode_table, predicate_expr
 
 RESULT_DDL = "check string, column string, passed boolean, observed string"
 
@@ -86,8 +88,8 @@ def check_store(
     boundary partitions, never the store.
 
     ``return_plan=True`` returns ``(df, plan)`` with the partition
-    economics: ``{"total", "pruned", "metadata", "decoded"}`` (two extra
-    metadata-scale count actions)."""
+    economics: ``{"total", "pruned", "metadata", "decoded"}``, read off the
+    driver plan (no extra Spark job)."""
     store = ManifestStore(store_root)
     store.check_format()
     if ref is not None:
@@ -122,87 +124,38 @@ def check_store(
                 f"({col!r} is {kinds[col]})"
             )
 
-    m = spark.read.parquet(snap).select(
-        "pid", "column", "n_values", "stat_nulls",
-        "stat_min", "stat_max", "stat_bloom", "stat_bloom_dom",
-        "stat_distinct",
-    )
-    partial = None
-    if where:
-        from .aggregate import _inclusion_condition
-        from .decode import prune_manifests
-
-        for wcol, _op, _v in where:
-            if wcol not in kinds:
-                raise ValueError(f"unknown column {wcol!r} in {store_root}")
-        m = prune_manifests(m, where)
-        flags = []
-        for i, (wcol, op, val) in enumerate(where):
-            incl = _inclusion_condition(
-                op, val, kinds.get(wcol, "other"), has_distinct=True
-            )
-            flags.append(
-                F.max(
-                    F.when(
-                        (F.col("column") == wcol)
-                        & (F.col("stat_nulls") == 0)
-                        & incl,
-                        1,
-                    ).otherwise(0)
-                ).alias(f"_w{i}")
-            )
-        per_pid = m.groupBy("pid").agg(*flags)
-        cond = F.lit(True)
-        for i in range(len(where)):
-            cond = cond & (F.col(f"_w{i}") == 1)
-        covered = per_pid.filter(cond).select("pid")
-        partial = m.select("pid").distinct().join(covered, "pid", "left_anti")
-
-    # ---- decode set: partitions whose stats cannot decide some check --------
-    # delete-touched pids (physical manifest counts are stale there) plus,
-    # for string domain/bound checks, partitions without an exact set
-    # pinned views apply exactly the sidecar's op set (time-travel
-    # semantics); a HEAD audit applies the currently committed ops — a
-    # fresh snapshot can predate the newest delete op (sealing is
-    # pid-set-driven), so the head path must not pin
+    for wcol, _op, _v in where or []:
+        if wcol not in kinds:
+            raise ValueError(f"unknown column {wcol!r} in {store_root}")
+    # ---- driver plan: prune, then pick the partitions to decode -------------
+    # partial pids (stats cannot prove every row matches ``where``),
+    # delete-touched pids (physical manifest counts are stale there) and,
+    # for string domain/bound checks, pids without an exact set. Pinned views
+    # apply exactly the sidecar's op set (time-travel semantics); a HEAD
+    # audit applies the currently committed ops — a fresh snapshot can
+    # predate the newest delete op (sealing is pid-set-driven), so the head
+    # path must not pin
+    stats, pids, state = prune.plan(store, snap, where)
+    survive = state != prune.EXCLUDED
     ops = store.snapshot_delete_ops(version) if pinned else store.committed_delete_ops()
-    dirty = sorted(store.delete_touched_pids(ops))
-    decode_pids = spark.range(0).select(F.col("id").alias("pid"))
-    if dirty:
-        decode_pids = decode_pids.union(
-            spark.createDataFrame([(int(p),) for p in dirty], "pid long")
-        )
-    setless_cols = sorted(
-        {
-            col
-            for name, col, _ in checks
-            if (name == "values_in_set")
-            or (name in ("min_at_least", "max_at_most") and kinds[col] == "str")
-        }
-    )
-    if setless_cols:
-        setless = m.filter(
-            F.col("column").isin(setless_cols) & F.col("stat_distinct").isNull()
-        ).select("pid").distinct()
-        decode_pids = decode_pids.union(setless).distinct()
-    if partial is not None:
-        decode_pids = decode_pids.union(partial).distinct()
-    # pruned-out partitions never decode, whatever put them in the set
-    decode_pids = decode_pids.join(
-        m.select("pid").distinct(), on="pid", how="left_semi"
-    )
-    meta = m.join(decode_pids, on="pid", how="left_anti")
-    plan = None
-    if return_plan:
-        total = spark.read.parquet(snap).select("pid").distinct().count()
-        survivors = m.select("pid").distinct().count()
-        decoded = decode_pids.count()
-        plan = {
-            "total": total,
-            "pruned": total - survivors,
-            "metadata": survivors - decoded,
-            "decoded": decoded,
-        }
+    decode = (state == prune.PARTIAL) | np.isin(pids, sorted(store.delete_touched_pids(ops)))
+    setless = stats.column("stat_distinct").is_null().to_numpy(zero_copy_only=False)
+    for col in {
+        col
+        for name, col, _ in checks
+        if (name == "values_in_set")
+        or (name in ("min_at_least", "max_at_most") and kinds[col] == "str")
+    }:
+        decode |= _pids_where(stats, pids, col, setless)
+    decode &= survive  # pruned-out partitions never decode
+    metadata = survive & ~decode
+    meta = _stat_rows(spark, stats, pids[metadata])
+    plan = {
+        "total": len(pids),
+        "pruned": int((~survive).sum()),
+        "metadata": int(metadata.sum()),
+        "decoded": int(decode.sum()),
+    }
 
     # ---- one metadata pass + one decode pass --------------------------------
     need_cols = sorted(
@@ -211,12 +164,10 @@ def check_store(
     )
     dec = decode_table(
         spark, store_root, columns=need_cols or [ref_col],
-        snapshot=version if pinned else None, pids=decode_pids,
+        snapshot=version if pinned else None, pids=pids[decode].tolist(),
         predicates=where,
     )
     if where:
-        from .decode import predicate_expr
-
         dec = dec.filter(predicate_expr(where))
 
     def dset(col):

@@ -8,9 +8,10 @@ This is the switch-over surface done Spark-natively: ``register_store``
 wraps decode_table as a temp view (projection pruning only);
 the data source goes further — Catalyst hands the scan its compiled
 ``Filter`` tree via ``pushFilters``, the reader plans one InputPartition
-per SURVIVING store partition driver-side (pure pyarrow + the same
-exclusion twins the executor path uses — no SparkSession needed at
-planning time), and each task decodes its partition through the shared
+per SURVIVING store partition driver-side (the snapshot's stat rows
+through :mod:`plans.prune`, the evaluator every read path shares — no
+SparkSession needed at planning time), and each task decodes its
+partition through the shared
 :func:`operators.decode.decode_pid_rows` kernel, yielding Arrow batches
 (page-level skipping and merge-on-read delete masks included).
 
@@ -63,318 +64,18 @@ _OPS = {
     StringStartsWith: "startswith",
 }
 
-_STAT_COLS = [
-    "pid", "column", "stat_min", "stat_max",
-    "stat_bloom", "stat_bloom_dom", "stat_distinct",
-]
-
-
-def _prunable_literal(v) -> bool:
-    """Literal types the pruning twins (_page_may_match /
-    _distinct_may_match / the stat-table masks) compare soundly: strings,
-    non-bool numbers, and dates (ISO stat strings order lexicographically).
-    decimal.Decimal / datetime.datetime / bytes / bool don't prune — a
-    str() coercion against numeric stat strings compares lexicographically
-    and can wrongly drop partitions (silent row loss)."""
-    import datetime
-
-    if isinstance(v, bool):
-        return False
-    if isinstance(v, (str, int, float)):
-        return True
-    return isinstance(v, datetime.date) and not isinstance(v, datetime.datetime)
-
 
 def _translate(f):
     """Catalyst Filter -> (column, op, value) predicate triple, or None for
     shapes the store's pruning doesn't speak (nested attributes, IsNull,
-    Not, unprunable literal types, ...) — untranslated filters simply
-    don't prune (Spark re-applies every filter row-level regardless)."""
+    Not, ...) — untranslated filters simply don't prune (Spark re-applies
+    every filter row-level regardless). Literal types are not screened
+    here: the evaluator's guard (plans.prune) keeps every partition for
+    literals it cannot compare exactly."""
     op = _OPS.get(type(f))
     if op is None or len(f.attribute) != 1:
         return None
-    col = f.attribute[0]
-    if op == "in":
-        vals = tuple(f.value)
-        if not all(_prunable_literal(v) for v in vals):
-            return None
-        return (col, "in", vals)
-    if not _prunable_literal(f.value):
-        return None
-    return (col, op, f.value)
-
-
-def _vec_envelope_may_match(op, val, smin, smax):
-    """Vectorized twin of operators.decode._page_may_match over pandas
-    string Series (one element per manifest stat row): True where the
-    [stat_min, stat_max] envelope cannot PROVE `op val` unsatisfiable.
-    Missing/unparseable stats and unprunable literal types keep the row."""
-    import datetime
-
-    import numpy as np
-    import pandas as pd
-
-    n = len(smin)
-    have = (smin.notna() & smax.notna()).to_numpy()
-    if op == "in":
-        out = np.zeros(n, bool)
-        for v2 in val:
-            out |= _vec_envelope_may_match("==", v2, smin, smax)
-        return out
-    numeric = isinstance(val, (int, float)) and not isinstance(val, bool)
-    if numeric:
-        lo = pd.to_numeric(smin, errors="coerce").to_numpy(dtype=float)
-        hi = pd.to_numeric(smax, errors="coerce").to_numpy(dtype=float)
-        parsed = ~(np.isnan(lo) | np.isnan(hi))
-        v = float(val)
-    elif isinstance(val, str) or (
-        isinstance(val, datetime.date) and not isinstance(val, datetime.datetime)
-    ):
-        # fixed-width ISO date stats order lexicographically like strings
-        lo = smin.to_numpy(dtype=object)
-        hi = smax.to_numpy(dtype=object)
-        parsed = have
-        v = val if isinstance(val, str) else val.isoformat()
-        lo = np.where(parsed, lo, "")
-        hi = np.where(parsed, hi, "")
-    else:
-        return np.ones(n, bool)  # Decimal/datetime/...: never prune
-    if op == ">=":
-        cond = ~(hi < v)
-    elif op == ">":
-        cond = ~(hi <= v)
-    elif op == "<=":
-        cond = ~(lo > v)
-    elif op == "<":
-        cond = ~(lo >= v)
-    elif op in ("==", "="):
-        cond = ~((hi < v) | (lo > v))
-    elif op == "!=":
-        cond = ~((lo == v) & (hi == v))
-    elif op in ("startswith", "like_prefix"):
-        from ..operators.decode import _prefix_upper
-
-        upper = _prefix_upper(str(v))
-        cond = ~(hi < v)
-        if upper is not None:
-            cond &= ~(lo >= upper)
-    else:
-        return np.ones(n, bool)
-    return np.where(have & parsed, cond, True)
-
-
-def _vec_distinct_eq_may(val, sd):
-    """Vectorized equality probe of the EXACT distinct sets: False only
-    where the set PROVES `== val` unsatisfiable. Pure substring tests on
-    the canonical JSON — json.dumps produces the exact token the writer
-    stored, so needle absence is proof of absence (escaping can only cause
-    false PRESENCE, i.e. a kept row — sound). Domain tag checked via the
-    canonical prefix; empty sets (all-null partitions) exclude every
-    comparison."""
-    import numpy as np
-
-    from ..operators.decode import _distinct_canon
-
-    have = sd.notna()
-    may = ~(have & sd.str.endswith(':[]}', na=False)).to_numpy(dtype=bool)
-    ck = _distinct_canon(val)
-    if ck is not None:
-        needle = json.dumps(ck[1], ensure_ascii=False)
-        dom_prefix = '{"d":"%s"' % ck[0]
-        # search past the fixed 15-char header ('{"d":"str","v":[') so the
-        # header's own quoted tokens ("str", "v", ...) can't alias a value
-        excl = (
-            have
-            & sd.str.startswith(dom_prefix).fillna(False)
-            & ~sd.str.slice(15).str.contains(needle, regex=False).fillna(True)
-        ).to_numpy(dtype=bool)
-        may &= ~excl
-    return may
-
-
-def _vec_distinct_prefix_may(val, sd):
-    """Vectorized prefix probe of the EXACT sets: False only where no set
-    value can start with ``val``. Needle = ``'"' + val`` — raw quotes exist
-    in the canonical JSON only at value boundaries (and in the fixed header
-    tokens, which can only cause kept rows), so needle absence proves no
-    value starts with the prefix. Values whose JSON encoding differs from
-    their raw bytes (quotes/backslashes/control chars in ``val``) skip the
-    set (envelope still prunes) — conservative, never unsound."""
-    import numpy as np
-
-    have = sd.notna()
-    may = ~(have & sd.str.endswith(':[]}', na=False)).to_numpy(dtype=bool)
-    if isinstance(val, str) and json.dumps(val, ensure_ascii=False)[1:-1] == val:
-        excl = (
-            have
-            & sd.str.startswith('{"d":"str"').fillna(False)
-            & ~sd.str.slice(15).str.contains('"' + val, regex=False).fillna(True)
-        ).to_numpy(dtype=bool)
-        may &= ~excl
-    return may
-
-
-def _vec_distinct_ne_may(val, sd):
-    """Vectorized ``!=`` probe: a set excludes iff it is empty or exactly
-    the single-element set {val} — a full-string equality against the
-    canonical JSON (same dict shape + separators the writer uses)."""
-    import numpy as np
-
-    from ..operators.decode import _distinct_canon
-
-    have = sd.notna()
-    may = ~(have & sd.str.endswith(':[]}', na=False)).to_numpy(dtype=bool)
-    ck = _distinct_canon(val)
-    if ck is not None:
-        exact = json.dumps(
-            {"d": ck[0], "v": [ck[1]]}, ensure_ascii=False, separators=(",", ":")
-        )
-        may &= ~(sd == exact).to_numpy(dtype=bool)
-    return may
-
-
-def _bloom_key(dom: str, val):
-    """np.uint64 probe key for a value under a bloom domain, or None when
-    the pairing is unprobeable (mirrors stats.bloom_may_contain's guards —
-    None means conservative keep)."""
-    import numpy as np
-
-    from ..codecs.stats import string_bloom_key
-
-    if dom == "i64":
-        if isinstance(val, bool) or not isinstance(val, (int, float)):
-            return None
-        if isinstance(val, float):
-            if val != int(val):
-                return None
-            val = int(val)
-        if not -(2**63) <= val < 2**63:
-            return None
-        return np.uint64(np.int64(val))
-    if dom == "str":
-        if not isinstance(val, str):
-            return None
-        return np.uint64(string_bloom_key(val.encode()))
-    return None
-
-
-def _vec_bloom_excl(vals, blooms, doms):
-    """Exclusion mask: True where the row's bloom proves EVERY value in
-    ``vals`` absent. Vectorized per size class: b64-decode each bitmap once,
-    stack same-length bitmaps into one uint8 matrix, and test all four
-    probe bits for the whole class with two gathers — the per-row Python
-    probe loop was the last O(partitions) interpreter work in planning."""
-    import base64
-
-    import numpy as np
-
-    from ..codecs.stats import _bloom_probes
-
-    n = len(blooms)
-    rows = [
-        i for i in range(n)
-        if blooms[i] is not None and doms[i] is not None
-    ]
-    excl = np.zeros(n, bool)
-    if not rows:
-        return excl
-    raw = [base64.b64decode(blooms[i]) for i in rows]
-    sizes = np.array([len(r) for r in raw], dtype=np.int64)
-    dom_arr = np.array([doms[i] for i in rows], dtype=object)
-    cand = np.ones(len(rows), bool)  # "every val proven absent" so far
-    for val in vals:
-        may = np.zeros(len(rows), bool)
-        for dom in ("i64", "str"):
-            sel = dom_arr == dom
-            if not sel.any():
-                continue
-            key = _bloom_key(dom, val)
-            if key is None:
-                may |= sel  # unprobeable pairing: conservative keep
-                continue
-            for nbytes in np.unique(sizes[sel]):
-                grp = np.flatnonzero(sel & (sizes == nbytes))
-                mat = np.frombuffer(
-                    b"".join(raw[g] for g in grp), np.uint8
-                ).reshape(len(grp), int(nbytes))
-                m = int(nbytes) * 8
-                hit = np.ones(len(grp), bool)
-                for pos in _bloom_probes(np.array([key], np.uint64), m):
-                    p = int(pos[0])
-                    hit &= ((mat[:, p >> 3] >> (7 - (p & 7))) & 1).astype(bool)
-                may[grp] |= hit
-        # domains other than i64/str never wrote a bloom (bloom_domain);
-        # unknown tags keep the row
-        may |= ~np.isin(dom_arr.astype(str), ("i64", "str"))
-        cand &= ~may
-    excl[np.array(rows)] = cand
-    return excl
-
-
-# Above this many stat rows per predicate column, string-RANGE predicates
-# (< <= > >=) skip their per-row exact-set fallback — min/max still prunes
-# them, so results stay exact; only some pruning sharpness is traded for
-# columnar planning. Equality/IN/prefix/!= vectorize exactly at any size.
-_DISTINCT_FALLBACK_ROWS = 4096
-
-
-def _plan_survivors(t, predicates) -> list:
-    """Vectorized driver-side planner: evaluate every predicate as numpy/
-    pandas masks over the snapshot's (pid, column) stat rows — at 10^5-10^6
-    partitions this is a handful of columnar passes instead of millions of
-    Python dict probes (the round-4 judge's one weak-at-100× finding).
-    Bloom probes (per-row by necessity — bit tests into per-row bitmaps)
-    run ONLY on equality/IN predicates, only for rows that survived the
-    envelope+set masks AND recorded no exact set (a set is strictly sharper
-    than its bloom). Semantics identical to the _page_may_match /
-    _distinct_may_match twins; a pytest proves survivor-set equality."""
-    import numpy as np
-
-    from ..operators.decode import _distinct_may_match
-
-    pid_np = t.column("pid").to_numpy(zero_copy_only=False)
-    all_pids = np.unique(pid_np)
-    if not predicates:
-        return [int(p) for p in all_pids]
-    df = t.to_pandas()
-    dead: set[int] = set()
-    for col, op, val in predicates:
-        sub = df[df["column"] == col]
-        if sub.empty:
-            continue  # predicate on a column this store lacks
-        keep = _vec_envelope_may_match(op, val, sub["stat_min"], sub["stat_max"])
-        sd = sub["stat_distinct"]
-        if op in ("==", "="):
-            keep &= _vec_distinct_eq_may(val, sd)
-        elif op == "in":
-            any_may = np.zeros(len(sub), bool)
-            for v2 in val:
-                any_may |= _vec_distinct_eq_may(v2, sd)
-            keep &= any_may
-        elif op in ("startswith", "like_prefix"):
-            keep &= _vec_distinct_prefix_may(val, sd)
-        elif op == "!=":
-            keep &= _vec_distinct_ne_may(val, sd)
-        elif len(sub) <= _DISTINCT_FALLBACK_ROWS:
-            sd_np = sd.to_numpy(dtype=object)
-            for i in np.flatnonzero(keep):
-                if not _distinct_may_match(op, val, sd_np[i]):
-                    keep[i] = False
-        if op in ("==", "=", "in"):
-            # blooms only help rows that kept so far and recorded no exact
-            # set (a set is strictly sharper than its own bloom)
-            vals = list(val) if op == "in" else [val]
-            active = keep & sd.isna().to_numpy(dtype=bool)
-            if active.any():
-                blooms = np.where(
-                    active, sub["stat_bloom"].to_numpy(dtype=object), None
-                )
-                doms = np.where(
-                    active, sub["stat_bloom_dom"].to_numpy(dtype=object), None
-                )
-                keep &= ~_vec_bloom_excl(vals, blooms, doms)
-        dead.update(int(p) for p in sub["pid"].to_numpy()[~keep])
-    return [int(p) for p in all_pids if int(p) not in dead]
+    return (f.attribute[0], op, tuple(f.value) if op == "in" else f.value)
 
 
 class ParzigPartition(InputPartition):
@@ -425,11 +126,13 @@ class ParzigReader(DataSourceReader):
         return filters
 
     def partitions(self):
-        t = pq.read_table(self.snap_path, columns=_STAT_COLS)
-        return [
-            ParzigPartition(pid)
-            for pid in _plan_survivors(t, self.predicates)
-        ]
+        from ..plans import prune
+        from ..plans.manifest import ManifestStore
+
+        _stats, pids, state = prune.plan(
+            ManifestStore(self.root), self.snap_path, self.predicates
+        )
+        return [ParzigPartition(pid) for pid in pids[state != prune.EXCLUDED].tolist()]
 
     def read(self, partition):
         from ..operators.decode import decode_pid_rows, decoded_schema

@@ -467,7 +467,7 @@ def test_bloom_skips_long_string_columns():
     conservative keep in every pruning twin."""
     from parzig_spark.codecs import encode_column
     from parzig_spark.codecs.stats import BLOOM_MAX_AVG_LEN, column_bloom
-    from parzig_spark.operators.decode import _page_may_match
+    from parzig_spark.plans import prune
 
     docs = pa.array(["x" * (BLOOM_MAX_AVG_LEN * 2) + str(i) for i in range(50)])
     b, dom = column_bloom(docs)
@@ -480,7 +480,8 @@ def test_bloom_skips_long_string_columns():
     assert "bloom_domain" not in meta
     assert all("bloom" not in p for p in meta["pages"])
     # absent bloom keeps the page under equality (sound)
-    assert _page_may_match("==", "anything", "a", "z", None, None) is True
+    may, _ = prune.verdicts("==", "anything", "str", ["a"], ["z"], [None], [None])
+    assert may[0]
 
 
 def test_bloom_short_strings_no_false_negatives():
@@ -507,10 +508,13 @@ def test_bloom_short_strings_no_false_negatives():
 
 def test_page_may_match_type_mismatch_is_conservative():
     """Numeric predicate against string/temporal page stats must keep the
-    page (partition-level twin nulls out via cast), never crash."""
-    from parzig_spark.operators.decode import _page_may_match
+    page (the evaluator's literal-type guard), never crash."""
+    from parzig_spark.plans import prune
 
-    assert _page_may_match(">=", 3, "1-URGENT", "5-LOW") is True
-    assert _page_may_match("==", 1.5, "2024-01-01", "2024-02-01") is True
+    def may(op, val, lane, lo, hi):
+        return bool(prune.verdicts(op, val, lane, [lo], [hi])[0][0])
+
+    assert may(">=", 3, "str", "1-URGENT", "5-LOW") is True
+    assert may("==", 1.5, "date", "2024-01-01", "2024-02-01") is True
     # and real numeric stats still exclude
-    assert _page_may_match(">=", 10, "1", "5") is False
+    assert may(">=", 10, "int", "1", "5") is False

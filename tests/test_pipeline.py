@@ -546,7 +546,8 @@ def test_string_prefix_and_range_prune_partitions(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from parzig_spark.operators import decode_table, encode_table
-    from parzig_spark.operators.decode import _prefix_upper, prune_manifests
+    from parzig_spark.codecs.stats import increment_string as _prefix_upper
+    from parzig_spark.operators.decode import prune_manifests
     from parzig_spark.plans.manifest import ManifestStore
 
     # 4 widely separated long-key groups; every key exceeds the 16-char
@@ -953,7 +954,8 @@ def test_in_list_pruning_all_levels(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from parzig_spark.operators import decode_table, encode_table
-    from parzig_spark.operators.decode import _page_may_match, prune_manifests
+    from parzig_spark.operators.decode import prune_manifests
+    from parzig_spark.plans import prune
     from parzig_spark.plans.manifest import ManifestStore
 
     # --- partition level: range-grouped k + a scattered value v per row
@@ -1019,7 +1021,10 @@ def test_in_list_pruning_all_levels(spark, tmp_path):
     assert 5 in ks and 17_000 in ks
     assert {r["w"] for r in rows if r["k"] in (5, 17_000)} == {15, 51_000}
 
-    # --- executor-twin unit checks
-    assert _page_may_match("in", [5, 17_000], 0, 8191) is True
-    assert _page_may_match("in", [9_000, 17_000], 0, 8191) is False
-    assert _page_may_match("in", [], 0, 8191) is False  # empty -> excluded
+    # --- page-level evaluator unit checks (a page spanning k 0..8191)
+    def page_may(vals):
+        return bool(prune.verdicts("in", vals, "int", ["0"], ["8191"])[0][0])
+
+    assert page_may([5, 17_000]) is True
+    assert page_may([9_000, 17_000]) is False
+    assert page_may([]) is False  # empty -> excluded
