@@ -328,10 +328,12 @@ def _outer_compress(payload: bytes, meta: dict, outer) -> bytes:
             pa.Codec("zstd", compression_level=_ZSTD_LEVEL) if outer == "zstd" else pa.Codec(outer)
         )
         if outer == "gzip" and len(payload) > (512 << 10):
-            # gzip runs ~30 MB/s on high-entropy payloads; a 64 KB prefix
-            # trial skips the full pass when it provably would be dropped
-            # by the keep-ratio gate anyway (outer wrapping is per-blob
-            # metadata, so skipping changes bytes on disk, never values)
+            # gzip runs ~30 MB/s on high-entropy payloads; a heuristic
+            # trial on the first 64 KB skips the full pass when that head
+            # alone fails the keep-ratio gate. The rest of the payload is
+            # never looked at, so a compressible tail can lose its outer
+            # wrapping (per-blob metadata: bytes on disk change, values
+            # never do)
             head_c = codec_obj.compress(payload[: 64 << 10], asbytes=True)
             if len(head_c) >= OUTER_KEEP_RATIO * (64 << 10):
                 return payload

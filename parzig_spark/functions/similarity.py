@@ -9,9 +9,11 @@ Two paths per the build brief:
   never scans the full table.
 
 Determinism note: bucket signs are computed with left-associated double
-arithmetic (Catalyst expressions for dims ≤ _CATALYST_DIM_CAP, otherwise a
-vectorized pandas UDF), so the same formula re-stated in SQL (DuckDB
-oracle) or driver-side Python reproduces identical buckets bit-for-bit.
+arithmetic — ``lsh_index`` runs the fold vectorized in ``mapInPandas``
+(one numpy op per term, in index order), and ``bucket_expr`` /
+``bucket_of`` state the same fold as Catalyst expressions and as
+driver-side Python — so the SQL (DuckDB oracle) and Python twins
+reproduce identical buckets bit-for-bit at any dimensionality.
 """
 
 from __future__ import annotations
@@ -25,10 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Above this dimensionality the per-term Catalyst expression gets unwieldy
-# for codegen; the pandas-UDF path takes over (numpy matmul — same signs in
-# the non-degenerate case, but not guaranteed bit-identical to SQL).
-_CATALYST_DIM_CAP = 256
+# per-write file committer algorithm option (see build_lsh_index)
+_V2_COMMITTER = "mapreduce.fileoutputcommitter.algorithm.version"
 
 
 def _cosine_expr(vec_col: str, qcol: str):
@@ -280,7 +280,13 @@ def build_lsh_index(
     # Co-locate each bucket in one task before the dynamic-partition write:
     # one output file per bucket instead of (tasks × buckets) tiny files —
     # both the build and every subsequent probe scan touch far fewer files.
-    indexed.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(path)
+    # v2 committer: one rename per task instead of a serial driver-side
+    # per-directory pass at job commit; its weaker job atomicity is fine
+    # for a build-once index that is rewritten whole on failure
+    (
+        indexed.repartition("bucket").write.mode("overwrite")
+        .option(_V2_COMMITTER, "2").partitionBy("bucket").parquet(path)
+    )
     _invalidate_index_cache(path)  # rebuild invalidates across all sessions
     with open(os.path.join(path, "_meta.json"), "w") as f:
         json.dump(
@@ -451,7 +457,10 @@ def build_ivf_index(
     indexed = df.select(key_col, vec_col).withColumn(
         "cluster", ivf_cluster_expr(vec_col, centroids)
     )
-    indexed.repartition("cluster").write.mode("overwrite").partitionBy("cluster").parquet(path)
+    (
+        indexed.repartition("cluster").write.mode("overwrite")
+        .option(_V2_COMMITTER, "2").partitionBy("cluster").parquet(path)
+    )
     _invalidate_index_cache(path)  # rebuild invalidates across all sessions
     with open(os.path.join(path, "_meta.json"), "w") as f:
         json.dump(

@@ -8,18 +8,25 @@ kernels replace the per-page decode loop. Column pruning works exactly like
 the reference's readColumn(index): ask for fewer columns and only those
 blobs are opened.
 
-Predicate pruning is planned, never evaluated, here: the driver runs the
-snapshot's stat rows through :mod:`plans.prune` (the one evaluator every
-read path shares) and the decode tasks only see surviving pids; inside a
-PAGED partition ``decode_pid_rows`` asks the same evaluator for the
-surviving pages.
+Every store read has one shape, like the reference's footer-then-row-group
+split: :func:`plan_read` plans on the driver (view resolution through
+:func:`resolve_view`, then the snapshot's stat rows through
+:mod:`plans.prune`, the one evaluator every read path shares) and returns
+the pids to read; :func:`map_pids` runs one per-pid function over that
+list in a single shuffle-free stage; :func:`read_pid` reads one
+partition's manifest file and decodes it. ``decode_table``,
+``verify_store``, ``delete_rows`` and the ``parzig`` data source all read
+this way. Inside a PAGED partition ``decode_pid_rows`` asks the same
+evaluator for the surviving pages.
 """
 
 from __future__ import annotations
 
 import json
+import os
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -281,12 +288,9 @@ def decode_table(
     stored row forever). upsert_rows joins on these to build its delete
     bitmaps without a second decode.
 
-    The driver reads ONE manifest file for the schema; `spark.read.parquet`
-    on the compacted snapshot (written here if stale — one driver-side
-    compaction, amortized across decodes) distributes the manifest rows.
-    With ``predicates``, ``since_snapshot`` or ``pids`` the driver first
-    plans the read from the snapshot's stat rows (columnar, through
-    :mod:`plans.prune`) and the manifest rows are filtered once by pid.
+    The driver reads ONE manifest file for the schema and plans the pid
+    list with :func:`plan_read`; one shuffle-free stage
+    (:func:`map_pids`) then runs :func:`read_pid` once per pid.
 
     ``predicates`` (e.g. ``[("o_orderkey", ">=", 1000)]``) prune whole
     partitions — and, in PAGED stores, pages — via the stored stats
@@ -311,59 +315,116 @@ def decode_table(
     exactly like ``snapshot=``. Unknown names raise (never a silent
     fallback to head). Mutually exclusive with ``snapshot``.
     """
-    store = ManifestStore(store_root)
+    _snap, keep, delete_ops = plan_read(
+        store_root, snapshot=snapshot, ref=ref, predicates=predicates,
+        since_snapshot=since_snapshot, pids=pids,
+    )
+    cols, ddl, casts = decoded_schema(ManifestStore(store_root), columns)
+    if include_pid_pos:
+        ddl = f"{ddl}, _pid long, _pos long"
+
+    def decode_one(pid):
+        return read_pid(
+            store_root, pid, cols, casts, predicates=predicates,
+            delete_ops=delete_ops, include_pid_pos=include_pid_pos,
+        )
+
+    return map_pids(spark, keep, decode_one, ddl)
+
+
+def resolve_view(store: ManifestStore, snapshot: int | None = None, ref: str | None = None):
+    """(pinned version or None, snapshot path, delete ops) of the view a
+    read sees — the one place ``ref``/``snapshot`` resolve.
+
+    ``ref`` resolves to its pinned version and is exclusive with
+    ``snapshot``. A pinned read uses that snapshot and exactly the delete
+    ops its sidecar recorded (a snapshot taken before a delete reproduces
+    the pre-delete view). A head read uses ``store.fresh_snapshot()`` and
+    every committed op: a fresh snapshot can predate the newest delete op
+    (sealing is pid-set-driven), so the head never reads the sidecar. The
+    op list is resolved once, so one query sees one consistent delete set
+    even if ops commit mid-run."""
     store.check_format()
     if ref is not None:
         if snapshot is not None:
             raise ValueError("pass either ref= or snapshot=, not both")
         from .refs import resolve_ref
 
-        snapshot = resolve_ref(store_root, ref)
-    cols, ddl, casts = decoded_schema(store, columns)
-    if include_pid_pos:
-        ddl = f"{ddl}, _pid long, _pos long"
-    # Row-level deletes (merge-on-read): a head read applies every committed
-    # delete op; a pinned (time-travel) read applies exactly the ops the
-    # snapshot's sidecar recorded — a snapshot taken before a delete still
-    # reproduces the pre-delete view. The op list is resolved ONCE here, so
-    # one query sees one consistent delete set even if ops commit mid-run.
-    if snapshot is not None:
-        delete_ops = store.snapshot_delete_ops(snapshot)
-    else:
-        delete_ops = store.committed_delete_ops()
-    snap = store.snapshot_path(snapshot) if snapshot is not None else store.fresh_snapshot()
-    manifests = spark.read.parquet(snap).select("pid", "column", "meta_json")
-    if predicates or since_snapshot is not None or pids is not None:
-        # plan on the driver from the snapshot's stat rows, then filter the
-        # manifest rows once by pid
-        _stats, all_pids, state = prune.plan(store, snap, predicates)
-        keep = set(all_pids[state != prune.EXCLUDED].tolist())
-        if since_snapshot is not None:
-            keep -= store.snapshot_pids(since_snapshot)
-        if pids is not None:
-            keep &= {int(p) for p in pids}
-        manifests = manifests.filter(F.col("pid").isin(sorted(keep)))
-    if columns is not None:
-        # predicate columns' rows ride along even when not projected — their
-        # per-page stats drive section skipping inside surviving partitions
-        pred_cols = {p[0] for p in predicates or []}
-        manifests = manifests.filter(F.col("column").isin(sorted(set(columns) | pred_cols)))
-    manifests = manifests.repartition(spark.sparkContext.defaultParallelism * 2, "pid")
+        snapshot = resolve_ref(store.root, ref)
+    if snapshot is None:
+        return None, store.fresh_snapshot(), store.committed_delete_ops()
+    snapshot = int(snapshot)
+    return snapshot, store.snapshot_path(snapshot), store.snapshot_delete_ops(snapshot)
 
-    def decode_partition(batches):
-        """Iterator[pa.RecordBatch] of manifest rows -> decoded row batches
-        (mapInArrow adapter over :func:`decode_pid_rows`)."""
-        rows: dict[int, dict[str, dict]] = {}
+
+def plan_read(
+    store_root: str,
+    snapshot: int | None = None,
+    ref: str | None = None,
+    predicates: list[tuple] | None = None,
+    since_snapshot: int | None = None,
+    pids: list[int] | None = None,
+) -> tuple[str, list[int], list[str]]:
+    """The driver plan of every store read: (snapshot path, sorted pids to
+    read, delete ops). The view comes from :func:`resolve_view`; the pids
+    are the snapshot's ``prune.plan`` survivors, minus the pids already
+    visible at ``since_snapshot``, intersected with ``pids``."""
+    store = ManifestStore(store_root)
+    _version, snap, delete_ops = resolve_view(store, snapshot, ref)
+    _stats, all_pids, state = prune.plan(store, snap, predicates)
+    keep = set(all_pids[state != prune.EXCLUDED].tolist())
+    if since_snapshot is not None:
+        keep -= store.snapshot_pids(since_snapshot)
+    if pids is not None:
+        keep &= {int(p) for p in pids}
+    return snap, sorted(keep), delete_ops
+
+
+def manifest_rows(store_root: str, pid: int, fields: list[str], columns=None) -> list[dict]:
+    """``fields`` of one partition's manifest rows (``manifests/part-{pid}``,
+    one row per stored column), limited to ``columns`` when given."""
+    path = os.path.join(store_root, "manifests", f"part-{pid}.parquet")
+    rows = pq.read_table(path, columns=["column", *fields]).to_pylist()
+    return [r for r in rows if columns is None or r["column"] in columns]
+
+
+def read_pid(
+    store_root: str,
+    pid: int,
+    cols: list[str],
+    casts: dict,
+    predicates: list[tuple] | None = None,
+    delete_ops: "list[str] | tuple" = (),
+    include_pid_pos: bool = False,
+):
+    """Decoded Arrow batches of one partition — the per-pid reader behind
+    ``decode_table``, ``delete_rows`` and both ``parzig`` data-source
+    readers. Reads the partition's manifest rows for ``cols`` plus the
+    predicate columns (whose page stats drive section skipping even when
+    not projected), then runs :func:`decode_pid_rows`."""
+    need = set(cols) | {p[0] for p in predicates or []}
+    by_col = {r["column"]: r for r in manifest_rows(store_root, pid, ["meta_json"], need)}
+    return decode_pid_rows(
+        store_root, {pid: by_col}, cols, casts, predicates=predicates,
+        delete_ops=delete_ops, include_pid_pos=include_pid_pos,
+    )
+
+
+def map_pids(spark: SparkSession, pids: list[int], per_pid, schema: str) -> DataFrame:
+    """Run ``per_pid(pid) -> Iterator[pa.RecordBatch]`` over ``pids`` in one
+    shuffle-free stage: ``spark.range`` over the sorted list's indexes
+    (at most 2x default parallelism tasks, each a contiguous index range),
+    each task mapping its indexes back to pids. No manifest rows cross
+    the JVM boundary and no ``Exchange`` is planned."""
+    pids = sorted(int(p) for p in pids)
+    n_tasks = max(1, min(len(pids), 2 * spark.sparkContext.defaultParallelism))
+
+    def run(batches):
         for batch in batches:
-            for row in batch.to_pylist():
-                rows.setdefault(int(row["pid"]), {})[row["column"]] = row
-        yield from decode_pid_rows(
-            store_root, rows, cols, casts,
-            predicates=predicates, delete_ops=delete_ops,
-            include_pid_pos=include_pid_pos,
-        )
+            for i in batch.column(0).to_pylist():
+                yield from per_pid(pids[i])
 
-    return manifests.mapInArrow(decode_partition, schema=ddl)
+    return spark.range(len(pids), numPartitions=n_tasks).mapInArrow(run, schema=schema)
 
 
 def decode_pid_rows(
@@ -376,8 +437,7 @@ def decode_pid_rows(
     include_pid_pos: bool = False,
 ):
     """Decode partitions from their manifest rows — the worker-side kernel
-    shared by :func:`decode_table` (mapInArrow) and the ``parzig`` Python
-    data source (sources/datasource.py read()). ``rows`` maps pid ->
+    behind :func:`read_pid`. ``rows`` maps pid ->
     column -> manifest row dict (pid/column/meta_json). Yields Arrow
     RecordBatches in ``cols`` order (+ _pid/_pos when requested).
 

@@ -37,20 +37,18 @@ import os
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow.compute as pc
+from pyspark.sql import SparkSession
 
-from ..codecs import decode_column, decode_u64, encode_u64
-from ..plans import prune
+from ..codecs import decode_u64, encode_u64
 from ..plans.manifest import ManifestStore
+from .decode import map_pids, plan_read, read_pid
 
 DELETE_SUMMARY_SCHEMA = "pid long, n_rows long, n_match long, n_new long"
 
 def _match_mask(arr: pa.Array, op: str, val) -> np.ndarray:
     """Boolean match mask for one (column, op, value) predicate — nulls
     never match (SQL semantics)."""
-    import pyarrow.compute as pc
-
     if op in ("startswith", "like_prefix"):
         m = pc.starts_with(arr, pattern=str(val))
     elif op == "in":
@@ -100,81 +98,49 @@ def delete_rows(
             "op_id": op_id, "committed": False,
             "partitions_touched": 0, "rows_deleted": 0, "rows_matched": 0,
         }
-    existing_ops = store.committed_delete_ops()
 
     # stats pruning on the driver: partitions whose stats prove no row can
-    # match write no bitmap
-    snap = store.fresh_snapshot()
-    _stats, pids, state = prune.plan(store, snap, predicates)
+    # match write no bitmap. A head plan: existing_ops = every committed op
+    _snap, pids, existing_ops = plan_read(store_root, predicates=predicates)
     pred_cols = sorted({p[0] for p in predicates})
-    manifests = spark.read.parquet(snap).select("pid", "column", "meta_json").filter(
-        F.col("pid").isin(pids[state != prune.EXCLUDED].tolist())
-        & F.col("column").isin(pred_cols)
-    )
 
-    def scan(batches):
+    def scan(pid):
+        # physical rows: no delete ops, no page skipping, no casts
+        table = pa.Table.from_batches(list(read_pid(store_root, pid, pred_cols, {})))
+        mask = None
+        for col_name, op, val in predicates:
+            m = _match_mask(table.column(col_name).combine_chunks(), op, val)
+            mask = m if mask is None else (mask & m)
+        if mask is None or not mask.any():
+            return
         local = ManifestStore(store_root)
+        prior = load_delete_mask(local, pid, table.num_rows, existing_ops)
+        n_new = int(mask.sum() if prior is None else (mask & ~prior).sum())
+        blob, _ = encode_u64(mask.astype(np.uint64), width=1)
+        # write-ahead into the (unmarked, invisible) op dir; tmp+rename
+        # so a racing speculative task never exposes a partial file
         op_dir = local.deletes_dir(op_id)
         os.makedirs(op_dir, exist_ok=True)
-        rows: dict[int, dict[str, str]] = {}
-        for batch in batches:
-            for row in batch.to_pylist():
-                rows.setdefault(int(row["pid"]), {})[row["column"]] = row["meta_json"]
-        out = []
-        for pid, by_col in rows.items():
-            mask = None
-            n_phys = None
-            for col_name, op, val in predicates:
-                meta = json.loads(by_col[col_name])
-                n_phys = meta["n"]
-                arr = decode_column(local.read_blob(pid, col_name), meta)
-                m = _match_mask(arr, op, val)
-                mask = m if mask is None else (mask & m)
-            if mask is None or not mask.any():
-                continue
-            prior = np.zeros(n_phys, bool)
-            for p in local.delete_bitmap_paths(pid, existing_ops):
-                with open(p, "rb") as f:
-                    prior |= decode_u64(f.read(), n_phys, 1).astype(bool)
-            n_new = int((mask & ~prior).sum())
-            blob, _ = encode_u64(mask.astype(np.uint64), width=1)
-            # write-ahead into the (unmarked, invisible) op dir; tmp+rename
-            # so a racing speculative task never exposes a partial file
-            final = os.path.join(op_dir, f"{pid}.bin")
-            tmp = final + f".tmp-{os.getpid()}"
-            with open(tmp, "wb") as f:
-                f.write(blob)
-            os.replace(tmp, final)
-            out.append(
-                {"pid": pid, "n_rows": n_phys, "n_match": int(mask.sum()),
-                 "n_new": n_new}
-            )
-        schema = pa.schema(
-            [("pid", pa.int64()), ("n_rows", pa.int64()),
-             ("n_match", pa.int64()), ("n_new", pa.int64())]
+        final = os.path.join(op_dir, f"{pid}.bin")
+        tmp = final + f".tmp-{os.getpid()}"
+        with open(tmp, "wb") as f:
+            f.write(blob)
+        os.replace(tmp, final)
+        yield pa.RecordBatch.from_pylist(
+            [{"pid": pid, "n_rows": table.num_rows, "n_match": int(mask.sum()),
+              "n_new": n_new}]
         )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
 
-    summary = (
-        manifests.repartition(spark.sparkContext.defaultParallelism * 2, "pid")
-        .mapInArrow(scan, schema=DELETE_SUMMARY_SCHEMA)
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).alias("parts"),
-            F.sum("n_new").alias("new"),
-            F.sum("n_match").alias("match"),
-        )
-        .first()
-    )
+    summary = map_pids(spark, pids, scan, DELETE_SUMMARY_SCHEMA).toArrow()
     # the job succeeded and every touched partition's bitmap is in place —
     # the marker is the store-level atomic commit point
     committed_now = store.commit_delete_op(op_id, {})
     return {
         "op_id": op_id,
         "committed": committed_now,
-        "partitions_touched": int(summary["parts"] or 0),
-        "rows_deleted": int(summary["new"] or 0),
-        "rows_matched": int(summary["match"] or 0),
+        "partitions_touched": summary.num_rows,
+        "rows_deleted": int(pc.sum(summary.column("n_new")).as_py() or 0),
+        "rows_matched": int(pc.sum(summary.column("n_match")).as_py() or 0),
     }
 
 

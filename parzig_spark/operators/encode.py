@@ -418,20 +418,12 @@ def encode_table(
     np_part = num_partitions or n_buckets
     data_cols = [c for c in df.columns]
     shuffled = with_pid.repartition(np_part, "pid")
-    import os as _os
-    jvm_sort = _os.environ.get("SPARK_GRAFT_JVM_SORT", "1") != "0"
-    if sort_cols and jvm_sort:
-        # Push the canonical (pid, *sort_cols) sort into the JVM: Tungsten
+    if sort_cols:
+        # The canonical (pid, *sort_cols) sort runs in the JVM: Tungsten
         # sorts binary rows (spill-capable — an oversized partition sorts
-        # through disk instead of OOMing the Python worker, which
-        # pa.Table.sort_by cannot do), and the Python side then skips its
-        # argsort + full-table take. Ordering semantics are identical to
-        # the pa.sort_by it replaces: ascending, nulls last, byte-wise
-        # UTF8 comparison, NaN greatest — so blobs are byte-identical
-        # under either path. Locally the two are a measured wash
-        # (jobs/ab_sort.py, interleaved best-of-4: ratio 1.013); the JVM
-        # default is chosen for the spill story on real executors.
-        # SPARK_GRAFT_JVM_SORT=0 restores the Python-side sort.
+        # through disk instead of OOMing the Python worker) with the same
+        # order pa.Table.sort_by would give: ascending, nulls last,
+        # byte-wise UTF8 comparison, NaN greatest.
         shuffled = shuffled.sortWithinPartitions(
             F.col("pid").asc(), *[F.col(c).asc_nulls_last() for c in sort_cols]
         )
@@ -443,12 +435,11 @@ def encode_table(
         Python objects, which halves memory traffic per byte (the scaling
         bottleneck on bandwidth-limited hosts).
 
-        ONE data copy for grouping + canonical order: the task's batches
-        concat once, then a single multi-key sort on (pid, *sort_cols) both
-        groups rows by bucket AND orders them canonically — buckets are then
-        zero-copy contiguous slices. (The previous per-batch pid-take plus
-        per-bucket sort moved every byte three times; on a bandwidth-capped
-        host data passes are the encode job's real budget.)
+        No data copy for grouping + canonical order: rows arrive sorted by
+        (pid, *sort_cols) from the JVM sort, the task's batches concat
+        zero-copy, and buckets are contiguous slices found by boundary
+        detection on the pid lane (on a bandwidth-capped host data passes
+        are the encode job's real budget).
         """
         incoming = [pa.Table.from_batches([b]) for b in batches]
         if not incoming:
@@ -457,21 +448,10 @@ def encode_table(
         del incoming
         if full.num_rows == 0:
             return  # a task can receive only zero-row batches
-        if sort_cols and jvm_sort:
-            # rows arrive pre-sorted by (pid, *sort_cols) — the JVM sort
-            # above — so grouping is pure boundary detection on the pid
-            # lane; concat_tables was zero-copy, so no full-table copy
-            # happens Python-side at all
-            pids_np = full.column("pid").to_numpy(zero_copy_only=False)
-        elif sort_cols:
-            full = full.sort_by(
-                [("pid", "ascending")] + [(c, "ascending") for c in sort_cols]
-            )
-            pids_np = full.column("pid").to_numpy(zero_copy_only=False)
-        else:
+        pids_np = full.column("pid").to_numpy(zero_copy_only=False)
+        if not sort_cols:
             # no canonical columns (all-nested table): group by pid only,
             # stable to preserve arrival order within a bucket
-            pids_np = full.column("pid").to_numpy(zero_copy_only=False)
             order = np.argsort(pids_np, kind="stable")
             full = full.take(pa.array(order))
             pids_np = pids_np[order]

@@ -35,7 +35,6 @@ Checks — list of ``(name, column, arg)``:
 from __future__ import annotations
 
 import json
-import os
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -44,7 +43,7 @@ from pyspark.sql import functions as F
 from ..plans import prune
 from ..plans.manifest import ManifestStore
 from .aggregate import _DISTINCT_DDL, _column_kinds, _pids_where, _stat_rows
-from .decode import decode_table, predicate_expr
+from .decode import decode_table, predicate_expr, resolve_view
 
 RESULT_DDL = "check string, column string, passed boolean, observed string"
 
@@ -91,18 +90,7 @@ def check_store(
     economics: ``{"total", "pruned", "metadata", "decoded"}``, read off the
     driver plan (no extra Spark job)."""
     store = ManifestStore(store_root)
-    store.check_format()
-    if ref is not None:
-        if snapshot is not None:
-            raise ValueError("pass either ref= or snapshot=, not both")
-        from .refs import resolve_ref
-
-        snapshot = resolve_ref(store_root, ref)
-    pinned = snapshot is not None
-    snap = (
-        store.snapshot_path(snapshot) if pinned else store.fresh_snapshot()
-    )
-    version = int(os.path.basename(snap)[len("snap-"):-len(".parquet")])
+    version, snap, ops = resolve_view(store, snapshot, ref)
     kinds, _types = _column_kinds(store)
     ref_col = next(iter(kinds))
 
@@ -130,14 +118,10 @@ def check_store(
     # ---- driver plan: prune, then pick the partitions to decode -------------
     # partial pids (stats cannot prove every row matches ``where``),
     # delete-touched pids (physical manifest counts are stale there) and,
-    # for string domain/bound checks, pids without an exact set. Pinned views
-    # apply exactly the sidecar's op set (time-travel semantics); a HEAD
-    # audit applies the currently committed ops — a fresh snapshot can
-    # predate the newest delete op (sealing is pid-set-driven), so the head
-    # path must not pin
+    # for string domain/bound checks, pids without an exact set; ``ops`` is
+    # the view's delete-op set (resolve_view)
     stats, pids, state = prune.plan(store, snap, where)
     survive = state != prune.EXCLUDED
-    ops = store.snapshot_delete_ops(version) if pinned else store.committed_delete_ops()
     decode = (state == prune.PARTIAL) | np.isin(pids, sorted(store.delete_touched_pids(ops)))
     setless = stats.column("stat_distinct").is_null().to_numpy(zero_copy_only=False)
     for col in {
@@ -164,7 +148,7 @@ def check_store(
     )
     dec = decode_table(
         spark, store_root, columns=need_cols or [ref_col],
-        snapshot=version if pinned else None, pids=pids[decode].tolist(),
+        snapshot=version, pids=pids[decode].tolist(),
         predicates=where,
     )
     if where:

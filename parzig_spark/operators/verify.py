@@ -1,10 +1,13 @@
 """Round-trip verification: decoded content must be bit-identical to source.
 
 Per BASELINE.json input_hint the per-row invariant is sha256 equality on
-``content``; we verify every requested column the same way (Spark-side
-``F.sha2(...,256)`` on strings — JVM codegen, no Python), via a full outer
-join on the key columns so dropped or phantom rows surface too. The
-reference analog is its golden-value equality testing
+``content``; ``verify_roundtrip`` verifies every requested column the same
+way (Spark-side ``F.sha2(...,256)`` on strings — JVM codegen, no Python),
+via a full outer join on the key columns so dropped or phantom rows
+surface too. ``verify_store`` audits the stored blobs at rest through the
+one read path of :mod:`operators.decode` (driver-planned pids, one
+per-pid task function, no shuffle). The reference analog is its
+golden-value equality testing
 (/root/reference/src/parquet_testing.zig, File.zig:269-292) — promoted here
 to a distributed invariant.
 """
@@ -30,9 +33,10 @@ def verify_store(
     """At-rest integrity audit: re-decode every committed blob and compare
     its canonical digest against the manifest's recorded sha256.
 
-    Distributed exactly like decode (manifest rows shuffle, one task audits
-    a partition's blobs); returns one row per (pid, column) with ``ok`` —
-    at 100 TB you run this as a scrubber job, filter ``ok = false``.
+    Read like decode (``plan_read`` pids, one shuffle-free stage, one task
+    audits a range of partitions, each from its own manifest file);
+    returns one row per (pid, column) with ``ok`` — at 100 TB you run
+    this as a scrubber job, filter ``ok = false``.
 
     ``snapshot``/``ref`` audit a PINNED view instead of the head — the
     write-audit-publish gate (operators/wap.py): scrub the staged branch
@@ -41,56 +45,32 @@ def verify_store(
     import json as _json
 
     import pyarrow as pa
-    from pyspark.sql import functions as F  # noqa: F811
 
     from ..codecs import decode_column
     from ..plans.manifest import ManifestStore
+    from .decode import manifest_rows, map_pids, plan_read
     from .encode import column_digest
 
-    store = ManifestStore(store_root)
-    store.check_format()  # v1/foreign store → loud error, not blanket digest_mismatch
-    if ref is not None:
-        if snapshot is not None:
-            raise ValueError("pass either ref= or snapshot=, not both")
-        from .refs import resolve_ref
-
-        snapshot = resolve_ref(store_root, ref)
-    snap = (
-        store.snapshot_path(snapshot)
-        if snapshot is not None
-        else store.fresh_snapshot()
-    )
-    manifests = spark.read.parquet(snap).select("pid", "column", "meta_json", "sha256")
-    manifests = manifests.repartition(
-        spark.sparkContext.defaultParallelism * 2, "pid"
+    _snap, pids, _ops = plan_read(store_root, snapshot=snapshot, ref=ref)
+    schema = pa.schema(
+        [("pid", pa.int64()), ("column", pa.string()), ("ok", pa.bool_()), ("err", pa.string())]
     )
 
-    def audit(batches):
+    def audit(pid):
         local = ManifestStore(store_root)
-        for batch in batches:
-            rows = batch.to_pylist()
-            out = []
-            for row in rows:
-                meta = _json.loads(row["meta_json"])
-                try:
-                    blob = local.read_blob(int(row["pid"]), row["column"])
-                    digest = column_digest(decode_column(blob, meta))
-                    ok = digest == row["sha256"]
-                    err = None if ok else "digest_mismatch"
-                except Exception as e:  # noqa: BLE001 — audit must not abort
-                    ok, err = False, f"{type(e).__name__}: {e}"
-                out.append(
-                    {"pid": row["pid"], "column": row["column"], "ok": ok, "err": err}
-                )
-            yield pa.RecordBatch.from_pylist(
-                out,
-                schema=pa.schema(
-                    [("pid", pa.int64()), ("column", pa.string()),
-                     ("ok", pa.bool_()), ("err", pa.string())]
-                ),
-            )
+        out = []
+        for row in manifest_rows(store_root, pid, ["meta_json", "sha256"]):
+            try:
+                blob = local.read_blob(pid, row["column"])
+                digest = column_digest(decode_column(blob, _json.loads(row["meta_json"])))
+                ok = digest == row["sha256"]
+                err = None if ok else "digest_mismatch"
+            except Exception as e:  # noqa: BLE001 — audit must not abort
+                ok, err = False, f"{type(e).__name__}: {e}"
+            out.append({"pid": pid, "column": row["column"], "ok": ok, "err": err})
+        yield pa.RecordBatch.from_pylist(out, schema=schema)
 
-    return manifests.mapInArrow(audit, schema="pid long, column string, ok boolean, err string")
+    return map_pids(spark, pids, audit, "pid long, column string, ok boolean, err string")
 
 
 def verify_roundtrip(

@@ -61,13 +61,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # v2 commits task output straight to the destination (one rename
-        # per task instead of a serial driver-side per-directory pass at
-        # job commit) — measured 2.5s -> 1.3s on the 64-directory LSH index
-        # write. The engine's own store commits use parzig's marker
-        # protocol, not this committer; index/maintenance parquet writes
-        # are build-once artifacts where v2's weaker job atomicity is fine.
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         # the parzig Python data source plans its own partition pruning in
         # pushFilters (sources/datasource.py) — default-off in Spark 4.1
         .config("spark.sql.python.filterPushdown.enabled", "true")

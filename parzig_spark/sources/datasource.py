@@ -7,12 +7,13 @@ distinct sets) before a single task is planned.
 This is the switch-over surface done Spark-natively: ``register_store``
 wraps decode_table as a temp view (projection pruning only);
 the data source goes further — Catalyst hands the scan its compiled
-``Filter`` tree via ``pushFilters``, the reader plans one InputPartition
-per SURVIVING store partition driver-side (the snapshot's stat rows
-through :mod:`plans.prune`, the evaluator every read path shares — no
-SparkSession needed at planning time), and each task decodes its
-partition through the shared
-:func:`operators.decode.decode_pid_rows` kernel, yielding Arrow batches
+``Filter`` tree via ``pushFilters``, and the reader plans one
+InputPartition per SURVIVING store partition driver-side through
+:func:`operators.decode.plan_read`, the planner every read path shares
+(view resolution, then the snapshot's stat rows through
+:mod:`plans.prune` — no SparkSession needed at planning time). Both the
+batch and the stream reader read a partition through the one per-pid
+reader, :func:`operators.decode.read_pid`, yielding Arrow batches
 (page-level skipping and merge-on-read delete masks included).
 
 Pruning here is partition/page-granular, so every filter is also returned
@@ -37,7 +38,6 @@ from __future__ import annotations
 import json
 import os
 
-import pyarrow.parquet as pq
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -79,13 +79,22 @@ def _translate(f):
 
 
 class ParzigPartition(InputPartition):
-    def __init__(self, pid: int):
+    """One store partition to read, with the delete ops its view applies
+    (resolved on the driver; ``read`` runs from a reader pickled before
+    planning, so the ops travel with the partition)."""
+
+    def __init__(self, pid: int, delete_ops):
         self.pid = int(pid)
+        self.delete_ops = tuple(delete_ops)
 
 
-class ParzigReader(DataSourceReader):
-    def __init__(self, options, schema_cols: list[str]):
-        from ..operators.refs import resolve_ref
+class _PidReads:
+    """``read`` shared by the batch and stream readers: one partition
+    through :func:`operators.decode.read_pid`, with ``cols``/``casts``
+    computed once on the driver."""
+
+    def _init_read(self, options, schema_cols: list[str]) -> None:
+        from ..operators.decode import decoded_schema
         from ..plans.manifest import ManifestStore
 
         self.root = options.get("path")
@@ -93,27 +102,27 @@ class ParzigReader(DataSourceReader):
             raise ValueError("parzig: pass the store root via .load(path)")
         store = ManifestStore(self.root)
         store.check_format()
-        ref = options.get("ref")
-        snapshot = options.get("snapshot")
-        if ref is not None and snapshot is not None:
-            raise ValueError("pass either ref= or snapshot=, not both")
-        if ref is not None:
-            snapshot = resolve_ref(self.root, ref)
-        self.pinned = snapshot is not None
-        snap = (
-            store.snapshot_path(int(snapshot))
-            if self.pinned
-            else store.fresh_snapshot()
-        )
-        self.snap_path = snap
-        version = int(os.path.basename(snap)[len("snap-"):-len(".parquet")])
-        self.delete_ops = (
-            store.snapshot_delete_ops(version)
-            if self.pinned
-            else store.committed_delete_ops()
-        )
-        self.columns = schema_cols
+        self.cols, _ddl, self.casts = decoded_schema(store, schema_cols)
         self.predicates: list[tuple] = []
+
+    def read(self, partition):
+        from ..operators.decode import read_pid
+
+        if partition is None:
+            # fully-pruned scan, empty store or empty micro-batch: PySpark
+            # substitutes a single None partition — zero rows
+            return
+        yield from read_pid(
+            self.root, partition.pid, self.cols, self.casts,
+            predicates=self.predicates, delete_ops=partition.delete_ops,
+        )
+
+
+class ParzigReader(_PidReads, DataSourceReader):
+    def __init__(self, options, schema_cols: list[str]):
+        self._init_read(options, schema_cols)
+        self.snapshot = options.get("snapshot")
+        self.ref = options.get("ref")
 
     def pushFilters(self, filters):
         for f in filters:
@@ -126,43 +135,15 @@ class ParzigReader(DataSourceReader):
         return filters
 
     def partitions(self):
-        from ..plans import prune
-        from ..plans.manifest import ManifestStore
+        from ..operators.decode import plan_read
 
-        _stats, pids, state = prune.plan(
-            ManifestStore(self.root), self.snap_path, self.predicates
+        _snap, pids, ops = plan_read(
+            self.root, snapshot=self.snapshot, ref=self.ref, predicates=self.predicates
         )
-        return [ParzigPartition(pid) for pid in pids[state != prune.EXCLUDED].tolist()]
-
-    def read(self, partition):
-        from ..operators.decode import decode_pid_rows, decoded_schema
-        from ..plans.manifest import ManifestStore
-
-        if partition is None:
-            # fully-pruned scan (or empty store): partitions() returned []
-            # and PySpark substitutes a single None partition — zero rows
-            return
-        store = ManifestStore(self.root)
-        cols, _ddl, casts = decoded_schema(store, self.columns)
-        pid = partition.pid
-        mt = pq.read_table(
-            os.path.join(store.manifest_dir, f"part-{pid}.parquet"),
-            columns=["pid", "column", "meta_json"],
-        )
-        by_col = {r["column"]: r for r in mt.to_pylist() if r["column"] in cols}
-        yield from decode_pid_rows(
-            self.root, {pid: by_col}, cols, casts,
-            predicates=self.predicates, delete_ops=self.delete_ops,
-        )
+        return [ParzigPartition(pid, ops) for pid in pids]
 
 
-class ParzigStreamPartition(InputPartition):
-    def __init__(self, pid: int, delete_ops: tuple):
-        self.pid = int(pid)
-        self.delete_ops = tuple(delete_ops)
-
-
-class ParzigStreamReader(DataSourceStreamReader):
+class ParzigStreamReader(_PidReads, DataSourceStreamReader):
     """``spark.readStream.format("parzig")`` — tail a store's PUBLISHED
     history: each micro-batch is the incremental read between two snapshot
     versions (exactly ``decode_table(since_snapshot=...)`` semantics), so
@@ -193,12 +174,8 @@ class ParzigStreamReader(DataSourceStreamReader):
     def __init__(self, options, schema_cols: list[str]):
         from ..plans.manifest import ManifestStore
 
-        self.root = options.get("path")
-        if not self.root:
-            raise ValueError("parzig: pass the store root via .load(path)")
+        self._init_read(options, schema_cols)
         self.store = ManifestStore(self.root)
-        self.store.check_format()
-        self.columns = schema_cols
         self.starting = options.get("starting", "latest")
         if self.starting not in ("latest", "earliest"):
             raise ValueError("parzig: starting must be 'latest' or 'earliest'")
@@ -264,25 +241,7 @@ class ParzigStreamReader(DataSourceStreamReader):
             new_pids -= _rewrite_silent_pids(
                 self.root, pids_from, pids_to, ops_from, set(ops), touched
             )
-        return [ParzigStreamPartition(pid, ops) for pid in sorted(new_pids)]
-
-    def read(self, partition):
-        from ..operators.decode import decode_pid_rows, decoded_schema
-        from ..plans.manifest import ManifestStore
-
-        if partition is None:
-            return  # empty micro-batch planned as [None] — zero rows
-        store = ManifestStore(self.root)
-        cols, _ddl, casts = decoded_schema(store, self.columns)
-        mt = pq.read_table(
-            os.path.join(store.manifest_dir, f"part-{partition.pid}.parquet"),
-            columns=["pid", "column", "meta_json"],
-        )
-        by_col = {r["column"]: r for r in mt.to_pylist() if r["column"] in cols}
-        yield from decode_pid_rows(
-            self.root, {partition.pid: by_col}, cols, casts,
-            delete_ops=list(partition.delete_ops),
-        )
+        return [ParzigPartition(pid, ops) for pid in sorted(new_pids)]
 
     def commit(self, end: dict) -> None:
         # offsets live in the query checkpoint; with a streamId, release
@@ -479,17 +438,17 @@ class ParzigWriter(DataSourceArrowWriter):
             if tbl.num_rows == 0:
                 continue
             n_rows += tbl.num_rows
-            sizes = _row_content_bytes(tbl)
+            # one prefix sum per batch: cum[i] = bytes of rows [0, i)
+            cum = np.concatenate(([0], np.cumsum(_row_content_bytes(tbl))))
             pos = 0
             while pos < tbl.num_rows:
                 budget = self.target_bytes - pending_bytes
-                cum = np.cumsum(sizes[pos:])
                 # rows up to and including the one that crosses the budget
-                take = int(np.searchsorted(cum, budget, side="left")) + 1
-                take = min(take, tbl.num_rows - pos)
-                pending.append(tbl.slice(pos, take))
-                pending_bytes += int(cum[take - 1])
-                pos += take
+                end = int(np.searchsorted(cum, cum[pos] + budget, side="left"))
+                end = min(end, tbl.num_rows)
+                pending.append(tbl.slice(pos, end - pos))
+                pending_bytes += int(cum[end] - cum[pos])
+                pos = end
                 if pending_bytes >= self.target_bytes:
                     flush()
         flush()

@@ -13,6 +13,7 @@ from parzig_spark.operators import (
     delete_rows,
     encode_table,
 )
+from parzig_spark.operators.decode import predicate_expr
 from parzig_spark.plans.manifest import ManifestStore
 from parzig_spark.sources.datasource import ParzigReader, register_datasource
 
@@ -83,6 +84,30 @@ def test_deletes_and_pinned_views(spark, tmp_path):
     assert pinned.count() == 6_000
     snap0 = spark.read.format("parzig").option("snapshot", "0").load(root)
     assert snap0.count() == 6_000
+
+    # PAGED store pinned at a snapshot that carries a delete (and a later
+    # delete the pin must not see): a predicate read through the data
+    # source equals decode_table's rows for the same view and predicate
+    paged = str(tmp_path / "dspin_paged")
+    encode_table(
+        _src(spark), paged, group_cols=["grp"], salt_cols=["k"], sort_cols=["k"],
+        target_bytes=1 << 30, resume=False, page_values=256,
+    ).count()
+    delete_rows(spark, paged, [("k", "<", 1_000)])
+    snap = ManifestStore(paged).write_snapshot()
+    version = int(snap.rsplit("snap-", 1)[1][: -len(".parquet")])
+    delete_rows(spark, paged, [("k", ">=", 1_500)])
+    preds = [("k", ">=", 500), ("k", "<", 2_000)]
+    via_ds = (
+        spark.read.format("parzig").option("snapshot", str(version)).load(paged)
+        .where("k >= 500 AND k < 2000")
+    )
+    via_decode = decode_table(spark, paged, snapshot=version, predicates=preds).filter(
+        predicate_expr(preds)
+    )
+    got = sorted(tuple(r) for r in via_ds.collect())
+    assert got == sorted(tuple(r) for r in via_decode.collect())
+    assert [r[1] for r in sorted(got, key=lambda r: r[1])] == list(range(1_000, 2_000))
 
 
 def test_columns_option_projects(spark, tmp_path):
@@ -340,7 +365,7 @@ def test_writer_chunked_staging_batch_size_invariant(spark, tmp_path):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     got = {}
     try:
-        for rows in (128, 1024, 4096):
+        for rows in (128, 1024, 4096, 8192):  # 8192: one batch holds all rows
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(rows))
             root = str(tmp_path / f"w{rows}")
             (df.write.format("parzig").mode("append")
@@ -350,7 +375,7 @@ def test_writer_chunked_staging_batch_size_invariant(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert len(got[128]) > 1, "expected a multi-chunk task"
-    assert got[128] == got[1024] == got[4096], got
+    assert got[128] == got[1024] == got[4096] == got[8192], got
 
 
 def test_writer_duplicate_chunk_content_fails_loudly(spark, tmp_path):

@@ -4,6 +4,7 @@ resume and skew scenarios from FIXTURES.md §F5."""
 import os
 import shutil
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -376,34 +377,87 @@ def test_blobs_byte_identical_across_parallelism(spark, corpus, tmp_path):
     assert a == b
 
 
-def test_blobs_byte_identical_across_sort_paths(spark, corpus, tmp_path, monkeypatch):
-    """The canonical (pid, *sort_cols) sort can run JVM-side (Tungsten,
-    spill-capable — the default) or Python-side (pa.Table.sort_by,
-    SPARK_GRAFT_JVM_SORT=0). Both must order rows identically — ascending,
-    nulls last, byte-wise UTF8 — so a store written under either path is
-    byte-identical and resume works across deployments that differ only in
-    the toggle."""
-    import hashlib
+def test_stored_partitions_decode_in_canonical_sort_order(spark, tmp_path):
+    """The canonical (pid, *sort_cols) sort runs JVM-side. Every stored
+    partition must decode in exactly the order pa.Table.sort_by gives on
+    its sort columns — ascending, nulls last, strings by UTF-8 bytes (so
+    U+FFFF sorts below an astral-plane emoji, unlike UTF-16 order) — so
+    pids and blobs stay a pure function of the data."""
+    from parzig_spark.operators.decode import decoded_schema, read_pid
 
-    roots = {}
-    for mode in ("1", "0"):
-        monkeypatch.setenv("SPARK_GRAFT_JVM_SORT", mode)
-        root = str(tmp_path / f"store_sort_{mode}")
-        _encode(spark, corpus, root)
-        roots[mode] = root
+    words = ["zeta", "Zeta", "é", "中文", "\uffff", "😀", "a", "", None]
+    rows = [
+        (i % 3, words[i % len(words)], None if i % 4 == 0 else (i * 7) % 11, i)
+        for i in range(600)
+    ]
+    df = spark.createDataFrame(rows, "grp int, s string, n int, k long")
+    root = str(tmp_path / "sortstore")
+    sort_cols = ["s", "n", "k"]
+    encode_table(
+        df, root, group_cols=["grp"], salt_cols=["k"], sort_cols=sort_cols,
+        target_bytes=2 << 10, resume=False,
+    ).count()
+    store = ManifestStore(root)
+    pids = sorted(store.committed_pids())
+    assert len(pids) > 3, "expected several partitions"
+    cols, _ddl, casts = decoded_schema(store)
+    seen = nulls = 0
+    for pid in pids:
+        got = pa.Table.from_batches(list(read_pid(root, pid, cols, casts)))
+        want = got.sort_by([(c, "ascending") for c in sort_cols], null_placement="at_end")
+        assert got.equals(want), pid
+        seen += got.num_rows
+        nulls += got.column("s").null_count
+    assert seen == len(rows)
+    assert nulls == sum(r[1] is None for r in rows)
 
-    def blob_map(root):
-        out = {}
-        store = ManifestStore(root)
-        for pid in sorted(os.listdir(store.blob_dir)):
-            for fname in sorted(os.listdir(os.path.join(store.blob_dir, pid))):
-                with open(os.path.join(store.blob_dir, pid, fname), "rb") as f:
-                    out[(pid, fname)] = hashlib.sha256(f.read()).hexdigest()
+
+def test_read_paths_plan_no_exchange(spark, tmp_path, monkeypatch):
+    """Every store read runs as one shuffle-free stage over the driver's
+    pid plan: no Exchange in the executed plan of decode_table (head,
+    predicates, pids, since_snapshot, _pid/_pos), verify_store, or
+    delete_rows' scan job."""
+    from parzig_spark.operators import decode as decode_mod
+    from parzig_spark.operators import delete as delete_mod
+    from parzig_spark.operators import delete_rows, verify_store
+
+    df = spark.range(0, 3_000).select(
+        (F.col("id") % 3).cast("int").alias("grp"), F.col("id").alias("k")
+    )
+    root = str(tmp_path / "noexchange")
+    common = dict(group_cols=["grp"], salt_cols=["k"], target_bytes=8 << 10, bucket_bits=16)
+    encode_table(df.filter("k < 1500"), root, pid_namespace=1, resume=False, **common).count()
+    ManifestStore(root).write_snapshot()  # version 0: first batch only
+    encode_table(df.filter("k >= 1500"), root, pid_namespace=2, resume=True, **common).count()
+
+    scans = []
+
+    def spy(*args, **kwargs):
+        out = decode_mod.map_pids(*args, **kwargs)
+        scans.append(out)
         return out
 
-    a, b = blob_map(roots["1"]), blob_map(roots["0"])
-    assert a, "no blobs written"
-    assert a == b
+    monkeypatch.setattr(delete_mod, "map_pids", spy)
+    assert delete_rows(spark, root, [("k", "<", 100)])["rows_deleted"] == 100
+    assert len(scans) == 1
+
+    some = sorted(ManifestStore(root).committed_pids())[:2]
+    reads = {
+        "head": decode_table(spark, root),
+        "predicates": decode_table(spark, root, predicates=[("k", ">=", 2_000)]),
+        "pids": decode_table(spark, root, pids=some),
+        "since_snapshot": decode_table(spark, root, since_snapshot=0),
+        "include_pid_pos": decode_table(spark, root, include_pid_pos=True),
+        "verify_store": verify_store(spark, root),
+        "delete_rows scan": scans[0],
+    }
+    for name, d in reads.items():
+        plan = d._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (name, plan)
+        assert "Range" in plan, (name, plan)
+    assert reads["head"].count() == 2_900
+    assert reads["since_snapshot"].count() == 1_500
+    assert all(r["ok"] for r in reads["verify_store"].collect())
 
 
 def test_time_travel_and_incremental_read(spark, corpus, tmp_path):
@@ -772,6 +826,10 @@ def test_page_level_stats_skip_sections(spark, tmp_path):
     touched = sum(ln for _, ln in page_byte_ranges(meta_s, [0]))
     blob_size = os.path.getsize(store.blob_path(pid, "s"))
     assert touched * 4 < blob_size, (touched, blob_size)
+
+    # a predicate on a NON-projected column still skips pages: its
+    # manifest row rides along to the per-pid reader
+    assert decode_table(spark, root, columns=["s"], predicates=[("k", "<=", 2000)]).count() == 8192
 
     # a predicate no section can satisfy yields zero rows (partition-level
     # stats alone could not prove this: 0 <= 200_000 <= max fails… use a gap)
