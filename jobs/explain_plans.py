@@ -192,15 +192,15 @@ def main() -> None:
              ("min", "o_orderkey"), ("max", "o_orderkey")],
             predicates=[("o_orderkey", "<=", 30_000)],
         ),
-        "aggregate_store under a range predicate: everything left of the "
-        "final union is METADATA scale — manifest rows aggregate per "
-        "partition into covered/partial classes (exact stat_sum/stat_nulls "
-        "decimal strings, format v6), fully-covered partitions contribute "
-        "their stats verbatim, and the mapInArrow decode subtree runs ONLY "
-        "over the partitions the predicate straddles (left-semi join on "
-        "the partial pid set). No blob is opened for a fully-covered "
-        "partition; with no predicates and no deletes the decode subtree "
-        "is empty and a 100-TB COUNT/SUM touches zero data files.",
+        "aggregate_store under a range predicate: the driver plans the "
+        "snapshot's stat rows once, fully-covered partitions contribute "
+        "their stats verbatim as partial rows (exact stat_sum/stat_nulls "
+        "decimal strings, a LocalTableScan), and the one mapInArrow decode "
+        "scan runs ONLY over the partitions the predicate straddles. Both "
+        "feed one Union and one hash aggregation — no join. No blob is "
+        "opened for a fully-covered partition; with no predicates and no "
+        "deletes the decode scan is empty and a 100-TB COUNT/SUM touches "
+        "zero data files.",
     )
 
     grab(
@@ -217,8 +217,9 @@ def main() -> None:
         "probe, no bloom false positives), partitions whose whole lang "
         "set is 'zh' are fully covered (the forall inclusion dual — "
         "min/max can only pin single-valued string partitions), and the "
-        "distinct count unions the covered partitions' exploded sets with "
-        "the decoded straddlers' values before one countDistinct.",
+        "covered partitions' exploded sets and the decoded straddlers' "
+        "values meet in the same aggregation as COUNT(*), one "
+        "countDistinct over the union.",
     )
 
     store4 = tempfile.mkdtemp(prefix="explain_groupby_")
@@ -237,9 +238,9 @@ def main() -> None:
         "(the Hive/Iceberg partition-column aggregate): partitions whose "
         "size-1 stat_distinct set proves them single-valued + null-free "
         "on lang contribute their exact stats to that group's row with "
-        "ZERO decode — the group key itself is read from the set "
-        "(element_at + cast) — and only hash-packed mixed partitions feed "
-        "the mapInArrow decode subtree, grouped natively. At 100 TB a "
+        "ZERO decode — the group key itself is read from the set on the "
+        "driver — and only hash-packed mixed partitions feed the "
+        "mapInArrow decode scan; one groupBy aggregates both. At 100 TB a "
         "rollup over the store's own partitioning answers from manifests "
         "alone.",
     )

@@ -243,10 +243,6 @@ def column_distinct(arr: pa.Array) -> str | None:
     conservative."""
     import json
 
-    import os
-
-    if os.environ.get("SPARK_GRAFT_DISTINCT_STATS", "1") == "0":
-        return None  # measurement kill-switch (A/B the writer's encode cost)
     t = arr.type
     is_str = pa.types.is_string(t) or pa.types.is_large_string(t)
     if not (is_str or pa.types.is_integer(t)):

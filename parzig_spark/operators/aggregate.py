@@ -1,31 +1,47 @@
-"""Metadata-only aggregate pushdown: COUNT/SUM/MIN/MAX answered from the
-manifest statistics without opening a single blob.
+"""Aggregates answered from manifest statistics: COUNT, SUM, MIN, MAX,
+COUNT(DISTINCT) and null counts, optionally grouped, decoding only the
+partitions the statistics cannot answer.
 
-The Parquet footer-aggregate / Iceberg partition-stats analog (the
-reference parses exactly these Statistics structures but never consults
-them — /root/reference/src/generated/parquet.zig:55-76): manifests carry
-exact per-partition ``n_values``, ``stat_nulls``, ``stat_sum`` (decimal
-string, integer lanes), and exact integer ``stat_min``/``stat_max``, so a
-whole-store COUNT or SUM is a METADATA-scale job — at 10^12-file scale an
-O(manifest-rows) aggregation instead of an O(data) scan.
+This is the footer-aggregate analog of Parquet's ``Statistics`` and
+Iceberg's partition stats: manifests carry exact per-partition
+``n_values``, ``stat_nulls``, ``stat_sum`` (decimal string, integer
+lanes), exact integer ``stat_min``/``stat_max`` and exact distinct sets
+(``stat_distinct``), so a whole-store COUNT or SUM is an
+O(manifest-rows) job instead of an O(data) scan.
 
-The driver plans the query from the snapshot's stat rows
-(:mod:`plans.prune`) and splits the store three ways per partition:
+One private core, :func:`_answer`, serves ``aggregate_store`` and
+``check_store`` (operators/quality.py). It takes a view resolved once by
+the caller (``resolve_view``) and does each step once:
 
-- **pruned** — the stats prove no row matches;
-- **fully covered** — the stats prove EVERY row matches, and every
-  aggregate can be read exactly from the partition's stats (``stat_sum``
-  present for SUM, an exact set for COUNT(DISTINCT) and string extrema,
-  single-valued group columns for GROUP BY, no delete bitmap): the
-  partition's stats contribute verbatim, aggregated Spark-side;
-- **partial** — everything else: decoded via the normal pruned/paged
-  path, row-filtered, aggregated, and combined with the metadata half.
+1. **schema** — lanes, kinds, Spark types, decode columns and casts come
+   from one manifest file (``column_metas``);
+2. **plan** — one ``prune.plan`` over the snapshot's stat rows splits the
+   pids three ways:
+
+   - *pruned*: the stats prove no row matches;
+   - *metadata*: the stats prove EVERY row matches and every aggregate
+     reads exactly from them (``stat_sum`` for SUM, an exact set for
+     COUNT(DISTINCT) and string extrema, single-valued null-free group
+     columns, no delete bitmap in the view);
+   - *decoded*: everything else;
+3. **decode** — the decoded pids go through ``map_pids`` + ``read_pid``
+   with the view's delete ops: one ``mapInArrow`` scan;
+4. **answer** — one DataFrame of partial rows (each metadata stat row as
+   per-aggregate ``F.when(column == c, ...)`` partials, the exploded exact
+   sets of the distinct columns, the decoded rows projected to the same
+   partial columns) and one ``groupBy(*group_by).agg(...)``: sums of the
+   partial counts and sums, min/max of the partial extrema,
+   ``countDistinct`` of the values. Set semantics make overlap between the
+   set values and the decoded values harmless. The group keys of metadata
+   rows come from the driver's stats table, never from a join.
 
 Soundness over speed everywhere: a partition that cannot be PROVEN fully
-covered falls to the decode path — never wrong, only slower.
+covered is decoded — never wrong, only slower.
 """
 
 from __future__ import annotations
+
+import json
 
 import numpy as np
 import pyarrow as pa
@@ -38,22 +54,30 @@ from ..plans.manifest import ManifestStore
 from .decode import (
     _arrow_target_type,
     _spark_type,
-    decode_table,
+    column_metas,
+    map_pids,
     predicate_expr,
     prune_manifests,  # noqa: F401 — perfbench/tracing.py wraps it by name
+    read_pid,
+    resolve_view,
+    schema_of,
 )
 
 _FNS = ("count", "sum", "min", "max", "null_count", "distinct")
 
 # Parsed shape of the stat_distinct JSON (codecs/stats.py column_distinct):
 # a domain tag + the partition's exact sorted distinct values as canonical
-# strings — parsed with from_json in the Spark-side metadata aggregation.
+# strings — parsed with from_json in the Spark-side metadata partials.
 _DISTINCT_DDL = "struct<d:string,v:array<string>>"
 
 _META_COLS = [
     "pid", "column", "n_values", "stat_min", "stat_max", "stat_sum",
     "stat_nulls", "stat_distinct",
 ]
+
+# exact integer sums: per-partition decimal strings and decoded integers
+# both accumulate as decimal(38,0) — no float detour
+_DEC = "decimal(38,0)"
 
 
 def _pids_where(stats: pa.Table, pids: np.ndarray, col: str, row_mask: np.ndarray) -> np.ndarray:
@@ -63,43 +87,210 @@ def _pids_where(stats: pa.Table, pids: np.ndarray, col: str, row_mask: np.ndarra
     return np.isin(pids, stats.column("pid").to_numpy()[sel])
 
 
-def _stat_rows(spark: SparkSession, stats: pa.Table, pids: np.ndarray) -> DataFrame:
-    """The stat rows (``_META_COLS``) of ``pids`` as a Spark DataFrame —
-    the metadata half's input, taken from the driver plan's table."""
-    rows = np.isin(stats.column("pid").to_numpy(), pids)
-    return spark.createDataFrame(stats.select(_META_COLS).filter(pa.array(rows)))
+def _kind(meta: dict) -> str:
+    """Storage kind of a column — "int", "str" or "other" — which decides
+    the stats comparisons that are provably exact."""
+    t = _arrow_target_type(meta)
+    if pa.types.is_integer(t):
+        return "int"
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return "str"
+    return "other"
 
 
-def _column_kinds(store: ManifestStore) -> tuple[dict[str, str], dict[str, str]]:
-    """(storage lane per column — "int" / "str" / "other", Spark DDL type
-    per column) from ONE committed manifest file — the lane drives which
-    stats comparisons are provably exact, the type gives the decode-half
-    aggregates their natural output type."""
-    import json
-
-    table = store.read_one_manifest()
-    if table is None or table.num_rows == 0:
-        raise ValueError(f"no committed partitions in {store.root}")
-    first_pid = table.column("pid")[0].as_py()
-    kinds: dict[str, str] = {}
-    types: dict[str, str] = {}
-    for row in table.filter(
-        pa.compute.equal(table.column("pid"), first_pid)
-    ).to_pylist():
-        meta = json.loads(row["meta_json"])
-        t = _arrow_target_type(meta)
-        if pa.types.is_integer(t):
-            kinds[row["column"]] = "int"
-        elif pa.types.is_string(t) or pa.types.is_large_string(t):
-            kinds[row["column"]] = "str"
-        else:
-            kinds[row["column"]] = "other"
-        types[row["column"]] = _spark_type(meta)
-    return kinds, types
+def _stat_rows(
+    spark: SparkSession, stats: pa.Table, pids: np.ndarray, group_by: list[str]
+) -> DataFrame:
+    """The stat rows (``_META_COLS``) of ``pids`` as a Spark DataFrame, each
+    carrying its pid's group key per group column (``_g0``, ``_g1``, ...,
+    canonical strings): the single value of that column's exact set, read
+    on the driver."""
+    t = stats.select(_META_COLS).filter(pa.array(np.isin(stats.column("pid").to_numpy(), pids)))
+    row_pid = t.column("pid").to_numpy()
+    for i, g in enumerate(group_by):
+        at = t.filter(pc.equal(t.column("column"), g))
+        key_pid = at.column("pid").to_numpy()
+        keys = pa.array(
+            [json.loads(s)["v"][0] for s in at.column("stat_distinct").to_pylist()], pa.string()
+        )
+        order = np.argsort(key_pid)
+        at_row = order[np.searchsorted(key_pid, row_pid, sorter=order)]
+        t = t.append_column(f"_g{i}", keys.take(at_row))
+    return spark.createDataFrame(t)
 
 
 def _out_name(fn: str, col: str) -> str:
     return "count_star" if (fn, col) == ("count", "*") else f"{fn}_{col}"
+
+
+def _partials(fn: str, col: str, kind: str | None, ref_col: str):
+    """(metadata partial over a stat row, decoded partial over a row, final
+    aggregate over the partial column) of one aggregate; the partial
+    column is named by the aggregate's output name. The metadata partial
+    is None where no stat answers it (distinct values come from the
+    exploded sets instead; other-kind columns are decode-only)."""
+    name = _out_name(fn, col)
+    p = F.col(name)
+    own = F.col("column") == (ref_col if col == "*" else col)
+    total = F.coalesce(F.sum(p), F.lit(0)).cast("long").alias(name)
+    if fn == "count" and col == "*":
+        return F.when(own, F.col("n_values")), F.lit(1).cast("long"), total
+    if fn == "count":
+        meta = F.when(own, F.col("n_values") - F.col("stat_nulls"))
+        return meta, F.col(col).isNotNull().cast("long"), total
+    if fn == "null_count":
+        return F.when(own, F.col("stat_nulls")), F.col(col).isNull().cast("long"), total
+    if fn == "distinct":
+        # canonical twin of codecs.stats.column_distinct: integers as
+        # decimal strings (Spark's integral cast-to-string), strings
+        # verbatim — the decoded values must speak the sets' encoding
+        dec = F.col(col).cast("string") if kind in ("int", "str") else F.col(col)
+        return None, dec, F.countDistinct(p).cast("long").alias(name)
+    if fn == "sum":
+        if kind == "int":
+            return (
+                F.when(own, F.col("stat_sum").cast(_DEC)), F.col(col).cast(_DEC),
+                F.sum(p).cast("long").alias(name),
+            )
+        # order-dependent float sums: decode-only
+        return None, F.col(col), F.sum(p).cast("double").alias(name)
+    agg = F.min if fn == "min" else F.max
+    if kind == "int":
+        stat = F.col("stat_min" if fn == "min" else "stat_max")
+        return F.when(own, stat.cast("long")), F.col(col).cast("long"), agg(p).alias(name)
+    if kind == "str":
+        # exact string extrema from the sorted distinct set (the truncated
+        # stat_min/stat_max are not exact); F.get, never element_at — ANSI
+        # throws on the empty all-null set, which must contribute NULL
+        v = F.from_json("stat_distinct", _DISTINCT_DDL)["v"]
+        meta = F.when(own, F.get(v, 0) if fn == "min" else F.get(v, F.size(v) - 1))
+        return meta, F.col(col), agg(p).alias(name)
+    return None, F.col(col), agg(p).alias(name)
+
+
+def _answer(
+    spark: SparkSession,
+    store: ManifestStore,
+    view: tuple,
+    aggs: list[tuple],
+    predicates: list[tuple] | None,
+    group_by: list[str] = (),
+):
+    """The aggregation core: ``(kinds, rows, finals, plan)`` for ``aggs``
+    over the rows of ``view`` (``resolve_view``'s triple) that match
+    ``predicates``.
+
+    ``rows`` holds one partial column per aggregate, named by its output
+    name, plus the ``group_by`` columns; ``finals`` maps each output name
+    to its aggregate over ``rows``; ``plan`` reports the pids pruned,
+    answered from metadata and decoded; ``kinds`` is each column's
+    storage kind."""
+    _version, snap, delete_ops = view
+    used = (
+        {c for _, c in aggs if c != "*"}
+        | {c for c, _, _ in predicates or []}
+        | set(group_by)
+    )
+    metas = column_metas(store, used or None)
+    kinds = {c: _kind(m) for c, m in metas.items()}
+    for fn, col in aggs:
+        if col != "*" and col not in kinds:
+            raise ValueError(f"unknown column {col!r} in {store.root}")
+    for g in group_by:
+        if g not in kinds:
+            raise ValueError(f"unknown group column {g!r} in {store.root}")
+    for col, _op, _v in predicates or []:
+        if col not in kinds:
+            raise ValueError(f"unknown column {col!r} in {store.root}")
+    ref_col = next(iter(kinds))  # any column: one manifest row per (pid, col)
+    needed = sorted(used) or [ref_col]
+
+    # every agg must be metadata-computable, else the metadata rows would
+    # miss partials — decode everything instead (still pruned)
+    meta_capable = all(
+        fn in ("count", "null_count")
+        or (fn in ("distinct", "min", "max") and kinds.get(col) in ("int", "str"))
+        or (fn == "sum" and kinds.get(col) == "int")
+        for fn, col in aggs
+        if col != "*"
+    ) and all(kinds[g] in ("int", "str") for g in group_by)
+
+    # ---- plan: prune, then split survivors into metadata and decoded ------
+    lanes = {c: prune.lane(m) for c, m in metas.items()}
+    stats, pids, state = prune.plan(snap, predicates, lanes)
+    survive = state != prune.EXCLUDED
+    full = (state == prune.COVERED) & meta_capable
+    if full.any():
+        nulls = stats.column("stat_nulls").to_numpy(zero_copy_only=False)
+        have_set = stats.column("stat_distinct").is_valid().to_numpy(zero_copy_only=False)
+        for fn, col in aggs:
+            if fn == "sum":
+                # stat_sum present, or the column all-null in that pid
+                has_sum = stats.column("stat_sum").is_valid().to_numpy(zero_copy_only=False)
+                all_null = nulls == stats.column("n_values").to_numpy()
+                full &= _pids_where(stats, pids, col, has_sum | all_null)
+            elif fn == "distinct" or (fn in ("min", "max") and kinds[col] == "str"):
+                full &= _pids_where(stats, pids, col, have_set)
+        # GROUP BY: a pid answers from metadata only when every group column
+        # is provably single-valued and null-free there — the whole
+        # partition then belongs to one group
+        single = prune.set_sizes(stats.column("stat_distinct")) == 1
+        for g in group_by:
+            full &= _pids_where(stats, pids, g, single & (nulls == 0))
+        # merge-on-read deletes make the physical stats stale
+        full &= ~np.isin(pids, sorted(store.delete_touched_pids(delete_ops)))
+    partial = survive & ~full
+
+    # ---- decode: the decoded pids, one shuffle-free scan --------------------
+    cols, ddl, casts = schema_of(metas, needed)
+    root = store.root
+
+    def read(pid):
+        return read_pid(root, pid, cols, casts, predicates=predicates, delete_ops=delete_ops)
+
+    dec = map_pids(spark, pids[partial].tolist(), read, ddl)
+    if predicates:
+        dec = dec.filter(predicate_expr(predicates))
+
+    # ---- answer: one stream of partial rows ---------------------------------
+    meta_part, dec_part, finals = {}, {}, {}
+    for fn, col in aggs:
+        name = _out_name(fn, col)
+        meta_e, dec_part[name], finals[name] = _partials(fn, col, kinds.get(col), ref_col)
+        if meta_e is not None:
+            meta_part[name] = meta_e
+    rows = dec.select(*group_by, *[e.alias(n) for n, e in dec_part.items()])
+    if full.any():
+        meta = _stat_rows(spark, stats, pids[full], group_by)
+        keys = [
+            F.col(f"_g{i}").cast(_spark_type(metas[g])).alias(g) for i, g in enumerate(group_by)
+        ]
+        rows = rows.unionByName(
+            meta.select(*keys, *[e.alias(n) for n, e in meta_part.items()]),
+            allowMissingColumns=True,
+        )
+        distinct = {_out_name(fn, col): col for fn, col in aggs if fn == "distinct"}
+        if distinct:
+            vals = meta.filter(
+                F.col("column").isin(list(distinct.values())) & F.col("stat_distinct").isNotNull()
+            ).select(
+                *keys, F.col("column").alias("_c"),
+                F.explode(F.from_json("stat_distinct", _DISTINCT_DDL)["v"]).alias("_v"),
+            )
+            rows = rows.unionByName(
+                vals.select(
+                    *group_by,
+                    *[F.when(F.col("_c") == c, F.col("_v")).alias(n) for n, c in distinct.items()],
+                ),
+                allowMissingColumns=True,
+            )
+    plan = {
+        "pids_total": len(pids),
+        "pids_pruned": int((~survive).sum()),
+        "pids_metadata": int(full.sum()),
+        "pids_decoded": int(partial.sum()),
+    }
+    return kinds, rows, finals, plan
 
 
 def aggregate_store(
@@ -114,9 +305,9 @@ def aggregate_store(
     wherever provably exact and decoding only the partitions that need it.
 
     ``aggs``: list of ``(fn, column)`` with fn in {"count", "sum", "min",
-    "max", "null_count"}; ``("count", "*")`` counts rows. SQL semantics
-    throughout: count/sum/min/max ignore nulls, ``count(*)`` doesn't,
-    empty input yields count 0 and NULL for the rest.
+    "max", "null_count", "distinct"}; ``("count", "*")`` counts rows. SQL
+    semantics throughout: count/sum/min/max ignore nulls, ``count(*)``
+    doesn't, empty input yields count 0 and NULL for the rest.
 
     Returns a one-row DataFrame with columns named ``{fn}_{column}``
     (``count_star``); with ``return_plan=True``, returns ``(df, plan)``
@@ -132,288 +323,32 @@ def aggregate_store(
     still pruning.
 
     ``("distinct", col)`` is COUNT(DISTINCT col): on integer/string
-    columns the per-partition EXACT distinct sets (stat_distinct, manifest
-    v7) are unioned for every fully-covered partition that recorded one —
-    a low-cardinality COUNT(DISTINCT) over the whole store is a
-    metadata-scale set union, zero blobs opened — and only set-less /
-    partial / delete-touched partitions decode; the two value streams
-    union before the final count, so overlap between halves never double
-    counts. Other types fall to the decode path whole (canonicalizing
-    floats through strings is lossy — -0.0/0.0 — so no set is ever
-    recorded for them).
+    columns the exact per-partition sets of the metadata partitions are
+    exploded into the same value stream as the decoded partitions' values
+    — a low-cardinality COUNT(DISTINCT) over the whole store opens zero
+    blobs. Other types are decode-only (canonicalizing floats through
+    strings is lossy — -0.0/0.0 — so no set is ever recorded for them).
 
     ``group_by`` turns the answer into one row per group (SQL GROUP BY
     semantics, null groups included) — the partition-aligned rollup: a
     partition whose stat_distinct set for every group column has exactly
     ONE value (and no nulls) belongs wholly to that group, so its stats
     contribute to that group's row without decoding. Stores encoded with
-    ``group_cols`` matching the query's GROUP BY — the natural layout —
-    answer the whole rollup at metadata scale, exactly like a Hive/Iceberg
-    partition-column aggregate; mixed-group partitions decode. Group
-    columns must be integer/string typed to be metadata-eligible (others
-    run decode-only, still pruned)."""
+    ``group_cols`` matching the query's GROUP BY answer the whole rollup
+    at metadata scale, like a Hive/Iceberg partition-column aggregate;
+    mixed-group partitions decode. Group columns must be integer/string
+    typed to be metadata-eligible (others run decode-only, still
+    pruned)."""
     for fn, col in aggs:
         if fn not in _FNS:
             raise ValueError(f"unsupported aggregate fn: {fn!r}")
         if col == "*" and fn != "count":
             raise ValueError(f"{fn}(*) is not a thing — name a column")
     store = ManifestStore(store_root)
-    store.check_format()
-    kinds, sql_types = _column_kinds(store)
-    for fn, col in aggs:
-        if col != "*" and col not in kinds:
-            raise ValueError(f"unknown column {col!r} in {store_root}")
-    for g in group_by or []:
-        if g not in kinds:
-            raise ValueError(f"unknown group column {g!r} in {store_root}")
-    ref_col = next(iter(kinds))  # any column: one manifest row per (pid, col)
-
-    # every agg must be metadata-computable, else the metadata half would
-    # be missing fields — fall back to decoding everything (still pruned)
-    meta_capable = all(
-        fn in ("count", "null_count")
-        or (fn in ("distinct", "min", "max") and kinds.get(col) in ("int", "str"))
-        or (fn == "sum" and kinds.get(col) == "int")
-        for fn, col in aggs
-        if col != "*"
-    ) and all(kinds.get(g) in ("int", "str") for g in group_by or [])
-
-    # ---- driver plan: prune, then split survivors into fully covered
-    # (answered from stats) and partial (decoded) --------------------------
-    snap = store.fresh_snapshot()
-    stats, pids, state = prune.plan(store, snap, predicates)
-    survive = state != prune.EXCLUDED
-    full = survive & (state == prune.COVERED) if meta_capable else np.zeros(len(pids), bool)
-    if meta_capable:
-        nulls = stats.column("stat_nulls").to_numpy(zero_copy_only=False)
-        have_set = stats.column("stat_distinct").is_valid().to_numpy(zero_copy_only=False)
-        for fn, col in aggs:
-            if fn == "sum":
-                # stat_sum present, or the column all-null in that pid
-                has_sum = stats.column("stat_sum").is_valid().to_numpy(zero_copy_only=False)
-                all_null = nulls == stats.column("n_values").to_numpy()
-                full &= _pids_where(stats, pids, col, has_sum | all_null)
-            elif fn == "distinct" or (fn in ("min", "max") and kinds[col] == "str"):
-                # exact sets: COUNT(DISTINCT) always; string extrema too
-                # (the truncated stat_min/stat_max are not exact)
-                full &= _pids_where(stats, pids, col, have_set)
-        # GROUP BY: a pid answers from metadata only when every group column
-        # is provably single-valued and null-free there — the whole
-        # partition then belongs to one group
-        single = prune.set_sizes(stats.column("stat_distinct")) == 1
-        for g in group_by or []:
-            full &= _pids_where(stats, pids, g, single & (nulls == 0))
-        # merge-on-read deletes make the physical stats stale
-        full &= ~np.isin(pids, sorted(store.delete_touched_pids()))
-    partial = survive & ~full
-
-    # ---- metadata half -----------------------------------------------------
-    meta_rows = _stat_rows(spark, stats, pids[full])
-    if group_by:
-        # pid -> group key, read from the single-valued stat_distinct set
-        # (cast back from the canonical string to the column's own type);
-        # every full pid has exactly one value per group column by the
-        # eligibility rule above
-        key_df = None
-        for g in group_by:
-            kg = meta_rows.filter(
-                (F.col("column") == g) & F.col("stat_distinct").isNotNull()
-            ).select(
-                "pid",
-                F.element_at(F.from_json("stat_distinct", _DISTINCT_DDL)["v"], 1)
-                .cast(sql_types[g]).alias(g),
-            )
-            key_df = kg if key_df is None else key_df.join(kg, "pid")
-        meta_rows = meta_rows.join(key_df, "pid")
-    scalar = [(fn, c) for fn, c in aggs if fn != "distinct"]
-    dist_cols = [c for fn, c in aggs if fn == "distinct"]
-    meta_aggs, dec_aggs = [], []
-    for fn, col in scalar:
-        name = _out_name(fn, col)
-        if (fn, col) == ("count", "*"):
-            meta_aggs.append(
-                F.sum(F.when(F.col("column") == ref_col, F.col("n_values")))
-                .cast("long").alias(name)
-            )
-            dec_aggs.append(F.count(F.lit(1)).cast("long").alias(name))
-        elif fn == "count":
-            meta_aggs.append(
-                F.sum(
-                    F.when(
-                        F.col("column") == col,
-                        F.col("n_values") - F.col("stat_nulls"),
-                    )
-                ).cast("long").alias(name)
-            )
-            dec_aggs.append(F.count(F.col(col)).cast("long").alias(name))
-        elif fn == "null_count":
-            meta_aggs.append(
-                F.sum(F.when(F.col("column") == col, F.col("stat_nulls")))
-                .cast("long").alias(name)
-            )
-            dec_aggs.append(
-                F.sum(F.col(col).isNull().cast("long")).cast("long").alias(name)
-            )
-        elif fn == "sum":
-            if kinds[col] == "int":
-                # exact: per-partition decimal strings + a decimal(38,0)
-                # accumulator on the decoded side — no float detour
-                meta_aggs.append(
-                    F.sum(
-                        F.when(
-                            F.col("column") == col,
-                            F.col("stat_sum").cast("decimal(38,0)"),
-                        )
-                    ).cast("long").alias(name)
-                )
-                dec_aggs.append(
-                    F.sum(F.col(col).cast("decimal(38,0)")).cast("long").alias(name)
-                )
-            else:
-                # non-integer sums are decode-only (meta_capable is False):
-                # the metadata half contributes a typed NULL, the decode
-                # half sums natively
-                meta_aggs.append(F.lit(None).cast("double").alias(name))
-                dec_aggs.append(F.sum(F.col(col)).cast("double").alias(name))
-        elif fn in ("min", "max"):
-            agg = F.min if fn == "min" else F.max
-            if kinds[col] == "int":
-                src_col = F.col("stat_min" if fn == "min" else "stat_max")
-                meta_aggs.append(
-                    agg(
-                        F.when(F.col("column") == col, src_col.cast("long"))
-                    ).alias(name)
-                )
-                dec_aggs.append(agg(F.col(col)).cast("long").alias(name))
-            elif kinds[col] == "str":
-                # exact string extrema from the sorted distinct set; F.get
-                # (never element_at — ANSI throws on the empty all-null
-                # set, which must contribute NULL)
-                v = F.from_json("stat_distinct", _DISTINCT_DDL)["v"]
-                src_col = F.get(v, 0) if fn == "min" else F.get(v, F.size(v) - 1)
-                meta_aggs.append(
-                    agg(F.when(F.col("column") == col, src_col)).alias(name)
-                )
-                dec_aggs.append(agg(F.col(col)).alias(name))
-            else:
-                # decode-only lane: natural type both halves (meta is NULL)
-                meta_aggs.append(F.lit(None).cast(sql_types[col]).alias(name))
-                dec_aggs.append(agg(F.col(col)).alias(name))
-    # ---- decode half (partial + delete-touched partitions only) ------------
-    needed = sorted(
-        {c for _, c in aggs if c != "*"}
-        | {c for c, _, _ in (predicates or [])}
-        | set(group_by or [])
-    ) or [ref_col]
-    dec = decode_table(
-        spark, store_root, columns=needed, predicates=predicates,
-        pids=pids[partial].tolist(),
+    group_by = list(group_by or [])
+    _kinds, rows, finals, plan = _answer(
+        spark, store, resolve_view(store), aggs, predicates, group_by
     )
-    if predicates:
-        dec = dec.filter(predicate_expr(predicates))
-
-    # ---- combine (sum counts/sums, min mins, max maxes — nulls ignored) ----
-    out = None
-    if scalar:
-        if group_by:
-            meta_half = meta_rows.groupBy(*group_by).agg(*meta_aggs)
-            dec_half = dec.groupBy(*group_by).agg(*dec_aggs)
-        else:
-            meta_half = meta_rows.agg(*meta_aggs)
-            dec_half = dec.agg(*dec_aggs)
-        combo = []
-        for fn, col in scalar:
-            name = _out_name(fn, col)
-            if fn in ("count", "sum", "null_count"):
-                e = F.sum(F.col(name)).cast("long")
-                if fn != "sum":
-                    e = F.coalesce(e, F.lit(0).cast("long"))
-            elif fn == "min":
-                e = F.min(F.col(name))
-            else:
-                e = F.max(F.col(name))
-            combo.append(e.alias(name))
-        both = meta_half.unionByName(dec_half)
-        if group_by:
-            out = both.groupBy(*group_by).agg(*combo)
-        else:
-            out = both.agg(*combo)
-
-    # ---- COUNT(DISTINCT): union the exact sets of fully-covered partitions
-    # with the decoded partitions' values, then count — set semantics make
-    # the overlap between halves harmless, and every half is either
-    # metadata-scale (exploded JSON sets) or already-decoded rows
-    gcols = list(group_by or [])
-    dist_names_done: list[str] = []
-    for col in dist_cols:
-        name = _out_name("distinct", col)
-        if kinds[col] in ("int", "str"):
-            vals_meta = meta_rows.filter(
-                (F.col("column") == col) & F.col("stat_distinct").isNotNull()
-            ).select(
-                *gcols,
-                F.explode(F.from_json("stat_distinct", _DISTINCT_DDL)["v"]).alias("_v"),
-            )
-            # canonical twin of codecs.stats.column_distinct: integers as
-            # decimal strings (Spark's integral cast-to-string), strings
-            # verbatim — the decoded stream must speak the set's encoding
-            vals_dec = dec.filter(F.col(col).isNotNull()).select(
-                *gcols, F.col(col).cast("string").alias("_v")
-            )
-            u = vals_meta.unionByName(vals_dec)
-        else:
-            # no sets recorded for this type (lossy canonicalization) —
-            # meta_capable forced the whole store through the decode path,
-            # so dec holds every surviving row; count natively
-            u = dec.filter(F.col(col).isNotNull()).select(
-                *gcols, F.col(col).alias("_v")
-            )
-        if not gcols:
-            piece = u.agg(F.countDistinct("_v").cast("long").alias(name))
-            out = piece if out is None else out.crossJoin(piece)
-            continue
-        piece = u.groupBy(*gcols).agg(
-            F.countDistinct("_v").cast("long").alias(name)
-        )
-        if out is None:
-            out = piece
-            dist_names_done.append(name)
-            continue
-        # null-safe group join via the struct trick (plain on=[cols] joins
-        # drop NULL groups); a group with no non-null values is a 0 count —
-        # including EARLIER pieces' counts for a group this piece
-        # introduces (possible only when every agg is a distinct, so every
-        # lhs agg column is itself a distinct count)
-        lhs = out.withColumn("_gkey", F.struct(*[F.col(g) for g in gcols]))
-        rhs = piece.withColumn(
-            "_gkey", F.struct(*[F.col(g) for g in gcols])
-        ).drop(*gcols)
-        carried = [
-            F.coalesce(F.col(c), F.lit(0).cast("long")).alias(c)
-            if c in dist_names_done
-            else F.col(c)
-            for c in lhs.columns
-            if c not in gcols and c != "_gkey"
-        ]
-        out = (
-            lhs.join(rhs, "_gkey", "full_outer")
-            .select(
-                *[F.col("_gkey")[g].alias(g) for g in gcols],
-                *carried,
-                F.coalesce(F.col(name), F.lit(0).cast("long")).alias(name),
-            )
-        )
-        dist_names_done.append(name)
-    if dist_cols or group_by:
-        order = gcols + [_out_name(fn, c) for fn, c in aggs]
-        out = out.select(*order)
-
-    if not return_plan:
-        return out
-    plan = {
-        "pids_total": len(pids),
-        "pids_pruned": int((~survive).sum()),
-        "pids_metadata": int(full.sum()),
-        "pids_decoded": int(partial.sum()),
-    }
-    return out, plan
+    out = rows.groupBy(*group_by).agg(*finals.values())
+    out = out.select(*group_by, *[_out_name(fn, c) for fn, c in aggs])
+    return (out, plan) if return_plan else out

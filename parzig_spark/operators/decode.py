@@ -175,22 +175,41 @@ def _spark_type(meta: dict) -> str:
     return _TOKEN_TO_SPARK[token]
 
 
-def decoded_schema(
-    store: ManifestStore, columns: list[str] | None = None
-) -> tuple[list[str], str, dict[str, pa.DataType]]:
-    """(column order, Spark DDL schema, post-decode Arrow casts) — read from
-    ONE committed partition's manifest file (O(1) driver I/O, never the full
-    manifest set)."""
+def column_metas(store: ManifestStore, columns=None) -> dict[str, dict]:
+    """Column name -> codec meta of ``columns`` (every column when None;
+    names the store lacks are left out), in stored column order, read from
+    ONE committed partition's manifest file (O(1) driver I/O, never the
+    full manifest set). Only the asked-for metas are parsed: dictionary
+    and paged metas run to many kilobytes."""
     table = store.read_one_manifest()
     if table is None or table.num_rows == 0:
         raise ValueError(f"no committed partitions in {store.root}")
     first_pid = table.column("pid")[0].as_py()
+    rows = table.filter(pa.compute.equal(table.column("pid"), first_pid))
+    return {
+        r["column"]: json.loads(r["meta_json"])
+        for r in rows.select(["column", "meta_json"]).to_pylist()
+        if columns is None or r["column"] in columns
+    }
+
+
+def decoded_schema(
+    store: ManifestStore, columns: list[str] | None = None
+) -> tuple[list[str], str, dict[str, pa.DataType]]:
+    """(column order, Spark DDL schema, post-decode Arrow casts) of the
+    store's ``columns`` (every column when None)."""
+    return schema_of(column_metas(store, columns), columns)
+
+
+def schema_of(
+    metas: dict[str, dict], columns: list[str] | None = None
+) -> tuple[list[str], str, dict[str, pa.DataType]]:
+    """(column order, Spark DDL schema, post-decode Arrow casts) of
+    ``columns`` (every column when None) from :func:`column_metas`."""
     cols, ddl, casts = [], [], {}
-    for row in table.filter(pa.compute.equal(table.column("pid"), first_pid)).to_pylist():
-        name = row["column"]
+    for name, meta in metas.items():
         if columns is not None and name not in columns:
             continue
-        meta = json.loads(row["meta_json"])
         cols.append(name)
         ddl.append(f"{name} {_spark_type(meta)}")
         target = _arrow_target_type(meta)
@@ -278,9 +297,7 @@ def decode_table(
 ) -> DataFrame:
     """Decode committed partitions; returns the reconstructed DataFrame.
 
-    ``pids`` restricts the read to the listed partition ids;
-    aggregate_store and check_store use this to decode only the partitions
-    their metadata path cannot answer.
+    ``pids`` restricts the read to the listed partition ids.
 
     ``include_pid_pos`` appends ``_pid``/``_pos`` columns — the partition
     id and the row's PHYSICAL index within it (pre-delete, stable across
@@ -371,7 +388,8 @@ def plan_read(
     visible at ``since_snapshot``, intersected with ``pids``."""
     store = ManifestStore(store_root)
     _version, snap, delete_ops = resolve_view(store, snapshot, ref)
-    _stats, all_pids, state = prune.plan(store, snap, predicates)
+    col_lanes = prune.lanes(store.read_one_manifest()) if predicates else {}
+    _stats, all_pids, state = prune.plan(snap, predicates, col_lanes)
     keep = set(all_pids[state != prune.EXCLUDED].tolist())
     if since_snapshot is not None:
         keep -= store.snapshot_pids(since_snapshot)

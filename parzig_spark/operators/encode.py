@@ -43,6 +43,9 @@ SUMMARY_SCHEMA = (
     "enc_bytes long, encode_s double, committed boolean"
 )
 
+# rows of the driver-side sample each column's codec is chosen from
+_PLAN_SAMPLE_ROWS = 8192
+
 
 def column_digest(arr: pa.Array) -> str:
     """Canonical sha256 of a column's logical content (order-sensitive).
@@ -109,8 +112,6 @@ def plan_partitions(
     salt_cols: list[str],
     target_bytes: int = 64 << 20,
     size_col: str | None = None,
-    min_buckets: int | None = None,
-    size_sample_mod: int = 1,
     pid_namespace: int | None = None,
     bucket_bits: int = 24,
     broadcast_group_limit: int = 65536,
@@ -124,7 +125,7 @@ def plan_partitions(
       ``target_bytes`` gets a per-row salt ``pmod(xxhash64(salt_cols),
       nsalt)`` so one giant repo fans out over ~nsalt partitions;
     - **fragmentation (tiny groups)**: pid = xxhash64(group, salt) is then
-      bucketed modulo ``n_buckets = max(min_buckets, total/target)``, so
+      bucketed modulo ``n_buckets = max(1, total/target)``, so
       thousands of small groups pack into byte-bounded partitions instead of
       paying per-partition encode/manifest overhead each (at 10^12 files the
       group count is ~repos×langs — far above any sane partition count).
@@ -145,24 +146,10 @@ def plan_partitions(
     """
     spark = df.sparkSession
     size_expr = F.octet_length(F.col(size_col)) if size_col else F.lit(256)
-    # Optional sized-sample planning (size_sample_mod > 1): at 10^12 files a
-    # full scan just to plan partitions is wasteful — a deterministic 1-in-k
-    # hash sample estimates group sizes to a few percent. Hash-based (not
-    # df.sample) and salted with a distinct constant so the estimate — and
-    # therefore every pid — is a pure data function, identical on any
-    # cluster size or partitioning (resume invariant), and uncorrelated
-    # with the salt expression. Default is exact (the sizing scan is
-    # column-pruned; cheap next to the encode itself).
-    if size_sample_mod > 1:
-        sampled = df.filter(
-            F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols], F.lit(0x5A17)), F.lit(size_sample_mod)) == 0
-        )
-    else:
-        sampled = df
-    sample_mod = size_sample_mod
+    # exact sizing: the scan is column-pruned, cheap next to the encode
     sizes = (
-        sampled.groupBy(*group_cols)
-        .agg((F.sum(size_expr) * sample_mod).alias("_grp_bytes"))
+        df.groupBy(*group_cols)
+        .agg(F.sum(size_expr).alias("_grp_bytes"))
         .withColumn(
             "_nsalt",
             F.greatest(F.lit(1), F.ceil(F.col("_grp_bytes") / F.lit(target_bytes))).cast("int"),
@@ -192,9 +179,7 @@ def plan_partitions(
     # n_buckets is a *data* property (bytes/target), never a cluster
     # property: partition ids must be identical across cluster sizes or a
     # resume on a different cluster re-encodes everything.
-    if min_buckets is None:
-        min_buckets = 1
-    n_buckets = max(min_buckets, -(-int(total_bytes) // target_bytes))
+    n_buckets = max(1, -(-int(total_bytes) // target_bytes))
     if pid_namespace is not None:
         n_buckets = min(n_buckets, 1 << bucket_bits)
     if distributed:
@@ -306,7 +291,6 @@ def encode_table(
     outer: str | None = "auto",
     pid_namespace: int | None = None,
     bucket_bits: int = 24,
-    plan_sample_rows: int = 8192,
     codec_overrides: dict[str, str] | None = None,
     page_values: int | None = None,
 ) -> DataFrame:
@@ -317,9 +301,9 @@ def encode_table(
     exists are anti-joined away before any data is read (checkpoint/resume
     per the north rule).
 
-    ``plan_sample_rows > 0`` chooses each column's codec ONCE on the driver
-    from a small sample (column stats are stable across buckets of one
-    table), instead of trial-encoding 2–4 candidates in every bucket — the
+    Each column's codec is chosen ONCE on the driver from a sample of
+    ``_PLAN_SAMPLE_ROWS`` rows (column stats are stable across buckets of
+    one table), instead of trial-encoding 2–4 candidates in every bucket — the
     per-bucket selector was 2× trial encodes × candidates × columns ×
     buckets of pure overhead. Codec choice never feeds pid derivation, so
     this cannot affect resume identity; within one job all task attempts
@@ -364,16 +348,15 @@ def encode_table(
     # hiding one behind the other cuts plan wall nearly in half; at real
     # input sizes both remain constant-cost noise.
     sample_box: dict[str, object] = {}
-    sample_thread = None
-    if plan_sample_rows > 0:
-        def _take_sample():
-            try:
-                sample_box["table"] = df.limit(plan_sample_rows).toArrow()
-            except Exception as exc:  # surface on join, never kill the thread
-                sample_box["error"] = exc
 
-        sample_thread = threading.Thread(target=_take_sample, daemon=True)
-        sample_thread.start()
+    def _take_sample():
+        try:
+            sample_box["table"] = df.limit(_PLAN_SAMPLE_ROWS).toArrow()
+        except Exception as exc:  # surface on join, never kill the thread
+            sample_box["error"] = exc
+
+    sample_thread = threading.Thread(target=_take_sample, daemon=True)
+    sample_thread.start()
 
     with_pid, n_buckets = plan_partitions(
         df, group_cols, salt_cols, target_bytes, size_col,
@@ -384,9 +367,8 @@ def encode_table(
     plan_lineage: dict[str, str] = {}
     # Single-bucket tables choose once in-task anyway; the sampled plan only
     # pays for itself when it replaces many per-bucket selector runs.
-    if sample_thread is not None:
-        sample_thread.join()
-    if plan_sample_rows > 0 and n_buckets > 1:
+    sample_thread.join()
+    if n_buckets > 1:
         if "error" in sample_box:
             raise sample_box["error"]
         sample = sample_box["table"]

@@ -286,13 +286,14 @@ class ManifestStore:
         )
 
     def delete_touched_pids(self, ops: "list[str] | None" = None) -> set[int]:
-        """Partitions carrying at least one committed delete bitmap — one
-        listdir per op (each returns only the pids that op touched), never
-        a scan over all partitions. Metadata answers over these pids are
-        stale by construction; aggregate_store routes them to the decode
-        path. ``ops`` overrides the op set (pass a snapshot sidecar's list
-        to get the pids dirty AT THAT VIEW — check_store's pinned-audit
-        path)."""
+        """Partitions carrying a delete bitmap of ``ops`` (default: every
+        committed op) — one listdir per op (each returns only the pids
+        that op touched), never a scan over all partitions. Metadata
+        answers over these pids are stale by construction; the aggregation
+        core behind aggregate_store and check_store passes its view's op
+        list (``resolve_view``), so a pinned snapshot sees the pids dirty
+        AT THAT VIEW and a delete committed mid-query cannot split the
+        metadata and decoded halves."""
         out: set[int] = set()
         for op in self.committed_delete_ops() if ops is None else ops:
             d = self.deletes_dir(op)

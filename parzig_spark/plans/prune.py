@@ -112,18 +112,16 @@ def lanes(table: pa.Table | None) -> dict[str, str]:
     return out
 
 
-def plan(store, snap: str, predicates):
+def plan(snap: str, predicates, col_lanes: dict[str, str]):
     """(stats, pids, state) for a snapshot: its stat rows (STAT_COLS; the
     blooms only under an equality predicate), every pid, and each pid's
-    :func:`classify` verdict. Lanes come from one committed manifest file
-    (O(1) driver I/O)."""
+    :func:`classify` verdict under ``col_lanes`` (the caller's schema)."""
     predicates = predicates or []
     equality = any(op in ("==", "=", "in") for _c, op, _v in predicates)
     stats = pq.read_table(
         snap,
         columns=[c for c in STAT_COLS if equality or c not in ("stat_bloom", "stat_bloom_dom")],
     )
-    col_lanes = lanes(store.read_one_manifest()) if predicates else {}
     pids, state = classify(stats, predicates, col_lanes)
     return stats, pids, state
 

@@ -407,8 +407,9 @@ def test_groupby_float_key_decode_only(spark, tmp_path):
 
 
 def test_groupby_distinct_only(spark, tmp_path):
-    """A pure-distinct grouped query (no scalar aggs) assembles its
-    per-group counts via the null-safe outer joins alone."""
+    """A pure-distinct grouped query (no scalar aggs): every group's
+    counts come from the one grouped aggregation over the set values and
+    the decoded values."""
     df = spark.range(0, 8_000).select(
         F.concat(F.lit("g"), (F.col("id") % 3).cast("string")).alias("grp"),
         F.col("id").alias("k"),
