@@ -114,15 +114,20 @@ def main() -> None:
     grab(
         "Manifest-stats decode pruning",
         decode_table(spark, store_root, predicates=[("doc_id", ">=", 400)]),
-        "Manifests come from one snapshot parquet via spark.read; partitions whose "
-        "recorded [stat_min, stat_max] cannot satisfy the predicate are anti-joined "
-        "away before any blob is opened (decode-side Statistics skipping).",
+        "The driver plans the read (plan_read: one snapshot parquet read with "
+        "pq.read_table, predicates tested against every partition's recorded "
+        "[stat_min, stat_max] by plans/prune.py) before any blob is opened "
+        "(decode-side Statistics skipping). The Spark plan is only the "
+        "surviving pid list: a Range over its indexes feeding one mapInArrow "
+        "that decodes one partition per pid — no manifest rows and no "
+        "Exchange. Every pruning section below has this same two-node plan; "
+        "what differs is the driver's pid list.",
     )
 
     grab(
         "String-predicate decode pruning (truncated-sound bounds)",
         decode_table(spark, store_root, predicates=[("lang", "==", "zh")]),
-        "Same anti-join shape driven by STRING stats: a truncated 16-code-point "
+        "Same plan, pruned by STRING stats: a truncated 16-code-point "
         "lower bound and a truncated-then-incremented upper bound (Parquet "
         "Statistics semantics) — equality on `lang` prunes every partition whose "
         "string range excludes the value.",
@@ -142,8 +147,8 @@ def main() -> None:
         "Range (`>=`) comparisons run directly on the truncated-but-sound string "
         "bounds; a prefix predicate (`LIKE 'src1%'`) maps to the interval "
         "[p, next(p)) — partitions whose [stat_min, stat_max] envelope misses the "
-        "interval are anti-joined away before any blob read. Both predicates here "
-        "AND together: only src15–src19 partitions survive.",
+        "interval drop out of the driver's pid list before any blob read. Both "
+        "predicates here AND together: only src15–src19 partitions survive.",
     )
 
     store3 = tempfile.mkdtemp(prefix="explain_paged_store_")
@@ -157,8 +162,8 @@ def main() -> None:
         "Sub-partition (page-level) decode skipping — PAGED layout",
         decode_table(spark, store3, predicates=[("o_orderkey", "<=", 5000)]),
         "The store is in the PAGED layout (4096-value sections, per-page min/max "
-        "— the ColumnIndex analog). The Spark plan is the usual manifest anti-join "
-        "+ mapInArrow; the page skipping happens INSIDE each decode task: only "
+        "— the ColumnIndex analog). The Spark plan is the usual Range + "
+        "mapInArrow; the page skipping happens INSIDE each decode task: only "
         "sections whose [min, max] can satisfy the predicate are read "
         "(read_blob_ranges seeks to their byte ranges) and decoded — bytes touched "
         "scale with selectivity, not partition size. Equality predicates "
@@ -174,10 +179,10 @@ def main() -> None:
         "[stat_min, stat_max] envelope spans the domain, so min/max prunes "
         "nothing — the manifest's partition-level equality bloom "
         "(stat_bloom, format v5; the BloomFilterHeader analog) proves the "
-        "value absent from most partitions, and the anti-join drops them "
-        "BEFORE any decode task is scheduled. The probe is an Arrow-batched "
-        "UDF over manifest rows — metadata scale, one short row per "
-        "(partition, column), never data scale. Inside surviving "
+        "value absent from most partitions, and the driver drops them "
+        "BEFORE any decode task is scheduled. The probe is vectorized numpy "
+        "over the snapshot's bloom column — metadata scale, one short row "
+        "per (partition, column), never data scale. Inside surviving "
         "partitions, per-page blooms (PAGED stores) skip sections the same "
         "way.",
     )
@@ -212,14 +217,15 @@ def main() -> None:
         ),
         "A point predicate on low-cardinality lang across source-grouped "
         "partitions, aggregating COUNT(DISTINCT source): pruning consults "
-        "each partition's EXACT stat_distinct set (from_json + "
-        "array_contains — pure Catalyst over manifest rows, no Python "
-        "probe, no bloom false positives), partitions whose whole lang "
+        "each partition's EXACT stat_distinct set on the driver (parsed "
+        "once by plans/prune.py — no bloom false positives), partitions "
+        "whose whole lang "
         "set is 'zh' are fully covered (the forall inclusion dual — "
         "min/max can only pin single-valued string partitions), and the "
         "covered partitions' exploded sets and the decoded straddlers' "
         "values meet in the same aggregation as COUNT(*), one "
-        "countDistinct over the union.",
+        "countDistinct over the union. In this sf0.01 store no partition's "
+        "lang set is only 'zh', so the plan is the decode branch alone.",
     )
 
     store4 = tempfile.mkdtemp(prefix="explain_groupby_")
@@ -253,31 +259,37 @@ def main() -> None:
         compact_store(spark, store_root, dstc, target_bytes=32 << 20),
         "The rewrite_data_files analog: the ONLY thing distributed is a tiny "
         "merge-group spec DataFrame (one row per group — json pid lists), "
-        "repartitioned so each task rewrites one group. Data bytes never cross "
-        "tasks: each task reads its own source blobs, re-encodes, commits one "
-        "destination partition. No exchange of table data anywhere in the plan.",
+        "repartitioned so each task rewrites one group (the Exchange moves "
+        "those spec rows, never table data). Data bytes never cross tasks: "
+        "each task decodes its group through the read path (manifest_rows + "
+        "decode_pid_rows, purging delete bitmaps), re-sorts, builds its "
+        "manifest rows in encode_partition_arrays like every other write "
+        "path and commits one destination partition. Partitions big enough "
+        "to keep are hardlinked on the driver before the job "
+        "(ManifestStore.link_partition) and never appear in the plan.",
     )
 
     ManifestStore(store_root).write_snapshot()
     grab(
         "Incremental (CDC) read since a snapshot",
         decode_table(spark, store_root, since_snapshot=0),
-        "decode_table(since_snapshot=N): a broadcast anti-join of manifest rows "
-        "against the base snapshot's pid set drops already-consumed partitions "
-        "before any blob is opened — the append-scan a downstream consumer tails; "
-        "time travel (snapshot=N) is the same plan reading a pinned snapshot "
-        "parquet instead of the head.",
+        "decode_table(since_snapshot=N): the driver subtracts the base "
+        "snapshot's pid set from the head's, so already-consumed partitions "
+        "never reach the Range + mapInArrow read — the append-scan a downstream "
+        "consumer tails (here nothing landed after snapshot 0, so the Range is "
+        "empty); time travel (snapshot=N) is the same plan over a pinned "
+        "snapshot's pids.",
     )
 
     from parzig_spark.operators import changes_table, delete_rows
 
-    delete_rows(spark, store_root, [("repo", "==", "org0/megarepo")])
+    delete_rows(spark, store_root, [("source", "==", "src3")])
     ManifestStore(store_root).write_snapshot()
     grab(
         "Row-level changelog between snapshots (insert/delete CDC)",
         changes_table(spark, store_root, 0),
         "changes_table(v_from, v_to): two decode subtrees, both restricted "
-        "by a pid semi-join to the AFFECTED partitions only (snapshot "
+        "to the driver's list of AFFECTED partitions only (snapshot "
         "pid-set symmetric difference + partitions touched by delete ops "
         "in exactly one sidecar — driver-side set arithmetic over "
         "metadata), anti-joined both ways on the stable (_pid, _pos) "

@@ -17,6 +17,15 @@ merge group reads only its own source blobs, re-encodes, and commits one
 destination partition. Wall-clock scales with bytes rewritten / executors,
 exactly like the encode job itself.
 
+No step has a compaction-only copy: a merge group decodes through the read
+path (``manifest_rows`` + ``decode_pid_rows``, which also applies the
+delete bitmaps being purged), its manifest rows — stats, digests, blooms,
+distinct sets — come from encode_table's ``encode_partition_arrays`` with
+the source codecs as the plan, and passthrough partitions link and commit
+through ``ManifestStore.link_partition``. A compacted partition's stats are
+therefore exactly the ones an encode of the same rows would record, which
+is what metadata-answered aggregates rely on.
+
 Determinism/resume: a merge group's destination pid is a pure function of
 its sorted source pids (content-derived themselves), rows are re-sorted by
 the store's canonical sort_cols before encoding, and the destination commit
@@ -34,12 +43,11 @@ import shutil
 import time
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from ..codecs import decode_column, encode_column
 from ..plans.manifest import FORMAT_VERSION, ManifestStore
-from .encode import SUMMARY_SCHEMA, column_agg_stats, column_bloom, column_digest, column_distinct, column_minmax
+from .decode import _arrow_natural_type, decode_pid_rows, manifest_rows
+from .encode import SUMMARY_SCHEMA, encode_partition_arrays, summary_batch
 
 
 def _dst_pid(src_pids: list[int]) -> int:
@@ -215,37 +223,12 @@ def compact_store(
         }
     )
 
-    # Passthrough partitions: blob-for-blob hardlink/copy + manifest reuse.
-    # Driver-side file ops bounded by partition count (not bytes — hardlink
-    # when the stores share a filesystem).
+    # Passthrough partitions: blob-for-blob hardlink/copy + manifest reuse,
+    # blob_file re-pointed at the destination store. Driver-side file ops
+    # bounded by partition count (not bytes — hardlink when the stores
+    # share a filesystem).
     for pid in passthrough:
-        if dst.is_committed(pid):
-            continue
-        src_dir = os.path.join(src.blob_dir, str(pid))
-        dst_dir = os.path.join(dst.blob_dir, str(pid))
-        os.makedirs(dst_dir, exist_ok=True)
-        for fname in os.listdir(src_dir):
-            s, d = os.path.join(src_dir, fname), os.path.join(dst_dir, fname)
-            if not os.path.exists(d):
-                try:
-                    os.link(s, d)
-                except OSError:
-                    shutil.copy2(s, d)
-        # manifest rides along with blob_file re-pointed at the destination
-        # store (it is informational lineage, but a path into another store
-        # would be a lie)
-        t = pq.read_table(os.path.join(src.manifest_dir, f"part-{pid}.parquet"))
-        cols = t.column_names
-        fixed = pa.array(
-            [dst.blob_path(pid, c) for c in t.column("column").to_pylist()]
-        )
-        t = t.set_column(cols.index("blob_file"), "blob_file", fixed)
-        pq.write_table(t, os.path.join(dst.manifest_dir, f"part-{pid}.parquet"))
-        try:
-            fd = os.open(dst._marker_path(pid), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-        except FileExistsError:
-            pass
+        dst.link_partition(src, pid)
 
     work = groups
     if resume:
@@ -266,154 +249,72 @@ def _rewrite_groups_job(
 ):
     """One task per merge group (the group spec is the only thing shuffled
     to executors — bytes move only within each task): decode the group's
-    source partitions, purge deleted rows, canonical re-sort/z-order,
-    re-encode into the destination pid. ``commit=False`` stages the
-    destination partitions WITHOUT markers — the in-place rewrite's
-    invisible first phase (rewrite_store flips markers on the driver)."""
+    source partitions through the read path (deleted rows purged),
+    canonical re-sort/z-order, re-encode into the destination pid with the
+    codecs the source chose. ``commit=False`` stages the destination
+    partitions WITHOUT markers — the in-place rewrite's invisible first
+    phase (rewrite_store flips markers on the driver)."""
     spec_df = spark.createDataFrame(
         [(json.dumps(g),) for g in work], "group_json string"
     ).repartition(len(work))
 
-    def rewrite(batches):
-        src_local = ManifestStore(src_root)
+    def rewrite_one(pids: list[int]) -> pa.RecordBatch:
+        new_pid = _dst_pid(pids)
         dst_local = ManifestStore(dst_root)
+        if dst_local.is_committed(new_pid):
+            return summary_batch(
+                [{"pid": new_pid, "column": "", "codec": "", "n_values": 0,
+                  "raw_bytes": 0, "enc_bytes": 0, "encode_s": 0.0}],
+                committed=False,
+            )
+        table, codec_plan = _group_table(src_root, pids, src_config, delete_ops)
+        if zorder_cols and all(c in table.column_names for c in zorder_cols):
+            table = table.take(_zorder_indices(table, zorder_cols))
+        else:
+            usable_sort = [c for c in sort_cols if c in table.column_names]
+            if usable_sort:
+                table = table.sort_by([(c, "ascending") for c in usable_sort])
+        lineage = json.dumps(
+            {"plan": "compaction", "src_pids": pids}, separators=(",", ":")
+        )
+        rows, blobs = encode_partition_arrays(
+            dst_root, new_pid, table, table.column_names, outer=outer,
+            codec_plan=codec_plan,
+            plan_lineage=dict.fromkeys(table.column_names, lineage),
+            page_values=page_values,
+        )
+        dst_local.write_partition(new_pid, rows, blobs, commit=commit)
+        return summary_batch(rows)
+
+    def rewrite(batches):
         for batch in batches:
             for spec in batch.column("group_json").to_pylist():
-                pids = json.loads(spec)
-                new_pid = _dst_pid(pids)
-                already = dst_local.is_committed(new_pid)
-                out_rows = []
-                if not already:
-                    # per-column: decode each source partition, concat in
-                    # ascending-pid order, canonical re-sort, re-encode with
-                    # the codec the source manifests already chose (the
-                    # table-level sampled plan made it uniform across pids)
-                    metas: dict[str, list[tuple[int, dict, str]]] = {}
-                    for pid in pids:
-                        t = pq.read_table(
-                            os.path.join(
-                                src_local.manifest_dir, f"part-{pid}.parquet"
-                            )
-                        )
-                        for row in t.to_pylist():
-                            metas.setdefault(row["column"], []).append(
-                                (pid, json.loads(row["meta_json"]), row["codec"])
-                            )
-                    columns = src_config.get("columns") or sorted(metas)
-                    # per-pid delete masks (purge): deleted rows never reach
-                    # the destination store
-                    keeps: dict[int, pa.Array] = {}
-                    if delete_ops:
-                        from .delete import load_delete_mask
-
-                        for pid, m, _ in sorted(metas[columns[0]]):
-                            deleted = load_delete_mask(
-                                src_local, pid, m["n"], delete_ops
-                            )
-                            if deleted is not None and deleted.any():
-                                keeps[pid] = pa.array(~deleted)
-                    decoded: dict[str, pa.Array] = {}
-                    for name in columns:
-                        parts = []
-                        for pid, m, _ in sorted(metas[name]):
-                            a = decode_column(src_local.read_blob(pid, name), m)
-                            if pid in keeps:
-                                a = a.filter(keeps[pid])
-                            parts.append(a)
-                        decoded[name] = pa.chunked_array(parts).combine_chunks()
-                    table = pa.table(decoded)
-                    if zorder_cols and all(c in decoded for c in zorder_cols):
-                        table = table.take(_zorder_indices(table, zorder_cols))
-                    else:
-                        usable_sort = [c for c in sort_cols if c in decoded]
-                        if usable_sort:
-                            table = table.sort_by(
-                                [(c, "ascending") for c in usable_sort]
-                            )
-                    rows, blobs = [], {}
-                    for name in columns:
-                        arr = table.column(name)
-                        arr = (
-                            arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
-                        )
-                        codec = sorted(metas[name])[0][2]
-                        t0 = time.perf_counter()
-                        blob, meta = encode_column(
-                            arr, codec, outer=outer, page_values=page_values
-                        )
-                        dt = time.perf_counter() - t0
-                        smin, smax = column_minmax(arr)
-                        sbloom, sbloom_dom = column_bloom(arr)
-                        ssum, snulls = column_agg_stats(arr)
-                        sdistinct = column_distinct(arr)
-                        blobs[name] = blob
-                        rows.append(
-                            {
-                                "stat_min": smin,
-                                "stat_max": smax,
-                                "stat_bloom": sbloom,
-                                "stat_bloom_dom": sbloom_dom,
-                                "stat_sum": ssum,
-                                "stat_nulls": snulls,
-                                "stat_distinct": sdistinct,
-                                "pid": new_pid,
-                                "column": name,
-                                "codec": codec,
-                                "n_values": len(arr),
-                                "raw_bytes": arr.nbytes,
-                                "enc_bytes": len(blob),
-                                "meta_json": json.dumps(meta, separators=(",", ":")),
-                                "lineage_json": json.dumps(
-                                    {"plan": "compaction", "src_pids": sorted(pids)},
-                                    separators=(",", ":"),
-                                ),
-                                "sha256": column_digest(arr),
-                                "encode_s": dt,
-                                "blob_file": dst_local.blob_path(new_pid, name),
-                            }
-                        )
-                    dst_local.write_partition(new_pid, rows, blobs, commit=commit)
-                    out_rows = [
-                        {
-                            "pid": new_pid,
-                            "column": r["column"],
-                            "codec": r["codec"],
-                            "n_values": r["n_values"],
-                            "raw_bytes": r["raw_bytes"],
-                            "enc_bytes": r["enc_bytes"],
-                            "encode_s": r["encode_s"],
-                            "committed": True,
-                        }
-                        for r in rows
-                    ]
-                else:
-                    out_rows = [
-                        {
-                            "pid": new_pid,
-                            "column": "",
-                            "codec": "",
-                            "n_values": 0,
-                            "raw_bytes": 0,
-                            "enc_bytes": 0,
-                            "encode_s": 0.0,
-                            "committed": False,
-                        }
-                    ]
-                schema = pa.schema(
-                    [
-                        ("pid", pa.int64()),
-                        ("column", pa.string()),
-                        ("codec", pa.string()),
-                        ("n_values", pa.int64()),
-                        ("raw_bytes", pa.int64()),
-                        ("enc_bytes", pa.int64()),
-                        ("encode_s", pa.float64()),
-                        ("committed", pa.bool_()),
-                    ]
-                )
-                yield pa.RecordBatch.from_pylist(out_rows, schema=schema)
+                yield rewrite_one(sorted(json.loads(spec)))
 
     return spec_df.mapInArrow(rewrite, schema=SUMMARY_SCHEMA)
+
+
+def _group_table(src_root, pids, src_config, delete_ops):
+    """(rows of the merge group ``pids`` in ascending-pid order with
+    ``delete_ops`` applied, column -> codec of the lowest source pid). The
+    table-level sampled plan made codecs uniform across pids, so the
+    rewrite keeps the source's choice instead of re-running the selector.
+    A group whose rows are all deleted yields an empty table: its
+    destination pid is still staged, since rewrite_store's flip commits
+    every group's destination."""
+    by_pid = {
+        pid: {r["column"]: r for r in manifest_rows(src_root, pid, ["codec", "meta_json"])}
+        for pid in pids
+    }
+    first = by_pid[pids[0]]
+    columns = src_config.get("columns") or sorted(first)
+    batches = list(decode_pid_rows(src_root, by_pid, columns, {}, delete_ops=delete_ops))
+    if batches:
+        table = pa.Table.from_batches(batches).combine_chunks()
+    else:
+        metas = {c: json.loads(first[c]["meta_json"]) for c in columns}
+        table = pa.table({c: pa.array([], _arrow_natural_type(m)) for c, m in metas.items()})
+    return table, {c: first[c]["codec"] for c in columns}
 
 
 def _rewrites_dir(root: str) -> str:

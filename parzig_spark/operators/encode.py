@@ -21,6 +21,13 @@ Idempotence under retries (SURVEY.md §7 hard-part (d)): pid is derived from
 data, rows are canonically sorted before encoding, and the manifest commit
 is first-marker-wins — a speculative duplicate task rewrites byte-identical
 blobs and then no-ops.
+
+The write steps live here once and every partition writer shares them:
+``encode_partition_arrays`` builds a partition's manifest rows and blobs
+(encode_table, the ``parzig`` data-source writer, compaction and
+add_columns), ``summary_batch`` reports them, and ``skip_committed`` +
+``map_pid_slices`` are the resume filter and pid shuffle of encode_table
+and add_columns.
 """
 
 from __future__ import annotations
@@ -41,6 +48,18 @@ from ..selector import choose_codec
 SUMMARY_SCHEMA = (
     "pid long, column string, codec string, n_values long, raw_bytes long, "
     "enc_bytes long, encode_s double, committed boolean"
+)
+_SUMMARY_ARROW = pa.schema(
+    [
+        ("pid", pa.int64()),
+        ("column", pa.string()),
+        ("codec", pa.string()),
+        ("n_values", pa.int64()),
+        ("raw_bytes", pa.int64()),
+        ("enc_bytes", pa.int64()),
+        ("encode_s", pa.float64()),
+        ("committed", pa.bool_()),
+    ]
 )
 
 # rows of the driver-side sample each column's codec is chosen from
@@ -320,7 +339,6 @@ def encode_table(
     the surviving byte ranges of each blob. Part of the store identity
     (page boundaries must be a pure data property for resume).
     """
-    spark = df.sparkSession
     salt_cols = salt_cols or [c for c in df.columns if c not in group_cols][:1]
     if sort_cols is None:
         # canonical order key: every non-nested column (Arrow can't sort
@@ -387,42 +405,79 @@ def encode_table(
                 )
 
     if resume:
-        committed = store.committed_pids()
-        if committed:
-            committed_df = spark.createDataFrame(
-                [(int(p),) for p in committed], "pid long"
-            )
-            with_pid = with_pid.join(F.broadcast(committed_df), on="pid", how="left_anti")
+        with_pid = skip_committed(with_pid, store)
+    data_cols = list(df.columns)
+
+    def encode_one(pid: int, table: pa.Table) -> pa.RecordBatch:
+        rows, blobs = encode_partition_arrays(
+            store_root, pid, table, data_cols, outer=outer,
+            codec_overrides=codec_overrides, codec_plan=codec_plan,
+            plan_lineage=plan_lineage, page_values=page_values,
+        )
+        local_store = ManifestStore(store_root)
+        already = local_store.is_committed(pid)
+        if not already:
+            local_store.write_partition(pid, rows, blobs)
+        return summary_batch(rows, committed=not already)
 
     # One task per bucket: per-task cost is then a data property, identical
     # at every cluster size (scheduler balances tasks over whatever slots
     # exist) — required for honest N→4N scaling comparisons.
-    np_part = num_partitions or n_buckets
-    data_cols = [c for c in df.columns]
-    shuffled = with_pid.repartition(np_part, "pid")
+    return map_pid_slices(
+        with_pid, num_partitions or n_buckets, sort_cols, data_cols, encode_one
+    )
+
+
+def summary_batch(rows: list[dict], committed: bool = True) -> pa.RecordBatch:
+    """The SUMMARY_SCHEMA batch of manifest rows — what every
+    partition-writing job returns per partition it wrote (``committed``
+    False when another attempt had already sealed it)."""
+    return pa.RecordBatch.from_pylist(
+        [{**r, "committed": committed} for r in rows], schema=_SUMMARY_ARROW
+    )
+
+
+def skip_committed(with_pid: DataFrame, store: ManifestStore) -> DataFrame:
+    """Resume: ``with_pid`` minus the rows of pids ``store`` has already
+    committed, anti-joined before any data is read."""
+    committed = store.committed_pids()
+    if not committed:
+        return with_pid
+    committed_df = with_pid.sparkSession.createDataFrame(
+        [(int(p),) for p in sorted(committed)], "pid long"
+    )
+    return with_pid.join(F.broadcast(committed_df), on="pid", how="left_anti")
+
+
+def map_pid_slices(
+    with_pid: DataFrame, n_partitions: int, sort_cols: list[str],
+    cols: list[str], per_pid,
+) -> DataFrame:
+    """Run ``per_pid(pid, table) -> SUMMARY_SCHEMA batch`` once per pid of
+    ``with_pid``, ``table`` holding that pid's ``cols`` in canonical
+    (``sort_cols``) order — the one shuffle behind encode_table and
+    add_columns, so both see the same pids in the same row order.
+
+    ``repartition(n_partitions, pid)`` keeps a pid inside one task. The
+    canonical (pid, *sort_cols) sort runs in the JVM: Tungsten sorts
+    binary rows (spill-capable — an oversized partition sorts through disk
+    instead of OOMing the Python worker) with the same order
+    pa.Table.sort_by would give: ascending, nulls last, byte-wise UTF8
+    comparison, NaN greatest.
+
+    Inside the task nothing is copied for grouping: the sorted batches
+    concat zero-copy and each pid is a contiguous slice found by boundary
+    detection on the pid lane (on a bandwidth-capped host data passes are
+    the job's real budget). Pure Arrow: string columns never become
+    Python objects.
+    """
+    shuffled = with_pid.repartition(n_partitions, "pid")
     if sort_cols:
-        # The canonical (pid, *sort_cols) sort runs in the JVM: Tungsten
-        # sorts binary rows (spill-capable — an oversized partition sorts
-        # through disk instead of OOMing the Python worker) with the same
-        # order pa.Table.sort_by would give: ascending, nulls last,
-        # byte-wise UTF8 comparison, NaN greatest.
         shuffled = shuffled.sortWithinPartitions(
             F.col("pid").asc(), *[F.col(c).asc_nulls_last() for c in sort_cols]
         )
 
-    def encode_partition(batches):
-        """Iterator[pa.RecordBatch] -> Iterator[pa.RecordBatch] (mapInArrow).
-
-        Pure-Arrow: no pandas round-trip — string columns never become
-        Python objects, which halves memory traffic per byte (the scaling
-        bottleneck on bandwidth-limited hosts).
-
-        No data copy for grouping + canonical order: rows arrive sorted by
-        (pid, *sort_cols) from the JVM sort, the task's batches concat
-        zero-copy, and buckets are contiguous slices found by boundary
-        detection on the pid lane (on a bandwidth-capped host data passes
-        are the encode job's real budget).
-        """
+    def run(batches):
         incoming = [pa.Table.from_batches([b]) for b in batches]
         if not incoming:
             return
@@ -437,48 +492,11 @@ def encode_table(
             order = np.argsort(pids_np, kind="stable")
             full = full.take(pa.array(order))
             pids_np = pids_np[order]
-        data_t = full.select(data_cols)
+        data_t = full.select(cols)
         bounds = np.flatnonzero(np.diff(pids_np)) + 1
         starts = np.concatenate(([0], bounds))
         ends = np.concatenate((bounds, [len(pids_np)]))
-        out_rows = []
-        local_store = ManifestStore(store_root)
         for s, e in zip(starts, ends):
-            pid = int(pids_np[s])
-            table = data_t.slice(s, e - s)
-            rows, blobs = encode_partition_arrays(
-                store_root, pid, table, data_cols, outer=outer,
-                codec_overrides=codec_overrides, codec_plan=codec_plan,
-                plan_lineage=plan_lineage, page_values=page_values,
-            )
-            already = local_store.is_committed(pid)
-            if not already:
-                local_store.write_partition(pid, rows, blobs)
-            for r in rows:
-                out_rows.append(
-                    {
-                        "pid": pid,
-                        "column": r["column"],
-                        "codec": r["codec"],
-                        "n_values": r["n_values"],
-                        "raw_bytes": r["raw_bytes"],
-                        "enc_bytes": r["enc_bytes"],
-                        "encode_s": r["encode_s"],
-                        "committed": not already,
-                    }
-                )
-        schema = pa.schema(
-            [
-                ("pid", pa.int64()),
-                ("column", pa.string()),
-                ("codec", pa.string()),
-                ("n_values", pa.int64()),
-                ("raw_bytes", pa.int64()),
-                ("enc_bytes", pa.int64()),
-                ("encode_s", pa.float64()),
-                ("committed", pa.bool_()),
-            ]
-        )
-        yield pa.RecordBatch.from_pylist(out_rows, schema=schema)
+            yield per_pid(int(pids_np[s]), data_t.slice(s, e - s))
 
-    return shuffled.mapInArrow(encode_partition, schema=SUMMARY_SCHEMA)
+    return shuffled.mapInArrow(run, schema=SUMMARY_SCHEMA)

@@ -18,6 +18,15 @@ different row set, wrong source) fails the task loudly before anything is
 written. Existing blobs hardlink into the destination (byte-moves ∝ new
 columns only); manifests merge; the commit protocol is unchanged.
 
+Every write step is the engine's shared one, so an evolved partition is
+indistinguishable from an encoded one: ``add_columns`` re-derives pids and
+row order through encode_table's own pid shuffle (``map_pid_slices``,
+``skip_committed`` for resume), builds the new columns' manifest rows —
+stats, digests, blooms, distinct sets — in ``encode_partition_arrays``,
+and both operators link and commit through
+``ManifestStore.link_partition`` (hardlinked blobs, re-pointed
+``blob_file``, ``write_partition``'s tmp+rename, then the marker).
+
 Limitations: batch-encoded stores only (a streaming store's pid namespaces
 are per-batch fingerprints this operator cannot re-derive — its missing
 source manifests fail loudly); the caller's DataFrame must carry every
@@ -28,49 +37,32 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import time
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..codecs import encode_column
-from ..plans.manifest import ManifestStore
-from ..selector import choose_codec
+from ..plans.manifest import ManifestStore, link_file
+from .decode import manifest_rows
 from .encode import (
-    SUMMARY_SCHEMA,
-    column_agg_stats,
-    column_bloom,
     column_digest,
-    column_distinct,
-    column_minmax,
+    encode_partition_arrays,
+    map_pid_slices,
     plan_partitions,
+    skip_committed,
+    summary_batch,
 )
 
 
 def _carry_deletes(src: ManifestStore, dst: ManifestStore) -> None:
-    """Hardlink committed delete-op bitmaps (and markers) across — pids are
-    identical in an evolved store, so row-level deletes stay in force."""
+    """Hardlink committed delete-op bitmaps across and seal each op —
+    pids are identical in an evolved store, so row-level deletes stay in
+    force."""
     for op in src.committed_delete_ops():
         op_src, op_dst = src.deletes_dir(op), dst.deletes_dir(op)
         os.makedirs(op_dst, exist_ok=True)
         for f in os.listdir(op_src):
-            if ".tmp-" in f:
-                continue
-            s_p, d_p = os.path.join(op_src, f), os.path.join(op_dst, f)
-            if not os.path.exists(d_p):
-                try:
-                    os.link(s_p, d_p)
-                except OSError:
-                    shutil.copy2(s_p, d_p)
-        marker = os.path.join(dst.deletes_dir(), f"_committed_{op}")
-        try:
-            fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-        except FileExistsError:
-            pass
+            if ".tmp-" not in f:
+                link_file(os.path.join(op_src, f), os.path.join(op_dst, f))
+        dst.seal_delete_op(op)
 
 
 def drop_columns(src_root: str, dst_root: str, cols: list[str]) -> dict:
@@ -94,35 +86,13 @@ def drop_columns(src_root: str, dst_root: str, cols: list[str]) -> dict:
     dst = ManifestStore(dst_root)
     dst.ensure_config({**src_config, "columns": kept})
     _carry_deletes(src, dst)
-    n_parts = n_dropped = 0
+    n_parts = 0
     for pid in sorted(src.committed_pids()):
         if dst.is_committed(pid):
             continue
-        src_dir = os.path.join(src.blob_dir, str(pid))
-        dst_dir = os.path.join(dst.blob_dir, str(pid))
-        os.makedirs(dst_dir, exist_ok=True)
-        for name in kept:
-            s_p = os.path.join(src_dir, f"{name}.bin")
-            d_p = os.path.join(dst_dir, f"{name}.bin")
-            if os.path.exists(s_p) and not os.path.exists(d_p):
-                try:
-                    os.link(s_p, d_p)
-                except OSError:
-                    shutil.copy2(s_p, d_p)
-        n_dropped += len(cols)
-        t = pq.read_table(os.path.join(src.manifest_dir, f"part-{pid}.parquet"))
-        keep_mask = pa.compute.is_in(t.column("column"), value_set=pa.array(kept))
-        t = t.filter(keep_mask)
-        fixed = pa.array([dst.blob_path(pid, c) for c in t.column("column").to_pylist()])
-        t = t.set_column(t.column_names.index("blob_file"), "blob_file", fixed)
-        pq.write_table(t, os.path.join(dst.manifest_dir, f"part-{pid}.parquet"))
-        try:
-            fd = os.open(dst._marker_path(pid), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-        except FileExistsError:
-            pass
+        dst.link_partition(src, pid, columns=kept)
         n_parts += 1
-    return {"partitions": n_parts, "dropped_blobs": n_dropped}
+    return {"partitions": n_parts, "dropped_blobs": n_parts * len(cols)}
 
 
 def add_columns(
@@ -165,7 +135,7 @@ def add_columns(
     # a post-delete decode (a decoded-then-widened frame fails loudly)
     _carry_deletes(src, dst)
 
-    with_pid, _ = plan_partitions(
+    with_pid, n_buckets = plan_partitions(
         df,
         src_config["group_cols"],
         src_config["salt_cols"],
@@ -173,155 +143,47 @@ def add_columns(
         src_config.get("size_col"),
     )
     if resume:
-        committed = dst.committed_pids()
-        if committed:
-            committed_df = df.sparkSession.createDataFrame(
-                [(int(p),) for p in sorted(committed)], "pid long"
-            )
-            with_pid = with_pid.join(
-                F.broadcast(committed_df), on="pid", how="left_anti"
-            )
+        with_pid = skip_committed(with_pid, dst)
 
-    shuffled = with_pid.repartition("pid").sortWithinPartitions(
-        F.col("pid").asc(), *[F.col(c).asc_nulls_last() for c in sort_cols]
-    )
-    needed = [c for c in dict.fromkeys([check_col, *new_cols])]
-
-    def backfill(batches):
-        import numpy as np
-
+    def backfill_one(pid, table):
         src_local = ManifestStore(src_root)
+        if not os.path.exists(
+            os.path.join(src_local.manifest_dir, f"part-{pid}.parquet")
+        ):
+            raise ValueError(
+                f"add_columns: pid {pid} has no source manifest in "
+                f"{src_root} — the DataFrame's rows do not reproduce the "
+                "stored partitioning (edited data, or a streaming-"
+                "namespaced store)"
+            )
+        # alignment proof: this batch's check column must digest to the
+        # byte-identical value the source store recorded for this pid
+        recorded = manifest_rows(src_root, pid, ["sha256"], [check_col])
+        check = table.column(check_col).combine_chunks()
+        if not recorded or column_digest(check) != recorded[0]["sha256"]:
+            raise ValueError(
+                f"add_columns: pid {pid} column {check_col!r} does not "
+                "match the stored digest — the DataFrame's rows drifted "
+                "from the stored data; refusing to write misaligned "
+                "columns"
+            )
         dst_local = ManifestStore(dst_root)
-        incoming = [pa.Table.from_batches([b]) for b in batches]
-        if not incoming:
-            return
-        full = pa.concat_tables(incoming)
-        del incoming
-        if full.num_rows == 0:
-            return
-        pids_np = full.column("pid").to_numpy(zero_copy_only=False)
-        data_t = full.select(needed)
-        bounds = np.flatnonzero(np.diff(pids_np)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(pids_np)]))
-        out_rows = []
-        for s, e in zip(starts, ends):
-            pid = int(pids_np[s])
-            table = data_t.slice(s, e - s)
-            src_manifest_path = os.path.join(
-                src_local.manifest_dir, f"part-{pid}.parquet"
-            )
-            if not os.path.exists(src_manifest_path):
-                raise ValueError(
-                    f"add_columns: pid {pid} has no source manifest in "
-                    f"{src_root} — the DataFrame's rows do not reproduce the "
-                    "stored partitioning (edited data, or a streaming-"
-                    "namespaced store)"
-                )
-            src_rows = pq.read_table(src_manifest_path).to_pylist()
-            # alignment proof: this batch's check column must digest to the
-            # byte-identical value the source store recorded for this pid
-            check_arr = table.column(check_col)
-            check_arr = (
-                check_arr.chunk(0)
-                if check_arr.num_chunks == 1
-                else check_arr.combine_chunks()
-            )
-            recorded = next(
-                (r["sha256"] for r in src_rows if r["column"] == check_col), None
-            )
-            if column_digest(check_arr) != recorded:
-                raise ValueError(
-                    f"add_columns: pid {pid} column {check_col!r} does not "
-                    "match the stored digest — the DataFrame's rows drifted "
-                    "from the stored data; refusing to write misaligned "
-                    "columns"
-                )
-            if dst_local.is_committed(pid):
-                continue  # speculative retry of a committed partition
-            # hardlink the existing blobs across
-            src_dir = os.path.join(src_local.blob_dir, str(pid))
-            dst_dir = os.path.join(dst_local.blob_dir, str(pid))
-            os.makedirs(dst_dir, exist_ok=True)
-            for fname in os.listdir(src_dir):
-                s_p, d_p = os.path.join(src_dir, fname), os.path.join(dst_dir, fname)
-                if not os.path.exists(d_p):
-                    try:
-                        os.link(s_p, d_p)
-                    except OSError:
-                        shutil.copy2(s_p, d_p)
-            new_rows, blobs = [], {}
-            for name in new_cols:
-                col = table.column(name)
-                arr = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
-                t0 = time.perf_counter()
-                codec, lineage = choose_codec(arr, outer=outer)
-                blob, meta = encode_column(
-                    arr, codec, outer=outer, page_values=page_values
-                )
-                dt = time.perf_counter() - t0
-                smin, smax = column_minmax(arr)
-                sbloom, sbloom_dom = column_bloom(arr)
-                ssum, snulls = column_agg_stats(arr)
-                sdistinct = column_distinct(arr)
-                blobs[name] = blob
-                new_rows.append(
-                    {
-                        "stat_min": smin,
-                        "stat_max": smax,
-                        "stat_bloom": sbloom,
-                        "stat_bloom_dom": sbloom_dom,
-                        "stat_sum": ssum,
-                        "stat_nulls": snulls,
-                        "stat_distinct": sdistinct,
-                        "pid": pid,
-                        "column": name,
-                        "codec": codec,
-                        "n_values": len(arr),
-                        "raw_bytes": arr.nbytes,
-                        "enc_bytes": len(blob),
-                        "meta_json": json.dumps(meta, separators=(",", ":")),
-                        "lineage_json": json.dumps(
-                            {"plan": "add_columns", **lineage}, separators=(",", ":")
-                        ),
-                        "sha256": column_digest(arr),
-                        "encode_s": dt,
-                        "blob_file": dst_local.blob_path(pid, name),
-                    }
-                )
-            # merged manifest (source rows re-pointed + new rows), blobs,
-            # then marker — the standard atomic commit, via write_partition
-            for r in src_rows:
-                r["blob_file"] = dst_local.blob_path(pid, r["column"])
-            merged = src_rows + new_rows
-            # write_partition writes blobs we pass it; existing ones are
-            # already hardlinked, so pass only the new blobs
-            dst_local.write_partition(pid, merged, blobs)
-            for r in new_rows:
-                out_rows.append(
-                    {
-                        "pid": pid,
-                        "column": r["column"],
-                        "codec": r["codec"],
-                        "n_values": r["n_values"],
-                        "raw_bytes": r["raw_bytes"],
-                        "enc_bytes": r["enc_bytes"],
-                        "encode_s": r["encode_s"],
-                        "committed": True,
-                    }
-                )
-        schema = pa.schema(
-            [
-                ("pid", pa.int64()),
-                ("column", pa.string()),
-                ("codec", pa.string()),
-                ("n_values", pa.int64()),
-                ("raw_bytes", pa.int64()),
-                ("enc_bytes", pa.int64()),
-                ("encode_s", pa.float64()),
-                ("committed", pa.bool_()),
-            ]
+        if dst_local.is_committed(pid):
+            return summary_batch([])  # speculative retry of a committed partition
+        rows, blobs = encode_partition_arrays(
+            dst_root, pid, table, new_cols, outer=outer, page_values=page_values
         )
-        yield pa.RecordBatch.from_pylist(out_rows, schema=schema)
+        for r in rows:  # the selector's lineage, tagged with this operator
+            r["lineage_json"] = json.dumps(
+                {"plan": "add_columns", **json.loads(r["lineage_json"])},
+                separators=(",", ":"),
+            )
+        # existing blobs hardlink across; the merged manifest (source rows
+        # re-pointed + new rows), new blobs, then marker
+        dst_local.link_partition(src_local, pid, rows=rows, blobs=blobs)
+        return summary_batch(rows)
 
-    return shuffled.mapInArrow(backfill, schema=SUMMARY_SCHEMA)
+    return map_pid_slices(
+        with_pid, n_buckets, sort_cols, list(dict.fromkeys([check_col, *new_cols])),
+        backfill_one,
+    )

@@ -162,24 +162,17 @@ def rollback_store(root: str, version: int) -> dict:
             f"delete ops {sorted(missing_ops)[:5]})"
         )
 
-    def _create_marker(path: str) -> None:
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-        except FileExistsError:
-            pass
-
     retired = sorted(committed - target_pids)
     for pid in retired:
         os.unlink(store._marker_path(pid))
     for pid in sorted(to_restore):
-        _create_marker(store._marker_path(pid))
+        store.commit_partition(pid)
     retired_ops = sorted(committed_ops - target_ops)
     for op in retired_ops:
-        os.unlink(os.path.join(store.deletes_dir(), f"_committed_{op}"))
+        os.unlink(store._delete_marker_path(op))
     restored_ops = sorted(target_ops - committed_ops)
     for op in restored_ops:
-        _create_marker(os.path.join(store.deletes_dir(), f"_committed_{op}"))
+        store.seal_delete_op(op)
 
     snap = store.write_snapshot()
     return {

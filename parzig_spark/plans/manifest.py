@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
@@ -187,11 +188,30 @@ class ManifestStore:
     def commit_partition(self, pid: int) -> None:
         """Seal a staged partition: O_CREAT|O_EXCL marker creation is the
         commit point (idempotent — a second sealer is a no-op)."""
-        try:
-            fd = os.open(self._marker_path(pid), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-        except FileExistsError:
-            pass
+        _create_marker(self._marker_path(pid))
+
+    def link_partition(
+        self, src: "ManifestStore", pid: int, columns: list[str] | None = None,
+        rows: list[dict] = (), blobs: dict[str, bytes] | None = None,
+    ) -> None:
+        """Commit ``src``'s partition ``pid`` into this store without moving
+        its bytes: hardlink its blobs (copy fallback) — only ``columns``
+        when given — re-point their manifest rows' ``blob_file`` here, add
+        ``rows`` whose ``blobs`` are written fresh, then
+        :meth:`write_partition` (manifest tmp+rename, then marker). The
+        passthrough of compaction and both schema-evolution operators."""
+        if self.is_committed(pid):
+            return
+        path = os.path.join(src.manifest_dir, f"part-{pid}.parquet")
+        kept = [
+            r for r in pq.read_table(path).to_pylist()
+            if columns is None or r["column"] in columns
+        ]
+        os.makedirs(os.path.join(self.blob_dir, str(pid)), exist_ok=True)
+        for r in kept:
+            r["blob_file"] = self.blob_path(pid, r["column"])
+            link_file(src.blob_path(pid, r["column"]), r["blob_file"])
+        self.write_partition(pid, kept + list(rows), blobs or {})
 
     # -- snapshots (manifest-list) -------------------------------------------
     def write_snapshot(self) -> str:
@@ -304,12 +324,14 @@ class ManifestStore:
                     out.add(int(f[:-4]))
         return out
 
+    def _delete_marker_path(self, op_id: str) -> str:
+        return os.path.join(self.deletes_dir(), f"_committed_{op_id}")
+
     def commit_delete_op(self, op_id: str, bitmaps: dict[int, bytes]) -> bool:
         """Write one delete op's per-partition bitmaps, then its marker
         (the atomic commit point). Returns False when the op was already
         committed (idempotent replay — op ids are content-derived)."""
-        marker = os.path.join(self.deletes_dir(), f"_committed_{op_id}")
-        if os.path.exists(marker):
+        if os.path.exists(self._delete_marker_path(op_id)):
             return False
         op_dir = self.deletes_dir(op_id)
         os.makedirs(op_dir, exist_ok=True)
@@ -320,12 +342,12 @@ class ManifestStore:
             with open(tmp, "wb") as f:
                 f.write(blob)
             os.replace(tmp, final)
-        try:
-            fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-            return True
-        except FileExistsError:
-            return False
+        return self.seal_delete_op(op_id)
+
+    def seal_delete_op(self, op_id: str) -> bool:
+        """Seal a written delete op — :meth:`commit_partition`'s twin.
+        Returns False when its marker already existed."""
+        return _create_marker(self._delete_marker_path(op_id))
 
     def delete_bitmap_paths(self, pid: int, op_ids: list[str] | None = None) -> list[str]:
         """Bitmap files affecting ``pid`` across the given (default: all
@@ -426,6 +448,27 @@ class ManifestStore:
             filters=[("column", "=", column)],
         )
         return json.loads(t.column("meta_json")[0].as_py())
+
+
+def _create_marker(path: str) -> bool:
+    """The one commit primitive: create ``path`` iff absent (O_CREAT|O_EXCL).
+    Returns False when another sealer got there first."""
+    try:
+        os.close(os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+        return True
+    except FileExistsError:
+        return False
+
+
+def link_file(src: str, dst: str) -> None:
+    """Hardlink ``src`` at ``dst`` (copy when the filesystems differ);
+    an existing ``dst`` is kept."""
+    if os.path.exists(dst):
+        return
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
 
 
 def claim_namespace(store_root: str, namespace: int, digest_hex: str) -> None:

@@ -1,7 +1,9 @@
 """The aggregation core behind aggregate_store and check_store
 (operators/aggregate.py ``_answer``): one view resolution, one plan, one
 decode scan and one Spark aggregation per query — checked on the
-executed plan — and answers equal to DuckDB's on the same rows.
+executed plan — and answers equal to DuckDB's on the same rows, both on
+encoded partitions and on partitions that compaction and add_columns
+wrote (their stats come from the same manifest-row builder).
 """
 
 import json
@@ -10,11 +12,14 @@ import re
 
 import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
 
 from parzig_spark.operators import (
+    add_columns,
     aggregate,
     aggregate_store,
     check_store,
+    compact_store,
     decode,
     delete_rows,
     encode_table,
@@ -59,16 +64,31 @@ def store(spark, tmp_path_factory):
     return root, [r for r in rows if r[2] not in gone]
 
 
-def _duck(rows, sql):
+@pytest.fixture(scope="module")
+def compacted(spark, store, tmp_path_factory):
+    """(root, surviving rows): ``store`` rewritten by compaction — merge
+    groups z-ordered on (k, big) into the PAGED layout, the applied delete
+    purged."""
+    root, rows = store
+    dst = str(tmp_path_factory.mktemp("core") / "compacted")
+    compact_store(
+        spark, root, dst, target_bytes=16 << 10, zorder_cols=["k", "big"], page_values=64,
+    ).count()
+    return dst, rows
+
+
+_FIELDS = [
+    ("g", pa.string()), ("band", pa.int32()), ("k", pa.int64()),
+    ("big", pa.int64()), ("s", pa.string()), ("x", pa.float64()),
+]
+
+
+def _duck(rows, sql, fields=_FIELDS):
     con = duckdb.connect()
     try:
-        names = ["g", "band", "k", "big", "s", "x"]
         table = pa.table(
-            {n: [r[i] for r in rows] for i, n in enumerate(names)},
-            schema=pa.schema([
-                ("g", pa.string()), ("band", pa.int32()), ("k", pa.int64()),
-                ("big", pa.int64()), ("s", pa.string()), ("x", pa.float64()),
-            ]),
+            {n: [r[i] for r in rows] for i, (n, _t) in enumerate(fields)},
+            schema=pa.schema(fields),
         )
         con.register("t", table)
         cur = con.execute(sql)
@@ -152,6 +172,45 @@ def test_float_aggregates_match_duckdb(spark, store):
         f"FROM t{_where_sql(PREDICATES['range'])}",
     )[0]
     assert out == want
+
+
+@pytest.mark.parametrize("group_by", [[], ["g"], ["band"]], ids=["ungrouped", "by_str", "by_int"])
+@pytest.mark.parametrize("pred", list(PREDICATES))
+def test_aggregate_matches_duckdb_compacted(spark, compacted, group_by, pred):
+    """The same differential over partitions compaction wrote."""
+    test_aggregate_matches_duckdb(spark, compacted, group_by, pred)
+
+
+def test_float_aggregates_match_duckdb_compacted(spark, compacted):
+    test_float_aggregates_match_duckdb(spark, compacted)
+
+
+@pytest.mark.parametrize("group_by", [[], ["g"]], ids=["ungrouped", "by_str"])
+def test_added_column_aggregates_match_duckdb(spark, store, tmp_path, group_by):
+    """sum/min/max/distinct of a column add_columns backfilled into a
+    widened copy (the delete carried across) equal DuckDB's."""
+    root, rows = store
+
+    def w(k):
+        return None if k % 11 == 0 else (k * 37) % 1000
+
+    wide = spark.createDataFrame(_rows(), _SCHEMA).withColumn(
+        "w", F.when(F.col("k") % 11 == 0, None).otherwise((F.col("k") * 37) % 1000)
+    )
+    dst = str(tmp_path / "wide")
+    add_columns(wide, root, dst, ["w"]).count()
+    aggs = [("sum", "w"), ("min", "w"), ("max", "w"), ("distinct", "w")]
+    out = aggregate_store(spark, dst, aggs, group_by=group_by)
+    select = [*group_by, *[f"{_SQL[fn].format(c)} AS {fn}_{c}" for fn, c in aggs]]
+    sql = f"SELECT {', '.join(select)} FROM t"
+    if group_by:
+        sql += f" GROUP BY {', '.join(group_by)}"
+    want = sorted(
+        _duck([(*r, w(r[2])) for r in rows], sql, [*_FIELDS, ("w", pa.int64())]),
+        key=lambda r: _key(r, group_by),
+    )
+    got = sorted([r.asDict() for r in out.collect()], key=lambda r: _key(r, group_by))
+    assert got == want
 
 
 @pytest.mark.parametrize("pred", ["none", "range"])
