@@ -514,9 +514,8 @@ def q_roundtrip_zorder_prune(spark, sf_dir):
         predicates=[("o_custkey", "<=", 500), ("o_orderkey", "<=", 60_000)],
     )
     return (
-        dec.filter((F.col("o_custkey") <= 500) & (F.col("o_orderkey") <= 60_000))
-        .select("o_orderkey", "o_custkey",
-                _floor_cents(F.col("o_totalprice")).alias("price_cents"))
+        dec.select("o_orderkey", "o_custkey",
+                   _floor_cents(F.col("o_totalprice")).alias("price_cents"))
         .orderBy("o_orderkey")
     )
 
@@ -629,10 +628,11 @@ def q_datasource_sql(spark, sf_dir):
     plain SQL over ``spark.read.format("parzig")`` — Catalyst compiles the
     WHERE clause to Filter objects, pushFilters hands them to the store's
     partition pruning (min/max + blooms + exact distinct sets, planned
-    driver-side with no Spark job), each surviving partition decodes
-    through the shared Arrow kernel, and Spark re-applies the filters
-    row-exactly. The per-row sha proves the full pipeline (pruning +
-    page skipping + residual filters) loses and invents nothing.
+    driver-side with no Spark job), and each surviving partition decodes
+    through the shared Arrow kernel, which keeps exactly the matching rows
+    (Spark plans no residual Filter for them). The per-row sha proves the
+    full pipeline (pruning + page skipping + row mask) loses and invents
+    nothing.
 
     The WRITE half is gated in the same frame: the zh slice is written to a
     second store through ``df.write.format("parzig")`` (the
@@ -939,8 +939,7 @@ def q_roundtrip_pruned(spark, sf_dir):
     ).count()
     dec = decode_table(spark, root, predicates=[("o_orderkey", "<=", 2000)])
     int_range = (
-        dec.filter(F.col("o_orderkey") <= 2000)
-        .groupBy("o_orderpriority")
+        dec.groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.sum("o_orderkey").alias("sum_key"),
@@ -957,7 +956,6 @@ def q_roundtrip_pruned(spark, sf_dir):
     ).count()
     str_eq = (
         decode_table(spark, lang_root, predicates=[("lang", "==", "zh")])
-        .filter(F.col("lang") == "zh")
         .select("doc_id", "lang", F.sha2("text", 256).alias("text_sha"))
         .withColumn("section", F.lit("str_eq"))
     )
@@ -972,7 +970,6 @@ def q_roundtrip_pruned(spark, sf_dir):
             spark, pfx_root,
             predicates=[("source", ">=", "src15"), ("source", "startswith", "src1")],
         )
-        .filter((F.col("source") >= "src15") & F.col("source").startswith("src1"))
         .select("doc_id", "source", F.sha2("text", 256).alias("text_sha"))
         .withColumn("section", F.lit("str_prefix"))
     )
@@ -1229,7 +1226,6 @@ def q_roundtrip_stats_prune(spark, sf_dir):
     ).count()
     page_range = (
         decode_table(spark, root, predicates=[("o_orderkey", "<=", 5000)])
-        .filter(F.col("o_orderkey") <= 5000)
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -1240,7 +1236,6 @@ def q_roundtrip_stats_prune(spark, sf_dir):
     )
     bloom_eq = (
         decode_table(spark, root, predicates=[("o_custkey", "==", 371)])
-        .filter(F.col("o_custkey") == 371)
         .select("o_orderkey", "o_orderpriority",
                 _floor_cents(F.col("o_totalprice")).alias("price_cents"))
         .withColumn("section", F.lit("bloom_eq"))
@@ -1248,7 +1243,6 @@ def q_roundtrip_stats_prune(spark, sf_dir):
     keys = [371, 742, 1484]
     in_list = (
         decode_table(spark, root, predicates=[("o_custkey", "in", keys)])
-        .filter(F.col("o_custkey").isin(keys))
         .select("o_orderkey", "o_custkey",
                 _floor_cents(F.col("o_totalprice")).alias("price_cents"))
         .withColumn("section", F.lit("in_list"))

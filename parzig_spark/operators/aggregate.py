@@ -25,7 +25,9 @@ the caller (``resolve_view``) and does each step once:
      columns, no delete bitmap in the view);
    - *decoded*: everything else;
 3. **decode** — the decoded pids go through ``map_pids`` + ``read_pid``
-   with the view's delete ops: one ``mapInArrow`` scan;
+   with the view's delete ops and the predicates: one ``mapInArrow`` scan
+   that yields exactly the matching rows (the per-pid reader's row mask),
+   so the core applies no row filter of its own;
 4. **answer** — one DataFrame of partial rows (each metadata stat row as
    per-aggregate ``F.when(column == c, ...)`` partials, the exploded exact
    sets of the distinct columns, the decoded rows projected to the same
@@ -56,7 +58,6 @@ from .decode import (
     _spark_type,
     column_metas,
     map_pids,
-    predicate_expr,
     prune_manifests,  # noqa: F401 — perfbench/tracing.py wraps it by name
     read_pid,
     resolve_view,
@@ -87,10 +88,9 @@ def _pids_where(stats: pa.Table, pids: np.ndarray, col: str, row_mask: np.ndarra
     return np.isin(pids, stats.column("pid").to_numpy()[sel])
 
 
-def _kind(meta: dict) -> str:
-    """Storage kind of a column — "int", "str" or "other" — which decides
-    the stats comparisons that are provably exact."""
-    t = _arrow_target_type(meta)
+def _kind(t: pa.DataType) -> str:
+    """Storage kind of a column decoded as ``t`` — "int", "str" or "other"
+    — which decides the stats comparisons that are provably exact."""
     if pa.types.is_integer(t):
         return "int"
     if pa.types.is_string(t) or pa.types.is_large_string(t):
@@ -192,16 +192,15 @@ def _answer(
         | set(group_by)
     )
     metas = column_metas(store, used or None)
-    kinds = {c: _kind(m) for c, m in metas.items()}
+    types = {c: _arrow_target_type(m) for c, m in metas.items()}
+    kinds = {c: _kind(t) for c, t in types.items()}
     for fn, col in aggs:
         if col != "*" and col not in kinds:
             raise ValueError(f"unknown column {col!r} in {store.root}")
     for g in group_by:
         if g not in kinds:
             raise ValueError(f"unknown group column {g!r} in {store.root}")
-    for col, _op, _v in predicates or []:
-        if col not in kinds:
-            raise ValueError(f"unknown column {col!r} in {store.root}")
+    prune.check_rows(types, predicates)
     ref_col = next(iter(kinds))  # any column: one manifest row per (pid, col)
     needed = sorted(used) or [ref_col]
 
@@ -249,8 +248,6 @@ def _answer(
         return read_pid(root, pid, cols, casts, predicates=predicates, delete_ops=delete_ops)
 
     dec = map_pids(spark, pids[partial].tolist(), read, ddl)
-    if predicates:
-        dec = dec.filter(predicate_expr(predicates))
 
     # ---- answer: one stream of partial rows ---------------------------------
     meta_part, dec_part, finals = {}, {}, {}

@@ -15,9 +15,12 @@ split: :func:`plan_read` plans on the driver (view resolution through
 the pids to read; :func:`map_pids` runs one per-pid function over that
 list in a single shuffle-free stage; :func:`read_pid` reads one
 partition's manifest file and decodes it. ``decode_table``,
-``verify_store``, ``delete_rows`` and the ``parzig`` data source all read
-this way. Inside a PAGED partition ``decode_pid_rows`` asks the same
-evaluator for the surviving pages.
+``verify_store``, ``aggregate_store``, ``check_store``, ``delete_rows``
+and the ``parzig`` data source all read this way. Inside a partition
+``decode_pid_rows`` asks the same module for the surviving pages of a
+PAGED store and for the row mask (:func:`plans.prune.row_mask`, SQL
+semantics), so a read with predicates returns exactly the matching rows
+— callers filter nothing.
 """
 
 from __future__ import annotations
@@ -223,35 +226,6 @@ def schema_of(
     return cols, ", ".join(ddl), casts
 
 
-def predicate_expr(predicates) -> "F.Column":
-    """Row-level conjunction for the same (column, op, value) triples
-    decode_table prunes with — the residual filter callers apply on the
-    decoded rows (pruning is partition/page-granular, never row-exact)."""
-    cond = F.lit(True)
-    for col_name, op, val in predicates or []:
-        c = F.col(col_name)
-        if op in ("==", "="):
-            e = c == val
-        elif op == "!=":
-            e = c != val
-        elif op == ">=":
-            e = c >= val
-        elif op == ">":
-            e = c > val
-        elif op == "<=":
-            e = c <= val
-        elif op == "<":
-            e = c < val
-        elif op == "in":
-            e = c.isin(list(val)) if len(list(val)) else F.lit(False)
-        elif op in ("startswith", "like_prefix"):
-            e = c.startswith(str(val))
-        else:
-            raise ValueError(f"unsupported predicate op: {op}")
-        cond = cond & e
-    return cond
-
-
 def prune_manifests(manifests: DataFrame, predicates) -> DataFrame:
     """Manifest rows of the pids ``predicates`` cannot exclude — a
     DataFrame adapter over :mod:`plans.prune` for callers that hold a
@@ -311,8 +285,11 @@ def decode_table(
 
     ``predicates`` (e.g. ``[("o_orderkey", ">=", 1000)]``) prune whole
     partitions — and, in PAGED stores, pages — via the stored stats
-    (min/max, bloom, exact distinct sets) before any blob is opened;
-    callers still apply the row-level filter on the result.
+    (min/max, bloom, exact distinct sets) before any blob is opened, and
+    the per-pid reader keeps exactly the matching rows (SQL semantics,
+    :func:`plans.prune.row_mask`), projected or not. A predicate that
+    :func:`plans.prune.row_exact` rejects raises ValueError before any
+    Spark job.
 
     ``snapshot`` pins the read to a historical snapshot version — TIME
     TRAVEL: only partitions committed when that snapshot was written are
@@ -383,13 +360,17 @@ def plan_read(
     pids: list[int] | None = None,
 ) -> tuple[str, list[int], list[str]]:
     """The driver plan of every store read: (snapshot path, sorted pids to
-    read, delete ops). The view comes from :func:`resolve_view`; the pids
-    are the snapshot's ``prune.plan`` survivors, minus the pids already
-    visible at ``since_snapshot``, intersected with ``pids``."""
+    read, delete ops). The view comes from :func:`resolve_view`; the
+    predicates must be row-exact (``prune.check_rows``); the pids are the
+    snapshot's ``prune.plan`` survivors, minus the pids already visible at
+    ``since_snapshot``, intersected with ``pids``."""
     store = ManifestStore(store_root)
     _version, snap, delete_ops = resolve_view(store, snapshot, ref)
-    col_lanes = prune.lanes(store.read_one_manifest()) if predicates else {}
-    _stats, all_pids, state = prune.plan(snap, predicates, col_lanes)
+    metas = column_metas(store, {c for c, _op, _v in predicates}) if predicates else {}
+    prune.check_rows({c: _arrow_target_type(m) for c, m in metas.items()}, predicates)
+    _stats, all_pids, state = prune.plan(
+        snap, predicates, {c: prune.lane(m) for c, m in metas.items()}
+    )
     keep = set(all_pids[state != prune.EXCLUDED].tolist())
     if since_snapshot is not None:
         keep -= store.snapshot_pids(since_snapshot)
@@ -415,11 +396,13 @@ def read_pid(
     delete_ops: "list[str] | tuple" = (),
     include_pid_pos: bool = False,
 ):
-    """Decoded Arrow batches of one partition — the per-pid reader behind
-    ``decode_table``, ``delete_rows`` and both ``parzig`` data-source
-    readers. Reads the partition's manifest rows for ``cols`` plus the
-    predicate columns (whose page stats drive section skipping even when
-    not projected), then runs :func:`decode_pid_rows`."""
+    """Decoded Arrow batches of one partition's rows that match
+    ``predicates`` and no delete op — the per-pid reader behind
+    ``decode_table``, ``aggregate_store``, ``check_store``, ``delete_rows``
+    and both ``parzig`` data-source readers. Reads the partition's manifest
+    rows for ``cols`` plus the predicate columns (whose page stats and
+    values decide the rows even when not projected), then runs
+    :func:`decode_pid_rows`."""
     need = set(cols) | {p[0] for p in predicates or []}
     by_col = {r["column"]: r for r in manifest_rows(store_root, pid, ["meta_json"], need)}
     return decode_pid_rows(
@@ -455,20 +438,22 @@ def decode_pid_rows(
     include_pid_pos: bool = False,
 ):
     """Decode partitions from their manifest rows — the worker-side kernel
-    behind :func:`read_pid`. ``rows`` maps pid ->
-    column -> manifest row dict (pid/column/meta_json). Yields Arrow
-    RecordBatches in ``cols`` order (+ _pid/_pos when requested).
+    behind :func:`read_pid`. ``rows`` maps pid -> column -> manifest row
+    dict (pid/column/meta_json). Yields Arrow RecordBatches (never pandas)
+    of exactly the rows matching every predicate and no delete op, in
+    ``cols`` order (+ _pid/_pos when requested). Per partition:
 
-    Pure-Arrow: decoded columns go straight from the numpy kernels into
-    Arrow batches, never through pandas objects.
-
-    With predicates + a PAGED store, sections whose page entries cannot
-    satisfy every predicate (plans.prune.page_survivors) are skipped:
-    paged columns read ONLY the surviving byte ranges off storage
-    (read_blob_ranges) and decode only those sections; unpaged columns
-    decode whole, then slice the same row ranges so every column stays
-    row-aligned (the shared value stride guarantees identical page
-    boundaries across columns).
+    1. in a PAGED store only the sections whose page entries can satisfy
+       every predicate (plans.prune.page_survivors) are read: paged
+       columns read just those byte ranges (read_blob_ranges), unpaged
+       columns decode whole and slice the same row ranges (the shared
+       value stride gives every column the same page boundaries);
+    2. the predicate columns decode first; their row mask
+       (plans.prune.row_mask, at each column's decoded Spark type) ANDs
+       with the delete keep-mask;
+    3. if no row is left the other columns stay encoded; otherwise the
+       mask applies once to every column and to ``_pos``, the PHYSICAL
+       row index, so ``(_pid, _pos)`` keeps addressing the stored row.
     """
     import numpy as np
 
@@ -476,78 +461,52 @@ def decode_pid_rows(
     from .delete import load_delete_mask
 
     local = ManifestStore(store_root)
+    pred_cols = list(dict.fromkeys(c for c, _op, _v in predicates or []))
     for pid, by_col in rows.items():
-            metas = {name: json.loads(r["meta_json"]) for name, r in by_col.items()}
-            survivors, ref_paged = prune.page_survivors(metas, predicates or [])
-            if survivors == []:
-                continue  # no section of this partition can match
-            # merge-on-read deletes: OR this pid's bitmaps across the
-            # query's delete-op set; rows decoded below filter through the
-            # complement. With page skipping, the mask slices to the same
-            # surviving row ranges the columns do, so alignment holds.
-            keep_rows = None
-            if delete_ops:
-                n_phys = next(iter(metas.values()))["n"]
-                deleted = load_delete_mask(local, pid, n_phys, delete_ops)
-                if deleted is not None:
-                    if survivors is not None:
-                        deleted = np.concatenate(
-                            [
-                                deleted[off : off + ln]
-                                for off, ln in page_row_ranges(ref_paged, survivors)
-                            ]
-                        )
-                    if deleted.all():
-                        continue  # every row of this partition is deleted
-                    if deleted.any():
-                        keep_rows = pa.array(~deleted)
-            arrays = []
-            for name in cols:
+        metas = {name: json.loads(r["meta_json"]) for name, r in by_col.items()}
+        survivors, ref_paged = prune.page_survivors(metas, predicates or [])
+        if survivors == []:
+            continue  # no section of this partition can match
+        n_phys = next(iter(metas.values()))["n"]
+        ranges = [(0, n_phys)] if survivors is None else page_row_ranges(ref_paged, survivors)
+        keep = np.ones(sum(ln for _off, ln in ranges), bool)
+        if delete_ops:
+            # merge-on-read deletes: this pid's bitmaps ORed across the
+            # query's delete-op set, sliced to the surviving row ranges
+            deleted = load_delete_mask(local, pid, n_phys, delete_ops)
+            if deleted is not None:
+                keep &= ~np.concatenate([deleted[off : off + ln] for off, ln in ranges])
+        decoded = {}
+
+        def column(name):
+            if name not in decoded:
                 meta = metas[name]
                 if survivors is not None and meta.get("codec") == "paged":
-                    blobs = local.read_blob_ranges(
-                        pid, name, page_byte_ranges(meta, survivors)
-                    )
-                    parts = [
-                        decode_column(b, meta["pages"][i]["meta"])
-                        for b, i in zip(blobs, survivors)
-                    ]
-                    arr = pa.chunked_array(parts).combine_chunks()
-                elif survivors is not None:
-                    full = decode_column(local.read_blob(pid, name), meta)
-                    parts = [
-                        full.slice(off, ln)
-                        for off, ln in page_row_ranges(ref_paged, survivors)
-                    ]
-                    arr = pa.chunked_array(parts).combine_chunks()
+                    blobs = local.read_blob_ranges(pid, name, page_byte_ranges(meta, survivors))
+                    arr = pa.chunked_array(
+                        [decode_column(b, meta["pages"][i]["meta"]) for b, i in zip(blobs, survivors)]
+                    ).combine_chunks()
                 else:
                     arr = decode_column(local.read_blob(pid, name), meta)
+                    if survivors is not None:
+                        arr = pa.chunked_array(
+                            [arr.slice(off, ln) for off, ln in ranges]
+                        ).combine_chunks()
                 cast_to = casts.get(name)
-                if cast_to is not None:
-                    arr = arr.cast(cast_to, safe=False)
-                if keep_rows is not None:
-                    arr = arr.filter(keep_rows)
-                arrays.append(arr)
-            out_cols = dict(zip(cols, arrays))
-            if include_pid_pos:
-                # PHYSICAL row index: absolute within the stored partition,
-                # sliced and delete-filtered exactly like the data columns,
-                # so (pid, pos) keeps addressing the same stored row
-                n_phys = next(iter(metas.values()))["n"]
-                if survivors is not None:
-                    pos = np.concatenate(
-                        [
-                            np.arange(off, off + ln, dtype=np.int64)
-                            for off, ln in page_row_ranges(ref_paged, survivors)
-                        ]
-                    )
-                else:
-                    pos = np.arange(n_phys, dtype=np.int64)
-                if keep_rows is not None:
-                    pos = pos[np.asarray(keep_rows.to_numpy(zero_copy_only=False))]
-                out_cols["_pid"] = pa.array(
-                    np.full(len(pos), pid, dtype=np.int64)
-                )
-                out_cols["_pos"] = pa.array(pos)
-            table = pa.table(out_cols)
-            yield from table.to_batches(max_chunksize=8192)
+                decoded[name] = arr if cast_to is None else arr.cast(cast_to, safe=False)
+            return decoded[name]
+
+        if pred_cols and keep.any():
+            typed = {c: column(c).cast(_arrow_target_type(metas[c]), safe=False) for c in pred_cols}
+            keep &= prune.row_mask(pa.table(typed), predicates)
+        if not keep.any():
+            continue  # nothing matches: the other columns stay encoded
+        out = {name: column(name) for name in cols}
+        if include_pid_pos:
+            pos = np.concatenate([np.arange(off, off + ln, dtype=np.int64) for off, ln in ranges])
+            out["_pid"] = pa.array(np.full(len(pos), pid, dtype=np.int64))
+            out["_pos"] = pa.array(pos)
+        if not keep.all():
+            mask = pa.array(keep)
+            out = {name: arr.filter(mask) for name, arr in out.items()}
+        yield from pa.table(out).to_batches(max_chunksize=8192)

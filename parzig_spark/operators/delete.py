@@ -41,31 +41,11 @@ import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 
 from ..codecs import decode_u64, encode_u64
+from ..plans import prune
 from ..plans.manifest import ManifestStore
-from .decode import map_pids, plan_read, read_pid
+from .decode import decoded_schema, map_pids, plan_read, read_pid
 
 DELETE_SUMMARY_SCHEMA = "pid long, n_rows long, n_match long, n_new long"
-
-def _match_mask(arr: pa.Array, op: str, val) -> np.ndarray:
-    """Boolean match mask for one (column, op, value) predicate — nulls
-    never match (SQL semantics)."""
-    if op in ("startswith", "like_prefix"):
-        m = pc.starts_with(arr, pattern=str(val))
-    elif op == "in":
-        m = pc.is_in(arr, value_set=pa.array(list(val), type=arr.type))
-    else:
-        try:
-            kernel = {
-                "==": pc.equal, "=": pc.equal, "!=": pc.not_equal,
-                ">": pc.greater, ">=": pc.greater_equal,
-                "<": pc.less, "<=": pc.less_equal,
-            }[op]
-        except KeyError:
-            raise ValueError(f"delete_rows: unsupported predicate op {op!r}")
-        m = kernel(arr, pa.scalar(val))
-    if m.null_count:
-        m = m.fill_null(False)
-    return np.asarray(m.to_numpy(zero_copy_only=False)).astype(bool)
 
 
 def delete_op_id(predicates, committed_pids) -> str:
@@ -84,7 +64,11 @@ def delete_rows(
     spark: SparkSession, store_root: str, predicates: list[tuple]
 ) -> dict:
     """Delete every row matching ALL ``predicates`` (conjunctive, the same
-    (column, op, value) triples decode_table prunes with). Returns
+    (column, op, value) triples decode_table reads with, matched by the
+    same row evaluator — ``plans.prune.row_mask``, SQL semantics — so a
+    delete removes exactly the rows a read with those predicates returns).
+    A predicate that is not row-exact raises ValueError before any Spark
+    job. Returns
     {"op_id", "committed", "partitions_touched", "rows_deleted",
     "rows_matched"}; ``committed=False`` means the identical op was already
     applied (replay no-op)."""
@@ -102,16 +86,14 @@ def delete_rows(
     # stats pruning on the driver: partitions whose stats prove no row can
     # match write no bitmap. A head plan: existing_ops = every committed op
     _snap, pids, existing_ops = plan_read(store_root, predicates=predicates)
-    pred_cols = sorted({p[0] for p in predicates})
+    pred_cols, _ddl, casts = decoded_schema(store, sorted({p[0] for p in predicates}))
 
     def scan(pid):
-        # physical rows: no delete ops, no page skipping, no casts
-        table = pa.Table.from_batches(list(read_pid(store_root, pid, pred_cols, {})))
-        mask = None
-        for col_name, op, val in predicates:
-            m = _match_mask(table.column(col_name).combine_chunks(), op, val)
-            mask = m if mask is None else (mask & m)
-        if mask is None or not mask.any():
+        # physical rows (no delete ops, no page skipping) at the decoded
+        # types a read compares at
+        table = pa.Table.from_batches(list(read_pid(store_root, pid, pred_cols, casts)))
+        mask = prune.row_mask(table, predicates)
+        if not mask.any():
             return
         local = ManifestStore(store_root)
         prior = load_delete_mask(local, pid, table.num_rows, existing_ops)

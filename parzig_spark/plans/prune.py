@@ -1,16 +1,17 @@
-"""The pruning evaluator: ``(column, op, value)`` predicates against stored
-statistics, vectorized over stat rows with Arrow/numpy.
+"""The predicate evaluators: ``(column, op, value)`` predicates against
+stored statistics and against decoded rows, vectorized with Arrow/numpy.
 
-Every read plans through here. ``decode_table``, ``aggregate_store``,
+Every read goes through here. ``decode_table``, ``aggregate_store``,
 ``check_store``, ``delete_rows`` and the ``parzig`` data source evaluate
-the snapshot's per-(pid, column) manifest rows on the driver and filter
-the manifest rows once by pid; ``decode_pid_rows`` evaluates a PAGED
-column's per-page entries to choose the sections it reads. This is the
-decode-side analog of Parquet Statistics / ColumnIndex / BloomFilter
+the snapshot's per-(pid, column) stat rows on the driver; inside a
+partition ``decode_pid_rows`` evaluates a PAGED column's per-page entries
+to choose the sections it reads, then :func:`row_mask` over the decoded
+predicate columns to keep exactly the matching rows. The stats side is
+the decode-side analog of Parquet Statistics / ColumnIndex / BloomFilter
 skipping, which the reference parses but never consults
 (/root/reference/src/generated/parquet.zig:55-76,312-325).
 
-For every stat row the evaluator answers two questions:
+For every stat row the stats evaluator answers two questions:
 
 - **may** — can any row satisfy the predicate? False only when the stats
   PROVE none can; the pid (or page) is then excluded.
@@ -23,21 +24,22 @@ membership is exact both ways), the min/max envelope (exact on the int,
 float and date lanes; truncated-but-sound on strings — stat_min ≤ true min,
 stat_max ≥ true max) and, for equality only, the bloom (exclusion only).
 
-Literal-type guard — one rule for every caller. A literal is compared only
-on a lane where the comparison is exact:
+The row evaluator has Spark/DuckDB SQL semantics: NaN equals NaN and
+sorts above every number, ``-0.0 == 0.0``, and a null value or a null
+literal never matches. Its guard :func:`row_exact` decides from the
+decoded Arrow type, so callers reject a predicate at plan time.
 
-- int (not bool): int lane exactly (decimal128(38,0) — no float64 detour,
-  so keys above 2^53 never collapse), float lane as double;
-- float (not NaN): int and float lanes as double (Spark's own promotion);
-- str: str lane, in code-point order (= UTF-8 byte order, Spark's order);
-- date (not datetime): date lane, as ISO strings (fixed width, so
-  lexicographic order is chronological).
-
-Decimal, datetime, bytes and bool literals never prune. Arrow's min/max
-skip NaN while Spark orders NaN above every number, so on the float lane
-``>``, ``>=`` and ``!=`` never exclude and nothing is ever covered. Missing
-stats, unparseable stats and lane mismatches keep the row: never wrong,
-only slower.
+One literal table (``_domain``) serves both evaluators: int × int
+compares exactly (stats as decimal128(38,0); out-of-range literals clamp,
+so keys above 2^53 never collapse), int/float × float and float × int as
+float64 (Spark's promotion), str × str in UTF-8 byte order, date, bool
+and decimal against same-type literals, datetime × timestamp only when
+both or neither carry a tz. Every other pair is not row-exact. Stats are
+compared on the int, float, str and date lanes only; Arrow's min/max
+skip NaN, so on the float lane a NaN literal never prunes, ``>``, ``>=``
+and ``!=`` never exclude and nothing is ever covered. Missing stats,
+unparseable stats and lane mismatches keep the row: never wrong, only
+slower.
 """
 
 from __future__ import annotations
@@ -52,6 +54,7 @@ import pyarrow.compute as pc
 import pyarrow.json as pj
 import pyarrow.parquet as pq
 
+from ..codecs import dtypes
 from ..codecs.stats import _bloom_probes, bloom_key, increment_string
 
 EXCLUDED, PARTIAL, COVERED = 0, 1, 2
@@ -66,27 +69,21 @@ STAT_COLS = [
 OPS = ("==", "=", "!=", "<", "<=", ">", ">=", "in", "startswith", "like_prefix")
 _PREFIX = ("startswith", "like_prefix")
 
-_INT_TOKENS = {f"{s}int{b}" for s in ("", "u") for b in (8, 16, 32, 64)}
-_LANE_OF_TOKEN = {
-    **{t: "int" for t in _INT_TOKENS},
-    "float32": "float", "float64": "float",
-    "string": "str", "large_string": "str",
-    "date32": "date", "date64": "date",
-}
 _SET_SCHEMA = pa.schema([("d", pa.string()), ("v", pa.list_(pa.string()))])
 _DEC = pa.decimal128(38, 0)
 
 
 def lane(meta: dict) -> str:
-    """Comparison lane of a column's stats from its manifest meta: "int",
-    "float", "str", "date" or "other" (never compared)."""
+    """Comparison lane of a column's stats from its manifest meta (only the
+    "int", "float", "str" and "date" lanes carry comparable stats)."""
     if meta.get("codec") == "paged":
         return lane(meta["pages"][0]["meta"])
     if meta.get("codec") in ("list", "map", "struct", "decimal") or meta.get("fixed"):
         return "other"
     if meta.get("halffloat"):
         return "float"
-    return _LANE_OF_TOKEN.get(meta.get("codec_meta", {}).get("dtype"), "other")
+    token = meta.get("codec_meta", {}).get("dtype")
+    return _type_lane(dtypes.arrow_type(token)) if token else "other"
 
 
 def lanes(table: pa.Table | None) -> dict[str, str]:
@@ -213,6 +210,102 @@ def set_sizes(distinct) -> np.ndarray:
     return np.where(sets.have, sets.size, -1)
 
 
+def row_exact(arrow_type: pa.DataType, op: str, val) -> bool:
+    """Whether ``op val`` evaluates exactly, with SQL semantics, on a column
+    decoded as ``arrow_type`` — the guard of :func:`row_mask`, decided at
+    plan time. A null literal or IN member is exact: it never matches."""
+    if op not in OPS:
+        return False
+    col_lane = _type_lane(arrow_type)
+    if op in _PREFIX:
+        return col_lane == "str" and isinstance(val, str)
+    members = list(val) if op == "in" else [val]
+    return all(v is None or _domain(col_lane, v) is not None for v in members)
+
+
+def check_rows(col_types: dict[str, pa.DataType], predicates) -> None:
+    """Raise ValueError for a predicate on a column missing from
+    ``col_types`` (column -> decoded Arrow type) or one :func:`row_exact`
+    rejects — every read checks this on the driver, before any Spark job."""
+    for col, op, val in predicates or []:
+        if col not in col_types:
+            raise ValueError(f"unknown column {col!r} in predicate {(col, op, val)!r}")
+        if not row_exact(col_types[col], op, val):
+            raise ValueError(
+                f"predicate {(col, op, val)!r} is not row-exact on a {col_types[col]} column"
+            )
+
+
+def row_mask(table: pa.Table, predicates) -> np.ndarray:
+    """Bool mask of the ``table`` rows matching the conjunction of
+    ``predicates``, each of which must be :func:`row_exact`."""
+    check_rows({f.name: f.type for f in table.schema}, predicates)
+    keep = np.ones(table.num_rows, bool)
+    for col, op, val in predicates or []:
+        arr = table.column(col).combine_chunks()
+        if op in _PREFIX:
+            keep &= _mask(pc.starts_with(arr, pattern=val))
+        elif op in ("==", "=", "in"):
+            hit = np.zeros(len(arr), bool)
+            for v in val if op == "in" else (val,):
+                if v is not None:
+                    hit |= _mask(_three_way(arr, v)[0])
+            keep &= hit
+        elif val is None:
+            keep[:] = False
+        else:
+            eq, lt, gt = _three_way(arr, val)
+            if op == "!=":
+                m = pc.invert(eq)
+            elif op in ("<", "<="):
+                m = lt if op == "<" else pc.or_(lt, eq)
+            else:
+                m = gt if op == ">" else pc.or_(gt, eq)
+            keep &= _mask(m)
+    return keep
+
+
+def _type_lane(t: pa.DataType) -> str:
+    """Lane of an Arrow type in the literal table."""
+    for test, name in (
+        (pa.types.is_boolean, "bool"), (pa.types.is_integer, "int"),
+        (pa.types.is_floating, "float"), (pa.types.is_string, "str"),
+        (pa.types.is_large_string, "str"), (pa.types.is_date, "date"),
+        (pa.types.is_decimal, "decimal"),
+    ):
+        if test(t):
+            return name
+    if pa.types.is_timestamp(t):
+        return "tstz" if t.tz else "ts"
+    return "other"
+
+
+def _three_way(arr: pa.Array, val):
+    """(eq, lt, gt) of every value against the literal in their ``_domain``,
+    in SQL order: NaN equals NaN and sorts above every number. Null values
+    give null (never a match)."""
+    dom = _domain(_type_lane(arr.type), val)
+    if dom == "float":
+        x, v = arr.cast(pa.float64(), safe=False), float(val)
+        nan = pc.is_nan(x)
+        if v != v:
+            return nan, pc.invert(nan), pc.and_(nan, False)
+        return pc.equal(x, v), pc.less(x, v), pc.or_(pc.greater(x, v), nan)
+    if dom == "int":
+        info = np.iinfo(arr.type.to_pandas_dtype())
+        if not info.min <= val <= info.max:  # clamp: beyond every stored value
+            none, every = pc.not_equal(arr, arr), pc.equal(arr, arr)  # null stays null
+            return (none, every, none) if val > info.max else (none, none, every)
+        v = pa.scalar(val, arr.type)
+    elif dom == "ts":
+        v = pa.scalar(val).cast(arr.type)
+    elif dom == "decimal":
+        v = pa.scalar(val)
+    else:
+        v = pa.scalar(val, arr.type)
+    return pc.equal(arr, v), pc.less(arr, v), pc.greater(arr, v)
+
+
 def _strings(a) -> pa.Array:
     if isinstance(a, pa.ChunkedArray):
         a = a.combine_chunks()
@@ -223,30 +316,47 @@ def _opt(t: pa.Table, name: str):
     return t.column(name) if name in t.column_names else None
 
 
-def _literal(val, col_lane):
-    """(cast target, scalar) for comparing ``val`` against stats of
-    ``col_lane``, or None when the guard forbids the comparison."""
+def _domain(col_lane: str, val) -> str | None:
+    """The literal table: the domain in which a column of ``col_lane``
+    compares exactly with ``val`` ("int", "float", "str", "date", "bool",
+    "decimal" or "ts"), or None when no exact comparison exists."""
     if isinstance(val, bool):
-        return None
+        return "bool" if col_lane == "bool" else None
     if isinstance(val, int):
-        if col_lane == "int":
-            # stats are exact decimal integers (uint64 included); literals
-            # past 38 digits clamp — still beyond every stored value
-            return _DEC, pa.scalar(decimal.Decimal(max(-(10**37), min(10**37, val))), _DEC)
         if col_lane == "float":
             try:
-                return pa.float64(), pa.scalar(float(val))
+                float(val)
             except OverflowError:
                 return None
-        return None
+        return col_lane if col_lane in ("int", "float") else None
     if isinstance(val, float):
-        if val != val or col_lane not in ("int", "float"):
-            return None
-        return pa.float64(), pa.scalar(val)
+        return "float" if col_lane in ("int", "float") else None
     if isinstance(val, str):
-        return (pa.string(), pa.scalar(val)) if col_lane == "str" else None
-    if isinstance(val, datetime.date) and not isinstance(val, datetime.datetime):
-        return (pa.string(), pa.scalar(val.isoformat())) if col_lane == "date" else None
+        return "str" if col_lane == "str" else None
+    if isinstance(val, datetime.datetime):
+        aware = val.utcoffset() is not None
+        return "ts" if col_lane == ("tstz" if aware else "ts") else None
+    if isinstance(val, datetime.date):
+        return "date" if col_lane == "date" else None
+    if isinstance(val, decimal.Decimal):
+        return "decimal" if col_lane == "decimal" and val.is_finite() else None
+    return None
+
+
+def _literal(val, col_lane):
+    """(cast target, scalar) for comparing ``val`` against stats of
+    ``col_lane``, or None when the literal table forbids the comparison."""
+    dom = _domain(col_lane, val)
+    if dom == "int":
+        # stats are exact decimal integers (uint64 included); literals
+        # past 38 digits clamp — still beyond every stored value
+        return _DEC, pa.scalar(decimal.Decimal(max(-(10**37), min(10**37, val))), _DEC)
+    if dom == "float" and float(val) == float(val):
+        return pa.float64(), pa.scalar(float(val))
+    if dom == "str":
+        return pa.string(), pa.scalar(val)
+    if dom == "date":
+        return pa.string(), pa.scalar(val.isoformat())
     return None
 
 

@@ -16,10 +16,12 @@ batch and the stream reader read a partition through the one per-pid
 reader, :func:`operators.decode.read_pid`, yielding Arrow batches
 (page-level skipping and merge-on-read delete masks included).
 
-Pruning here is partition/page-granular, so every filter is also returned
-to Spark for the residual row-level evaluation (the pushFilters contract's
-"partially pushed" case) — results are exact, pruning is a strict
-bonus.
+The per-pid reader returns exactly the matching rows (its row mask has
+SQL semantics), so ``pushFilters`` keeps every filter it translates and
+``plans.prune.row_exact`` accepts for the column's type: Spark plans no
+residual ``Filter`` for those and re-applies only the filters handed
+back (untranslatable shapes such as ``Not`` or ``IsNull``, and literals
+the row evaluator cannot compare exactly).
 
 Options: ``path`` (store root; or pass to ``load()``), ``snapshot`` /
 ``ref`` (pinned views — time travel / WAP branches through plain SQL),
@@ -48,6 +50,7 @@ from pyspark.sql.datasource import (
     GreaterThanOrEqual,
     In,
     InputPartition,
+    IsNotNull,
     LessThan,
     LessThanOrEqual,
     StringStartsWith,
@@ -67,11 +70,9 @@ _OPS = {
 
 def _translate(f):
     """Catalyst Filter -> (column, op, value) predicate triple, or None for
-    shapes the store's pruning doesn't speak (nested attributes, IsNull,
-    Not, ...) — untranslated filters simply don't prune (Spark re-applies
-    every filter row-level regardless). Literal types are not screened
-    here: the evaluator's guard (plans.prune) keeps every partition for
-    literals it cannot compare exactly."""
+    shapes the store's evaluators don't speak (nested attributes, IsNull,
+    Not, ...) — Spark evaluates those itself. Literal types are screened
+    by ``ParzigReader.pushFilters`` through ``plans.prune.row_exact``."""
     op = _OPS.get(type(f))
     if op is None or len(f.attribute) != 1:
         return None
@@ -94,7 +95,7 @@ class _PidReads:
     computed once on the driver."""
 
     def _init_read(self, options, schema_cols: list[str]) -> None:
-        from ..operators.decode import decoded_schema
+        from ..operators.decode import _arrow_target_type, column_metas, schema_of
         from ..plans.manifest import ManifestStore
 
         self.root = options.get("path")
@@ -102,7 +103,9 @@ class _PidReads:
             raise ValueError("parzig: pass the store root via .load(path)")
         store = ManifestStore(self.root)
         store.check_format()
-        self.cols, _ddl, self.casts = decoded_schema(store, schema_cols)
+        metas = column_metas(store, schema_cols)
+        self.cols, _ddl, self.casts = schema_of(metas, schema_cols)
+        self.types = {c: _arrow_target_type(m) for c, m in metas.items()}
         self.predicates: list[tuple] = []
 
     def read(self, partition):
@@ -125,14 +128,24 @@ class ParzigReader(_PidReads, DataSourceReader):
         self.ref = options.get("ref")
 
     def pushFilters(self, filters):
+        """Keep the filters the reader evaluates exactly (translated, and
+        row-exact on the column's decoded type); hand back the rest. An
+        ``IsNotNull`` on a column a kept filter constrains is implied — a
+        null never matches — so it is kept too."""
+        from ..plans.prune import row_exact
+
+        rest = []
         for f in filters:
             p = _translate(f)
-            if p is not None:
+            if p is not None and p[0] in self.types and row_exact(self.types[p[0]], p[1], p[2]):
                 self.predicates.append(p)
-        # partition/page-granular pruning is never row-exact: hand every
-        # filter back for Spark's residual evaluation (exactness first,
-        # pruning as a bonus)
-        return filters
+            else:
+                rest.append(f)
+        kept = {c for c, _op, _v in self.predicates}
+        return [
+            f for f in rest
+            if not (isinstance(f, IsNotNull) and len(f.attribute) == 1 and f.attribute[0] in kept)
+        ]
 
     def partitions(self):
         from ..operators.decode import plan_read

@@ -84,13 +84,17 @@ _FIELDS = [
 
 
 def _duck(rows, sql, fields=_FIELDS):
+    """``sql`` over a DuckDB-owned copy of ``rows``: filters over a
+    registered Arrow table push into the Arrow scan and answer with
+    Arrow's NaN semantics, not SQL's."""
     con = duckdb.connect()
     try:
         table = pa.table(
             {n: [r[i] for r in rows] for i, (n, _t) in enumerate(fields)},
             schema=pa.schema(fields),
         )
-        con.register("t", table)
+        con.register("src", table)
+        con.execute("CREATE TABLE t AS SELECT * FROM src")
         cur = con.execute(sql)
         cols = [d[0] for d in cur.description]
         return [dict(zip(cols, r)) for r in cur.fetchall()]

@@ -12,6 +12,7 @@ import shutil
 
 import pytest
 
+from parzig_spark.codecs import page_row_ranges
 from parzig_spark.operators import (
     compact_store,
     decode_table,
@@ -20,6 +21,8 @@ from parzig_spark.operators import (
     plan_compaction,
     verify_roundtrip,
 )
+from parzig_spark.operators.decode import plan_read
+from parzig_spark.plans import prune
 from parzig_spark.plans.manifest import ManifestStore
 from parzig_spark.sources import source_code_table
 
@@ -314,10 +317,10 @@ def test_compact_zorder_rewrite_prunes_both_axes(spark, tmp_path):
     """rewrite_data_files(strategy='zorder') analog: a Morton-curve rewrite
     over (x, y) ranks keeps per-page envelopes tight on BOTH columns — a
     selective predicate on either axis skips most pages, where a linear
-    sort on x leaves every page spanning the whole y domain. Decoded rows
-    (page granularity) are the observable: the z-ordered store must read
-    far fewer rows than the x-sorted store for a y predicate, while both
-    return exactly the matching rows."""
+    sort on x leaves every page spanning the whole y domain. The rows of
+    the pages the driver-side evaluator keeps are the observable: the
+    z-ordered store must read far fewer rows than the x-sorted store for a
+    y predicate, while both return exactly the matching rows."""
     from pyspark.sql import functions as F
 
     n = 100_000
@@ -351,22 +354,35 @@ def test_compact_zorder_rewrite_prunes_both_axes(spark, tmp_path):
     exp = df.filter(F.col("y") <= 5_000)
     exp_n, exp_sum = exp.count(), exp.agg(F.sum("k")).collect()[0][0]
     for root in (dst_x, dst_z):
-        got = decode_table(spark, root, predicates=y_pred).filter(
-            F.col("y") <= 5_000
-        )
+        got = decode_table(spark, root, predicates=y_pred)
         assert got.count() == exp_n
         assert got.agg(F.sum("k")).collect()[0][0] == exp_sum
+
+    def rows_read(root, preds):
+        """Rows of the pids and pages the driver-side evaluator keeps."""
+        store, total = ManifestStore(root), 0
+        for pid in plan_read(root, predicates=preds)[1]:
+            metas = {c: store.column_meta(pid, c) for c, _op, _v in preds}
+            survivors, paged = prune.page_survivors(metas, preds)
+            if survivors is None:
+                total += next(iter(metas.values()))["n"]
+            else:
+                total += sum(ln for _off, ln in page_row_ranges(paged, survivors))
+        return total
+
     # the pruning contrast: x-sorted pages all span the y domain (decode
     # ~everything); Morton tiles bound y per page (decode a thin slab)
-    rows_x = decode_table(spark, dst_x, predicates=y_pred).count()
-    rows_z = decode_table(spark, dst_z, predicates=y_pred).count()
+    rows_x = rows_read(dst_x, y_pred)
+    rows_z = rows_read(dst_z, y_pred)
     assert rows_z < rows_x // 2, (rows_z, rows_x)
     # and the curve still serves the x axis too: a selective x predicate
-    # reads well under half the store
-    rows_zx = decode_table(
-        spark, dst_z, predicates=[("x", "<=", 5_000)]
-    ).count()
+    # reads well under half the store, and returns exactly its rows
+    x_pred = [("x", "<=", 5_000)]
+    rows_zx = rows_read(dst_z, x_pred)
     assert rows_zx < n // 2, rows_zx
+    assert decode_table(spark, dst_z, predicates=x_pred).count() == (
+        df.filter(F.col("x") <= 5_000).count()
+    )
 
     with pytest.raises(ValueError, match="mutually exclusive"):
         compact_store(

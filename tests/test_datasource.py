@@ -1,8 +1,11 @@
 """The ``parzig`` Python Data Source (sources/datasource.py): plain
 ``spark.read.format("parzig")`` over a store with filter pushdown —
 Catalyst WHERE clauses reach partition pruning before task planning, and
-results stay row-exact (every filter is re-applied by Spark).
+results stay row-exact: the reader keeps exactly the matching rows for
+every filter it accepts, and Spark re-applies only the ones handed back.
 """
+
+import re
 
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import EqualTo, In, StringStartsWith
@@ -13,7 +16,6 @@ from parzig_spark.operators import (
     delete_rows,
     encode_table,
 )
-from parzig_spark.operators.decode import predicate_expr
 from parzig_spark.plans.manifest import ManifestStore
 from parzig_spark.sources.datasource import ParzigReader, register_datasource
 
@@ -42,10 +44,33 @@ def test_format_read_matches_decode_table(spark, tmp_path):
     got = sorted(tuple(r) for r in df.collect())
     exp = sorted(tuple(r) for r in decode_table(spark, root).collect())
     assert got == exp
-    # SQL surface + residual row filter correctness
+    # SQL surface: the reader answers the WHERE exactly
     df.createOrReplaceTempView("ds_t")
     n = spark.sql("SELECT count(*) AS n FROM ds_t WHERE cat = 'cat3'").collect()[0]["n"]
     assert n == 1_000
+
+
+def _has_filter(df) -> bool:
+    """A Filter node in the executed plan (not the scan's RuntimeFilters)."""
+    return re.search(r"\bFilter\b", df._jdf.queryExecution().executedPlan().toString()) is not None
+
+
+def test_accepted_filters_leave_no_filter_node(spark, tmp_path):
+    """A translated, row-exact WHERE (and the IsNotNull Catalyst infers for
+    it) is answered by the reader alone: no Filter in the executed plan,
+    same count. An untranslatable shape (Not) keeps its Filter."""
+    root = _store(spark, tmp_path, name="dsplan")
+    register_datasource(spark)
+    df = spark.read.format("parzig").load(root)
+    q = df.where("cat = 'cat3'")
+    assert not _has_filter(q), q._jdf.queryExecution().executedPlan().toString()
+    assert q.count() == 1_000
+    both = df.where("k >= 100 AND k < 400 AND cat = 'cat3'")
+    assert not _has_filter(both)
+    assert sorted(r["k"] for r in both.collect()) == [k for k in range(100, 400) if k % 6 == 3]
+    residual = df.where("cat != 'cat3'")
+    assert _has_filter(residual)
+    assert residual.count() == 5_000
 
 
 def test_pushdown_prunes_partitions(spark, tmp_path):
@@ -57,7 +82,7 @@ def test_pushdown_prunes_partitions(spark, tmp_path):
     total = len(reader.partitions())
     reader2 = ParzigReader({"path": root}, ["grp", "k", "cat"])
     kept = reader2.pushFilters([EqualTo(("cat",), "cat3")])
-    assert list(kept)  # every filter handed back for residual evaluation
+    assert kept == []  # translated and row-exact: no residual filter for Spark
     pruned = len(reader2.partitions())
     truth = (
         decode_table(spark, root, include_pid_pos=True)
@@ -102,9 +127,7 @@ def test_deletes_and_pinned_views(spark, tmp_path):
         spark.read.format("parzig").option("snapshot", str(version)).load(paged)
         .where("k >= 500 AND k < 2000")
     )
-    via_decode = decode_table(spark, paged, snapshot=version, predicates=preds).filter(
-        predicate_expr(preds)
-    )
+    via_decode = decode_table(spark, paged, snapshot=version, predicates=preds)
     got = sorted(tuple(r) for r in via_ds.collect())
     assert got == sorted(tuple(r) for r in via_decode.collect())
     assert [r[1] for r in sorted(got, key=lambda r: r[1])] == list(range(1_000, 2_000))
@@ -178,8 +201,13 @@ def test_unprunable_literals_never_prune(spark, tmp_path):
                  target_bytes=16 << 10, resume=False).count()
     register_datasource(spark)
     df = spark.read.format("parzig").load(root)
+    # Decimal x decimal is row-exact: the reader answers it (no Filter)
+    # while the stats never prune it; a Not keeps Spark's Filter
     assert df.where("price > 20").count() == 197
+    assert not _has_filter(df.where("price > 20"))
     assert df.where("price = 500.00").count() == 1
+    assert _has_filter(df.where("price != 20"))
+    assert df.where("price != 20").count() == 199
 
 
 def test_stream_reader_tails_snapshots(spark, tmp_path):

@@ -757,6 +757,8 @@ def test_prune_with_column_projection(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from parzig_spark.operators import decode_table, encode_table
+    from parzig_spark.operators.decode import plan_read
+    from parzig_spark.plans.manifest import ManifestStore
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     root = str(tmp_path / "projprune")
@@ -764,17 +766,34 @@ def test_prune_with_column_projection(spark, tmp_path):
         docs, root, group_cols=["lang"], salt_cols=["doc_id"],
         size_col="text", target_bytes=64 << 10, resume=False,
     ).count()
-    dec = decode_table(
-        spark, root, columns=["doc_id"], predicates=[("lang", "==", "zh")]
-    )
+    pred = [("lang", "==", "zh")]
+    dec = decode_table(spark, root, columns=["doc_id"], predicates=pred)
     assert dec.columns == ["doc_id"]
     got = {r["doc_id"] for r in dec.collect()}
     want = {r["doc_id"] for r in docs.filter(F.col("lang") == "zh").collect()}
-    assert want <= got  # pruning is partition-granular: no qualifying row lost
-    assert len(got) < docs.count()  # and it actually pruned
+    assert got == want  # exactly the matching rows, predicate column unprojected
+    # and it actually pruned: the driver plans fewer pids than committed
+    _snap, pids, _ops = plan_read(root, predicates=pred)
+    assert len(pids) < len(ManifestStore(root).committed_pids())
 
 
-def test_page_level_stats_skip_sections(spark, tmp_path):
+def _range_reads(monkeypatch) -> dict:
+    """column -> byte ranges of every ``ManifestStore.read_blob_ranges``
+    call made in this process (the per-pid reader's paged reads)."""
+    from parzig_spark.plans.manifest import ManifestStore
+
+    reads = {}
+    real = ManifestStore.read_blob_ranges
+
+    def spy(self, pid, column, ranges):
+        reads[column] = list(ranges)
+        return real(self, pid, column, ranges)
+
+    monkeypatch.setattr(ManifestStore, "read_blob_ranges", spy)
+    return reads
+
+
+def test_page_level_stats_skip_sections(spark, tmp_path, monkeypatch):
     """Round-4 judge item #8 end to end: a selective predicate inside ONE
     partition decodes only the surviving value-stride sections — fewer rows
     materialized, and the blob bytes touched are the surviving ranges, not
@@ -785,6 +804,7 @@ def test_page_level_stats_skip_sections(spark, tmp_path):
 
     from parzig_spark.codecs import page_byte_ranges
     from parzig_spark.operators import decode_table, encode_table
+    from parzig_spark.operators.decode import read_pid
     from parzig_spark.plans.manifest import ManifestStore
 
     df = spark.range(0, 100_000).select(
@@ -807,29 +827,37 @@ def test_page_level_stats_skip_sections(spark, tmp_path):
     assert meta_k["codec"] == "paged"
     assert len(meta_k["pages"]) == -(-100_000 // 8192)
 
-    dec = decode_table(spark, root, predicates=[("k", "<=", 2000)])
+    pred = [("k", "<=", 2000)]
+    dec = decode_table(spark, root, predicates=pred)
     got = dec.collect()
-    # only page 0 (rows sorted by k) survives the predicate
-    assert len(got) == 8192
+    # exactly the matching rows
+    assert len(got) == 2001
     by_k = {r["k"]: r for r in got}
-    assert set(by_k) == set(range(8192))
+    assert set(by_k) == set(range(2001))
     # row alignment: paged and sliced-unpaged columns agree per row
-    for k in (0, 5, 2000, 8191):
+    for k in (0, 5, 1999, 2000):
         assert by_k[k]["v"] == k * 3
         assert by_k[k]["s"] == f"row_{k}"
         assert by_k[k]["arr"] == [k]
-    # exact aggregate after the row-level filter
-    total = sum(r["v"] for r in got if r["k"] <= 2000)
-    assert total == sum(i * 3 for i in range(2001))
+    # exact aggregate without a caller-side filter
+    assert sum(r["v"] for r in got) == sum(i * 3 for i in range(2001))
+    # only page 0 (rows sorted by k) survives the predicate: the per-pid
+    # reader reads exactly page 0's byte ranges of every paged column
+    reads = _range_reads(monkeypatch)
+    cols = ["k", "v", "s", "arr"]
+    assert sum(b.num_rows for b in read_pid(root, pid, cols, {}, predicates=pred)) == 2001
+    assert reads == {c: page_byte_ranges(store.column_meta(pid, c), [0]) for c in ("k", "v", "s")}
     # bytes touched << blob size for the wide string column
-    meta_s = store.column_meta(pid, "s")
-    touched = sum(ln for _, ln in page_byte_ranges(meta_s, [0]))
+    touched = sum(ln for _, ln in reads["s"])
     blob_size = os.path.getsize(store.blob_path(pid, "s"))
     assert touched * 4 < blob_size, (touched, blob_size)
 
-    # a predicate on a NON-projected column still skips pages: its
-    # manifest row rides along to the per-pid reader
-    assert decode_table(spark, root, columns=["s"], predicates=[("k", "<=", 2000)]).count() == 8192
+    # a predicate on a NON-projected column still skips pages and still
+    # selects exact rows: its manifest row rides along to the reader
+    assert decode_table(spark, root, columns=["s"], predicates=pred).count() == 2001
+    reads.clear()
+    assert sum(b.num_rows for b in read_pid(root, pid, ["s"], {}, predicates=pred)) == 2001
+    assert reads == {c: page_byte_ranges(store.column_meta(pid, c), [0]) for c in ("k", "s")}
 
     # a predicate no section can satisfy yields zero rows (partition-level
     # stats alone could not prove this: 0 <= 200_000 <= max fails… use a gap)
@@ -845,6 +873,7 @@ def test_bloom_page_skipping_equality(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from parzig_spark.operators import decode_table, encode_table
+    from parzig_spark.plans import prune
     from parzig_spark.plans.manifest import ManifestStore
 
     # k sorted; v = a wide permuted-ish value (scattered across pages)
@@ -863,19 +892,22 @@ def test_bloom_page_skipping_equality(spark, tmp_path):
     meta_v = store.column_meta(pid, "v")
     assert meta_v.get("bloom_domain") == "i64"
 
-    # a present value: its row must survive bloom+stats skipping
+    # a present value: exactly its row survives bloom+stats skipping
     target = (12_345 * 48271 % 60_000) * 1_000_003
     dec = decode_table(spark, root, predicates=[("v", "==", target)])
-    got = dec.collect()
-    assert any(r["v"] == target for r in got)
-    # and most pages were skipped: decoded rows << total (each surviving
-    # page contributes 4096 rows; stats alone would keep all 15 pages)
-    assert len(got) < 30_000, len(got)
+    assert [r["v"] for r in dec.collect()] == [target]
+    # and most pages were skipped: surviving pages hold << 60k rows (each
+    # contributes 4096; stats alone would keep all 15 pages)
+    def surviving_rows(val):
+        survivors, _ = prune.page_survivors({"v": meta_v}, [("v", "==", val)])
+        return 4096 * len(survivors)
+
+    assert surviving_rows(target) < 30_000, surviving_rows(target)
 
     # an absent value (not a multiple of 1_000_003): typically zero pages
     miss = decode_table(spark, root, predicates=[("v", "==", 17)])
-    assert miss.count() < 30_000
-    assert miss.filter(F.col("v") == 17).count() == 0
+    assert surviving_rows(17) < 30_000
+    assert miss.count() == 0
 
 
 def test_partition_bloom_prunes_point_lookup(spark, tmp_path):
@@ -1072,12 +1104,14 @@ def test_in_list_pruning_all_levels(spark, tmp_path):
     ).count()
     store1 = ManifestStore(root1)
     assert len(store1.committed_pids()) == 1
+    pid1 = next(iter(store1.committed_pids()))
+    survivors, _ = prune.page_survivors(
+        {"k": store1.column_meta(pid1, "k")}, [("k", "in", [5, 17_000])]
+    )
+    assert survivors == [0, 2], survivors
     dec_k = decode_table(spark, root1, predicates=[("k", "in", [5, 17_000])])
     rows = dec_k.collect()
-    assert len(rows) == 2 * 8192, len(rows)
-    ks = {r["k"] for r in rows}
-    assert 5 in ks and 17_000 in ks
-    assert {r["w"] for r in rows if r["k"] in (5, 17_000)} == {15, 51_000}
+    assert sorted((r["k"], r["w"]) for r in rows) == [(5, 15), (17_000, 51_000)]
 
     # --- page-level evaluator unit checks (a page spanning k 0..8191)
     def page_may(vals):
