@@ -118,10 +118,12 @@ def main() -> None:
         "pq.read_table, predicates tested against every partition's recorded "
         "[stat_min, stat_max] by plans/prune.py) before any blob is opened "
         "(decode-side Statistics skipping). The Spark plan is only the "
-        "surviving pid list: a Range over its indexes feeding one mapInArrow "
-        "that decodes one partition per pid — no manifest rows and no "
-        "Exchange. Every pruning section below has this same two-node plan; "
-        "what differs is the driver's pid list.",
+        "surviving pid list, dealt into at most one contiguous run per core "
+        "slot (session.task_slots): a Range over the run indexes feeding one "
+        "mapInArrow whose task decodes its run pid by pid — one wave of "
+        "Python tasks, no manifest rows and no Exchange. Every pruning "
+        "section below has this same two-node plan; what differs is the "
+        "driver's pid list.",
     )
 
     grab(
@@ -257,11 +259,11 @@ def main() -> None:
     grab(
         "Store compaction rewrite (shuffle-free)",
         compact_store(spark, store_root, dstc, target_bytes=32 << 20),
-        "The rewrite_data_files analog: the ONLY thing distributed is a tiny "
-        "merge-group spec DataFrame (one row per group — json pid lists), "
-        "repartitioned so each task rewrites one group (the Exchange moves "
-        "those spec rows, never table data). Data bytes never cross tasks: "
-        "each task decodes its group through the read path (manifest_rows + "
+        "The rewrite_data_files analog, run through map_pids like every read: "
+        "a Range over the merge-group indexes (dealt into at most one run "
+        "per core slot) feeding one mapInArrow — no Exchange, and the group "
+        "pid lists travel inside the task closure. Data bytes never cross "
+        "tasks: each group decodes through the read path (manifest_rows + "
         "decode_pid_rows, purging delete bitmaps), re-sorts, builds its "
         "manifest rows in encode_partition_arrays like every other write "
         "path and commits one destination partition. Partitions big enough "

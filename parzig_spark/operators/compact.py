@@ -12,10 +12,11 @@ ColumnMetaData analog, /root/reference/src/generated/parquet.zig:382-419).
 
 Scale shape: NO shuffle anywhere. The plan is pure driver arithmetic over
 the manifest summary (bytes per pid — KBs even at 10^12 files via the
-snapshot), and the rewrite is an embarrassingly parallel map: one task per
-merge group reads only its own source blobs, re-encodes, and commits one
-destination partition. Wall-clock scales with bytes rewritten / executors,
-exactly like the encode job itself.
+snapshot), and the rewrite is an embarrassingly parallel map over the
+group indexes (``map_pids``: at most one task per core slot, each
+rewriting a run of groups): a merge group reads only its own source blobs,
+re-encodes, and commits one destination partition. Wall-clock scales with
+bytes rewritten / executors, exactly like the encode job itself.
 
 No step has a compaction-only copy: a merge group decodes through the read
 path (``manifest_rows`` + ``decode_pid_rows``, which also applies the
@@ -46,7 +47,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.manifest import FORMAT_VERSION, ManifestStore
-from .decode import _arrow_natural_type, decode_pid_rows, manifest_rows
+from .decode import _arrow_natural_type, decode_pid_rows, manifest_rows, map_pids
 from .encode import SUMMARY_SCHEMA, encode_partition_arrays, summary_batch
 
 
@@ -247,16 +248,14 @@ def _rewrite_groups_job(
     spark, src_root, dst_root, work, src_config, delete_ops,
     sort_cols, zorder_cols, outer, page_values, commit,
 ):
-    """One task per merge group (the group spec is the only thing shuffled
-    to executors — bytes move only within each task): decode the group's
-    source partitions through the read path (deleted rows purged),
-    canonical re-sort/z-order, re-encode into the destination pid with the
-    codecs the source chose. ``commit=False`` stages the destination
-    partitions WITHOUT markers — the in-place rewrite's invisible first
-    phase (rewrite_store flips markers on the driver)."""
-    spec_df = spark.createDataFrame(
-        [(json.dumps(g),) for g in work], "group_json string"
-    ).repartition(len(work))
+    """Rewrite each merge group of ``work`` through :func:`map_pids` over
+    the group indexes (one shuffle-free stage of at most ``task_slots``
+    tasks; bytes move only within each task): decode the group's source
+    partitions through the read path (deleted rows purged), canonical
+    re-sort/z-order, re-encode into the destination pid with the codecs
+    the source chose. ``commit=False`` stages the destination partitions
+    WITHOUT markers — the in-place rewrite's invisible first phase
+    (rewrite_store flips markers on the driver)."""
 
     def rewrite_one(pids: list[int]) -> pa.RecordBatch:
         new_pid = _dst_pid(pids)
@@ -286,12 +285,10 @@ def _rewrite_groups_job(
         dst_local.write_partition(new_pid, rows, blobs, commit=commit)
         return summary_batch(rows)
 
-    def rewrite(batches):
-        for batch in batches:
-            for spec in batch.column("group_json").to_pylist():
-                yield rewrite_one(sorted(json.loads(spec)))
+    def rewrite(i):
+        yield rewrite_one(sorted(work[i]))
 
-    return spec_df.mapInArrow(rewrite, schema=SUMMARY_SCHEMA)
+    return map_pids(spark, range(len(work)), rewrite, SUMMARY_SCHEMA)
 
 
 def _group_table(src_root, pids, src_config, delete_ops):

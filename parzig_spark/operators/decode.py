@@ -2,7 +2,7 @@
 
 Mirror of the reference's read path at Spark granularity: the manifest table
 is the footer (/root/reference/src/parquet/File.zig:58-91), one Spark task
-decodes one committed partition's column chunks
+decodes a run of committed partitions' column chunks
 (/root/reference/src/parquet/rowGroupReader.zig:72-290), and the numpy
 kernels replace the per-page decode loop. Column pruning works exactly like
 the reference's readColumn(index): ask for fewer columns and only those
@@ -13,12 +13,12 @@ split: :func:`plan_read` plans on the driver (view resolution through
 :func:`resolve_view`, then the snapshot's stat rows through
 :mod:`plans.prune`, the one evaluator every read path shares) and returns
 the pids to read; :func:`map_pids` runs one per-pid function over that
-list in a single shuffle-free stage; :func:`read_pid` reads one
-partition's manifest file and decodes it. ``decode_table``,
-``verify_store``, ``aggregate_store``, ``check_store``, ``delete_rows``
-and the ``parzig`` data source all read this way. Inside a partition
-``decode_pid_rows`` asks the same module for the surviving pages of a
-PAGED store and for the row mask (:func:`plans.prune.row_mask`, SQL
+list in a single shuffle-free stage of at most one task per core slot;
+:func:`read_pid` reads one partition's manifest file and decodes it.
+``decode_table``, ``verify_store``, ``aggregate_store``, ``check_store``,
+``delete_rows`` and the ``parzig`` data source all read this way. Inside a
+partition ``decode_pid_rows`` asks the same module for the surviving pages
+of a PAGED store and for the row mask (:func:`plans.prune.row_mask`, SQL
 semantics), so a read with predicates returns exactly the matching rows
 — callers filter nothing.
 """
@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..codecs import decode_column
 from ..plans import prune
 from ..plans.manifest import ManifestStore
+from ..session import task_slots
 
 # Every token the encoder accepts maps to a Spark type (SURVEY §1.2
 # widenings, mirroring the reference's logical reinterpretations at
@@ -411,21 +412,31 @@ def read_pid(
     )
 
 
+def deal_pids(pids: list[int], slots: int) -> list[tuple[int, ...]]:
+    """``pids`` sorted and dealt into ``min(len(pids), slots)`` contiguous
+    runs whose lengths differ by at most one — the task split of every
+    per-pid stage (:func:`map_pids` and the ``parzig`` data source), so one
+    wave of ``slots`` tasks covers each pid exactly once."""
+    pids = sorted(int(p) for p in pids)
+    n, k = len(pids), max(1, min(len(pids), slots))
+    return [tuple(pids[i * n // k : (i + 1) * n // k]) for i in range(k)] if n else []
+
+
 def map_pids(spark: SparkSession, pids: list[int], per_pid, schema: str) -> DataFrame:
     """Run ``per_pid(pid) -> Iterator[pa.RecordBatch]`` over ``pids`` in one
-    shuffle-free stage: ``spark.range`` over the sorted list's indexes
-    (at most 2x default parallelism tasks, each a contiguous index range),
-    each task mapping its indexes back to pids. No manifest rows cross
-    the JVM boundary and no ``Exchange`` is planned."""
-    pids = sorted(int(p) for p in pids)
-    n_tasks = max(1, min(len(pids), 2 * spark.sparkContext.defaultParallelism))
+    shuffle-free stage of at most ``session.task_slots`` tasks, each
+    reading one :func:`deal_pids` run in pid order: ``spark.range`` over
+    the run indexes, one index per task. No manifest rows cross the JVM
+    boundary and no ``Exchange`` is planned."""
+    runs = deal_pids(pids, task_slots(spark))
 
     def run(batches):
         for batch in batches:
             for i in batch.column(0).to_pylist():
-                yield from per_pid(pids[i])
+                for pid in runs[i]:
+                    yield from per_pid(pid)
 
-    return spark.range(len(pids), numPartitions=n_tasks).mapInArrow(run, schema=schema)
+    return spark.range(len(runs), numPartitions=max(1, len(runs))).mapInArrow(run, schema=schema)
 
 
 def decode_pid_rows(

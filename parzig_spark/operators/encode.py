@@ -12,10 +12,13 @@ hashes. A first lightweight aggregation measures bytes per (repo, lang)
 group; groups bigger than the target partition size get a per-row salt
 ``pmod(xxhash64(salt_cols), nsalt)`` so one giant repo fans out over many
 partitions, while small groups stay whole for dictionary/FSST locality. The
-physical shuffle is ``repartition(NP, pid)`` — hash, not range, because a
-partition id must never straddle two tasks (range boundaries can split only
-between distinct sort keys, but the atomic manifest commit needs the
-guarantee per bucket, and hash-on-pid gives it exactly).
+physical shuffle is ``repartition(k, pid)`` with ``k = min(n_buckets,
+task_slots)`` — one wave of tasks, each streaming its pids one after the
+other — hash, not range, because a partition id must never straddle two
+tasks (range boundaries can split only between distinct sort keys, but the
+atomic manifest commit needs the guarantee per bucket, and hash-on-pid
+gives it exactly). The task count never reaches a pid, a row order or a
+blob: those stay pure functions of the data.
 
 Idempotence under retries (SURVEY.md §7 hard-part (d)): pid is derived from
 data, rows are canonically sorted before encoding, and the manifest commit
@@ -44,6 +47,7 @@ from pyspark.sql import functions as F
 from ..codecs import dtypes, encode_column
 from ..plans.manifest import FORMAT_VERSION, ManifestStore
 from ..selector import choose_codec
+from ..session import task_slots
 
 SUMMARY_SCHEMA = (
     "pid long, column string, codec string, n_values long, raw_bytes long, "
@@ -338,6 +342,10 @@ def encode_table(
     predicates then skip whole sections *within* a partition, reading only
     the surviving byte ranges of each blob. Part of the store identity
     (page boundaries must be a pure data property for resume).
+
+    ``num_partitions`` sets the encode stage's task count (default
+    ``min(n_buckets, task_slots)``, see :func:`map_pid_slices`); it moves
+    no pid, row or blob.
     """
     salt_cols = salt_cols or [c for c in df.columns if c not in group_cols][:1]
     if sort_cols is None:
@@ -420,11 +428,8 @@ def encode_table(
             local_store.write_partition(pid, rows, blobs)
         return summary_batch(rows, committed=not already)
 
-    # One task per bucket: per-task cost is then a data property, identical
-    # at every cluster size (scheduler balances tasks over whatever slots
-    # exist) — required for honest N→4N scaling comparisons.
     return map_pid_slices(
-        with_pid, num_partitions or n_buckets, sort_cols, data_cols, encode_one
+        with_pid, n_buckets, sort_cols, data_cols, encode_one, num_partitions
     )
 
 
@@ -450,53 +455,51 @@ def skip_committed(with_pid: DataFrame, store: ManifestStore) -> DataFrame:
 
 
 def map_pid_slices(
-    with_pid: DataFrame, n_partitions: int, sort_cols: list[str],
-    cols: list[str], per_pid,
+    with_pid: DataFrame, n_pids: int, sort_cols: list[str],
+    cols: list[str], per_pid, num_partitions: int | None = None,
 ) -> DataFrame:
     """Run ``per_pid(pid, table) -> SUMMARY_SCHEMA batch`` once per pid of
     ``with_pid``, ``table`` holding that pid's ``cols`` in canonical
     (``sort_cols``) order — the one shuffle behind encode_table and
     add_columns, so both see the same pids in the same row order.
 
-    ``repartition(n_partitions, pid)`` keeps a pid inside one task. The
-    canonical (pid, *sort_cols) sort runs in the JVM: Tungsten sorts
-    binary rows (spill-capable — an oversized partition sorts through disk
-    instead of OOMing the Python worker) with the same order
-    pa.Table.sort_by would give: ascending, nulls last, byte-wise UTF8
-    comparison, NaN greatest.
+    ``repartition(k, pid)`` keeps a pid inside one task; ``k`` is
+    ``num_partitions`` when given, else ``min(n_pids, task_slots)`` — one
+    wave of tasks, each holding several pids. The (pid, *sort_cols) sort
+    runs in the JVM: Tungsten sorts binary rows (spill-capable — an
+    oversized partition sorts through disk instead of OOMing the Python
+    worker) with the same order pa.Table.sort_by would give: ascending,
+    nulls last, byte-wise UTF8 comparison, NaN greatest. With no sort
+    columns (an all-nested table) it sorts by pid alone.
 
-    Inside the task nothing is copied for grouping: the sorted batches
-    concat zero-copy and each pid is a contiguous slice found by boundary
-    detection on the pid lane (on a bandwidth-capped host data passes are
-    the job's real budget). Pure Arrow: string columns never become
-    Python objects.
+    Rows arrive with ``pid`` leading, so the task streams: it buffers only
+    the batch slices of the pid in progress and calls ``per_pid`` as soon
+    as the next pid starts — task memory stays bounded by one partition
+    however many pids the task holds. Nothing is copied for grouping
+    (each pid is a run of zero-copy slices found by boundary detection on
+    the pid lane), and string columns never become Python objects.
     """
-    shuffled = with_pid.repartition(n_partitions, "pid")
-    if sort_cols:
-        shuffled = shuffled.sortWithinPartitions(
-            F.col("pid").asc(), *[F.col(c).asc_nulls_last() for c in sort_cols]
-        )
+    k = num_partitions or max(1, min(n_pids, task_slots(with_pid.sparkSession)))
+    shuffled = with_pid.repartition(k, "pid").sortWithinPartitions(
+        F.col("pid").asc(), *[F.col(c).asc_nulls_last() for c in sort_cols]
+    )
 
     def run(batches):
-        incoming = [pa.Table.from_batches([b]) for b in batches]
-        if not incoming:
-            return
-        full = pa.concat_tables(incoming)
-        del incoming
-        if full.num_rows == 0:
-            return  # a task can receive only zero-row batches
-        pids_np = full.column("pid").to_numpy(zero_copy_only=False)
-        if not sort_cols:
-            # no canonical columns (all-nested table): group by pid only,
-            # stable to preserve arrival order within a bucket
-            order = np.argsort(pids_np, kind="stable")
-            full = full.take(pa.array(order))
-            pids_np = pids_np[order]
-        data_t = full.select(cols)
-        bounds = np.flatnonzero(np.diff(pids_np)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(pids_np)]))
-        for s, e in zip(starts, ends):
-            yield per_pid(int(pids_np[s]), data_t.slice(s, e - s))
+        pid, pending = None, []
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue  # a task can receive zero-row batches
+            pids = batch.column("pid").to_numpy(zero_copy_only=False)
+            data = batch.select(cols)
+            starts = np.concatenate(([0], np.flatnonzero(np.diff(pids)) + 1))
+            ends = np.append(starts[1:], len(pids))
+            for s, e in zip(starts, ends):
+                if pids[s] != pid:
+                    if pending:
+                        yield per_pid(int(pid), pa.Table.from_batches(pending))
+                    pid, pending = pids[s], []
+                pending.append(data.slice(s, e - s))
+        if pending:
+            yield per_pid(int(pid), pa.Table.from_batches(pending))
 
     return shuffled.mapInArrow(run, schema=SUMMARY_SCHEMA)

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from ..codecs import encode_u64
 from ..plans.manifest import ManifestStore
 from ..plans.manifest import claim_namespace
+from ..session import task_slots
 from .decode import decode_table
 from .delete import DELETE_SUMMARY_SCHEMA, load_delete_mask
 from .encode import encode_table
@@ -169,7 +170,7 @@ def upsert_rows(
         yield pa.RecordBatch.from_pylist(out, schema=schema)
 
     summary = (
-        matched.repartition(spark.sparkContext.defaultParallelism * 2, "pid")
+        matched.repartition(task_slots(spark), "pid")
         .mapInArrow(write_bitmaps, schema=DELETE_SUMMARY_SCHEMA)
         .groupBy()
         .agg(

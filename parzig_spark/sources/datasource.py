@@ -7,14 +7,18 @@ distinct sets) before a single task is planned.
 This is the switch-over surface done Spark-natively: ``register_store``
 wraps decode_table as a temp view (projection pruning only);
 the data source goes further — Catalyst hands the scan its compiled
-``Filter`` tree via ``pushFilters``, and the reader plans one
-InputPartition per SURVIVING store partition driver-side through
-:func:`operators.decode.plan_read`, the planner every read path shares
-(view resolution, then the snapshot's stat rows through
-:mod:`plans.prune` — no SparkSession needed at planning time). Both the
-batch and the stream reader read a partition through the one per-pid
-reader, :func:`operators.decode.read_pid`, yielding Arrow batches
-(page-level skipping and merge-on-read delete masks included).
+``Filter`` tree via ``pushFilters``, and the reader plans the SURVIVING
+store partitions driver-side through :func:`operators.decode.plan_read`,
+the planner every read path shares (view resolution, then the snapshot's
+stat rows through :mod:`plans.prune` — no SparkSession needed at planning
+time), and deals them into at most ``session.task_slots`` InputPartitions
+of contiguous pid runs (:func:`operators.decode.deal_pids`, the split
+``map_pids`` uses): one wave of Python tasks. The planner process has no
+SparkSession, so ``register_datasource`` records the session's slot count
+on the source it registers. Both the batch and the stream reader read
+each pid through the one per-pid reader,
+:func:`operators.decode.read_pid`, yielding Arrow batches (page-level
+skipping and merge-on-read delete masks included).
 
 The per-pid reader returns exactly the matching rows (its row mask has
 SQL semantics), so ``pushFilters`` keeps every filter it translates and
@@ -30,8 +34,8 @@ not reach Python data sources, so narrow wide stores explicitly).
 
 Usage::
 
-    from parzig_spark.sources.datasource import ParzigDataSource
-    spark.dataSource.register(ParzigDataSource)
+    from parzig_spark.sources.datasource import register_datasource
+    register_datasource(spark)
     spark.read.format("parzig").load(root).where("lang = 'zh'")
 """
 
@@ -80,19 +84,25 @@ def _translate(f):
 
 
 class ParzigPartition(InputPartition):
-    """One store partition to read, with the delete ops its view applies
-    (resolved on the driver; ``read`` runs from a reader pickled before
-    planning, so the ops travel with the partition)."""
+    """One task's run of store partitions (ascending pids), with the
+    delete ops its view applies (resolved on the driver; ``read`` runs
+    from a reader pickled before planning, so the ops travel with the
+    partition)."""
 
-    def __init__(self, pid: int, delete_ops):
-        self.pid = int(pid)
+    def __init__(self, pids, delete_ops):
+        self.pids = tuple(int(p) for p in pids)
         self.delete_ops = tuple(delete_ops)
 
 
 class _PidReads:
-    """``read`` shared by the batch and stream readers: one partition
-    through :func:`operators.decode.read_pid`, with ``cols``/``casts``
-    computed once on the driver."""
+    """``read`` shared by the batch and stream readers: each pid of a
+    partition through :func:`operators.decode.read_pid`, with
+    ``cols``/``casts`` computed once on the driver."""
+
+    #: task slots of the session the source was registered on
+    #: (``register_datasource``); unset, a reader asks the active session,
+    #: and without one plans one partition per pid
+    task_slots: int | None = None
 
     def _init_read(self, options, schema_cols: list[str]) -> None:
         from ..operators.decode import _arrow_target_type, column_metas, schema_of
@@ -115,10 +125,25 @@ class _PidReads:
             # fully-pruned scan, empty store or empty micro-batch: PySpark
             # substitutes a single None partition — zero rows
             return
-        yield from read_pid(
-            self.root, partition.pid, self.cols, self.casts,
-            predicates=self.predicates, delete_ops=partition.delete_ops,
-        )
+        for pid in partition.pids:
+            yield from read_pid(
+                self.root, pid, self.cols, self.casts,
+                predicates=self.predicates, delete_ops=partition.delete_ops,
+            )
+
+    def _deal(self, pids, delete_ops) -> list[ParzigPartition]:
+        """``pids`` dealt into at most ``task_slots`` partitions."""
+        from ..operators.decode import deal_pids
+
+        slots = self.task_slots
+        if slots is None:
+            from pyspark.sql import SparkSession
+
+            from ..session import task_slots
+
+            spark = SparkSession.getActiveSession()
+            slots = task_slots(spark) if spark is not None else len(pids)
+        return [ParzigPartition(run, delete_ops) for run in deal_pids(pids, slots)]
 
 
 class ParzigReader(_PidReads, DataSourceReader):
@@ -153,7 +178,7 @@ class ParzigReader(_PidReads, DataSourceReader):
         _snap, pids, ops = plan_read(
             self.root, snapshot=self.snapshot, ref=self.ref, predicates=self.predicates
         )
-        return [ParzigPartition(pid, ops) for pid in pids]
+        return self._deal(pids, ops)
 
 
 class ParzigStreamReader(_PidReads, DataSourceStreamReader):
@@ -254,7 +279,7 @@ class ParzigStreamReader(_PidReads, DataSourceStreamReader):
             new_pids -= _rewrite_silent_pids(
                 self.root, pids_from, pids_to, ops_from, set(ops), touched
             )
-        return [ParzigPartition(pid, ops) for pid in sorted(new_pids)]
+        return self._deal(new_pids, ops)
 
     def commit(self, end: dict) -> None:
         # offsets live in the query checkpoint; with a streamId, release
@@ -556,7 +581,7 @@ class ParzigWriter(DataSourceArrowWriter):
 
 
 class ParzigDataSource(DataSource):
-    """spark.dataSource.register(ParzigDataSource); then
+    """``register_datasource(spark)``; then
     ``spark.read.format("parzig").load(root)`` /
     ``df.write.format("parzig").mode("append").save(root)``."""
 
@@ -584,13 +609,20 @@ class ParzigDataSource(DataSource):
         _cols, ddl, _casts = decoded_schema(store, self._schema_cols())
         return ddl
 
+    #: set on the class ``register_datasource`` registers
+    task_slots: int | None = None
+
     def reader(self, schema) -> ParzigReader:
-        return ParzigReader(dict(self.options), [f.name for f in schema.fields])
+        reader = ParzigReader(dict(self.options), [f.name for f in schema.fields])
+        reader.task_slots = self.task_slots
+        return reader
 
     def streamReader(self, schema) -> ParzigStreamReader:
-        return ParzigStreamReader(
+        reader = ParzigStreamReader(
             dict(self.options), [f.name for f in schema.fields]
         )
+        reader.task_slots = self.task_slots
+        return reader
 
     def writer(self, schema, overwrite: bool) -> ParzigWriter:
         if overwrite:
@@ -605,6 +637,15 @@ class ParzigDataSource(DataSource):
 def register_datasource(spark) -> None:
     """Idempotent registration helper; also enables the Python-datasource
     filter-pushdown conf the reader's pushFilters requires (runtime-
-    settable SQL conf, default false in Spark 4.1)."""
+    settable SQL conf, default false in Spark 4.1). The registered class
+    carries ``spark``'s task slots: readers run in a planner process
+    without a SparkSession, and the class is pickled by value there."""
+    from ..session import task_slots
+
+    slots = task_slots(spark)
+
+    class Registered(ParzigDataSource):
+        task_slots = slots
+
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(ParzigDataSource)
+    spark.dataSource.register(Registered)
