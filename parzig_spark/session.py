@@ -2,13 +2,20 @@
 
 Local-mode testing (local[N], one JVM) per sandbox; the same settings are the
 ones that matter on a multi-executor cluster: AQE for runtime re-planning and
-skew-join splitting, Arrow transfer for the pandas-UDF encode/decode kernels,
-shuffle partitions sized to parallelism instead of the 200 default.
+skew-join splitting, Arrow batches for the ``mapInArrow`` stages and the
+``parzig`` Python data source that run the encode/decode kernels, shuffle
+partitions sized to parallelism instead of the 200 default.
+
+It also holds the two rules for the engine's Python tasks: how many run per
+stage (:func:`task_slots`) and the lazy zip-archive invalidation installed
+in every Spark Python worker that runs engine code
+(:func:`lazy_zip_invalidation`).
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -21,15 +28,72 @@ def task_slots(spark: SparkSession) -> int:
     """The most Python tasks any engine stage runs: one wave of the
     session's task slots (``defaultParallelism // spark.task.cpus``).
 
-    Every Python task pays a fixed setup before engine code runs (about
-    0.3 s on a 4-core host: the worker re-reads its zip importers' indexes
-    per task), so a stage's pids are dealt into at most this many tasks
-    and the setup is paid per core slot, not per pid. Spark's own file
-    scans pack their splits toward ``defaultParallelism`` the same way."""
+    Every Python task pays a fixed cost before engine code runs: the
+    JVM<->Python handshake and, on the first task of each worker, the
+    worker's own start-up and the zip index reads that
+    :func:`lazy_zip_invalidation` spares the later tasks. So a stage's
+    pids are dealt into at most this many tasks and that cost is paid per
+    core slot, not per pid. Spark's own file scans pack their splits
+    toward ``defaultParallelism`` the same way."""
     # spark.conf reads the one key in one call; sparkContext.getConf()
     # copies the whole conf key by key (~20 ms idle, more under load)
     cpus = int(spark.conf.get("spark.task.cpus", "1"))
     return max(1, spark.sparkContext.defaultParallelism // cpus)
+
+
+def lazy_zip_invalidation() -> None:
+    """Give this process CPython 3.13's lazy zip-archive invalidation.
+
+    Spark's Python worker calls ``importlib.invalidate_caches()`` before
+    every task and every data-source planner call
+    (``pyspark.worker_util.setup_spark_files``). Below 3.13,
+    ``zipimporter.invalidate_caches`` re-reads its archive's whole
+    directory at once, for each cached importer: a worker holds 16 of them
+    over ``pyspark.zip``, the py4j zip and the spark-core jar, about 0.24 s
+    per task. From 3.13 it only drops the archive's entry from the shared
+    directory cache, and the next lookup re-reads the archive once.
+
+    Below 3.13 this installs a ``zipimporter`` subclass that does the same:
+    in place of ``zipimport.zipimporter`` in ``sys.path_hooks``, so later
+    importers are lazy too, and as the class of every plain zipimporter in
+    ``sys.path_importer_cache``, so the importers (and the module loaders
+    that are the same objects) keep their identity. An archive that
+    changes is still re-read before the next import from it. A second
+    call finds nothing left to replace; on 3.13 and later it is a no-op.
+    ``parzig_spark/__init__.py`` calls it only inside a Spark Python
+    worker."""
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    base = zipimport.zipimporter
+
+    class LazyZipImporter(base):
+        @property
+        def _files(self):
+            files = zipimport._zip_directory_cache.get(self.archive)
+            if files is None:
+                try:
+                    files = zipimport._read_directory(self.archive)
+                except zipimport.ZipImportError:
+                    return {}
+                zipimport._zip_directory_cache[self.archive] = files
+            return files
+
+        @_files.setter
+        def _files(self, files):
+            # zipimporter.__init__ assigns the directory it has just put
+            # in the shared cache; the property reads it from there
+            pass
+
+        def invalidate_caches(self):
+            zipimport._zip_directory_cache.pop(self.archive, None)
+
+    sys.path_hooks[:] = [LazyZipImporter if h is base else h for h in sys.path_hooks]
+    for finder in sys.path_importer_cache.values():
+        if type(finder) is base:
+            finder.__dict__.pop("_files", None)
+            finder.__class__ = LazyZipImporter
 
 
 def get_spark(

@@ -1,11 +1,15 @@
 """One wave of Python tasks per stage: every engine stage deals its pids
 into at most ``session.task_slots`` tasks (a Python task's fixed setup is
 then paid per core slot, not per pid), and the encode task streams its
-pids one by one instead of buffering the whole task.
+pids one by one instead of buffering the whole task. A worker that runs
+engine code re-reads no zip directory when Spark invalidates its import
+caches before each task.
 """
 
 import pyarrow as pa
 from pyspark.sql import functions as F
+
+import parzig_spark
 
 from parzig_spark.operators import (
     aggregate_store,
@@ -14,7 +18,7 @@ from parzig_spark.operators import (
     encode_table,
     verify_store,
 )
-from parzig_spark.operators.decode import deal_pids, plan_read
+from parzig_spark.operators.decode import deal_pids, map_pids, plan_read
 from parzig_spark.operators.encode import map_pid_slices
 from parzig_spark.session import task_slots
 from parzig_spark.sources.datasource import ParzigReader, register_datasource
@@ -90,6 +94,40 @@ def test_deal_pids_contiguous_runs():
     assert len(runs) == 4
     assert [p for r in runs for p in r] == list(range(1, 11))
     assert sorted(len(r) for r in runs) == [2, 2, 3, 3]
+
+
+def test_task_invalidation_reads_no_zip_directory(spark):
+    """Each task's ``importlib.invalidate_caches()`` (which Spark's worker
+    also runs before every task) reads no zip directory inside a worker
+    that runs engine code: 0 on every pid, where CPython 3.11's eager
+    ``zipimporter.invalidate_caches`` reads 16 (``pyspark.zip``, the py4j
+    zip and the spark-core jar, once per cached importer)."""
+    pids = list(range(2 * task_slots(spark)))
+
+    # the package default is pickled as an import, like the engine
+    # functions every engine per-pid function calls, so a fresh worker
+    # imports the package (and installs the lazy invalidation) on unpickling
+    def count_reads(pid, _package=parzig_spark):
+        import importlib
+        import zipimport
+
+        reads = 0
+        read = zipimport._read_directory
+
+        def counted(path):
+            nonlocal reads
+            reads += 1
+            return read(path)
+
+        zipimport._read_directory = counted
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        yield pa.RecordBatch.from_pydict({"pid": [pid], "reads": [reads]})
+
+    rows = map_pids(spark, pids, count_reads, "pid long, reads long").collect()
+    assert sorted((r["pid"], r["reads"]) for r in rows) == [(p, 0) for p in pids]
 
 
 def test_every_stage_runs_one_wave(spark, tmp_path, monkeypatch):
