@@ -1,10 +1,11 @@
 """Probe the fixed cost of a Spark job on this host: the floor every engine
 stage pays before any engine work.
 
-    python jobs/probe_task_floor.py [--repeats 8]
+    python jobs/probe_task_floor.py
 
 On ``local[<cores>]`` through ``session.get_spark`` (a 1g driver heap, as
-the benchmark uses) it times, after one untimed warm-up round, each of:
+the benchmark uses) it times, after one untimed warm-up round, ``REPEATS`` (8)
+rounds of each of:
 
 - ``jvm_4_tasks``: a JVM-only job of 4 tasks (``spark.range`` to the noop
   sink);
@@ -19,7 +20,6 @@ of the medians.
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import statistics
@@ -30,6 +30,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import parzig_spark  # noqa: E402
+
+REPEATS = 8
 
 
 def _empty(batches, _package=parzig_spark):
@@ -42,10 +44,6 @@ def _empty(batches, _package=parzig_spark):
 
 
 def main() -> None:
-    p = argparse.ArgumentParser()
-    p.add_argument("--repeats", type=int, default=8)
-    args = p.parse_args()
-
     from pyspark.sql import functions as F
 
     from parzig_spark.operators import encode_table
@@ -80,7 +78,7 @@ def main() -> None:
         if count() != 1000:
             raise SystemExit("probe_task_floor: the one-pid store does not count 1000 rows")
         times = {name: [] for name in probes}
-        for rep in range(args.repeats + 1):  # round 0 warms up, untimed
+        for rep in range(REPEATS + 1):  # round 0 warms up, untimed
             for name, probe in probes.items():
                 t0 = time.perf_counter()
                 probe()
@@ -89,11 +87,11 @@ def main() -> None:
     spark.stop()
 
     medians = {}
-    print(f"{master} task_slots={slots} repeats={args.repeats}")
+    print(f"{master} task_slots={slots} repeats={REPEATS}")
     for name, ts in times.items():
         medians[name] = round(statistics.median(ts), 3)
         print(f"{name:>18}: median {medians[name]:.3f} s  (min {min(ts):.3f}, max {max(ts):.3f})")
-    print(json.dumps({"master": master, "task_slots": slots, "repeats": args.repeats, "median_s": medians}))
+    print(json.dumps({"master": master, "task_slots": slots, "repeats": REPEATS, "median_s": medians}))
 
 
 if __name__ == "__main__":

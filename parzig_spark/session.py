@@ -53,47 +53,46 @@ def lazy_zip_invalidation() -> None:
     per task. From 3.13 it only drops the archive's entry from the shared
     directory cache, and the next lookup re-reads the archive once.
 
-    Below 3.13 this installs a ``zipimporter`` subclass that does the same:
-    in place of ``zipimport.zipimporter`` in ``sys.path_hooks``, so later
-    importers are lazy too, and as the class of every plain zipimporter in
-    ``sys.path_importer_cache``, so the importers (and the module loaders
-    that are the same objects) keep their identity. An archive that
-    changes is still re-read before the next import from it. A second
-    call finds nothing left to replace; on 3.13 and later it is a no-op.
+    Below 3.13 this gives ``zipimport.zipimporter`` itself the same
+    behaviour, so every importer, cached or made later, is lazy: its
+    directory (``_files``) is read from the shared cache, re-read on the
+    first lookup after an invalidation, and ``invalidate_caches`` only
+    drops the cached entry. ``_files`` is a data descriptor, so it takes
+    precedence over the copy ``__init__`` left in each existing importer's
+    ``__dict__``; the first invalidation drops that copy. An archive that
+    changes is still re-read before the next import from it. A second call
+    does nothing; on 3.13 and later it is a no-op.
     ``parzig_spark/__init__.py`` calls it only inside a Spark Python
     worker."""
     if sys.version_info >= (3, 13):
         return
     import zipimport
 
-    base = zipimport.zipimporter
+    cls = zipimport.zipimporter
+    if isinstance(cls.__dict__.get("_files"), property):
+        return
 
-    class LazyZipImporter(base):
-        @property
-        def _files(self):
-            files = zipimport._zip_directory_cache.get(self.archive)
-            if files is None:
-                try:
-                    files = zipimport._read_directory(self.archive)
-                except zipimport.ZipImportError:
-                    return {}
-                zipimport._zip_directory_cache[self.archive] = files
-            return files
+    def files(self):
+        directory = zipimport._zip_directory_cache.get(self.archive)
+        if directory is None:
+            try:
+                directory = zipimport._read_directory(self.archive)
+            except zipimport.ZipImportError:
+                return {}
+            zipimport._zip_directory_cache[self.archive] = directory
+        return directory
 
-        @_files.setter
-        def _files(self, files):
-            # zipimporter.__init__ assigns the directory it has just put
-            # in the shared cache; the property reads it from there
-            pass
+    def keep_shared(self, directory):
+        # zipimporter.__init__ assigns the directory it has just put in
+        # the shared cache; the getter reads it from there
+        pass
 
-        def invalidate_caches(self):
-            zipimport._zip_directory_cache.pop(self.archive, None)
+    def invalidate_caches(self):
+        self.__dict__.pop("_files", None)
+        zipimport._zip_directory_cache.pop(self.archive, None)
 
-    sys.path_hooks[:] = [LazyZipImporter if h is base else h for h in sys.path_hooks]
-    for finder in sys.path_importer_cache.values():
-        if type(finder) is base:
-            finder.__dict__.pop("_files", None)
-            finder.__class__ = LazyZipImporter
+    cls._files = property(files, keep_shared)
+    cls.invalidate_caches = invalidate_caches
 
 
 def get_spark(
