@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.manifest import ManifestStore
+from ..plans.manifest import ManifestStore, version_of
 from .decode import decode_table
 
 
@@ -99,10 +99,7 @@ def changes_table(
     store = ManifestStore(store_root)
     store.check_format()
     if to_snapshot is None:
-        import os
-
-        snap = store.fresh_snapshot()
-        to_snapshot = int(os.path.basename(snap)[len("snap-"):-len(".parquet")])
+        to_snapshot = version_of(store.fresh_snapshot())
 
     pids_from = store.snapshot_pids(from_snapshot)
     pids_to = store.snapshot_pids(to_snapshot)

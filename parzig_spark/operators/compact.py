@@ -40,8 +40,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
-import time
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -186,8 +184,7 @@ def compact_store(
             raise ValueError("zorder_cols needs >= 2 columns (use sort_cols for 1)")
     src = ManifestStore(src_root)
     src.check_format()
-    with open(os.path.join(src_root, "store_config.json")) as f:
-        src_config = json.load(f)
+    src_config = src.config()
     if sort_cols is None and zorder_cols is None:
         sort_cols = src_config.get("sort_cols") or []
     sort_cols = sort_cols or []
@@ -347,15 +344,8 @@ def repair_rewrites(root: str) -> int:
     fixed = 0
     for rec in rewrite_records(root):
         for g in rec["groups"]:
-            if not store.is_committed(int(g["dst"])):
-                continue
-            for s in g["src"]:
-                if store.is_committed(int(s)):
-                    try:
-                        os.unlink(store._marker_path(int(s)))
-                        fixed += 1
-                    except FileNotFoundError:
-                        pass
+            if store.is_committed(int(g["dst"])):
+                fixed += sum(store.retire_partition(int(s)) for s in g["src"])
     return fixed
 
 
@@ -397,8 +387,7 @@ def rewrite_store(
     store = ManifestStore(root)
     store.check_format()
     repair_rewrites(root)
-    with open(os.path.join(root, "store_config.json")) as f:
-        config = json.load(f)
+    config = store.config()
     if sort_cols is None and zorder_cols is None:
         sort_cols = config.get("sort_cols") or []
     sort_cols = sort_cols or []
@@ -446,10 +435,7 @@ def rewrite_store(
     for g in mapping:
         store.commit_partition(int(g["dst"]))
         for s in g["src"]:
-            try:
-                os.unlink(store._marker_path(int(s)))
-            except FileNotFoundError:
-                pass
+            store.retire_partition(int(s))
     snap = store.write_snapshot()
     return {
         "groups": len(mapping),
@@ -480,13 +466,13 @@ def gc_store(root: str, min_age_s: float = 0.0, keep_snapshots: int = 0) -> dict
     branch ref instead; this horizon is the defense for ones that don't
     (Iceberg ``expire_snapshots(retain_last=N)`` analog).
 
-    Driver-side listdir of blob/manifest dirs — O(partitions); at real
-    scale this runs as a periodic maintenance job exactly like Iceberg's.
+    The file walk is ``ManifestStore.reclaim``: a driver-side listdir of
+    the blob/manifest dirs — O(partitions); at real scale this runs as a
+    periodic maintenance job exactly like Iceberg's.
     Returns counts: {"orphan_dirs", "orphan_manifests", "tmp_files",
     "old_snapshots", "bytes_reclaimed"}.
     """
     store = ManifestStore(root)
-    committed = store.committed_pids()
     # Refs pin liveness (Iceberg expire_snapshots semantics): a tagged or
     # branched snapshot version keeps its snapshot file AND every artifact
     # it references — partitions (blob dir + manifest) and delete ops —
@@ -496,7 +482,7 @@ def gc_store(root: str, min_age_s: float = 0.0, keep_snapshots: int = 0) -> dict
     from .refs import pinned_versions
 
     pinned = pinned_versions(root)
-    live_pids = set(committed)
+    live_pids = store.committed_pids()
     live_ops = set(store.committed_delete_ops())
     for version in pinned:
         try:
@@ -506,113 +492,4 @@ def gc_store(root: str, min_age_s: float = 0.0, keep_snapshots: int = 0) -> dict
             # ref at an already-reclaimed snapshot (pre-refs gc): nothing
             # left to pin — the ref is dangling and harmless
             pass
-    now = time.time()
-    stats = {
-        "orphan_dirs": 0,
-        "orphan_manifests": 0,
-        "tmp_files": 0,
-        "old_snapshots": 0,
-        "bytes_reclaimed": 0,
-    }
-
-    def old_enough(path: str) -> bool:
-        try:
-            return now - os.path.getmtime(path) >= min_age_s
-        except OSError:
-            return False
-
-    def tree_bytes(path: str) -> int:
-        total = 0
-        for dirpath, _, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(dirpath, f))
-                except OSError:
-                    pass
-        return total
-
-    # uncommitted blob dirs + stray tmp files inside committed ones
-    if os.path.isdir(store.blob_dir):
-        for entry in os.listdir(store.blob_dir):
-            p = os.path.join(store.blob_dir, entry)
-            if entry.isdigit() and int(entry) not in live_pids:
-                if old_enough(p):
-                    stats["bytes_reclaimed"] += tree_bytes(p)
-                    shutil.rmtree(p, ignore_errors=True)
-                    stats["orphan_dirs"] += 1
-            elif os.path.isdir(p):
-                for f in os.listdir(p):
-                    if ".tmp-" in f:
-                        fp = os.path.join(p, f)
-                        if old_enough(fp):
-                            stats["bytes_reclaimed"] += os.path.getsize(fp)
-                            os.unlink(fp)
-                            stats["tmp_files"] += 1
-
-    # manifests without a marker, and manifest tmp litter
-    if os.path.isdir(store.manifest_dir):
-        for f in os.listdir(store.manifest_dir):
-            fp = os.path.join(store.manifest_dir, f)
-            if ".tmp-" in f:
-                if old_enough(fp):
-                    stats["bytes_reclaimed"] += os.path.getsize(fp)
-                    os.unlink(fp)
-                    stats["tmp_files"] += 1
-            elif f.startswith("part-") and f.endswith(".parquet"):
-                pid = int(f[len("part-") : -len(".parquet")])
-                if pid not in live_pids and old_enough(fp):
-                    stats["bytes_reclaimed"] += os.path.getsize(fp)
-                    os.unlink(fp)
-                    stats["orphan_manifests"] += 1
-
-    # uncommitted delete-op dirs (crashed delete job) + tmp litter inside
-    # committed ones — the marker is the visibility boundary, so an
-    # unmarked op dir was never observable by any reader
-    del_dir = store.deletes_dir()
-    if os.path.isdir(del_dir):
-        for entry in os.listdir(del_dir):
-            p = os.path.join(del_dir, entry)
-            if entry.startswith("_committed_"):
-                continue
-            if os.path.isdir(p) and entry not in live_ops:
-                if old_enough(p):
-                    stats["bytes_reclaimed"] += tree_bytes(p)
-                    shutil.rmtree(p, ignore_errors=True)
-                    stats["orphan_dirs"] += 1
-            elif os.path.isdir(p):
-                for f in os.listdir(p):
-                    if ".tmp-" in f:
-                        fp = os.path.join(p, f)
-                        if old_enough(fp):
-                            stats["bytes_reclaimed"] += os.path.getsize(fp)
-                            os.unlink(fp)
-                            stats["tmp_files"] += 1
-
-    # superseded snapshots (readers only ever open the latest)
-    snap_dir = os.path.join(root, "snapshots")
-    if os.path.isdir(snap_dir):
-        snaps = sorted(
-            (f for f in os.listdir(snap_dir) if f.endswith(".parquet")),
-            key=lambda f: int(f[len("snap-"):-len(".parquet")]),
-        )
-        for f in snaps[: -(1 + max(0, int(keep_snapshots)))]:
-            if int(f[len("snap-"):-len(".parquet")]) in pinned:
-                continue  # ref-pinned snapshot: live until the ref drops
-            fp = os.path.join(snap_dir, f)
-            if old_enough(fp):
-                stats["bytes_reclaimed"] += os.path.getsize(fp)
-                os.unlink(fp)
-                stats["old_snapshots"] += 1
-                # the delete-op sidecar travels with its snapshot
-                side = fp[: -len(".parquet")] + ".deletes.json"
-                if os.path.exists(side):
-                    stats["bytes_reclaimed"] += os.path.getsize(side)
-                    os.unlink(side)
-        for f in os.listdir(snap_dir):
-            if ".tmp-" in f:
-                fp = os.path.join(snap_dir, f)
-                if old_enough(fp):
-                    stats["bytes_reclaimed"] += os.path.getsize(fp)
-                    os.unlink(fp)
-                    stats["tmp_files"] += 1
-    return stats
+    return store.reclaim(live_pids, live_ops, pinned, min_age_s, keep_snapshots)

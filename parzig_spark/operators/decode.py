@@ -26,7 +26,6 @@ semantics), so a read with predicates returns exactly the matching rows
 from __future__ import annotations
 
 import json
-import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -381,9 +380,9 @@ def plan_read(
 
 
 def manifest_rows(store_root: str, pid: int, fields: list[str], columns=None) -> list[dict]:
-    """``fields`` of one partition's manifest rows (``manifests/part-{pid}``,
-    one row per stored column), limited to ``columns`` when given."""
-    path = os.path.join(store_root, "manifests", f"part-{pid}.parquet")
+    """``fields`` of one partition's manifest rows (one row per stored
+    column), limited to ``columns`` when given."""
+    path = ManifestStore(store_root).manifest_path(pid)
     rows = pq.read_table(path, columns=["column", *fields]).to_pylist()
     return [r for r in rows if columns is None or r["column"] in columns]
 
@@ -469,7 +468,6 @@ def decode_pid_rows(
     import numpy as np
 
     from ..codecs import page_byte_ranges, page_row_ranges
-    from .delete import load_delete_mask
 
     local = ManifestStore(store_root)
     pred_cols = list(dict.fromkeys(c for c, _op, _v in predicates or []))
@@ -484,7 +482,7 @@ def decode_pid_rows(
         if delete_ops:
             # merge-on-read deletes: this pid's bitmaps ORed across the
             # query's delete-op set, sliced to the surviving row ranges
-            deleted = load_delete_mask(local, pid, n_phys, delete_ops)
+            deleted = local.load_delete_mask(pid, n_phys, delete_ops)
             if deleted is not None:
                 keep &= ~np.concatenate([deleted[off : off + ln] for off, ln in ranges])
         decoded = {}

@@ -33,14 +33,11 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 
-from ..codecs import decode_u64, encode_u64
 from ..plans import prune
 from ..plans.manifest import ManifestStore
 from .decode import decoded_schema, map_pids, plan_read, read_pid
@@ -76,8 +73,7 @@ def delete_rows(
     store.check_format()
     committed = store.committed_pids()
     op_id = delete_op_id(predicates, committed)
-    marker = os.path.join(store.deletes_dir(), f"_committed_{op_id}")
-    if os.path.exists(marker):
+    if store.is_delete_op_committed(op_id):
         return {
             "op_id": op_id, "committed": False,
             "partitions_touched": 0, "rows_deleted": 0, "rows_matched": 0,
@@ -96,18 +92,10 @@ def delete_rows(
         if not mask.any():
             return
         local = ManifestStore(store_root)
-        prior = load_delete_mask(local, pid, table.num_rows, existing_ops)
+        prior = local.load_delete_mask(pid, table.num_rows, existing_ops)
         n_new = int(mask.sum() if prior is None else (mask & ~prior).sum())
-        blob, _ = encode_u64(mask.astype(np.uint64), width=1)
-        # write-ahead into the (unmarked, invisible) op dir; tmp+rename
-        # so a racing speculative task never exposes a partial file
-        op_dir = local.deletes_dir(op_id)
-        os.makedirs(op_dir, exist_ok=True)
-        final = os.path.join(op_dir, f"{pid}.bin")
-        tmp = final + f".tmp-{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, final)
+        # write-ahead into the (unmarked, invisible) op dir
+        local.write_delete_bitmap(op_id, pid, mask)
         yield pa.RecordBatch.from_pylist(
             [{"pid": pid, "n_rows": table.num_rows, "n_match": int(mask.sum()),
               "n_new": n_new}]
@@ -116,7 +104,7 @@ def delete_rows(
     summary = map_pids(spark, pids, scan, DELETE_SUMMARY_SCHEMA).toArrow()
     # the job succeeded and every touched partition's bitmap is in place —
     # the marker is the store-level atomic commit point
-    committed_now = store.commit_delete_op(op_id, {})
+    committed_now = store.seal_delete_op(op_id)
     return {
         "op_id": op_id,
         "committed": committed_now,
@@ -125,16 +113,3 @@ def delete_rows(
         "rows_matched": int(pc.sum(summary.column("n_match")).as_py() or 0),
     }
 
-
-def load_delete_mask(
-    store: ManifestStore, pid: int, n_phys: int, op_ids: list[str]
-) -> np.ndarray | None:
-    """OR of ``pid``'s bitmaps across ``op_ids``; None when untouched."""
-    paths = store.delete_bitmap_paths(pid, op_ids)
-    if not paths:
-        return None
-    deleted = np.zeros(n_phys, bool)
-    for p in paths:
-        with open(p, "rb") as f:
-            deleted |= decode_u64(f.read(), n_phys, 1).astype(bool)
-    return deleted

@@ -433,6 +433,46 @@ def encode_table(
     )
 
 
+def append_pinned(df: DataFrame, store_root: str, cfg: dict, pid_namespace: int) -> None:
+    """Encode ``df`` into an existing store under ``pid_namespace`` with the
+    store's OWN pinned config ``cfg`` (group/salt/sort/size/target/page
+    layout), so appended rows land exactly as front-door rows would;
+    committed pids resume-skip. The append of WAP staging and upserts."""
+    encode_table(
+        df,
+        store_root,
+        group_cols=cfg["group_cols"],
+        salt_cols=cfg["salt_cols"],
+        sort_cols=cfg.get("sort_cols"),
+        size_col=cfg.get("size_col"),
+        target_bytes=cfg["target_bytes"],
+        resume=True,
+        pid_namespace=pid_namespace,
+        bucket_bits=16,
+        page_values=cfg.get("page_values"),
+    ).count()
+
+
+def batch_fingerprint(df: DataFrame) -> tuple[bytes, int]:
+    """(sha256 digest, row count) of ``df``'s rows as a multiset, in one
+    Spark job: XOR + a bounded wrapping SUM of the per-row xxhash64 +
+    COUNT — order- and partitioning-independent, and multiplicity-
+    sensitive (XOR alone is blind to pairs: x^x = 0). Map columns fold in
+    through ``to_json`` (xxhash64 cannot hash maps). The claim digest of
+    streaming micro-batches and WAP batches; streaming also derives its
+    pid namespaces from it, so the formula must never change."""
+    row_hash = F.xxhash64(
+        *[F.to_json(F.col(c)) if t.startswith("map") else F.col(c) for c, t in df.dtypes]
+    )
+    fp = df.select(
+        F.bit_xor(row_hash).alias("x"),
+        F.sum(F.pmod(row_hash, F.lit(1 << 28))).alias("s"),
+        F.count(F.lit(1)).alias("c"),
+    ).first()
+    digest = hashlib.sha256(f"{fp['x']},{fp['s']},{fp['c']}".encode()).digest()
+    return digest, int(fp["c"])
+
+
 def summary_batch(rows: list[dict], committed: bool = True) -> pa.RecordBatch:
     """The SUMMARY_SCHEMA batch of manifest rows — what every
     partition-writing job returns per partition it wrote (``committed``

@@ -40,7 +40,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-from ..plans.manifest import ManifestStore, link_file
+from ..plans.manifest import ManifestStore
 from .decode import manifest_rows
 from .encode import (
     column_digest,
@@ -52,19 +52,6 @@ from .encode import (
 )
 
 
-def _carry_deletes(src: ManifestStore, dst: ManifestStore) -> None:
-    """Hardlink committed delete-op bitmaps across and seal each op —
-    pids are identical in an evolved store, so row-level deletes stay in
-    force."""
-    for op in src.committed_delete_ops():
-        op_src, op_dst = src.deletes_dir(op), dst.deletes_dir(op)
-        os.makedirs(op_dst, exist_ok=True)
-        for f in os.listdir(op_src):
-            if ".tmp-" not in f:
-                link_file(os.path.join(op_src, f), os.path.join(op_dst, f))
-        dst.seal_delete_op(op)
-
-
 def drop_columns(src_root: str, dst_root: str, cols: list[str]) -> dict:
     """Produce ``dst_root`` = ``src_root`` minus ``cols`` — the DROP COLUMN
     analog. Purely metadata + hardlinks (no Spark job, no data pass): kept
@@ -74,8 +61,7 @@ def drop_columns(src_root: str, dst_root: str, cols: list[str]) -> dict:
     column, fails loudly."""
     src = ManifestStore(src_root)
     src.check_format()
-    with open(os.path.join(src_root, "store_config.json")) as f:
-        src_config = json.load(f)
+    src_config = src.config()
     orig_cols: list[str] = src_config["columns"]
     unknown = [c for c in cols if c not in orig_cols]
     if unknown:
@@ -85,7 +71,7 @@ def drop_columns(src_root: str, dst_root: str, cols: list[str]) -> dict:
         raise ValueError("drop_columns: cannot drop every column")
     dst = ManifestStore(dst_root)
     dst.ensure_config({**src_config, "columns": kept})
-    _carry_deletes(src, dst)
+    dst.link_delete_ops(src)
     n_parts = 0
     for pid in sorted(src.committed_pids()):
         if dst.is_committed(pid):
@@ -113,8 +99,7 @@ def add_columns(
     """
     src = ManifestStore(src_root)
     src.check_format()
-    with open(os.path.join(src_root, "store_config.json")) as f:
-        src_config = json.load(f)
+    src_config = src.config()
     orig_cols: list[str] = src_config["columns"]
     missing = [c for c in orig_cols + new_cols if c not in df.columns]
     if missing:
@@ -133,7 +118,7 @@ def add_columns(
     # deletes carry over (pids identical); note the alignment digest below
     # checks PHYSICAL rows — the caller passes the original full data, not
     # a post-delete decode (a decoded-then-widened frame fails loudly)
-    _carry_deletes(src, dst)
+    dst.link_delete_ops(src)
 
     with_pid, n_buckets = plan_partitions(
         df,
@@ -147,9 +132,7 @@ def add_columns(
 
     def backfill_one(pid, table):
         src_local = ManifestStore(src_root)
-        if not os.path.exists(
-            os.path.join(src_local.manifest_dir, f"part-{pid}.parquet")
-        ):
+        if not os.path.exists(src_local.manifest_path(pid)):
             raise ValueError(
                 f"add_columns: pid {pid} has no source manifest in "
                 f"{src_root} — the DataFrame's rows do not reproduce the "

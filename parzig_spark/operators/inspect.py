@@ -28,13 +28,12 @@ rewritten.
 
 from __future__ import annotations
 
-import os
-
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.manifest import ManifestStore
+from .decode import resolve_view
 
 FILES_COLUMNS = [
     "pid",
@@ -70,19 +69,7 @@ def files_table(
     internals (codec meta JSON, selector lineage, bloom bitmaps) are
     deliberately excluded; query the snapshot parquet directly when
     debugging those."""
-    store = ManifestStore(root)
-    store.check_format()
-    if ref is not None:
-        if snapshot is not None:
-            raise ValueError("pass either ref= or snapshot=, not both")
-        from .refs import resolve_ref
-
-        snapshot = resolve_ref(root, ref)
-    snap = (
-        store.snapshot_path(snapshot)
-        if snapshot is not None
-        else store.fresh_snapshot()
-    )
+    _version, snap, _ops = resolve_view(ManifestStore(root), snapshot, ref)
     return spark.read.parquet(snap).select(*FILES_COLUMNS)
 
 
@@ -92,27 +79,21 @@ def snapshots_table(spark: SparkSession, root: str) -> DataFrame:
     pinned. Versions reclaimed by ``gc_store`` no longer appear."""
     store = ManifestStore(root)
     store.check_format()
-    snap_dir = os.path.join(root, "snapshots")
     rows = []
-    if os.path.isdir(snap_dir):
-        for f in sorted(os.listdir(snap_dir)):
-            if not (f.startswith("snap-") and f.endswith(".parquet")):
-                continue
-            version = int(f[len("snap-"):-len(".parquet")])
-            path = os.path.join(snap_dir, f)
-            t = pq.read_table(path, columns=["pid", "raw_bytes", "enc_bytes"])
-            pids = t.column("pid").to_pylist()
-            rows.append(
-                (
-                    version,
-                    path,
-                    len(set(pids)),
-                    t.num_rows,
-                    sum(t.column("raw_bytes").to_pylist()),
-                    sum(t.column("enc_bytes").to_pylist()),
-                    len(store.snapshot_delete_ops(version)),
-                )
+    for version in store.versions():
+        path = store.snapshot_path(version)
+        t = pq.read_table(path, columns=["pid", "raw_bytes", "enc_bytes"])
+        rows.append(
+            (
+                version,
+                path,
+                len(set(t.column("pid").to_pylist())),
+                t.num_rows,
+                sum(t.column("raw_bytes").to_pylist()),
+                sum(t.column("enc_bytes").to_pylist()),
+                len(store.snapshot_delete_ops(version)),
             )
+        )
     return spark.createDataFrame(rows, SNAPSHOTS_DDL)
 
 
@@ -141,19 +122,9 @@ def rollback_store(root: str, version: int) -> dict:
     committed_ops = set(store.committed_delete_ops())
 
     to_restore = target_pids - committed
-    missing = [
-        pid
-        for pid in to_restore
-        if not (
-            os.path.isdir(os.path.join(store.blob_dir, str(pid)))
-            and os.path.exists(
-                os.path.join(store.manifest_dir, f"part-{pid}.parquet")
-            )
-        )
-    ]
+    missing = [pid for pid in to_restore if not store.is_staged(pid)]
     missing_ops = [
-        op for op in target_ops - committed_ops
-        if not os.path.isdir(store.deletes_dir(op))
+        op for op in target_ops - committed_ops if not store.is_delete_op_staged(op)
     ]
     if missing or missing_ops:
         raise ValueError(
@@ -164,12 +135,12 @@ def rollback_store(root: str, version: int) -> dict:
 
     retired = sorted(committed - target_pids)
     for pid in retired:
-        os.unlink(store._marker_path(pid))
+        store.retire_partition(pid)
     for pid in sorted(to_restore):
         store.commit_partition(pid)
     retired_ops = sorted(committed_ops - target_ops)
     for op in retired_ops:
-        os.unlink(store._delete_marker_path(op))
+        store.retire_delete_op(op)
     restored_ops = sorted(target_ops - committed_ops)
     for op in restored_ops:
         store.seal_delete_op(op)

@@ -39,7 +39,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.manifest import ManifestStore
+from ..plans.manifest import ManifestStore, version_of
 
 _NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 
@@ -59,12 +59,6 @@ def _ref_path(root: str, name: str) -> str:
     return os.path.join(_refs_dir(root), f"{name}.json")
 
 
-def _latest_version(store: ManifestStore) -> int:
-    snap = store.fresh_snapshot()
-    base = os.path.basename(snap)
-    return int(base[len("snap-"):-len(".parquet")])
-
-
 def create_ref(
     root: str, name: str, kind: str = "tag", version: int | None = None
 ) -> dict:
@@ -80,7 +74,7 @@ def create_ref(
     store = ManifestStore(root)
     store.check_format()
     if version is None:
-        version = _latest_version(store)
+        version = version_of(store.fresh_snapshot())
     else:
         store.snapshot_path(version)  # raises if the snapshot doesn't exist
     rec = {"name": name, "kind": kind, "snapshot": int(version)}

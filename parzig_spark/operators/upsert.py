@@ -38,20 +38,17 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..codecs import encode_u64
-from ..plans.manifest import ManifestStore
-from ..plans.manifest import claim_namespace
+from ..plans.manifest import ManifestStore, claim_namespace
 from ..session import task_slots
 from .decode import decode_table
-from .delete import DELETE_SUMMARY_SCHEMA, load_delete_mask
-from .encode import encode_table
+from .delete import DELETE_SUMMARY_SCHEMA
+from .encode import append_pinned
 
 
 def upsert_op_id(spark_updates_digest: str, key_cols: list[str], committed_pids) -> str:
@@ -86,8 +83,7 @@ def upsert_rows(
     deduplicate upstream if last-writer-wins is wanted."""
     store = ManifestStore(store_root)
     store.check_format()
-    with open(os.path.join(store_root, "store_config.json")) as f:
-        cfg = json.load(f)
+    cfg = store.config()
     store_cols = cfg.get("columns") or []
     missing = [c for c in store_cols if c not in updates.columns]
     if missing:
@@ -108,8 +104,7 @@ def upsert_rows(
     digest = f"{dig_row['s']}/{n_updates}"
     committed = store.committed_pids()
     op_id = upsert_op_id(digest, key_cols, committed)
-    marker = os.path.join(store.deletes_dir(), f"_committed_{op_id}")
-    if os.path.exists(marker):
+    if store.is_delete_op_committed(op_id):
         return {
             "op_id": op_id, "committed": False,
             "partitions_touched": 0, "rows_replaced": 0,
@@ -138,8 +133,6 @@ def upsert_rows(
 
     def write_bitmaps(batches):
         local = ManifestStore(store_root)
-        op_dir = local.deletes_dir(op_id)
-        os.makedirs(op_dir, exist_ok=True)
         by_pid: dict[int, tuple[int, list]] = {}
         for batch in batches:
             pids = batch.column("pid").to_numpy(zero_copy_only=False)
@@ -151,14 +144,9 @@ def upsert_rows(
         for pid, (n_phys, positions) in by_pid.items():
             mask = np.zeros(n_phys, dtype=bool)
             mask[np.asarray(positions, dtype=np.int64)] = True
-            prior = load_delete_mask(local, pid, n_phys, existing_ops)
+            prior = local.load_delete_mask(pid, n_phys, existing_ops)
             n_new = int(mask.sum() if prior is None else (mask & ~prior).sum())
-            blob, _ = encode_u64(mask.astype(np.uint64), width=1)
-            final = os.path.join(op_dir, f"{pid}.bin")
-            tmp = final + f".tmp-{os.getpid()}"
-            with open(tmp, "wb") as f:
-                f.write(blob)
-            os.replace(tmp, final)
+            local.write_delete_bitmap(op_id, pid, mask)
             out.append(
                 {"pid": pid, "n_rows": n_phys, "n_match": int(mask.sum()),
                  "n_new": n_new}
@@ -185,22 +173,10 @@ def upsert_rows(
         hashlib.sha256(("upsert:" + op_id).encode()).digest()[:6], "big"
     ) & ((1 << 47) - 1)
     claim_namespace(store_root, namespace, "upsert-" + op_id)
-    encode_table(
-        updates,
-        store_root,
-        group_cols=cfg["group_cols"],
-        salt_cols=cfg["salt_cols"],
-        sort_cols=cfg.get("sort_cols"),
-        size_col=cfg.get("size_col"),
-        target_bytes=cfg["target_bytes"],
-        resume=True,
-        pid_namespace=namespace,
-        bucket_bits=16,
-        page_values=cfg.get("page_values"),
-    ).count()
+    append_pinned(updates, store_root, cfg, namespace)
 
     # ---- commit: the op marker retires the old rows atomically -------------
-    committed_now = store.commit_delete_op(op_id, {})
+    committed_now = store.seal_delete_op(op_id)
     store.write_snapshot()
     return {
         "op_id": op_id,

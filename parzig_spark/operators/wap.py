@@ -36,22 +36,13 @@ generalizes that to audited multi-version publication.
 from __future__ import annotations
 
 import hashlib
-import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..plans.manifest import ManifestStore
-from ..plans.manifest import claim_namespace
-from .encode import encode_table
+from ..plans.manifest import ManifestStore, claim_namespace, version_of
+from .encode import append_pinned, batch_fingerprint
 from .inspect import rollback_store
 from .refs import create_ref, drop_ref, read_ref, resolve_ref
-
-
-def _version_of(snap_path: str) -> int:
-    base = os.path.basename(snap_path)
-    return int(base[len("snap-"):-len(".parquet")])
 
 
 def stage_batch(
@@ -76,8 +67,7 @@ def stage_batch(
     ``decode_table(spark, root, ref=branch)`` reads the staged view."""
     store = ManifestStore(store_root)
     store.check_format()
-    with open(os.path.join(store_root, "store_config.json")) as f:
-        cfg = json.load(f)
+    cfg = store.config()
     store_cols = cfg.get("columns") or []
     missing = [c for c in store_cols if c not in df.columns]
     if missing:
@@ -90,41 +80,23 @@ def stage_batch(
             "needs a branch name"
         )
 
-    base_version = _version_of(store.fresh_snapshot())
+    base_version = version_of(store.fresh_snapshot())
     namespace = int.from_bytes(
         hashlib.sha256(("wap:" + wap_id).encode()).digest()[:6], "big"
     ) & ((1 << 47) - 1)
-    # claim the namespace with the batch's CONTENT fingerprint (order-
-    # independent xxhash64 sum — the upsert/streaming aliasing guard): a
-    # replayed identical batch passes and resumes, a DIFFERENT batch
-    # reusing the wap_id fails loudly here instead of interleaving two
-    # datasets under one namespace
-    fp = df.select(
-        F.sum(
-            F.xxhash64(*[F.col(c) for c in store_cols]).cast("decimal(38,0)")
-        ).alias("h"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    digest = hashlib.sha256(
-        f"wap:{wap_id}:{fp['h']}:{fp['n']}".encode()
-    ).hexdigest()
-    claim_namespace(store_root, namespace, digest)
-    summary = encode_table(
-        df.select(store_cols),
-        store_root,
-        group_cols=cfg["group_cols"],
-        salt_cols=cfg["salt_cols"],
-        sort_cols=cfg.get("sort_cols"),
-        size_col=cfg.get("size_col"),
-        target_bytes=cfg["target_bytes"],
-        resume=True,
-        pid_namespace=namespace,
-        bucket_bits=16,
-        page_values=cfg.get("page_values"),
+    # claim the namespace with the batch's CONTENT fingerprint (the
+    # streaming aliasing guard's, map columns included): a replayed
+    # identical batch passes and resumes, a DIFFERENT batch reusing the
+    # wap_id fails loudly here instead of interleaving two datasets under
+    # one namespace
+    batch = df.select(store_cols)
+    fp, n_rows = batch_fingerprint(batch)
+    claim_namespace(
+        store_root, namespace,
+        hashlib.sha256(f"wap:{wap_id}:{fp.hex()}".encode()).hexdigest(),
     )
-    summary.count()  # run the encode job
-    n_rows = int(fp["n"] or 0)
-    staged_version = _version_of(store.write_snapshot())
+    append_pinned(batch, store_root, cfg, namespace)
+    staged_version = version_of(store.write_snapshot())
     # flip the default view back to the published snapshot; the staged
     # partitions become head-orphans that ONLY the branch pin keeps alive
     rollback_store(store_root, base_version)
@@ -149,7 +121,7 @@ def publish_ref(store_root: str, name: str, drop: bool = True) -> dict:
     rollback stats plus ``{"published_version"}``."""
     version = resolve_ref(store_root, name)
     stats = rollback_store(store_root, version)
-    out = {"published_version": _version_of(stats["snapshot"]), **stats}
+    out = {"published_version": version_of(stats["snapshot"]), **stats}
     if drop:
         drop_ref(store_root, name)
     return out

@@ -27,10 +27,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+from ..codecs import decode_u64, encode_u64
 
 MANIFEST_SCHEMA = pa.schema(
     [
@@ -94,46 +98,74 @@ MANIFEST_SCHEMA = pa.schema(
 FORMAT_VERSION = 7
 
 
+_MARK = "_committed_"
+
+
 class ManifestStore:
+    """The store's one owner of its on-disk layout: no other module names,
+    lists, writes or removes a store file. Under ``root``:
+
+    - ``store_config.json``: the pinned partitioning identity
+      (:meth:`config`, :meth:`ensure_config`);
+    - ``blobs/<pid>/<column>.bin``: one encoded blob per partition column;
+    - ``manifests/part-<pid>.parquet``: the partition's manifest rows;
+    - ``markers/_committed_<pid>``: a partition is visible iff its marker
+      exists;
+    - ``snapshots/snap-NNNNNN.parquet`` + ``snap-NNNNNN.deletes.json``:
+      the manifest list of one version and the delete ops it pins
+      (versions compare as integers, :meth:`versions`);
+    - ``deletes/<op>/<pid>.bin`` + ``deletes/_committed_<op>``: a delete
+      op's per-partition bitmaps and its commit marker;
+    - ``*.tmp-*``: an unfinished tmp+rename, reclaimed by :meth:`reclaim`.
+
+    ``namespaces/`` belongs to :func:`claim_namespace`, ``refs/`` to
+    ``operators/refs.py`` and ``rewrites/`` to ``operators/compact.py``.
+    Reads never create a directory; each write creates the ones it needs,
+    so a read of a mistyped root leaves nothing behind."""
+
     def __init__(self, root: str):
         self.root = root
         self.manifest_dir = os.path.join(root, "manifests")
         self.blob_dir = os.path.join(root, "blobs")
         self.marker_dir = os.path.join(root, "markers")
-        for d in (self.manifest_dir, self.blob_dir, self.marker_dir):
-            os.makedirs(d, exist_ok=True)
+        self.snapshot_dir = os.path.join(root, "snapshots")
 
     # -- store config (partitioning identity) --------------------------------
+    def config(self) -> dict | None:
+        """The pinned store config; None when ``root`` holds no store."""
+        try:
+            with open(os.path.join(self.root, "store_config.json")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
     def ensure_config(self, config: dict) -> None:
         """First writer pins the store's partitioning identity; later runs
         must match or fail loudly. pid derivation is a pure data function of
         (group_cols, salt_cols, target_bytes, columns) — resuming with
         different parameters would interleave incompatible partitionings in
         one store and decode duplicated rows."""
-        path = os.path.join(self.root, "store_config.json")
-        if os.path.exists(path):
-            with open(path) as f:
-                existing = json.load(f)
+        existing = self.config()
+        if existing is not None:
             if existing != config:
                 raise ValueError(
                     f"store {self.root} was encoded with {existing}; "
                     f"refusing to resume with {config} (pids would not match)"
                 )
             return
-        tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(config, f, sort_keys=True)
-        os.replace(tmp, path)
+        os.makedirs(self.root, exist_ok=True)
+        _write_file(
+            os.path.join(self.root, "store_config.json"),
+            json.dumps(config, sort_keys=True).encode(),
+        )
 
     def check_format(self) -> None:
         """Fail loudly when the store was written by an incompatible engine
         version (or isn't one of our stores at all) instead of mis-parsing
         its blobs/manifests downstream."""
-        path = os.path.join(self.root, "store_config.json")
-        if not os.path.exists(path):
+        config = self.config()
+        if config is None:
             raise ValueError(f"{self.root}: no store_config.json — not an encoded store")
-        with open(path) as f:
-            config = json.load(f)
         found = config.get("format")
         if found != FORMAT_VERSION:
             raise ValueError(
@@ -143,17 +175,18 @@ class ManifestStore:
 
     # -- commit protocol ----------------------------------------------------
     def _marker_path(self, pid: int) -> str:
-        return os.path.join(self.marker_dir, f"_committed_{pid}")
+        return os.path.join(self.marker_dir, f"{_MARK}{pid}")
 
     def is_committed(self, pid: int) -> bool:
         return os.path.exists(self._marker_path(pid))
 
     def committed_pids(self) -> set[int]:
         return {
-            int(f.rsplit("_", 1)[1])
-            for f in os.listdir(self.marker_dir)
-            if f.startswith("_committed_")
+            int(f[len(_MARK):]) for f in _listdir(self.marker_dir) if f.startswith(_MARK)
         }
+
+    def manifest_path(self, pid: int) -> str:
+        return os.path.join(self.manifest_dir, f"part-{pid}.parquet")
 
     def write_partition(
         self, pid: int, rows: list[dict], blobs: dict[str, bytes],
@@ -168,20 +201,13 @@ class ManifestStore:
         Uncommitted leftovers from failed attempts are gc_store orphans."""
         if self.is_committed(pid):
             return  # retry of an already-committed partition: no-op
-        tmp_tag = uuid.uuid4().hex[:8]
-        part_blob_dir = os.path.join(self.blob_dir, str(pid))
-        os.makedirs(part_blob_dir, exist_ok=True)
+        os.makedirs(os.path.join(self.blob_dir, str(pid)), exist_ok=True)
         for column, blob in blobs.items():
-            final = os.path.join(part_blob_dir, f"{column}.bin")
-            tmp = final + f".tmp-{tmp_tag}"
-            with open(tmp, "wb") as f:
-                f.write(blob)
-            os.replace(tmp, final)
-        table = pa.Table.from_pylist(rows, schema=MANIFEST_SCHEMA)
-        final = os.path.join(self.manifest_dir, f"part-{pid}.parquet")
-        tmp = final + f".tmp-{tmp_tag}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, final)
+            _write_file(self.blob_path(pid, column), blob)
+        os.makedirs(self.manifest_dir, exist_ok=True)
+        _write_file(
+            self.manifest_path(pid), pa.Table.from_pylist(rows, schema=MANIFEST_SCHEMA)
+        )
         if commit:
             self.commit_partition(pid)
 
@@ -189,6 +215,25 @@ class ManifestStore:
         """Seal a staged partition: O_CREAT|O_EXCL marker creation is the
         commit point (idempotent — a second sealer is a no-op)."""
         _create_marker(self._marker_path(pid))
+
+    def retire_partition(self, pid: int) -> bool:
+        """Hide ``pid`` by removing its marker; its files stay for
+        :meth:`reclaim` (and for a roll-forward). False when it had none."""
+        return _remove(self._marker_path(pid))
+
+    def is_staged(self, pid: int) -> bool:
+        """Whether ``pid``'s blob dir and manifest exist, committed or not."""
+        return os.path.isdir(os.path.join(self.blob_dir, str(pid))) and os.path.exists(
+            self.manifest_path(pid)
+        )
+
+    def drop_staged(self, pid: int) -> None:
+        """Remove an uncommitted partition's blobs and manifest (a failed
+        write's abort); sealed data is never touched."""
+        if self.is_committed(pid):
+            return
+        shutil.rmtree(os.path.join(self.blob_dir, str(pid)), ignore_errors=True)
+        _remove(self.manifest_path(pid))
 
     def link_partition(
         self, src: "ManifestStore", pid: int, columns: list[str] | None = None,
@@ -202,9 +247,8 @@ class ManifestStore:
         passthrough of compaction and both schema-evolution operators."""
         if self.is_committed(pid):
             return
-        path = os.path.join(src.manifest_dir, f"part-{pid}.parquet")
         kept = [
-            r for r in pq.read_table(path).to_pylist()
+            r for r in pq.read_table(src.manifest_path(pid)).to_pylist()
             if columns is None or r["column"] in columns
         ]
         os.makedirs(os.path.join(self.blob_dir, str(pid)), exist_ok=True)
@@ -214,6 +258,17 @@ class ManifestStore:
         self.write_partition(pid, kept + list(rows), blobs or {})
 
     # -- snapshots (manifest-list) -------------------------------------------
+    def _snap_path(self, version: int, suffix: str = ".parquet") -> str:
+        return os.path.join(self.snapshot_dir, f"snap-{version:06d}{suffix}")
+
+    def versions(self) -> list[int]:
+        """Snapshot versions on disk, ascending — as integers: past version
+        999999 a name sorts below its predecessor's."""
+        return sorted(
+            version_of(f) for f in _listdir(self.snapshot_dir)
+            if f.startswith("snap-") and f.endswith(".parquet")
+        )
+
     def write_snapshot(self) -> str:
         """Compact the committed manifest set into one snapshot parquet —
         the Iceberg manifest-list analog. At 10^12-file scale a reader must
@@ -222,30 +277,18 @@ class ManifestStore:
         plain last-writer-wins versioned files suffice (Iceberg swaps a
         catalog pointer for the same reason)."""
         table = self._read_manifest_files()
-        snap_dir = os.path.join(self.root, "snapshots")
-        os.makedirs(snap_dir, exist_ok=True)
         # max+1, NOT len(): gc_store deletes superseded snapshot files, and a
         # len()-derived version would then sort BELOW the surviving latest —
         # an invisible snapshot that readers never pick up.
-        existing = [
-            int(f[len("snap-"):-len(".parquet")])
-            for f in os.listdir(snap_dir)
-            if f.startswith("snap-") and f.endswith(".parquet")
-        ]
-        version = max(existing) + 1 if existing else 0
-        final = os.path.join(snap_dir, f"snap-{version:06d}.parquet")
-        tag = uuid.uuid4().hex[:8]
+        existing = self.versions()
+        version = existing[-1] + 1 if existing else 0
+        os.makedirs(self.snapshot_dir, exist_ok=True)
         # sidecar first, manifest parquet second: the snapshot "exists" only
         # once its parquet lands, so it never appears without its op list
         ops = self.committed_delete_ops()
-        side = os.path.join(snap_dir, f"snap-{version:06d}.deletes.json")
-        tmp = side + f".tmp-{tag}"
-        with open(tmp, "w") as f:
-            json.dump(ops, f)
-        os.replace(tmp, side)
-        tmp = final + f".tmp-{tag}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, final)
+        _write_file(self._snap_path(version, ".deletes.json"), json.dumps(ops).encode())
+        final = self._snap_path(version)
+        _write_file(final, table)
         return final
 
     def snapshot_delete_ops(self, version: int) -> list[str]:
@@ -253,26 +296,21 @@ class ManifestStore:
         (time-travel) read applies exactly these. Pre-sidecar snapshots
         (older stores) fall back to the empty list: their rows were written
         before row-level deletes existed."""
-        side = os.path.join(
-            self.root, "snapshots", f"snap-{version:06d}.deletes.json"
-        )
-        if not os.path.exists(side):
+        try:
+            with open(self._snap_path(version, ".deletes.json")) as f:
+                return json.load(f)
+        except FileNotFoundError:
             return []
-        with open(side) as f:
-            return json.load(f)
 
     def latest_snapshot(self) -> str | None:
-        snap_dir = os.path.join(self.root, "snapshots")
-        if not os.path.isdir(snap_dir):
-            return None
-        snaps = sorted(f for f in os.listdir(snap_dir) if f.endswith(".parquet"))
-        return os.path.join(snap_dir, snaps[-1]) if snaps else None
+        existing = self.versions()
+        return self._snap_path(existing[-1]) if existing else None
 
     def snapshot_path(self, version: int) -> str:
         """Path of a specific snapshot version — the time-travel handle.
         Versions are the monotonically increasing suffix write_snapshot
         assigns (the Iceberg snapshot-id analog). Raises if absent."""
-        path = os.path.join(self.root, "snapshots", f"snap-{version:06d}.parquet")
+        path = self._snap_path(version)
         if not os.path.exists(path):
             raise ValueError(f"{self.root}: no snapshot version {version}")
         return path
@@ -295,15 +333,20 @@ class ManifestStore:
         d = os.path.join(self.root, "deletes")
         return os.path.join(d, op_id) if op_id else d
 
+    def _delete_marker_path(self, op_id: str) -> str:
+        return os.path.join(self.deletes_dir(), f"{_MARK}{op_id}")
+
     def committed_delete_ops(self) -> list[str]:
-        d = self.deletes_dir()
-        if not os.path.isdir(d):
-            return []
         return sorted(
-            f[len("_committed_"):]
-            for f in os.listdir(d)
-            if f.startswith("_committed_")
+            f[len(_MARK):] for f in _listdir(self.deletes_dir()) if f.startswith(_MARK)
         )
+
+    def is_delete_op_committed(self, op_id: str) -> bool:
+        return os.path.exists(self._delete_marker_path(op_id))
+
+    def is_delete_op_staged(self, op_id: str) -> bool:
+        """Whether ``op_id``'s bitmap dir exists, sealed or not."""
+        return os.path.isdir(self.deletes_dir(op_id))
 
     def delete_touched_pids(self, ops: "list[str] | None" = None) -> set[int]:
         """Partitions carrying a delete bitmap of ``ops`` (default: every
@@ -314,52 +357,69 @@ class ManifestStore:
         list (``resolve_view``), so a pinned snapshot sees the pids dirty
         AT THAT VIEW and a delete committed mid-query cannot split the
         metadata and decoded halves."""
-        out: set[int] = set()
-        for op in self.committed_delete_ops() if ops is None else ops:
-            d = self.deletes_dir(op)
-            if not os.path.isdir(d):
-                continue
-            for f in os.listdir(d):
-                if f.endswith(".bin"):
-                    out.add(int(f[:-4]))
-        return out
+        return {
+            int(f[:-len(".bin")])
+            for op in (self.committed_delete_ops() if ops is None else ops)
+            for f in _listdir(self.deletes_dir(op))
+            if f.endswith(".bin")
+        }
 
-    def _delete_marker_path(self, op_id: str) -> str:
-        return os.path.join(self.deletes_dir(), f"_committed_{op_id}")
-
-    def commit_delete_op(self, op_id: str, bitmaps: dict[int, bytes]) -> bool:
-        """Write one delete op's per-partition bitmaps, then its marker
-        (the atomic commit point). Returns False when the op was already
-        committed (idempotent replay — op ids are content-derived)."""
-        if os.path.exists(self._delete_marker_path(op_id)):
-            return False
-        op_dir = self.deletes_dir(op_id)
-        os.makedirs(op_dir, exist_ok=True)
-        tag = uuid.uuid4().hex[:8]
-        for pid, blob in bitmaps.items():
-            final = os.path.join(op_dir, f"{pid}.bin")
-            tmp = final + f".tmp-{tag}"
-            with open(tmp, "wb") as f:
-                f.write(blob)
-            os.replace(tmp, final)
-        return self.seal_delete_op(op_id)
+    def write_delete_bitmap(self, op_id: str, pid: int, mask: np.ndarray) -> None:
+        """Write ``pid``'s bitmap of ``op_id`` (``mask`` True = deleted,
+        RLE width 1) into the op's dir, which stays invisible until
+        :meth:`seal_delete_op`; tmp+rename, so a racing speculative task
+        never exposes a partial file."""
+        blob, _ = encode_u64(mask.astype(np.uint64), width=1)
+        os.makedirs(self.deletes_dir(op_id), exist_ok=True)
+        _write_file(os.path.join(self.deletes_dir(op_id), f"{pid}.bin"), blob)
 
     def seal_delete_op(self, op_id: str) -> bool:
         """Seal a written delete op — :meth:`commit_partition`'s twin.
-        Returns False when its marker already existed."""
+        Returns False when its marker already existed. An op that touched
+        no partition still gets its (empty) dir: :meth:`is_delete_op_staged`
+        tells a live op from one gc reclaimed."""
+        os.makedirs(self.deletes_dir(op_id), exist_ok=True)
         return _create_marker(self._delete_marker_path(op_id))
+
+    def retire_delete_op(self, op_id: str) -> bool:
+        """Hide a delete op by removing its marker (bitmaps stay for
+        :meth:`reclaim`). False when it had none."""
+        return _remove(self._delete_marker_path(op_id))
+
+    def link_delete_ops(self, src: "ManifestStore") -> None:
+        """Hardlink every committed delete op of ``src`` here and seal it —
+        an evolved store keeps its source's pids, so the row deletes stay
+        in force."""
+        for op in src.committed_delete_ops():
+            os.makedirs(self.deletes_dir(op), exist_ok=True)
+            for f in _listdir(src.deletes_dir(op)):
+                if ".tmp-" not in f:
+                    link_file(
+                        os.path.join(src.deletes_dir(op), f),
+                        os.path.join(self.deletes_dir(op), f),
+                    )
+            self.seal_delete_op(op)
 
     def delete_bitmap_paths(self, pid: int, op_ids: list[str] | None = None) -> list[str]:
         """Bitmap files affecting ``pid`` across the given (default: all
         committed) delete ops — decode ORs them together."""
         if op_ids is None:
             op_ids = self.committed_delete_ops()
-        out = []
-        for op in op_ids:
-            p = os.path.join(self.deletes_dir(op), f"{pid}.bin")
-            if os.path.exists(p):
-                out.append(p)
-        return out
+        paths = (os.path.join(self.deletes_dir(op), f"{pid}.bin") for op in op_ids)
+        return [p for p in paths if os.path.exists(p)]
+
+    def load_delete_mask(
+        self, pid: int, n_phys: int, op_ids: list[str]
+    ) -> np.ndarray | None:
+        """OR of ``pid``'s bitmaps across ``op_ids``; None when untouched."""
+        paths = self.delete_bitmap_paths(pid, op_ids)
+        if not paths:
+            return None
+        deleted = np.zeros(n_phys, bool)
+        for p in paths:
+            with open(p, "rb") as f:
+                deleted |= decode_u64(f.read(), n_phys, 1).astype(bool)
+        return deleted
 
     # -- readers ------------------------------------------------------------
     def blob_path(self, pid: int, column: str) -> str:
@@ -383,10 +443,7 @@ class ManifestStore:
         return out
 
     def _read_manifest_files(self) -> pa.Table:
-        tables = []
-        for pid in sorted(self.committed_pids()):
-            path = os.path.join(self.manifest_dir, f"part-{pid}.parquet")
-            tables.append(pq.read_table(path))
+        tables = [pq.read_table(self.manifest_path(pid)) for pid in sorted(self.committed_pids())]
         if not tables:
             return MANIFEST_SCHEMA.empty_table()
         return pa.concat_tables(tables)
@@ -397,11 +454,8 @@ class ManifestStore:
         try:
             with os.scandir(self.marker_dir) as it:
                 for entry in it:
-                    if entry.name.startswith("_committed_"):
-                        pid = int(entry.name.rsplit("_", 1)[1])
-                        return pq.read_table(
-                            os.path.join(self.manifest_dir, f"part-{pid}.parquet")
-                        )
+                    if entry.name.startswith(_MARK):
+                        return pq.read_table(self.manifest_path(int(entry.name[len(_MARK):])))
         except FileNotFoundError:
             pass
         return None
@@ -436,23 +490,130 @@ class ManifestStore:
                 return table
         return self._read_manifest_files()
 
-    def manifest_glob(self) -> list[str]:
-        return [
-            os.path.join(self.manifest_dir, f"part-{pid}.parquet")
-            for pid in sorted(self.committed_pids())
-        ]
-
     def column_meta(self, pid: int, column: str) -> dict:
-        t = pq.read_table(
-            os.path.join(self.manifest_dir, f"part-{pid}.parquet"),
-            filters=[("column", "=", column)],
-        )
+        t = pq.read_table(self.manifest_path(pid), filters=[("column", "=", column)])
         return json.loads(t.column("meta_json")[0].as_py())
+
+    # -- garbage collection -------------------------------------------------
+    def reclaim(
+        self, live_pids: set[int], live_ops: set[str], pinned: set[int],
+        min_age_s: float, keep_snapshots: int,
+    ) -> dict:
+        """Remove what no live partition, op or snapshot references, and
+        ``.tmp-`` litter — the file walk behind ``gc_store``, which owns
+        the liveness rules and documents the arguments and counts."""
+        now = time.time()
+        stats = dict.fromkeys(
+            ("orphan_dirs", "orphan_manifests", "tmp_files", "old_snapshots",
+             "bytes_reclaimed"), 0,
+        )
+
+        def old_enough(path: str) -> bool:
+            try:
+                return now - os.path.getmtime(path) >= min_age_s
+            except OSError:
+                return False
+
+        def drop(path: str, kind: str) -> None:
+            if os.path.isdir(path):
+                for dirpath, _, files in os.walk(path):
+                    for f in files:
+                        try:
+                            stats["bytes_reclaimed"] += os.path.getsize(os.path.join(dirpath, f))
+                        except OSError:
+                            pass
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                stats["bytes_reclaimed"] += os.path.getsize(path)
+                os.unlink(path)
+            stats[kind] += 1
+
+        def drop_tmp(d: str) -> None:
+            for f in _listdir(d):
+                if ".tmp-" in f and old_enough(os.path.join(d, f)):
+                    drop(os.path.join(d, f), "tmp_files")
+
+        # uncommitted blob dirs + stray tmp files inside committed ones
+        for entry in _listdir(self.blob_dir):
+            p = os.path.join(self.blob_dir, entry)
+            if entry.isdigit() and int(entry) not in live_pids:
+                if old_enough(p):
+                    drop(p, "orphan_dirs")
+            elif os.path.isdir(p):
+                drop_tmp(p)
+
+        # manifests without a marker, and manifest tmp litter
+        drop_tmp(self.manifest_dir)
+        for f in _listdir(self.manifest_dir):
+            if f.startswith("part-") and f.endswith(".parquet"):
+                fp = os.path.join(self.manifest_dir, f)
+                if int(f[len("part-"):-len(".parquet")]) not in live_pids and old_enough(fp):
+                    drop(fp, "orphan_manifests")
+
+        # uncommitted delete-op dirs (crashed delete job) + tmp litter inside
+        # committed ones — the marker is the visibility boundary, so an
+        # unmarked op dir was never observable by any reader
+        for entry in _listdir(self.deletes_dir()):
+            p = self.deletes_dir(entry)
+            if entry.startswith(_MARK) or not os.path.isdir(p):
+                continue
+            if entry not in live_ops:
+                if old_enough(p):
+                    drop(p, "orphan_dirs")
+            else:
+                drop_tmp(p)
+
+        # superseded snapshots (readers only ever open the latest); the
+        # delete-op sidecar travels with its snapshot
+        for version in self.versions()[: -(1 + max(0, int(keep_snapshots)))]:
+            fp = self._snap_path(version)
+            if version not in pinned and old_enough(fp):
+                drop(fp, "old_snapshots")
+                side = self._snap_path(version, ".deletes.json")
+                if os.path.exists(side):
+                    stats["bytes_reclaimed"] += os.path.getsize(side)
+                    os.unlink(side)
+        drop_tmp(self.snapshot_dir)
+        return stats
+
+
+def version_of(snapshot_path: str) -> int:
+    """The version of a snapshot file (``snap-NNNNNN.parquet``)."""
+    return int(os.path.basename(snapshot_path)[len("snap-"):-len(".parquet")])
+
+
+def _listdir(d: str) -> list[str]:
+    """Entries of ``d``; none when it does not exist (reads create no dirs)."""
+    try:
+        return os.listdir(d)
+    except FileNotFoundError:
+        return []
+
+
+def _write_file(final: str, data: "bytes | pa.Table") -> None:
+    """Write ``data`` (bytes, or a table as parquet) through a ``.tmp-``
+    sibling and an atomic rename: no reader ever sees a partial file."""
+    tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
+    if isinstance(data, pa.Table):
+        pq.write_table(data, tmp)
+    else:
+        with open(tmp, "wb") as f:
+            f.write(data)
+    os.replace(tmp, final)
+
+
+def _remove(path: str) -> bool:
+    try:
+        os.unlink(path)
+        return True
+    except FileNotFoundError:
+        return False
 
 
 def _create_marker(path: str) -> bool:
     """The one commit primitive: create ``path`` iff absent (O_CREAT|O_EXCL).
     Returns False when another sealer got there first."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     try:
         os.close(os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
         return True

@@ -41,9 +41,6 @@ Usage::
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -235,26 +232,16 @@ class ParzigStreamReader(_PidReads, DataSourceStreamReader):
         if hi >= 0:
             create_ref(self.root, self.pin_ref, "branch", hi)
 
-    def _versions(self) -> list[int]:
-        snap_dir = os.path.join(self.root, "snapshots")
-        if not os.path.isdir(snap_dir):
-            return []
-        return sorted(
-            int(f[len("snap-"):-len(".parquet")])
-            for f in os.listdir(snap_dir)
-            if f.startswith("snap-") and f.endswith(".parquet")
-        )
-
     def initialOffset(self) -> dict:
         if self.starting == "earliest":
             return {"version": -1}
-        vs = self._versions()
+        vs = self.store.versions()
         v = vs[-1] if vs else -1
         self._pin(v, v)
         return {"version": v}
 
     def latestOffset(self) -> dict:
-        vs = self._versions()
+        vs = self.store.versions()
         return {"version": vs[-1] if vs else -1}
 
     def partitions(self, start: dict, end: dict):
@@ -406,15 +393,13 @@ class ParzigWriter(DataSourceArrowWriter):
         self.target_bytes = int(options.get("target_bytes", 64 << 20))
         self.outer = options.get("outer", "auto")
         self.columns = list(schema.names)
-        cfg_path = os.path.join(self.root, "store_config.json")
         store = ManifestStore(self.root)
-        if os.path.exists(cfg_path):
+        existing = store.config()
+        if existing is not None:
             # appending to an existing store: the writer doesn't use the
             # store's pid planning (its pids are content-namespaced), so
             # only format + column-set compatibility matter
             store.check_format()
-            with open(cfg_path) as f:
-                existing = json.load(f)
             if set(existing.get("columns", [])) != set(self.columns):
                 raise ValueError(
                     f"parzig writer: store {self.root} has columns "
@@ -558,26 +543,12 @@ class ParzigWriter(DataSourceArrowWriter):
             store.write_snapshot()
 
     def abort(self, messages) -> None:
-        import shutil
-
         from ..plans.manifest import ManifestStore
 
         store = ManifestStore(self.root)
         for m in messages:
-            if m is None:
-                continue
             for pid in getattr(m, "pids", ()):
-                if store.is_committed(pid):
-                    continue  # never touch sealed data
-                shutil.rmtree(
-                    os.path.join(store.blob_dir, str(pid)), ignore_errors=True
-                )
-                try:
-                    os.unlink(
-                        os.path.join(store.manifest_dir, f"part-{pid}.parquet")
-                    )
-                except FileNotFoundError:
-                    pass
+                store.drop_staged(pid)  # sealed data is never touched
 
 
 class ParzigDataSource(DataSource):

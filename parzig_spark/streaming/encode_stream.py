@@ -15,14 +15,12 @@ engine's stateful unit is the manifest store itself).
 
 from __future__ import annotations
 
-import hashlib
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.encode import encode_table
+from ..operators.encode import batch_fingerprint, encode_table
 from ..plans.manifest import claim_namespace  # noqa: F401  (re-export: established import surface)
 
 # Micro-batches are small; 16 bucket bits (65k partitions per batch) is
@@ -57,27 +55,10 @@ def encode_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # Multiset-sensitive fingerprint: XOR alone is multiplicity-blind
-        # (x^x = 0 — a batch differing from a committed one only by an even
-        # number of repeated rows would alias it and be anti-joined away).
-        # XOR + a bounded wrapping SUM of the row hashes + COUNT pins the
-        # multiset; maps are folded in via to_json (xxhash64 cannot hash
-        # them directly, and a replayed batch re-reads the same source so
-        # its serialized form is stable).
-        row_hash = F.xxhash64(
-            *[
-                F.to_json(F.col(c)) if t.startswith("map") else F.col(c)
-                for c, t in batch_df.dtypes
-            ]
-        )
-        fp_row = batch_df.select(
-            F.bit_xor(row_hash).alias("x"),
-            F.sum(F.pmod(row_hash, F.lit(1 << 28))).alias("s"),
-            F.count(F.lit(1)).alias("c"),
-        ).first()
-        digest = hashlib.sha256(
-            f"{fp_row['x']},{fp_row['s']},{fp_row['c']}".encode()
-        ).digest()
+        # multiset fingerprint: a batch differing from a committed one only
+        # by an even number of repeated rows must not alias it (a replayed
+        # batch re-reads the same source, so its fingerprint is stable)
+        digest, _n = batch_fingerprint(batch_df)
         batch_fp = int.from_bytes(digest[:6], "big") >> 1  # 47-bit namespace
         claim_namespace(store_root, batch_fp, digest.hex())
         encode_table(

@@ -5,7 +5,7 @@ import os
 
 import pyarrow.parquet as pq
 
-from parzig_spark.plans.manifest import ManifestStore
+from parzig_spark.plans.manifest import FORMAT_VERSION, ManifestStore
 
 
 def _row(pid, column="c", codec="plain"):
@@ -80,6 +80,91 @@ def test_snapshot_roundtrip(tmp_path):
     assert sorted(t2.column("pid").to_pylist()) == [1, 2, 3]
     snap2 = store.write_snapshot()
     assert snap2 != snap and store.latest_snapshot() == snap2
+
+
+class _RowsSession:
+    """Stands in for a SparkSession where a metadata view only builds rows."""
+
+    def createDataFrame(self, rows, ddl):
+        return rows
+
+
+def test_latest_snapshot_orders_versions_numerically(tmp_path):
+    """Past version 999999 a snapshot name gets longer and sorts BELOW its
+    predecessor's: the latest snapshot must still be the highest version,
+    or every fresh_snapshot() call writes yet another one."""
+    from parzig_spark.operators.inspect import snapshots_table
+
+    store = ManifestStore(str(tmp_path))
+    store.ensure_config({"format": FORMAT_VERSION})
+    store.write_partition(1, [_row(1)], {"c": b"one"})
+    old = store.write_snapshot()
+    snap_dir = os.path.dirname(old)
+    os.rename(old, os.path.join(snap_dir, "snap-999999.parquet"))
+    os.rename(
+        old[: -len(".parquet")] + ".deletes.json",
+        os.path.join(snap_dir, "snap-999999.deletes.json"),
+    )
+    store.write_partition(2, [_row(2)], {"c": b"two"})
+    new = store.write_snapshot()
+    assert os.path.basename(new) == "snap-1000000.parquet"
+    assert store.latest_snapshot() == new
+    assert store.fresh_snapshot() == new  # no further snapshot written
+    assert store.versions() == [999999, 1000000]
+    rows = snapshots_table(_RowsSession(), str(tmp_path))
+    assert [r[0] for r in rows] == [999999, 1000000]
+    assert rows[-1][1] == new and rows[-1][2] == 2
+
+
+def test_failed_read_of_missing_root_creates_nothing(tmp_path):
+    """Reads never create directories: a mistyped root must stay absent
+    after every read refuses it."""
+    import pytest
+
+    from parzig_spark.operators.decode import plan_read
+
+    typo = str(tmp_path / "no-such-store")
+    store = ManifestStore(typo)
+    with pytest.raises(ValueError, match="not an encoded store"):
+        store.check_format()
+    with pytest.raises(ValueError, match="not an encoded store"):
+        plan_read(typo)
+    assert not os.path.exists(typo)
+    assert store.config() is None
+    assert store.committed_pids() == set()
+    assert store.committed_delete_ops() == []
+    assert store.delete_touched_pids() == set()
+    assert store.versions() == [] and store.latest_snapshot() is None
+    assert store.read_one_manifest() is None
+    assert not os.path.exists(typo)
+
+
+# Store-layout literals: only plans/manifest.py may name a store file.
+_LAYOUT_LITERALS = (
+    "store_config.json", "snap-", "_committed_", "part-", ".deletes.json",
+    "_marker_path", "_delete_marker_path",
+)
+
+
+def test_store_layout_has_one_owner():
+    """No module under parzig_spark/ other than plans/manifest.py names a
+    store file or reaches for the marker paths — everything else goes
+    through ManifestStore."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "parzig_spark")
+    owner = os.path.join(pkg, "plans", "manifest.py")
+    offenders = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == owner:
+                continue
+            with open(path) as fh:
+                for n, line in enumerate(fh, 1):
+                    offenders += [
+                        f"{os.path.relpath(path, pkg)}:{n}: {lit}"
+                        for lit in _LAYOUT_LITERALS if lit in line
+                    ]
+    assert offenders == []
 
 
 def _iceberg_on_classpath(spark) -> bool:

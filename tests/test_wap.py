@@ -98,3 +98,29 @@ def test_stage_rejects_missing_columns_and_tag_name(spark, tmp_path):
         stage_batch(
             spark, _src(spark, 0, 10), root, wap_id="y", branch="pinned"
         )
+
+
+def test_stage_batch_with_map_column(spark, tmp_path):
+    """A store with a map column stages, replays and aliases like any
+    other: the batch fingerprint folds maps through to_json (xxhash64
+    cannot hash a map)."""
+
+    def src(lo, hi):
+        return _src(spark, lo, hi).withColumn(
+            "tags", F.create_map(F.col("val"), F.col("k"))
+        )
+
+    root = str(tmp_path / "mapstore")
+    encode_table(
+        src(0, 1_000), root, group_cols=["grp"], salt_cols=["k"],
+        target_bytes=64 << 10, resume=False,
+    ).count()
+    info = stage_batch(spark, src(1_000, 1_500), root, wap_id="maps")
+    assert info["rows_staged"] == 500
+    staged = decode_table(spark, root, ref=info["branch"])
+    assert _keys(staged) == list(range(1_500))
+    assert staged.filter(F.col("tags")[F.col("val")] != F.col("k")).count() == 0
+    assert _keys(decode_table(spark, root)) == list(range(1_000))
+    stage_batch(spark, src(1_000, 1_500), root, wap_id="maps")  # replay
+    with pytest.raises(RuntimeError):
+        stage_batch(spark, src(2_000, 2_100), root, wap_id="maps")
