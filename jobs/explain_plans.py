@@ -73,8 +73,17 @@ def main() -> None:
     grab(
         "Encode partition planning (sizing pass + salted pid)",
         with_pid,
-        "One column-pruned aggregation for group sizes, broadcast back, then pure "
-        "Catalyst expressions (xxhash64/pmod) — a single shuffle total for the encode.",
+        "One column-pruned aggregation for group sizes; only groups above the target "
+        "are broadcast back. No group reaches 16 MB here, so there is no join at all: "
+        "pure Catalyst expressions (xxhash64/pmod) over the scan.",
+    )
+    with_pid, _ = plan_partitions(docs, ["lang", "source"], ["doc_id"], 4 << 10, "text")
+    grab(
+        "Encode partition planning, salted groups",
+        with_pid,
+        "At a 4 KB target the big groups salt. Their salt table reaches Spark as an "
+        "Arrow LocalRelation: a `LocalTableScan` under the `BroadcastExchange` (a "
+        "JVM-only job), not a Python list's `Scan ExistingRDD` (a job of Python tasks).",
     )
 
     import tempfile

@@ -45,8 +45,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.manifest import FORMAT_VERSION, ManifestStore
+from ..session import arrow_frame
 from .decode import _arrow_natural_type, decode_pid_rows, manifest_rows, map_pids
-from .encode import SUMMARY_SCHEMA, encode_partition_arrays, summary_batch
+from .encode import SUMMARY_ARROW, SUMMARY_SCHEMA, encode_partition_arrays, summary_batch
 
 
 def _dst_pid(src_pids: list[int]) -> int:
@@ -233,7 +234,7 @@ def compact_store(
         work = [g for g in groups if not dst.is_committed(_dst_pid(g))]
 
     if not work:
-        return spark.createDataFrame([], SUMMARY_SCHEMA)
+        return arrow_frame(spark, [], SUMMARY_ARROW)
 
     return _rewrite_groups_job(
         spark, src_root, dst_root, work, src_config, delete_ops,

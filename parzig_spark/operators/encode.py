@@ -41,8 +41,10 @@ import threading
 import time
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from ..codecs import dtypes, encode_column
 from ..plans.manifest import FORMAT_VERSION, ManifestStore
@@ -53,7 +55,7 @@ SUMMARY_SCHEMA = (
     "pid long, column string, codec string, n_values long, raw_bytes long, "
     "enc_bytes long, encode_s double, committed boolean"
 )
-_SUMMARY_ARROW = pa.schema(
+SUMMARY_ARROW = pa.schema(
     [
         ("pid", pa.int64()),
         ("column", pa.string()),
@@ -163,9 +165,10 @@ def plan_partitions(
 
     Scale path: group sizing stays fully distributed. Only when the group
     count is at most ``broadcast_group_limit`` is the salt table collected
-    into a broadcast LocalRelation (saves recomputing the aggregation);
-    above it the salt table is persisted and joined distributed — no
-    unbounded ``collect()`` on the driver.
+    as Arrow and its salted groups handed back as a broadcast LocalRelation
+    (saves recomputing the aggregation; an Arrow table, unlike a Python
+    list, needs no Python job to reach Spark); above it the salt table is
+    persisted and joined distributed — no unbounded collect on the driver.
     """
     spark = df.sparkSession
     size_expr = F.octet_length(F.col(size_col)) if size_col else F.lit(256)
@@ -185,8 +188,8 @@ def plan_partitions(
     # distributed path (persisted salt table + executor-side join + 1-row
     # totals action) so the driver never materializes millions of groups.
     sizes = sizes.persist()  # both planning actions reuse the one sizing scan
-    size_rows = sizes.limit(broadcast_group_limit + 1).collect()
-    distributed = len(size_rows) > broadcast_group_limit
+    size_tbl = sizes.limit(broadcast_group_limit + 1).toArrow()
+    distributed = size_tbl.num_rows > broadcast_group_limit
     if distributed:
         totals = sizes.agg(F.sum("_grp_bytes").alias("_total")).first()
         total_bytes = int(totals["_total"] or 0)
@@ -197,7 +200,7 @@ def plan_partitions(
         # the lifetime of a long-running (e.g. streaming) driver.
         sizes.unpersist()
     else:
-        total_bytes = sum(r["_grp_bytes"] or 0 for r in size_rows)
+        total_bytes = pc.sum(size_tbl.column("_grp_bytes")).as_py() or 0
         sizes.unpersist()
     # n_buckets is a *data* property (bytes/target), never a cluster
     # property: partition ids must be identical across cluster sizes or a
@@ -210,11 +213,19 @@ def plan_partitions(
         # so this still costs one sizing scan total.
         out = df.join(sizes.select(*group_cols, "_nsalt"), on=group_cols, how="left")
     else:
-        nsalt_df = spark.createDataFrame(
-            [tuple(r[c] for c in group_cols) + (r["_nsalt"],) for r in size_rows],
-            df.select(*group_cols).schema.add("_nsalt", "integer"),
-        )
-        out = df.join(F.broadcast(nsalt_df), on=group_cols, how="left")
+        # Only groups above the target carry a salt; a group missing from
+        # the join gets the default of 1, which every other group has. So
+        # the broadcast holds at most n_buckets rows, and when no group is
+        # that big there is no join and no broadcast job at all.
+        keep = group_cols + ["_nsalt"]
+        giant = size_tbl.filter(pc.greater(size_tbl.column("_nsalt"), 1)).select(keep)
+        if giant.num_rows:
+            # with Spark's schema: from Arrow types alone a timestamp_ntz
+            # key would come back as a timestamp
+            nsalt_df = spark.createDataFrame(giant, sizes.select(*keep).schema)
+            out = df.join(F.broadcast(nsalt_df), on=group_cols, how="left")
+        else:
+            out = df.withColumn("_nsalt", F.lit(None).cast("int"))
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.coalesce(F.col("_nsalt"), F.lit(1)))
     bucket = F.pmod(
         F.xxhash64(*[F.col(c) for c in group_cols], salt.cast("long")), F.lit(n_buckets)
@@ -453,16 +464,27 @@ def append_pinned(df: DataFrame, store_root: str, cfg: dict, pid_namespace: int)
     ).count()
 
 
+def _has_map(t: DataType) -> bool:
+    if isinstance(t, MapType):
+        return True
+    if isinstance(t, ArrayType):
+        return _has_map(t.elementType)
+    if isinstance(t, StructType):
+        return any(_has_map(f.dataType) for f in t.fields)
+    return False
+
+
 def batch_fingerprint(df: DataFrame) -> tuple[bytes, int]:
     """(sha256 digest, row count) of ``df``'s rows as a multiset, in one
     Spark job: XOR + a bounded wrapping SUM of the per-row xxhash64 +
     COUNT — order- and partitioning-independent, and multiplicity-
-    sensitive (XOR alone is blind to pairs: x^x = 0). Map columns fold in
-    through ``to_json`` (xxhash64 cannot hash maps). The claim digest of
-    streaming micro-batches and WAP batches; streaming also derives its
-    pid namespaces from it, so the formula must never change."""
+    sensitive (XOR alone is blind to pairs: x^x = 0). A column holding a
+    map at any depth folds in through ``to_json`` (xxhash64 cannot hash
+    maps). The claim digest of streaming micro-batches and WAP batches;
+    streaming also derives its pid namespaces from it, so the formula must
+    never change."""
     row_hash = F.xxhash64(
-        *[F.to_json(F.col(c)) if t.startswith("map") else F.col(c) for c, t in df.dtypes]
+        *[F.to_json(F.col(f.name)) if _has_map(f.dataType) else F.col(f.name) for f in df.schema]
     )
     fp = df.select(
         F.bit_xor(row_hash).alias("x"),
@@ -478,7 +500,7 @@ def summary_batch(rows: list[dict], committed: bool = True) -> pa.RecordBatch:
     partition-writing job returns per partition it wrote (``committed``
     False when another attempt had already sealed it)."""
     return pa.RecordBatch.from_pylist(
-        [{**r, "committed": committed} for r in rows], schema=_SUMMARY_ARROW
+        [{**r, "committed": committed} for r in rows], schema=SUMMARY_ARROW
     )
 
 
@@ -489,7 +511,7 @@ def skip_committed(with_pid: DataFrame, store: ManifestStore) -> DataFrame:
     if not committed:
         return with_pid
     committed_df = with_pid.sparkSession.createDataFrame(
-        [(int(p),) for p in sorted(committed)], "pid long"
+        pa.table({"pid": pa.array(sorted(committed), pa.int64())})
     )
     return with_pid.join(F.broadcast(committed_df), on="pid", how="left_anti")
 

@@ -28,11 +28,13 @@ rewritten.
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.manifest import ManifestStore
+from ..session import arrow_frame
 from .decode import resolve_view
 
 FILES_COLUMNS = [
@@ -51,9 +53,16 @@ FILES_COLUMNS = [
     "stat_nulls",
 ]
 
-SNAPSHOTS_DDL = (
-    "version long, path string, n_partitions long, n_manifest_rows long, "
-    "raw_bytes long, enc_bytes long, n_delete_ops long"
+SNAPSHOTS_SCHEMA = pa.schema(
+    [
+        ("version", pa.int64()),
+        ("path", pa.string()),
+        ("n_partitions", pa.int64()),
+        ("n_manifest_rows", pa.int64()),
+        ("raw_bytes", pa.int64()),
+        ("enc_bytes", pa.int64()),
+        ("n_delete_ops", pa.int64()),
+    ]
 )
 
 
@@ -94,7 +103,7 @@ def snapshots_table(spark: SparkSession, root: str) -> DataFrame:
                 len(store.snapshot_delete_ops(version)),
             )
         )
-    return spark.createDataFrame(rows, SNAPSHOTS_DDL)
+    return arrow_frame(spark, rows, SNAPSHOTS_SCHEMA)
 
 
 def rollback_store(root: str, version: int) -> dict:

@@ -39,14 +39,23 @@ from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.manifest import ManifestStore
+from ..session import arrow_frame
 from .aggregate import _answer, _out_name
 from .decode import resolve_view
 
-RESULT_DDL = "check string, column string, passed boolean, observed string"
+RESULT_SCHEMA = pa.schema(
+    [
+        ("check", pa.string()),
+        ("column", pa.string()),
+        ("passed", pa.bool_()),
+        ("observed", pa.string()),
+    ]
+)
 
 # the aggregate each column check reads (row_count_between reads count(*))
 _AGG_OF = {
@@ -152,5 +161,5 @@ def check_store(
         "metadata": p["pids_metadata"],
         "decoded": p["pids_decoded"],
     }
-    df = spark.createDataFrame(out, RESULT_DDL)
+    df = arrow_frame(spark, out, RESULT_SCHEMA)
     return (df, plan) if return_plan else df

@@ -37,13 +37,15 @@ import os
 import re
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.manifest import ManifestStore, version_of
+from ..session import arrow_frame
 
 _NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 
-REFS_DDL = "name string, kind string, snapshot long"
+REFS_SCHEMA = pa.schema([("name", pa.string()), ("kind", pa.string()), ("snapshot", pa.int64())])
 
 
 def _refs_dir(root: str) -> str:
@@ -180,4 +182,4 @@ def refs_table(spark: SparkSession, root: str) -> DataFrame:
     """The ``table.refs`` metadata view: one row per ref."""
     ManifestStore(root).check_format()
     rows = [(r["name"], r["kind"], int(r["snapshot"])) for r in list_refs(root)]
-    return spark.createDataFrame(rows, REFS_DDL)
+    return arrow_frame(spark, rows, REFS_SCHEMA)

@@ -9,7 +9,8 @@ partitions sized to parallelism instead of the 200 default.
 It also holds the two rules for the engine's Python tasks: how many run per
 stage (:func:`task_slots`) and the lazy zip-archive invalidation installed
 in every Spark Python worker that runs engine code
-(:func:`lazy_zip_invalidation`).
+(:func:`lazy_zip_invalidation`); and the one way a driver-side table
+reaches Spark (:func:`arrow_frame`).
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def cpu_count() -> int:
@@ -39,6 +40,21 @@ def task_slots(spark: SparkSession) -> int:
     # copies the whole conf key by key (~20 ms idle, more under load)
     cpus = int(spark.conf.get("spark.task.cpus", "1"))
     return max(1, spark.sparkContext.defaultParallelism // cpus)
+
+
+def arrow_frame(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
+    """``rows`` as a DataFrame of the Arrow ``schema``, handed to Spark as
+    an Arrow table. ``createDataFrame`` of an Arrow table is a
+    LocalRelation and runs no Spark job; of a Python list it goes through
+    ``parallelize`` + ``applySchemaToPythonRDD``, so every action on the
+    result runs a job of Python tasks to unpickle the rows."""
+    # imported here: every Spark Python worker imports this module first
+    # (parzig_spark/__init__.py), before the lazy zip invalidation is in
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+    )
 
 
 def lazy_zip_invalidation() -> None:

@@ -85,8 +85,8 @@ def test_snapshot_roundtrip(tmp_path):
 class _RowsSession:
     """Stands in for a SparkSession where a metadata view only builds rows."""
 
-    def createDataFrame(self, rows, ddl):
-        return rows
+    def createDataFrame(self, table):
+        return [tuple(r.values()) for r in table.to_pylist()]
 
 
 def test_latest_snapshot_orders_versions_numerically(tmp_path):

@@ -320,7 +320,7 @@ def test_register_store_sql_and_verify_store(spark, tmp_path):
     assert len(bad) == 1 and bad[0]["column"] == "text" and str(bad[0]["pid"]) == pid
 
 
-def test_plan_partitions_distributed_path_identical_pids(spark):
+def test_plan_partitions_distributed_path_identical_pids(spark, tmp_path):
     """pid derivation is a pure data function: the distributed-join planning
     path (group count above the broadcast limit) must assign EXACTLY the
     same pids as the broadcast path — resume on a bigger cluster depends on
@@ -346,6 +346,67 @@ def test_plan_partitions_distributed_path_identical_pids(spark):
     a = {r["k"]: r["pid"] for r in via_broadcast.select("k", "pid").collect()}
     b = {r["k"]: r["pid"] for r in via_join.select("k", "pid").collect()}
     assert a == b
+
+    # The same identity for every group-column type the salt table carries
+    # through Arrow (the distributed path never builds that table). Group
+    # q = 0 holds about half the rows, so at this target it gets several
+    # salts while the others get one.
+    q = F.when(F.col("id") % 10 < 5, 0).otherwise(F.col("id") % 7)
+    base = spark.range(0, 3000).select(
+        F.col("id").alias("k"), q.cast("int").alias("q"), F.repeat(F.lit("x"), 100).alias("payload")
+    )
+    q = F.col("q")
+    neg_zero = F.lit(-1.0) * F.lit(0.0)
+    keys = {
+        "string": q.cast("string"),
+        "non_bmp_string": F.concat(F.lit("\U0001F600\u00e9"), q.cast("string")),
+        "short": q.cast("short"),
+        "int": q.cast("int"),
+        "bigint": F.lit(1 << 62) + q,
+        "float": (q / 4).cast("float"),
+        "double_nan_zeros": F.when(q == 0, F.lit(float("nan")))
+        .when(q == 1, neg_zero)
+        .when(q == 2, F.lit(0.0))
+        .otherwise(q * 1.5),
+        "decimal": (q + F.lit(0.123456)).cast("decimal(20,6)"),
+        "date": F.date_add(F.lit("2024-02-28").cast("date"), q),
+        "timestamp": F.timestamp_seconds(F.lit(1_700_000_000) + q * 3600),
+        "timestamp_ntz": F.timestamp_seconds(F.lit(1_700_000_000) + q * 3600).cast(
+            "timestamp_ntz"
+        ),
+        "binary": q.cast("string").cast("binary"),
+        "boolean": q == 0,
+        "struct": F.struct(q.alias("a"), (q % 2).cast("string").alias("b")),
+        "array": F.array(q, q * 2),
+        "null_keys": F.when(q != 0, q.cast("string")),
+    }
+    for name, key in keys.items():
+        df = base.withColumn("g", key)
+        planned = {}
+        for limit in (65536, 0):
+            with_pid, nb = plan_partitions(
+                df, ["g"], ["k"], target_bytes=32 << 10, size_col="payload",
+                broadcast_group_limit=limit,
+            )
+            rows = with_pid.select("k", "q", "pid").collect()
+            planned[limit] = nb, {r["k"]: r["pid"] for r in rows}
+            giant_pids = {r["pid"] for r in rows if r["q"] == 0}
+            # a null key never joins its salt, on either path
+            assert (len(giant_pids) == 1) == (name == "null_keys"), (name, limit)
+        assert planned[65536] == planned[0], name
+
+    # a zero-row input plans one bucket on both paths and still encodes
+    empty = base.withColumn("g", q.cast("string")).where(F.lit(False))
+    for limit in (65536, 0):
+        with_pid, nb = plan_partitions(
+            empty, ["g"], ["k"], target_bytes=32 << 10, size_col="payload",
+            broadcast_group_limit=limit,
+        )
+        assert nb == 1 and with_pid.count() == 0
+    root = str(tmp_path / "empty")
+    summary = encode_table(empty, root, group_cols=["g"], salt_cols=["k"], size_col="payload")
+    assert summary.collect() == []
+    assert ManifestStore(root).committed_pids() == set()
 
 
 def test_blobs_byte_identical_across_parallelism(spark, corpus, tmp_path):
