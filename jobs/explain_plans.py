@@ -198,30 +198,50 @@ def main() -> None:
         "way.",
     )
 
-    from parzig_spark.operators import aggregate_store
+    from parzig_spark.operators import aggregate, aggregate_store
+
+    def agg_stage(*args, **kwargs):
+        """The one mapInArrow stage an aggregate_store call runs, or its
+        LocalRelation answer when metadata answers every partition: the
+        answer itself is a LocalRelation, folded on the driver."""
+        stages, real = [], aggregate.map_pids
+
+        def spy(*a):
+            stages.append(real(*a))
+            return stages[-1]
+
+        aggregate.map_pids = spy
+        try:
+            answer = aggregate_store(*args, **kwargs)
+        finally:
+            aggregate.map_pids = real
+        return stages[0] if stages else answer
 
     grab(
         "Aggregate pushdown — COUNT/SUM/MIN/MAX from manifest stats",
-        aggregate_store(
+        agg_stage(
             spark, store3,
             [("count", "*"), ("sum", "o_orderkey"),
              ("min", "o_orderkey"), ("max", "o_orderkey")],
             predicates=[("o_orderkey", "<=", 30_000)],
         ),
         "aggregate_store under a range predicate: the driver plans the "
-        "snapshot's stat rows once, fully-covered partitions contribute "
-        "their stats verbatim as partial rows (exact stat_sum/stat_nulls "
-        "decimal strings, a LocalTableScan), and the one mapInArrow decode "
-        "scan runs ONLY over the partitions the predicate straddles. Both "
-        "feed one Union and one hash aggregation — no join. No blob is "
-        "opened for a fully-covered partition; with no predicates and no "
-        "deletes the decode scan is empty and a 100-TB COUNT/SUM touches "
-        "zero data files.",
+        "snapshot's stat rows once. Partitions the predicate straddles go "
+        "through one mapInArrow stage (at most one task per core slot, no "
+        "Exchange) whose tasks fold their rows with pyarrow into one partial "
+        "row (count, decimal(38,0) sum, min, max); the driver collects those "
+        "with one toArrow(), adds the fully-covered partitions' exact stats "
+        "as partial rows built in Arrow from the planned stat rows, folds "
+        "both and hands the answer to Spark as a LocalRelation. Here every "
+        "partition the predicate keeps is fully covered, so there is no "
+        "stage: the plan below is the answer itself, and the call ran no "
+        "Spark job and opened no blob — as a 100-TB COUNT/SUM with no "
+        "predicates and no deletes does.",
     )
 
     grab(
         "Exact distinct-set pruning + COUNT(DISTINCT) pushdown (format v7)",
-        aggregate_store(
+        agg_stage(
             spark, store2,
             [("count", "*"), ("distinct", "source")],
             predicates=[("lang", "==", "zh")],
@@ -230,13 +250,13 @@ def main() -> None:
         "partitions, aggregating COUNT(DISTINCT source): pruning consults "
         "each partition's EXACT stat_distinct set on the driver (parsed "
         "once by plans/prune.py — no bloom false positives), partitions "
-        "whose whole lang "
-        "set is 'zh' are fully covered (the forall inclusion dual — "
-        "min/max can only pin single-valued string partitions), and the "
-        "covered partitions' exploded sets and the decoded straddlers' "
-        "values meet in the same aggregation as COUNT(*), one "
-        "countDistinct over the union. In this sf0.01 store no partition's "
-        "lang set is only 'zh', so the plan is the decode branch alone.",
+        "whose whole lang set is 'zh' are fully covered (the forall "
+        "inclusion dual — min/max can only pin single-valued string "
+        "partitions), and their sets' values join the distinct source "
+        "values the decode tasks fold and send back (one partial row per "
+        "value), so the driver counts one set of values. In this sf0.01 "
+        "store no partition's lang set is only 'zh', so the one job is the "
+        "decode stage below.",
     )
 
     store4 = tempfile.mkdtemp(prefix="explain_groupby_")
@@ -246,7 +266,7 @@ def main() -> None:
     ).count()
     grab(
         "GROUP BY pushdown — partition-aligned rollup",
-        aggregate_store(
+        agg_stage(
             spark, store4,
             [("count", "*"), ("sum", "n_chars"), ("distinct", "source")],
             group_by=["lang"],
@@ -254,12 +274,14 @@ def main() -> None:
         "aggregate_store(group_by=['lang']) over a lang-partitioned store "
         "(the Hive/Iceberg partition-column aggregate): partitions whose "
         "size-1 stat_distinct set proves them single-valued + null-free "
-        "on lang contribute their exact stats to that group's row with "
-        "ZERO decode — the group key itself is read from the set on the "
-        "driver — and only hash-packed mixed partitions feed the "
-        "mapInArrow decode scan; one groupBy aggregates both. At 100 TB a "
+        "on lang contribute their exact stats to that group's partial row "
+        "with ZERO decode — the group key itself is read from the set on "
+        "the driver — and only hash-packed mixed partitions go through the "
+        "mapInArrow stage below, whose tasks fold their rows into one "
+        "partial row per lang plus one per (lang, source). The driver folds "
+        "both with one pyarrow group_by: no Exchange, no join. At 100 TB a "
         "rollup over the store's own partitioning answers from manifests "
-        "alone.",
+        "alone, with no Spark job.",
     )
 
     from parzig_spark.operators import compact_store

@@ -177,14 +177,6 @@ def bucket_of(vec, planes: np.ndarray) -> int:
     return b
 
 
-def _bucket_codes(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
-    signs = (mat @ planes.T) > 0
-    codes = np.packbits(signs, axis=1, bitorder="little")
-    padded = np.zeros((mat.shape[0], 8), dtype=np.uint8)
-    padded[:, : min(8, codes.shape[1])] = codes[:, :8]
-    return padded.view("<u8").reshape(-1).astype(np.int64)
-
-
 def _vector_dim(df: DataFrame, vec_col: str) -> int:
     first = df.select(F.size(F.col(vec_col)).alias("d")).first()
     return first["d"] if first else 0

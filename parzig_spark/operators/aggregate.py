@@ -6,36 +6,34 @@ This is the footer-aggregate analog of Parquet's ``Statistics`` and
 Iceberg's partition stats: manifests carry exact per-partition
 ``n_values``, ``stat_nulls``, ``stat_sum`` (decimal string, integer
 lanes), exact integer ``stat_min``/``stat_max`` and exact distinct sets
-(``stat_distinct``), so a whole-store COUNT or SUM is an
-O(manifest-rows) job instead of an O(data) scan.
+(``stat_distinct``), so a whole-store COUNT or SUM reads manifest rows,
+not data.
 
 One private core, :func:`_answer`, serves ``aggregate_store`` and
 ``check_store`` (operators/quality.py). It takes a view resolved once by
 the caller (``resolve_view``) and does each step once:
 
-1. **schema** — lanes, kinds, Spark types, decode columns and casts come
-   from one manifest file (``column_metas``);
+1. **schema** — lanes, kinds, decode columns and casts come from one
+   manifest file (``column_metas``);
 2. **plan** — one ``prune.plan`` over the snapshot's stat rows splits the
-   pids three ways:
-
-   - *pruned*: the stats prove no row matches;
-   - *metadata*: the stats prove EVERY row matches and every aggregate
-     reads exactly from them (``stat_sum`` for SUM, an exact set for
-     COUNT(DISTINCT) and string extrema, single-valued null-free group
-     columns, no delete bitmap in the view);
-   - *decoded*: everything else;
-3. **decode** — the decoded pids go through ``map_pids`` + ``read_pid``
-   with the view's delete ops and the predicates: one ``mapInArrow`` scan
-   that yields exactly the matching rows (the per-pid reader's row mask),
-   so the core applies no row filter of its own;
-4. **answer** — one DataFrame of partial rows (each metadata stat row as
-   per-aggregate ``F.when(column == c, ...)`` partials, the exploded exact
-   sets of the distinct columns, the decoded rows projected to the same
-   partial columns) and one ``groupBy(*group_by).agg(...)``: sums of the
-   partial counts and sums, min/max of the partial extrema,
-   ``countDistinct`` of the values. Set semantics make overlap between the
-   set values and the decoded values harmless. The group keys of metadata
-   rows come from the driver's stats table, never from a join.
+   pids three ways: *pruned* (the stats prove no row matches), *metadata*
+   (they prove EVERY row matches and answer every aggregate exactly:
+   ``stat_sum`` for SUM, an exact set for COUNT(DISTINCT) and string
+   extrema, single-valued null-free group columns, no delete bitmap in the
+   view) and *decoded* (everything else);
+3. **partials** — one ``map_pids`` stage of at most ``task_slots`` tasks
+   reads the decoded pids (``read_pid``: exactly the matching rows, deletes
+   applied) and folds them with ``pyarrow``'s ``group_by`` into partial
+   rows: one per group (counts, integer sums as ``decimal(38,0)``, float
+   sums, extrema) and one per distinct (group, value) of each
+   COUNT(DISTINCT), values as the exact sets' canonical strings. The driver
+   collects them with one ``toArrow()`` and builds the metadata pids'
+   partial rows in Arrow from the plan's ``stats`` table; a pid's group
+   keys are the single values of its group columns' sets;
+4. **answer** — one more ``group_by`` on the driver folds both (set
+   semantics make overlap between set values and decoded values harmless),
+   and the answer reaches Spark as a LocalRelation: at most one Spark job,
+   with no Exchange, and none when metadata answers every surviving pid.
 
 Soundness over speed everywhere: a partition that cannot be PROVEN fully
 covered is decoded — never wrong, only slower.
@@ -43,20 +41,19 @@ covered is decoded — never wrong, only slower.
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..plans import prune
 from ..plans.manifest import ManifestStore
+from ..session import task_slots
 from .decode import (
     _arrow_target_type,
-    _spark_type,
     column_metas,
+    deal_pids,
     map_pids,
     prune_manifests,  # noqa: F401 — perfbench/tracing.py wraps it by name
     read_pid,
@@ -66,19 +63,13 @@ from .decode import (
 
 _FNS = ("count", "sum", "min", "max", "null_count", "distinct")
 
-# Parsed shape of the stat_distinct JSON (codecs/stats.py column_distinct):
-# a domain tag + the partition's exact sorted distinct values as canonical
-# strings — parsed with from_json in the Spark-side metadata partials.
-_DISTINCT_DDL = "struct<d:string,v:array<string>>"
-
-_META_COLS = [
-    "pid", "column", "n_values", "stat_min", "stat_max", "stat_sum",
-    "stat_nulls", "stat_distinct",
-]
+# how partial columns fold: counts and sums add up, extrema take the
+# extremum; COUNT(DISTINCT) keeps its values and counts them at the end
+_FOLD = {"count": "sum", "null_count": "sum", "sum": "sum", "min": "min", "max": "max"}
 
 # exact integer sums: per-partition decimal strings and decoded integers
-# both accumulate as decimal(38,0) — no float detour
-_DEC = "decimal(38,0)"
+# both accumulate as decimal(38,0), never as a wrapping int64
+_DEC = pa.decimal128(38, 0)
 
 
 def _pids_where(stats: pa.Table, pids: np.ndarray, col: str, row_mask: np.ndarray) -> np.ndarray:
@@ -98,74 +89,124 @@ def _kind(t: pa.DataType) -> str:
     return "other"
 
 
-def _stat_rows(
-    spark: SparkSession, stats: pa.Table, pids: np.ndarray, group_by: list[str]
-) -> DataFrame:
-    """The stat rows (``_META_COLS``) of ``pids`` as a Spark DataFrame, each
-    carrying its pid's group key per group column (``_g0``, ``_g1``, ...,
-    canonical strings): the single value of that column's exact set, read
-    on the driver."""
-    t = stats.select(_META_COLS).filter(pa.array(np.isin(stats.column("pid").to_numpy(), pids)))
-    row_pid = t.column("pid").to_numpy()
-    for i, g in enumerate(group_by):
-        at = t.filter(pc.equal(t.column("column"), g))
-        key_pid = at.column("pid").to_numpy()
-        keys = pa.array(
-            [json.loads(s)["v"][0] for s in at.column("stat_distinct").to_pylist()], pa.string()
-        )
-        order = np.argsort(key_pid)
-        at_row = order[np.searchsorted(key_pid, row_pid, sorter=order)]
-        t = t.append_column(f"_g{i}", keys.take(at_row))
-    return spark.createDataFrame(t)
-
-
 def _out_name(fn: str, col: str) -> str:
     return "count_star" if (fn, col) == ("count", "*") else f"{fn}_{col}"
 
 
-def _partials(fn: str, col: str, kind: str | None, ref_col: str):
-    """(metadata partial over a stat row, decoded partial over a row, final
-    aggregate over the partial column) of one aggregate; the partial
-    column is named by the aggregate's output name. The metadata partial
-    is None where no stat answers it (distinct values come from the
-    exploded sets instead; other-kind columns are decode-only)."""
-    name = _out_name(fn, col)
-    p = F.col(name)
-    own = F.col("column") == (ref_col if col == "*" else col)
-    total = F.coalesce(F.sum(p), F.lit(0)).cast("long").alias(name)
-    if fn == "count" and col == "*":
-        return F.when(own, F.col("n_values")), F.lit(1).cast("long"), total
-    if fn == "count":
-        meta = F.when(own, F.col("n_values") - F.col("stat_nulls"))
-        return meta, F.col(col).isNotNull().cast("long"), total
-    if fn == "null_count":
-        return F.when(own, F.col("stat_nulls")), F.col(col).isNull().cast("long"), total
-    if fn == "distinct":
-        # canonical twin of codecs.stats.column_distinct: integers as
-        # decimal strings (Spark's integral cast-to-string), strings
-        # verbatim — the decoded values must speak the sets' encoding
-        dec = F.col(col).cast("string") if kind in ("int", "str") else F.col(col)
-        return None, dec, F.countDistinct(p).cast("long").alias(name)
-    if fn == "sum":
-        if kind == "int":
-            return (
-                F.when(own, F.col("stat_sum").cast(_DEC)), F.col(col).cast(_DEC),
-                F.sum(p).cast("long").alias(name),
-            )
-        # order-dependent float sums: decode-only
-        return None, F.col(col), F.sum(p).cast("double").alias(name)
-    agg = F.min if fn == "min" else F.max
-    if kind == "int":
-        stat = F.col("stat_min" if fn == "min" else "stat_max")
-        return F.when(own, stat.cast("long")), F.col(col).cast("long"), agg(p).alias(name)
-    if kind == "str":
-        # exact string extrema from the sorted distinct set (the truncated
-        # stat_min/stat_max are not exact); F.get, never element_at — ANSI
-        # throws on the empty all-null set, which must contribute NULL
-        v = F.from_json("stat_distinct", _DISTINCT_DDL)["v"]
-        meta = F.when(own, F.get(v, 0) if fn == "min" else F.get(v, F.size(v) - 1))
-        return meta, F.col(col), agg(p).alias(name)
-    return None, F.col(col), agg(p).alias(name)
+def _canon_float(a):
+    """Floats with SQL equality made bitwise: -0.0 as 0.0, every NaN as
+    one NaN."""
+    nan, zero = pa.scalar(float("nan"), a.type), pa.scalar(0, a.type)
+    return pc.if_else(pc.is_nan(a), nan, pc.add(a, zero))
+
+
+def _order_key(a, inverse: bool = False) -> pa.Array:
+    """Floats as int64 keys in Spark's float order, NaN above +inf (Arrow's
+    min/max skip NaN, and give +-inf over NaN alone); ``inverse`` maps the
+    keys back."""
+    a = a if inverse else _canon_float(pc.cast(a, pa.float64()))
+    bits = a.fill_null(0).to_numpy(zero_copy_only=False).view(np.int64)
+    key = np.where(bits < 0, bits ^ np.int64(2**63 - 1), bits)
+    mask = a.is_null().to_numpy(zero_copy_only=False)
+    return pa.array(key.view(np.float64) if inverse else key, mask=mask)
+
+
+def _pre(t: pa.Table, keys: list[str], specs: dict) -> pa.Table:
+    """Decoded rows as partial rows, each row a group of one: integer sums
+    as ``decimal(38,0)``, float extrema as :func:`_order_key`, integer and
+    string COUNT(DISTINCT) values as ``codecs.stats.column_distinct``'s
+    canonical strings (integers as decimal strings), so they meet the
+    metadata pids' exact sets under set semantics."""
+    out = {g: _canon_float(t[g]) if pa.types.is_floating(t[g].type) else t[g] for g in keys}
+    for name, (fn, col, ctype) in specs.items():
+        a, kind = (t[col], _kind(ctype)) if col != "*" else (None, None)
+        if a is None:
+            out[name] = pa.array(np.ones(t.num_rows, np.int64))
+        elif fn in ("count", "null_count"):
+            out[name] = pc.cast(pc.is_valid(a) if fn == "count" else pc.is_null(a), pa.int64())
+        elif fn == "sum" and pa.types.is_floating(ctype):  # order-dependent: decode-only
+            out[name] = pc.cast(a, pa.float64())
+        elif fn == "sum":
+            if kind != "int" and not pa.types.is_decimal(ctype):
+                raise ValueError(f"sum({col}) needs a numeric column, not {ctype}")
+            out[name] = pc.cast(a, _DEC if kind == "int" else pa.decimal128(38, ctype.scale))
+        elif pa.types.is_floating(ctype):
+            out[name] = _canon_float(a) if fn == "distinct" else _order_key(a)
+        elif kind == "int" and fn != "distinct":
+            out[name] = pc.cast(a, pa.int64())
+        elif kind != "other":  # string extrema; int and string distinct values
+            out[name] = pc.cast(a, pa.string())
+        else:
+            out[name] = a
+    return pa.table(out)
+
+
+def _fold(t: pa.Table, keys: list[str], specs: dict) -> pa.Table:
+    """Partial rows folded to one row per group (counts, sums, extrema) and
+    one per distinct (group, value) of each COUNT(DISTINCT). Idempotent: a
+    task folds each pid, then its pids' partials."""
+    scalar = [(n, _FOLD[s[0]]) for n, s in specs.items() if s[0] != "distinct"]
+    parts = []
+    if scalar or keys:
+        got = t.group_by(keys, use_threads=False).aggregate(scalar)
+        got = got.select([*keys, *[f"{n}_{op}" for n, op in scalar]])
+        parts.append(got.rename_columns([*keys, *[n for n, _ in scalar]]))
+    for name, (fn, *_) in specs.items():
+        if fn == "distinct":
+            vals = t.select([*keys, name]).filter(pc.is_valid(t[name]))
+            parts.append(vals.group_by([*keys, name], use_threads=False).aggregate([]))
+    return pa.concat_tables(parts, promote_options="default").select([*keys, *specs])
+
+
+def _meta_rows(stats: pa.Table, pids: np.ndarray, keys: list[str], specs: dict, ref_col: str):
+    """Partial rows of the metadata ``pids`` from their stat rows: one per
+    pid with the counts, integer sums and integer extrema, and one per
+    value of each exact set a COUNT(DISTINCT) or string extremum reads. A
+    pid's group keys are the single values of its group columns' sets."""
+    t = stats.filter(pa.array(np.isin(stats.column("pid").to_numpy(), pids))).sort_by("pid")
+
+    def at(col):  # the pids' stat rows of ``col``, in pid order
+        return t.filter(pc.equal(t.column("column"), col))
+
+    key_cols = {g: pc.list_flatten(prune.set_values(at(g)["stat_distinct"])) for g in keys}
+    base, parts = dict(key_cols), []
+    for name, (fn, col, ctype) in specs.items():
+        s = at(ref_col if col == "*" else col)
+        if fn in ("count", "null_count", "sum") or (fn != "distinct" and _kind(ctype) == "int"):
+            stat = {"count": "n_values", "null_count": "stat_nulls", "sum": "stat_sum"}.get(fn)
+            base[name] = s[stat or f"stat_{fn}"]  # stat_min / stat_max
+            if fn == "count" and col != "*":
+                base[name] = pc.subtract(base[name], s["stat_nulls"])
+        else:  # distinct values and string extrema: every value of the set
+            vals = prune.set_values(s["stat_distinct"])
+            parent = pc.list_parent_indices(vals)
+            keys_at = {g: k.take(parent) for g, k in key_cols.items()}
+            parts.append(pa.table({**keys_at, name: pc.list_flatten(vals)}))
+    return pa.concat_tables(([pa.table(base)] if base else []) + parts, promote_options="default")
+
+
+def _finish(rows: pa.Table, keys: list[str], specs: dict) -> pa.Table:
+    """The answer from partial rows: one row per group (one row when
+    ungrouped, also over no rows), one column per aggregate, at the Arrow
+    types whose Spark types the answer has."""
+    ops = [(n, _FOLD.get(s[0], "count_distinct")) for n, s in specs.items()]
+    got = rows.group_by(keys, use_threads=False).aggregate(ops)
+    fields = [pa.field(g, got[g].type) for g in keys]
+    cols = [got[g] for g in keys]
+    for (name, op), (fn, _col, ctype) in zip(ops, specs.values()):
+        a = got[f"{name}_{op}"]
+        counted = fn in ("count", "null_count", "distinct")
+        if counted:
+            a = a.fill_null(0)
+        elif fn == "sum" and _kind(ctype) == "int":
+            a = pc.cast(a, pa.int64())  # ArrowInvalid past int64, never a wrap
+        elif fn == "sum":
+            a = pc.cast(a, pa.float64())
+        elif pa.types.is_floating(ctype):
+            a = _order_key(a, inverse=True).cast(ctype)
+        fields.append(pa.field(name, a.type, nullable=not counted))
+        cols.append(a)
+    return pa.Table.from_arrays(cols, schema=pa.schema(fields))
 
 
 def _answer(
@@ -176,15 +217,13 @@ def _answer(
     predicates: list[tuple] | None,
     group_by: list[str] = (),
 ):
-    """The aggregation core: ``(kinds, rows, finals, plan)`` for ``aggs``
-    over the rows of ``view`` (``resolve_view``'s triple) that match
-    ``predicates``.
-
-    ``rows`` holds one partial column per aggregate, named by its output
-    name, plus the ``group_by`` columns; ``finals`` maps each output name
-    to its aggregate over ``rows``; ``plan`` reports the pids pruned,
-    answered from metadata and decoded; ``kinds`` is each column's
-    storage kind."""
+    """The aggregation core, eager: ``(kinds, answer, rows, plan)`` for
+    ``aggs`` over the rows of ``view`` (``resolve_view``'s triple) that
+    match ``predicates``. ``answer`` is an Arrow table of the ``group_by``
+    columns and one column per output name; ``rows`` are the partial rows
+    it was folded from (each COUNT(DISTINCT) column lists its values);
+    ``plan`` counts the pids pruned, answered from metadata and decoded;
+    ``kinds`` is each column's storage kind."""
     _version, snap, delete_ops = view
     used = (
         {c for _, c in aggs if c != "*"}
@@ -194,15 +233,15 @@ def _answer(
     metas = column_metas(store, used or None)
     types = {c: _arrow_target_type(m) for c, m in metas.items()}
     kinds = {c: _kind(t) for c, t in types.items()}
-    for fn, col in aggs:
-        if col != "*" and col not in kinds:
-            raise ValueError(f"unknown column {col!r} in {store.root}")
-    for g in group_by:
-        if g not in kinds:
-            raise ValueError(f"unknown group column {g!r} in {store.root}")
+    if missing := sorted(used - kinds.keys()):
+        raise ValueError(f"unknown column {missing[0]!r} in {store.root}")
     prune.check_rows(types, predicates)
     ref_col = next(iter(kinds))  # any column: one manifest row per (pid, col)
     needed = sorted(used) or [ref_col]
+    specs = {_out_name(fn, col): (fn, col, types.get(col)) for fn, col in aggs}
+    # the partial rows' schema: what _pre makes of no rows (and ValueError
+    # for an aggregate the column's type has none of)
+    schema = _pre(pa.schema([(c, types[c]) for c in needed]).empty_table(), group_by, specs).schema
 
     # every agg must be metadata-computable, else the metadata rows would
     # miss partials — decode everything instead (still pruned)
@@ -233,61 +272,46 @@ def _answer(
         # GROUP BY: a pid answers from metadata only when every group column
         # is provably single-valued and null-free there — the whole
         # partition then belongs to one group
-        single = prune.set_sizes(stats.column("stat_distinct")) == 1
+        sizes = pc.list_value_length(prune.set_values(stats.column("stat_distinct")))
+        single = pc.fill_null(pc.equal(sizes, 1), False).to_numpy(zero_copy_only=False)
         for g in group_by:
             full &= _pids_where(stats, pids, g, single & (nulls == 0))
         # merge-on-read deletes make the physical stats stale
         full &= ~np.isin(pids, sorted(store.delete_touched_pids(delete_ops)))
     partial = survive & ~full
 
-    # ---- decode: the decoded pids, one shuffle-free scan --------------------
-    cols, ddl, casts = schema_of(metas, needed)
-    root = store.root
+    # ---- partial rows: one decode stage, then the metadata pids -------------
+    parts = []
+    if partial.any():
+        cols, _ddl, casts = schema_of(metas, needed)
+        runs = deal_pids(pids[partial].tolist(), task_slots(spark))
+        root = store.root
 
-    def read(pid):
-        return read_pid(root, pid, cols, casts, predicates=predicates, delete_ops=delete_ops)
+        def fold_run(i):
+            folded = []
+            for pid in runs[i]:
+                batches = list(read_pid(root, pid, cols, casts, predicates, delete_ops))
+                if batches:
+                    table = pa.Table.from_batches(batches)
+                    folded.append(_fold(_pre(table, group_by, specs), group_by, specs))
+            if folded:
+                yield from _fold(pa.concat_tables(folded), group_by, specs).to_batches()
 
-    dec = map_pids(spark, pids[partial].tolist(), read, ddl)
-
-    # ---- answer: one stream of partial rows ---------------------------------
-    meta_part, dec_part, finals = {}, {}, {}
-    for fn, col in aggs:
-        name = _out_name(fn, col)
-        meta_e, dec_part[name], finals[name] = _partials(fn, col, kinds.get(col), ref_col)
-        if meta_e is not None:
-            meta_part[name] = meta_e
-    rows = dec.select(*group_by, *[e.alias(n) for n, e in dec_part.items()])
+        # map_pids over the run indexes: at most task_slots of them, so each
+        # task gets one run and folds all of its pids
+        ddl = from_arrow_schema(schema)  # the decode DDL's types: _arrow_target_type
+        parts.append(map_pids(spark, list(range(len(runs))), fold_run, ddl).toArrow())
     if full.any():
-        meta = _stat_rows(spark, stats, pids[full], group_by)
-        keys = [
-            F.col(f"_g{i}").cast(_spark_type(metas[g])).alias(g) for i, g in enumerate(group_by)
-        ]
-        rows = rows.unionByName(
-            meta.select(*keys, *[e.alias(n) for n, e in meta_part.items()]),
-            allowMissingColumns=True,
-        )
-        distinct = {_out_name(fn, col): col for fn, col in aggs if fn == "distinct"}
-        if distinct:
-            vals = meta.filter(
-                F.col("column").isin(list(distinct.values())) & F.col("stat_distinct").isNotNull()
-            ).select(
-                *keys, F.col("column").alias("_c"),
-                F.explode(F.from_json("stat_distinct", _DISTINCT_DDL)["v"]).alias("_v"),
-            )
-            rows = rows.unionByName(
-                vals.select(
-                    *group_by,
-                    *[F.when(F.col("_c") == c, F.col("_v")).alias(n) for n, c in distinct.items()],
-                ),
-                allowMissingColumns=True,
-            )
+        parts.append(_meta_rows(stats, pids[full], group_by, specs, ref_col).select(schema.names))
+    rows = pa.concat_tables([p.cast(schema) for p in parts]) if parts else schema.empty_table()
+    answer = _finish(rows, group_by, specs)
     plan = {
         "pids_total": len(pids),
         "pids_pruned": int((~survive).sum()),
         "pids_metadata": int(full.sum()),
         "pids_decoded": int(partial.sum()),
     }
-    return kinds, rows, finals, plan
+    return kinds, answer, rows, plan
 
 
 def aggregate_store(
@@ -302,40 +326,40 @@ def aggregate_store(
     wherever provably exact and decoding only the partitions that need it.
 
     ``aggs``: list of ``(fn, column)`` with fn in {"count", "sum", "min",
-    "max", "null_count", "distinct"}; ``("count", "*")`` counts rows. SQL
-    semantics throughout: count/sum/min/max ignore nulls, ``count(*)``
-    doesn't, empty input yields count 0 and NULL for the rest.
+    "max", "null_count", "distinct"}; ``("count", "*")`` counts rows and
+    ``("distinct", col)`` is COUNT(DISTINCT col). SQL semantics throughout:
+    count/sum/min/max ignore nulls, ``count(*)`` doesn't, empty input
+    yields count 0 and NULL for the rest; an integer sum outside the long
+    range raises.
 
-    Returns a one-row DataFrame with columns named ``{fn}_{column}``
-    (``count_star``); with ``return_plan=True``, returns ``(df, plan)``
-    where plan reports how many partitions were pruned / answered from
-    metadata / decoded (read off the driver plan — no extra Spark job).
+    Returns a DataFrame with columns named ``{fn}_{column}``
+    (``count_star``), after the ``group_by`` columns; with
+    ``return_plan=True``, ``(df, plan)``, where plan counts the partitions
+    pruned / answered from metadata / decoded. Eager, like ``check_store``:
+    the answer is computed before this returns, in at most one Spark job
+    (one Python stage of at most ``task_slots`` tasks, no Exchange), in
+    none when metadata answers every partition that survives pruning. The
+    driver holds at most ``task_slots`` × (groups + distinct values)
+    partial rows from the tasks, plus the metadata partitions' own, and
+    returns the answer as a LocalRelation.
 
-    sum is metadata-eligible on integer-lane columns only (exact decimal
-    strings; float sums are order-dependent); min/max are metadata-
-    eligible on integer columns (exact int stats) AND string columns —
-    the truncated string bounds are never exact, so string extrema read
-    the exact stat_distinct sets, decoding only set-less partitions.
-    Other types run the whole query through the decode path, predicates
-    still pruning.
+    Metadata-eligible: counts; sum on integer columns (exact decimal
+    strings; float sums are order-dependent); min/max on integer columns
+    (exact int stats) and on string columns, whose truncated bounds are
+    never exact, so their extrema read the exact sets; COUNT(DISTINCT) on
+    integer/string columns from the exact sets, so a low-cardinality
+    COUNT(DISTINCT) over the whole store opens zero blobs. Other types are
+    decode-only, predicates still pruning (no set is recorded for floats:
+    canonicalizing them through strings is lossy, -0.0/0.0).
 
-    ``("distinct", col)`` is COUNT(DISTINCT col): on integer/string
-    columns the exact per-partition sets of the metadata partitions are
-    exploded into the same value stream as the decoded partitions' values
-    — a low-cardinality COUNT(DISTINCT) over the whole store opens zero
-    blobs. Other types are decode-only (canonicalizing floats through
-    strings is lossy — -0.0/0.0 — so no set is ever recorded for them).
-
-    ``group_by`` turns the answer into one row per group (SQL GROUP BY
-    semantics, null groups included) — the partition-aligned rollup: a
-    partition whose stat_distinct set for every group column has exactly
-    ONE value (and no nulls) belongs wholly to that group, so its stats
-    contribute to that group's row without decoding. Stores encoded with
-    ``group_cols`` matching the query's GROUP BY answer the whole rollup
-    at metadata scale, like a Hive/Iceberg partition-column aggregate;
-    mixed-group partitions decode. Group columns must be integer/string
-    typed to be metadata-eligible (others run decode-only, still
-    pruned)."""
+    ``group_by`` gives one row per group (SQL GROUP BY semantics, null
+    groups included) — the partition-aligned rollup: a partition whose set
+    for every group column has exactly ONE value (and no nulls) belongs
+    wholly to that group and contributes without decoding, so a store
+    encoded with ``group_cols`` matching the GROUP BY answers the rollup
+    at metadata scale, like a Hive/Iceberg partition-column aggregate.
+    Mixed-group partitions decode; group columns must be integer/string
+    typed to be metadata-eligible."""
     for fn, col in aggs:
         if fn not in _FNS:
             raise ValueError(f"unsupported aggregate fn: {fn!r}")
@@ -343,9 +367,9 @@ def aggregate_store(
             raise ValueError(f"{fn}(*) is not a thing — name a column")
     store = ManifestStore(store_root)
     group_by = list(group_by or [])
-    _kinds, rows, finals, plan = _answer(
+    _kinds, answer, _rows, plan = _answer(
         spark, store, resolve_view(store), aggs, predicates, group_by
     )
-    out = rows.groupBy(*group_by).agg(*finals.values())
-    out = out.select(*group_by, *[_out_name(fn, c) for fn, c in aggs])
+    # a LocalRelation: Spark's types come from the answer's Arrow types
+    out = spark.createDataFrame(answer.select([*group_by, *[_out_name(fn, c) for fn, c in aggs]]))
     return (out, plan) if return_plan else out

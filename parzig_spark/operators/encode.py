@@ -37,11 +37,11 @@ from __future__ import annotations
 
 import hashlib
 import json
-import threading
 import time
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
@@ -383,7 +383,9 @@ def encode_table(
     # inside plan_partitions (Spark schedules concurrent jobs from separate
     # threads). Actions on this host cost ~1-3 s each in fixed latency, so
     # hiding one behind the other cuts plan wall nearly in half; at real
-    # input sizes both remain constant-cost noise.
+    # input sizes both remain constant-cost noise. An InheritableThread
+    # carries the caller's job group and description to the sample job, so
+    # cancelJobGroup stops it too.
     sample_box: dict[str, object] = {}
 
     def _take_sample():
@@ -392,7 +394,7 @@ def encode_table(
         except Exception as exc:  # surface on join, never kill the thread
             sample_box["error"] = exc
 
-    sample_thread = threading.Thread(target=_take_sample, daemon=True)
+    sample_thread = InheritableThread(target=_take_sample, daemon=True)
     sample_thread.start()
 
     with_pid, n_buckets = plan_partitions(

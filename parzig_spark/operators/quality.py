@@ -4,14 +4,14 @@
 bounds, value domains, min/max bounds) over a store view. It is a thin
 caller of the aggregation core behind ``aggregate_store``
 (operators/aggregate.py): each check maps to an aggregate (null counts,
-extrema, the distinct-value stream of a domain check), so the view is
-resolved, planned and decoded once, the counts and extrema come back in
-one Spark aggregation, and each domain check reads its violators off the
-core's value stream. Partitions the stats answer exactly stay on the
+extrema, the distinct values of a domain check), so the view is
+resolved, planned and decoded once, in at most one Spark job, and each
+domain check reads its violators off the distinct values the core's
+partial rows list. Partitions the stats answer exactly stay on the
 metadata path; delete-touched, partially matched and (for string domain
 and bound checks) set-less partitions decode. A clean store's whole
-quality report is one aggregation over manifest rows — zero blobs opened
-— which makes it a usable gate between ``stage_batch`` and
+quality report comes from manifest rows on the driver — no Spark job,
+zero blobs opened — which makes it a usable gate between ``stage_batch`` and
 ``publish_ref`` (operators/wap.py): audit the staged branch with
 ``ref=...``, publish only when every row passes.
 
@@ -40,8 +40,8 @@ from __future__ import annotations
 import json
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..plans.manifest import ManifestStore
 from ..session import arrow_frame
@@ -72,14 +72,6 @@ def _canon(val) -> str:
     return val if isinstance(val, str) else str(int(val))
 
 
-def _violators(values: DataFrame, allowed: list) -> list[str]:
-    """Up to 11 distinct non-null ``_v`` values outside ``allowed``, sorted."""
-    bad = values.where(F.col("_v").isNotNull()).distinct()
-    if allowed:
-        bad = bad.where(~F.col("_v").isin([_canon(a) for a in allowed]))
-    return sorted(r["_v"] for r in bad.limit(11).collect())
-
-
 def check_store(
     spark: SparkSession,
     store_root: str,
@@ -93,7 +85,10 @@ def check_store(
     named ``ref=`` — audit a staged WAP branch before publishing). Returns
     one row per check: ``(check, column, passed, observed)``; ``observed``
     is a short human-readable summary (count, fraction, extremum, or a
-    violator sample).
+    violator sample). Eager, like ``aggregate_store``: the checks run
+    before this returns, in at most one Spark job, and the driver holds at
+    most ``task_slots`` × (1 + distinct values) partial rows plus the
+    metadata partitions' own.
 
     ``where`` scopes the audit to the rows matching the predicate triples
     (same ``(column, op, value)`` grammar as decode_table) — the real WAP
@@ -107,7 +102,7 @@ def check_store(
 
     ``return_plan=True`` returns ``(df, plan)`` with the partition
     economics: ``{"total", "pruned", "metadata", "decoded"}``, read off the
-    driver plan (no extra Spark job)."""
+    driver plan."""
     store = ManifestStore(store_root)
     view = resolve_view(store, snapshot, ref)
     for name, col, arg in checks:
@@ -120,7 +115,7 @@ def check_store(
     aggs = [("count", "*")] + [
         (_AGG_OF[name], col) for name, col, _ in checks if name != "row_count_between"
     ]
-    kinds, rows, finals, p = _answer(spark, store, view, aggs, where)
+    kinds, answer, rows, p = _answer(spark, store, view, aggs, where)
     for name, col, _ in checks:
         if name in ("values_in_set", "min_at_least", "max_at_most") and kinds[col] == "other":
             raise ValueError(
@@ -128,9 +123,7 @@ def check_store(
                 f"({col!r} is {kinds[col]})"
             )
 
-    # ---- one aggregation for counts and extrema, one query per domain ------
-    scalar = {_out_name(fn, c) for fn, c in aggs if fn != "distinct"}
-    got = rows.agg(*[finals[n] for n in scalar]).collect()[0]
+    got = answer.to_pylist()[0]
     total_rows = got["count_star"]
     out = []
     for name, col, arg in checks:
@@ -139,7 +132,10 @@ def check_store(
             out.append((name, None, lo <= total_rows <= hi, f"rows={total_rows}"))
             continue
         if name == "values_in_set":
-            bad = _violators(rows.select(F.col(_out_name("distinct", col)).alias("_v")), arg)
+            # the distinct values the partial rows list, minus the allowed
+            allowed = {_canon(a) for a in arg}
+            values = pc.unique(rows[_out_name("distinct", col)].drop_null()).to_pylist()
+            bad = sorted(v for v in values if v not in allowed)
             observed = "violators=" + json.dumps(bad[:10]) if bad else "all values allowed"
             out.append((name, col, not bad, observed))
             continue
@@ -155,11 +151,6 @@ def check_store(
             out.append((name, col, obs >= arg, f"min={obs}"))
         else:
             out.append((name, col, obs <= arg, f"max={obs}"))
-    plan = {
-        "total": p["pids_total"],
-        "pruned": p["pids_pruned"],
-        "metadata": p["pids_metadata"],
-        "decoded": p["pids_decoded"],
-    }
+    plan = {k: p[f"pids_{k}"] for k in ("total", "pruned", "metadata", "decoded")}
     df = arrow_frame(spark, out, RESULT_SCHEMA)
     return (df, plan) if return_plan else df

@@ -204,10 +204,12 @@ def verdicts(op, val, col_lane, smin, smax, bloom=None, bloom_dom=None, distinct
     return ~excl, covers
 
 
-def set_sizes(distinct) -> np.ndarray:
-    """Element count of each exact distinct set; -1 where none is recorded."""
+def set_values(distinct) -> pa.ListArray:
+    """Each exact distinct set as a list of its canonical strings, sorted;
+    null where none is recorded."""
     sets = _Sets(_strings(distinct))
-    return np.where(sets.have, sets.size, -1)
+    offsets = np.concatenate([[0], np.cumsum(sets.size)]).astype(np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), sets.flat, mask=pa.array(~sets.have))
 
 
 def row_exact(arrow_type: pa.DataType, op: str, val) -> bool:

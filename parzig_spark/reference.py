@@ -30,18 +30,6 @@ def parquet_column_size(arr: pa.Array | pa.ChunkedArray, compression: str = "sna
     return buf.getbuffer().nbytes
 
 
-def parquet_chunk_size(arr: pa.Array | pa.ChunkedArray, compression: str = "snappy") -> int:
-    """Column-chunk compressed bytes only (diagnostic; excludes footer)."""
-    table = pa.table({"c": arr})
-    buf = io.BytesIO()
-    pq.write_table(table, buf, compression=compression, use_dictionary=True)
-    buf.seek(0)
-    meta = pq.ParquetFile(buf).metadata
-    return sum(
-        meta.row_group(rg).column(0).total_compressed_size for rg in range(meta.num_row_groups)
-    )
-
-
 def meta_size(meta: dict) -> int:
     return len(json.dumps(meta, separators=(",", ":")).encode())
 

@@ -1,14 +1,16 @@
 """The aggregation core behind aggregate_store and check_store
-(operators/aggregate.py ``_answer``): one view resolution, one plan, one
-decode scan and one Spark aggregation per query — checked on the
-executed plan — and answers equal to DuckDB's on the same rows, both on
-encoded partitions and on partitions that compaction and add_columns
-wrote (their stats come from the same manifest-row builder).
+(operators/aggregate.py ``_answer``): one view resolution, one plan and
+at most one Spark job per query — one Python stage, counted through a job
+group, and none when metadata answers — and answers equal to DuckDB's on
+the same rows, both on encoded partitions and on partitions that
+compaction and add_columns wrote (their stats come from the same
+manifest-row builder). The result schema, the empty-input answers and
+integer-SUM overflow are pinned.
 """
 
+import contextlib
 import json
 import random
-import re
 
 import pyarrow as pa
 import pytest
@@ -26,6 +28,7 @@ from parzig_spark.operators import (
     quality,
 )
 from parzig_spark.plans import prune
+from parzig_spark.session import task_slots
 
 duckdb = pytest.importorskip("duckdb")
 
@@ -289,18 +292,101 @@ SHAPES = {
 }
 
 
+@contextlib.contextmanager
+def _jobs(spark, name):
+    """Yields a function giving ``(stages, tasks)`` of each Spark job run
+    so far inside the block, in job order: the job-group count of
+    ``test_driver_tables._job_group``, with each job's stages and tasks."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+
+    def jobs():
+        tracker = sc.statusTracker()
+        out = []
+        for job in sorted(tracker.getJobIdsForGroup(name)):
+            stages = tracker.getJobInfo(job).stageIds
+            out.append((len(stages), sum(tracker.getStageInfo(s).numTasks for s in stages)))
+        return out
+
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _one_python_stage(spark, jobs):
+    """One job of one stage (so no Exchange) of at most task_slots tasks."""
+    got = jobs()
+    assert len(got) == 1 and got[0][0] == 1 and 1 <= got[0][1] <= task_slots(spark), got
+
+
 @pytest.mark.parametrize("shape", list(SHAPES))
 def test_one_scan_no_join(spark, store, calls, shape):
-    """One query = one view resolution, one prune.plan, one mapInArrow
-    decode scan and no join in the executed plan."""
+    """One query = one view resolution, one prune.plan and one Spark job:
+    the decode scan, one Python stage of at most task_slots tasks, so no
+    Exchange and no join."""
     root, _rows = store
-    out, plan = aggregate_store(spark, root, return_plan=True, **SHAPES[shape])
-    assert calls == {"plan": 1, "resolve_view": 1}
-    physical = out._jdf.queryExecution().executedPlan().toString()
-    out.collect()
-    assert len(re.findall(r"MapInArrow", physical)) == 1, physical
-    assert not re.search(r"Join|CartesianProduct", physical), physical
+    with _jobs(spark, f"one-scan-{shape}") as jobs:
+        out, plan = aggregate_store(spark, root, return_plan=True, **SHAPES[shape])
+        out.collect()
+        assert calls == {"plan": 1, "resolve_view": 1}
+        _one_python_stage(spark, jobs)
     assert plan["pids_metadata"] > 0 and plan["pids_decoded"] > 0, plan
+
+
+def test_metadata_answer_runs_no_job(spark, typed_store):
+    """No predicate, no delete op, every aggregate answered by the stats:
+    aggregate_store and check_store run no Spark job at all."""
+    aggs = [("count", "*"), ("sum", "k"), ("min", "band"), ("max", "g"), ("distinct", "g")]
+    with _jobs(spark, "metadata-only") as jobs:
+        out, plan = aggregate_store(spark, typed_store, aggs, return_plan=True)
+        got = out.collect()[0]
+        audit = check_store(
+            spark, typed_store, [("values_in_set", "g", ["g0", "g1"]), ("min_at_least", "k", 0)]
+        ).collect()
+        assert jobs() == []
+    assert plan["pids_decoded"] == 0 and plan["pids_metadata"] == plan["pids_total"] > 1, plan
+    assert tuple(got) == (400, sum(range(400)), 0, "g2", 3)
+    assert [r["observed"] for r in audit] == ['violators=["g2"]', "min=0"]
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        dict(aggs=[("count", "*"), ("sum", "k"), ("max", "x")], predicates=[("k", "<", 150)]),
+        dict(aggs=[("distinct", "s"), ("distinct", "big")]),
+        dict(aggs=[("count", "*"), ("min", "s"), ("distinct", "k")], group_by=["g", "band"],
+             predicates=[("big", ">=", BIG + 7 * 900)]),
+    ],
+    ids=["range", "distinct", "group_by"],
+)
+def test_decoding_aggregate_runs_one_python_stage(spark, store, kw):
+    """Every aggregate that decodes runs exactly one Spark job: one Python
+    stage of at most task_slots tasks, COUNT(DISTINCT) and GROUP BY
+    included."""
+    root, _rows = store
+    with _jobs(spark, "decoding-" + "-".join(f"{fn}_{c}" for fn, c in kw["aggs"])) as jobs:
+        out, plan = aggregate_store(spark, root, return_plan=True, **kw)
+        out.collect()
+        _one_python_stage(spark, jobs)
+    assert plan["pids_decoded"] > 0, plan
+
+
+def test_check_store_runs_one_python_stage(spark, store):
+    """A values_in_set check reads its violators off the same partial rows
+    as the counts and extrema: one Spark job, not one more per domain."""
+    root, _rows = store
+    with _jobs(spark, "check-one-stage") as jobs:
+        out, plan = check_store(
+            spark, root,
+            [("row_count_between", None, (0, 10**9)), ("values_in_set", "s", ["x"]),
+             ("values_in_set", "g", ["α"]), ("max_at_most", "big", 0)],
+            where=[("k", ">=", 1_000)], return_plan=True,
+        )
+        out.collect()
+        _one_python_stage(spark, jobs)
+    assert plan["decoded"] > 0, plan
 
 
 def test_check_store_plans_once(spark, store, calls):
@@ -310,3 +396,96 @@ def test_check_store_plans_once(spark, store, calls):
         where=[("k", ">=", 1_000)],
     ).collect()
     assert calls == {"plan": 1, "resolve_view": 1}
+
+
+# --- pinned answers: result schema, empty input, integer-SUM overflow -------
+
+
+_PIN_SCHEMA = "g string, band int, k long, x double, dt date, f float"
+PIN_AGGS = [
+    ("count", "*"), ("count", "band"), ("null_count", "band"), ("sum", "band"),
+    ("min", "band"), ("max", "band"), ("distinct", "band"), ("sum", "k"),
+    ("min", "g"), ("max", "g"), ("distinct", "g"), ("sum", "x"), ("min", "x"),
+    ("max", "x"), ("distinct", "x"), ("min", "dt"), ("max", "dt"), ("distinct", "dt"),
+    ("count", "dt"), ("sum", "f"), ("min", "f"), ("max", "f"),
+]
+# (name, Spark type, nullable) of every PIN_AGGS output column
+PIN_FIELDS = [
+    ("count_star", "bigint", False), ("count_band", "bigint", False),
+    ("null_count_band", "bigint", False), ("sum_band", "bigint", True),
+    ("min_band", "bigint", True), ("max_band", "bigint", True),
+    ("distinct_band", "bigint", False), ("sum_k", "bigint", True),
+    ("min_g", "string", True), ("max_g", "string", True), ("distinct_g", "bigint", False),
+    ("sum_x", "double", True), ("min_x", "double", True), ("max_x", "double", True),
+    ("distinct_x", "bigint", False), ("min_dt", "date", True), ("max_dt", "date", True),
+    ("distinct_dt", "bigint", False), ("count_dt", "bigint", False),
+    ("sum_f", "double", True), ("min_f", "float", True), ("max_f", "float", True),
+]
+
+
+@pytest.fixture(scope="module")
+def typed_store(spark, tmp_path_factory):
+    """A store of int, long, string, double, date and float columns."""
+    import datetime
+
+    day = datetime.date(2020, 1, 1)
+    rows = [
+        (f"g{i % 3}", i % 5, i, i * 0.5, day + datetime.timedelta(days=i % 40), float(i))
+        for i in range(400)
+    ]
+    root = str(tmp_path_factory.mktemp("core") / "typed")
+    encode_table(
+        spark.createDataFrame(rows, _PIN_SCHEMA), root, group_cols=["g"], salt_cols=["k"],
+        target_bytes=2 << 10, resume=False,
+    ).count()
+    return root
+
+
+@pytest.mark.parametrize(
+    "group_by, keys",
+    [([], []), (["band"], [("band", "int", True)]), (["g"], [("g", "string", True)])],
+    ids=["ungrouped", "by_int", "by_str"],
+)
+def test_result_schema_and_empty_input(spark, typed_store, group_by, keys):
+    """Output columns, Spark types and nullability per aggregate kind and
+    group-key type; a predicate that matches nothing answers count 0 and
+    NULL for the rest in one row ungrouped, and no row grouped."""
+    out = aggregate_store(spark, typed_store, PIN_AGGS, group_by=group_by)
+    got = [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema.fields]
+    assert got == keys + PIN_FIELDS
+    empty = aggregate_store(
+        spark, typed_store, PIN_AGGS, group_by=group_by, predicates=[("k", ">", 10**6)]
+    )
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in empty.schema.fields] == got
+    rows = [r.asDict() for r in empty.collect()]
+    if group_by:
+        assert rows == []
+    else:
+        zero = {"count_star", "count_band", "null_count_band", "count_dt"}
+        assert rows == [
+            {n: 0 if n in zero or n.startswith("distinct_") else None for n, _t, _ in PIN_FIELDS}
+        ]
+
+
+@pytest.mark.parametrize(
+    "predicates, decoded", [([], False), ([("k", "<", 1_990)], True)],
+    ids=["metadata", "decoded"],
+)
+def test_int_sum_overflow_raises(spark, tmp_path, predicates, decoded):
+    """A SUM of int64 values whose total leaves int64 raises — from
+    metadata partials and from decoded rows alike — and never wraps."""
+    root = str(tmp_path / "big")
+    src = spark.range(0, 2_000, numPartitions=4).select(
+        (F.col("id") % 4).cast("int").alias("grp"),
+        F.col("id").alias("k"),
+        (F.lit(2**62) + F.col("id")).alias("v"),
+    )
+    encode_table(
+        src, root, group_cols=["grp"], salt_cols=["k"], target_bytes=8 << 10, resume=False,
+    ).count()
+    _df, plan = aggregate_store(spark, root, [("count", "*")], predicates, return_plan=True)
+    assert (plan["pids_decoded"] > 0) == decoded and plan["pids_metadata"] + plan[
+        "pids_decoded"
+    ] > 0, plan
+    with pytest.raises(Exception):
+        aggregate_store(spark, root, [("sum", "v")], predicates).collect()

@@ -8,6 +8,7 @@ buys ``encode_table``, and ``batch_fingerprint``, the other driver-side
 step of a streaming or WAP append."""
 
 import contextlib
+import threading
 
 import pyarrow as pa
 import pytest
@@ -94,9 +95,9 @@ def test_engine_hands_spark_only_arrow_tables(spark, tmp_path, monkeypatch):
 
 @contextlib.contextmanager
 def _job_group(spark, name):
-    """Yields a function giving the number of Spark jobs run so far by
-    this thread inside the block (a helper thread's jobs are not counted:
-    ``encode_table``'s codec-sample job)."""
+    """Yields a function giving the number of Spark jobs run so far inside
+    the block by this thread and by the threads it started with
+    ``pyspark.InheritableThread`` (``encode_table``'s codec-sample job)."""
     sc = spark.sparkContext
     sc.setJobGroup(name, name)
     try:
@@ -108,18 +109,18 @@ def _job_group(spark, name):
 
 def test_encode_table_job_count(spark, tmp_path):
     """Jobs of one multi-bucket ``encode_table(...).collect()``: three for
-    the sizing aggregation's limited collect, one for the scan that feeds
-    the pid shuffle and one for the encode stage. When a Python list
-    carried the salt table, every encode broadcast it with a job of Python
-    tasks: 6 jobs here, 7 resumed, and 6 salted, where that job now runs
-    in the JVM."""
+    the sizing aggregation's limited collect, the codec-sample job on the
+    helper thread, one for the scan that feeds the pid shuffle and one for
+    the encode stage. When a Python list carried the salt table, every
+    encode broadcast it with a job of Python tasks: 7 jobs here, 8 resumed,
+    and 7 salted, where that job now runs in the JVM."""
     df = _frame(spark)
     # 8 KB groups at a 64 KB target: no group salts, so there is no salt
     # table to broadcast
     root = str(tmp_path / "packed")
     with _job_group(spark, "encode-packed") as jobs:
         n_pids = len({r["pid"] for r in _encode(df, root, 64 << 10).collect()})
-        assert jobs() == 5
+        assert jobs() == 6
     assert n_pids > 1
     # resumed after two pids lost their markers: the broadcast of the
     # committed pids adds one JVM job
@@ -127,12 +128,32 @@ def test_encode_table_job_count(spark, tmp_path):
         ManifestStore(root).retire_partition(pid)
     with _job_group(spark, "encode-resumed") as jobs:
         assert len({r["pid"] for r in _encode(df, root, 64 << 10).collect()}) == 2
-        assert jobs() == 6
+        assert jobs() == 7
     # at a 4 KB target every group salts: the Arrow salt table's broadcast
     # is a JVM job of its own
     with _job_group(spark, "encode-salted") as jobs:
         _encode(df, str(tmp_path / "salted"), 4 << 10).collect()
-        assert jobs() == 6
+        assert jobs() == 7
+
+
+def test_codec_sample_job_joins_the_callers_job_group(spark, tmp_path, monkeypatch):
+    """The codec-sample job, started on a helper thread, carries the
+    caller's ``spark.jobGroup.id``, so ``cancelJobGroup`` reaches it."""
+    sc = spark.sparkContext
+    df = _frame(spark)
+    groups = []  # (helper thread?, job group) of every toArrow call
+    real = type(df).toArrow
+
+    def recorded(self):
+        helper = threading.current_thread() is not threading.main_thread()
+        groups.append((helper, sc.getLocalProperty("spark.jobGroup.id")))
+        return real(self)
+
+    monkeypatch.setattr(type(df), "toArrow", recorded)
+    with _job_group(spark, "encode-sample"):
+        _encode(df, str(tmp_path / "store"), 64 << 10).collect()
+    assert (True, "encode-sample") in groups, groups
+    assert all(g == "encode-sample" for _h, g in groups), groups
 
 
 def _map_frame(spark):
