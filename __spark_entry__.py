@@ -6,10 +6,9 @@ the per-column compression/verification summary.
 
 ``queries()`` / ``oracle_sql()`` — one entry per operator family from
 SURVEY.md §2 (encode/decode round-trips through every codec path, the codec
-selector, relational ops over decoded data) plus the training-data-pipeline
-operators (dedup, similarity search, text analysis, multimodal plumbing).
-Money sums use per-row FLOOR(x*100) ints so Spark and DuckDB hash
-identically (no float-sum order sensitivity).
+selector, the store operators, relational ops over decoded data). Money
+sums use per-row FLOOR(x*100) ints so Spark and DuckDB hash identically
+(no float-sum order sensitivity).
 """
 
 from __future__ import annotations
@@ -24,398 +23,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from parzig_spark.functions import dedup as ded
-from parzig_spark.functions import multimodal as mm
-from parzig_spark.functions import similarity as sim
-from parzig_spark.functions import text as tx
 from parzig_spark.operators import decode_table, encode_table, verify_roundtrip
-
-STOPWORD_SQL = ",".join(f"'{s}'" for s in tx.STOPWORDS)
-
-
-def _sql_elit(s: str) -> str:
-    """DuckDB E'' escape-string literal for patterns with \\n, \\t, quotes."""
-    out = (
-        s.replace("\\", "\\\\").replace("'", "''").replace("\n", "\\n").replace("\t", "\\t")
-    )
-    return f"E'{out}'"
-
-
-# hex prefixes of parzig_spark.functions.multimodal._MAGIC, same order
-_MAGIC_HEX = [
-    ("89504E47", "png"),
-    ("FFD8FF", "jpeg"),
-    ("47494638", "gif"),
-    ("52494646", "riff"),
-    ("664C6143", "flac"),
-    ("1A45DFA3", "matroska"),
-]
-
-
-def _multimodal_features_sql() -> str:
-    """Exact SQL twin of mm.feature_scalars: magic sniff + high-nibble
-    byte-histogram counts via the hex() projection of the blob."""
-    fmt_cases = "\n                 ".join(
-        f"WHEN substring(hx, 1, {len(h)}) = '{h}' THEN '{name}'" for h, name in _MAGIC_HEX
-    )
-    hist = ",\n               ".join(
-        f"length(hi) - length(replace(hi, '{d}', '')) AS h{i}"
-        for i, d in enumerate("0123456789ABCDEF")
-    )
-    return f"""
-        WITH b AS (
-          SELECT doc_id, octet_length(encode(text)) AS n_bytes,
-                 hex(encode(text)) AS hx,
-                 regexp_replace(hex(encode(text)), '(.).', '\\1', 'g') AS hi
-          FROM documents
-        )
-        SELECT doc_id,
-               CASE WHEN n_bytes = 0 THEN 'empty'
-                 {fmt_cases}
-                 ELSE 'unknown' END AS format,
-               n_bytes,
-               {hist}
-        FROM b ORDER BY doc_id
-    """
-
-
-def _bucket_sql(col: str, planes) -> str:
-    """SQL twin of sim.bucket_expr: same plane literals, same left-assoc
-    double fold, so buckets agree bit-for-bit with the Spark plan."""
-    parts = []
-    for i, row in enumerate(planes):
-        dot = " + ".join(f"{col}[{j + 1}] * {float(w)!r}" for j, w in enumerate(row))
-        parts.append(f"CASE WHEN ({dot}) > 0 THEN {1 << i} ELSE 0 END")
-    return "(" + " + ".join(parts) + ")"
-
-
-def _ann_lsh_sql() -> str:
-    planes = sim.hyperplanes(64, 6, 42)
-    return f"""
-        WITH q AS (
-          SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-        ), e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id != 0
-        ), eb AS (
-          SELECT vec_id, v, {_bucket_sql('v', planes)} AS bucket FROM e
-        ), qb AS (
-          SELECT qv, {_bucket_sql('qv', planes)} AS qbucket FROM q
-        )
-        SELECT eb.vec_id, round(list_cosine_similarity(eb.v, qb.qv), 6) AS cosine
-        FROM eb, qb
-        WHERE bit_count(xor(eb.bucket, qb.qbucket)) <= 1
-        ORDER BY cosine DESC, vec_id LIMIT 20
-    """
-
-
-def _ann_topk_with_recall_sql(topk_sql: str) -> str:
-    """Wrap an ANN top-k SQL body so every row carries recall@20 against
-    the exact brute-force top-20 — the twin of the merged Spark lanes
-    (topk.crossJoin(broadcast(recall)))."""
-    return f"""
-        WITH ann AS ({topk_sql}),
-             brute AS (
-               SELECT vec_id
-               FROM embeddings, (SELECT embedding AS q FROM embeddings WHERE vec_id = 0)
-               WHERE vec_id != 0
-               ORDER BY round(list_cosine_similarity(embedding, q), 6) DESC, vec_id
-               LIMIT 20
-             ),
-             r AS (
-               SELECT CAST(count(*) AS DOUBLE) / 20.0 AS recall_at_20
-               FROM ann JOIN brute USING (vec_id)
-             )
-        SELECT ann.vec_id, ann.cosine, r.recall_at_20 FROM ann, r
-    """
-
-
-# Exact 4-gram substring-set Jaccard over all pairs of a bounded doc sample
-# (the verification-stage semantics) — the all_pairs section of the merged
-# ngram_jaccard_verified lane; bench.py times the Spark twin separately.
-_NGRAM_PAIRS_SQL = r"""
-    WITH s AS (
-      SELECT doc_id,
-             list_distinct([substring(text, i, 4)
-                            for i in range(1, greatest(length(text) - 3, 1) + 1)]) AS sh
-      FROM documents WHERE doc_id < 60
-    )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           round(len(list_intersect(a.sh, b.sh)) * 1.0
-                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
-    FROM s a JOIN s b ON a.doc_id < b.doc_id
-    ORDER BY jaccard DESC, doc_a, doc_b LIMIT 50
-"""
-
-
-def _ivf_oracle_centroids(sf_dir: str | None = None):
-    """The oracle's twin of build_ivf_index's quantizer training: the same
-    deterministic sample (vec_id 1..256, sorted) read straight from the
-    parquet, through the same numpy k-means — bit-identical centroids,
-    embedded in the SQL as literals (like the LSH plane literals, but
-    data-derived). The sf dir MUST be the corpus the oracle runs against:
-    pass it explicitly via ``oracle_sql(sf_dir=...)`` (jobs/check_oracles.py
-    does); callers that invoke the zero-arg driver contract fall back to
-    SPARK_GRAFT_ORACLE_SF_DIR, then to the driver gate's sf0.01 default."""
-    import duckdb as _duckdb
-    import numpy as np
-
-    sf_dir = (
-        sf_dir
-        or os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-        or "/root/testdata/sf0.01"
-    )
-    if not os.path.exists(f"{sf_dir}/embeddings.parquet"):
-        raise FileNotFoundError(
-            f"IVF oracle needs {sf_dir}/embeddings.parquet — pass "
-            "oracle_sql(sf_dir=...) or set SPARK_GRAFT_ORACLE_SF_DIR to the "
-            "corpus the oracle SQL will run against"
-        )
-    rows = _duckdb.sql(
-        f"SELECT embedding FROM read_parquet('{sf_dir}/embeddings.parquet') "
-        "WHERE vec_id != 0 ORDER BY vec_id LIMIT 256"
-    ).fetchall()
-    mat = np.array([list(r[0]) for r in rows], dtype=np.float64)
-    return sim.ivf_centroids(mat, 16, 8, 42)
-
-
-def _ivf_sql(nprobe: int = 4, k: int = 20, sf_dir: str | None = None) -> str:
-    """SQL twin of the IVF probe: same centroid literals, same
-    left-associated ``||c||² − 2·(v·c)`` score fold, first-wins argmin via
-    list_position(list_min), probe set = nprobe lowest query scores."""
-    import numpy as np
-
-    cents = _ivf_oracle_centroids(sf_dir)
-
-    def dot(col, c):
-        return " + ".join(f"{col}[{j + 1}] * {float(w)!r}" for j, w in enumerate(c))
-
-    def score(col, c):
-        return f"{float(np.dot(c, c))!r} - 2.0 * ({dot(col, c)})"
-
-    scores_list = "[" + ",\n                 ".join(score("v", c) for c in cents) + "]"
-    qsc = "\n          UNION ALL ".join(
-        f"SELECT {j} AS cid, {score('qv', c)} AS s FROM q" for j, c in enumerate(cents)
-    )
-    return f"""
-        WITH q AS (
-          SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-        ), e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id != 0
-        ), es AS (
-          SELECT vec_id, v, {scores_list} AS sc FROM e
-        ), eb AS (
-          SELECT vec_id, v, list_position(sc, list_min(sc)) - 1 AS cluster FROM es
-        ), qsc AS (
-          {qsc}
-        ), probes AS (SELECT cid FROM qsc ORDER BY s, cid LIMIT {nprobe})
-        SELECT eb.vec_id, round(list_cosine_similarity(eb.v, qb.qv), 6) AS cosine
-        FROM eb, q qb
-        WHERE eb.cluster IN (SELECT cid FROM probes)
-        ORDER BY cosine DESC, vec_id LIMIT {k}
-    """
-
-
-def _embedding_near_dups_sql() -> str:
-    planes = sim.hyperplanes(64, 6, 42)
-    return f"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ), eb AS (
-          SELECT vec_id, v, {_bucket_sql('v', planes)} AS bucket FROM e
-        )
-        SELECT a.vec_id AS key_a, b.vec_id AS key_b,
-               round(list_cosine_similarity(a.v, b.v), 6) AS cosine
-        FROM eb a JOIN eb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.3
-        ORDER BY key_a, key_b
-    """
-
-
-def _lang_id_sql() -> str:
-    """Exact SQL twin of tx.lang_id: literal pattern counts normalized by
-    length, argmax with first-language-wins tie semantics (all arithmetic
-    is exact-integer-in-double, so Spark and DuckDB agree bit-for-bit)."""
-    langs = list(tx._LANG_PROFILES)
-    score_exprs = []
-    for lang, pats in tx._LANG_PROFILES.items():
-        terms = [
-            f"(length(lo) - length(replace(lo, {_sql_elit(p.lower())}, ''))) / {len(p)}"
-            for p in pats
-        ]
-        score_exprs.append(f"({' + '.join(terms)}) / ln AS s_{lang}")
-    gl = "greatest(" + ", ".join(f"s_{lang}" for lang in langs) + ")"
-    cases = "\n                 ".join(f"WHEN s_{lang} >= {gl} THEN '{lang}'" for lang in langs)
-    scores = ",\n                 ".join(score_exprs)
-    return f"""
-        WITH t AS (
-          SELECT doc_id, lower(text) AS lo,
-                 greatest(length(lower(text)), 1) * 1.0 AS ln
-          FROM documents
-        ), sc AS (
-          SELECT doc_id,
-                 {scores}
-          FROM t
-        )
-        SELECT doc_id,
-               CASE WHEN {gl} <= 0 THEN 'unknown'
-                 {cases}
-                 ELSE 'unknown' END AS lang_pred
-        FROM sc ORDER BY doc_id
-    """
-
-
-def _simhash_sql(k: int = 4) -> str:
-    """Exact SQL twin of ded.simhash (shingle_k=4): base-31 polynomial hash
-    of each k-byte window (corpus is ASCII, so ord(substr) == byte), spread
-    by the same 64-bit odd multiplier mod 2^64 (HUGEINT arithmetic), then
-    per-bit majority vote and little-endian repack. Docs shorter than k use
-    the sentinel single shingle 0 -> all votes 2*0-1 < 0 -> simhash 0,
-    reproduced by the COALESCE."""
-    mult = 0x9E3779B97F4A7C15
-    two64 = 1 << 64
-    shingle_terms = " + ".join(
-        f"ord(substr(text, i + {j}, 1)) * {31**j}" for j in range(k)
-    )
-    bit_sums = ",\n                 ".join(
-        f"SUM(CAST((h >> {b}) & 1 AS BIGINT)) AS v{b}" for b in range(64)
-    )
-    word_terms = " + ".join(
-        f"(CASE WHEN 2 * v{b} > n THEN CAST({1 << b} AS HUGEINT) ELSE 0 END)"
-        for b in range(64)
-    )
-    return f"""
-        WITH sh AS (
-          SELECT doc_id,
-                 CAST(CAST(({shingle_terms}) AS HUGEINT) * {mult} % {two64} AS UBIGINT) AS h
-          FROM documents, unnest(range(1, length(text) - {k} + 2)) AS t(i)
-          WHERE length(text) >= {k}
-        ), votes AS (
-          SELECT doc_id, COUNT(*) AS n,
-                 {bit_sums}
-          FROM sh GROUP BY doc_id
-        ), words AS (
-          SELECT doc_id, ({word_terms}) AS w FROM votes
-        )
-        SELECT d.doc_id,
-               CAST(COALESCE(CASE WHEN w.w >= CAST({1 << 63} AS HUGEINT) THEN w.w - CAST({two64} AS HUGEINT) ELSE w.w END, 0) AS BIGINT) AS simhash
-        FROM documents d LEFT JOIN words w USING (doc_id)
-        ORDER BY d.doc_id
-    """
-
-
-def _minhash_lsh_ctes(k: int = 5, n_hashes: int = 64, bands: int = 16, cap: int = 256) -> str:
-    """Shared CTE chain reproducing ded.minhash_lsh_candidates in DuckDB:
-    base-31 polynomial shingle hashes (ASCII corpus: ord(substr) == byte;
-    docs shorter than k get the sentinel shingle 0), the same 64 universal
-    hash functions a_i*h+b_i mod 2^64 with two Mersenne-2^61 folds (the a/b
-    constants come from the identical seeded RNG the kernel uses), per-doc
-    per-hash minima, 4-value band tuples (tuple equality stands in for the
-    Spark side's xxhash64 of the tuple), and the deterministic row_number
-    bucket cap. Ends with `capped` — callers join it to themselves."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    a = rng.integers(1, ded._MERSENNE, n_hashes, dtype=np.uint64)
-    b = rng.integers(0, ded._MERSENNE, n_hashes, dtype=np.uint64)
-    rpb = n_hashes // bands
-    two64 = 1 << 64
-    p61 = 1 << 61
-    ab_rows = ",".join(f"({i},{int(a[i])},{int(b[i])})" for i in range(n_hashes))
-    poly = " + ".join(f"ord(substr(text, i + {j}, 1)) * {31**j}" for j in range(k))
-    return f"""
-        ab(i, a, b) AS (VALUES {ab_rows}),
-        sh AS (
-          SELECT doc_id, CAST(({poly}) AS HUGEINT) AS h
-          FROM documents, unnest(range(1, length(text) - {k} + 2)) AS t(i)
-          WHERE length(text) >= {k}
-          UNION ALL
-          SELECT doc_id, CAST(0 AS HUGEINT) AS h FROM documents WHERE length(text) < {k}
-        ),
-        g0 AS (SELECT doc_id, i, (a * h + b) % {two64} AS g FROM sh CROSS JOIN ab),
-        g1 AS (SELECT doc_id, i, g % {p61} + g // {p61} AS g FROM g0),
-        g2 AS (SELECT doc_id, i, g % {p61} + g // {p61} AS g FROM g1),
-        sig AS (SELECT doc_id, i, CAST(MIN(g) AS BIGINT) AS s FROM g2 GROUP BY doc_id, i),
-        band AS (SELECT doc_id, i // {rpb} AS band, LIST(s ORDER BY i) AS tup
-                 FROM sig GROUP BY doc_id, i // {rpb}),
-        capped AS (SELECT doc_id, band, tup,
-                          ROW_NUMBER() OVER (PARTITION BY band, tup ORDER BY doc_id) AS rn
-                   FROM band)"""
-
-
-def _minhash_candidates_sql(cap: int = 256, min_bands: int = 2) -> str:
-    """SQL twin of q_minhash_candidates (pairs sharing >= min_bands bands)."""
-    return f"""
-        WITH {_minhash_lsh_ctes()}
-        SELECT x.doc_id AS key_a, y.doc_id AS key_b, COUNT(*) AS n_shared_bands
-        FROM capped x JOIN capped y
-          ON x.band = y.band AND x.tup = y.tup AND x.doc_id < y.doc_id
-        WHERE x.rn <= {cap} AND y.rn <= {cap}
-        GROUP BY 1, 2 HAVING COUNT(*) >= {min_bands}
-        ORDER BY 1, 2
-    """
-
-
-def _ngram_jaccard_verified_sql(cap: int = 256, threshold: float = 0.8) -> str:
-    """SQL twin of q_ngram_jaccard_verified: LSH candidate pairs (>=1 shared
-    band) verified by exact Jaccard over each doc's DISTINCT shingle-hash
-    set — the hash-set semantics the kernel uses (np.unique + intersect1d),
-    not raw-substring sets, so collisions reproduce identically."""
-    jac = (
-        "len(list_intersect(p.hset, q.hset)) * 1.0 / "
-        "(len(p.hset) + len(q.hset) - len(list_intersect(p.hset, q.hset)))"
-    )
-    return f"""
-        WITH {_minhash_lsh_ctes()},
-        cand AS (
-          SELECT DISTINCT x.doc_id AS key_a, y.doc_id AS key_b
-          FROM capped x JOIN capped y
-            ON x.band = y.band AND x.tup = y.tup AND x.doc_id < y.doc_id
-          WHERE x.rn <= {cap} AND y.rn <= {cap}
-        ),
-        hs AS (SELECT doc_id, LIST(DISTINCT CAST(h AS BIGINT)) AS hset FROM sh GROUP BY doc_id)
-        SELECT c.key_a, c.key_b, {jac} AS jaccard
-        FROM cand c JOIN hs p ON p.doc_id = c.key_a JOIN hs q ON q.doc_id = c.key_b
-        WHERE {jac} >= {threshold}
-        ORDER BY 1, 2
-    """
-
-
-def _dedup_groups_sql(cap: int = 256, threshold: float = 0.8) -> str:
-    """SQL twin of q_dedup_groups: the verified-pair graph (same LSH + exact
-    Jaccard CTEs as ngram_jaccard_verified) fed into a recursive
-    connected-components closure — min reachable doc_id per node is exactly
-    the min-label-propagation fixpoint the Spark operator converges to."""
-    jac = (
-        "len(list_intersect(p.hset, q.hset)) * 1.0 / "
-        "(len(p.hset) + len(q.hset) - len(list_intersect(p.hset, q.hset)))"
-    )
-    return f"""
-        WITH RECURSIVE {_minhash_lsh_ctes()},
-        cand AS (
-          SELECT DISTINCT x.doc_id AS key_a, y.doc_id AS key_b
-          FROM capped x JOIN capped y
-            ON x.band = y.band AND x.tup = y.tup AND x.doc_id < y.doc_id
-          WHERE x.rn <= {cap} AND y.rn <= {cap}
-        ),
-        hs AS (SELECT doc_id, LIST(DISTINCT CAST(h AS BIGINT)) AS hset FROM sh GROUP BY doc_id),
-        vp AS (
-          SELECT c.key_a, c.key_b
-          FROM cand c JOIN hs p ON p.doc_id = c.key_a JOIN hs q ON q.doc_id = c.key_b
-          WHERE {jac} >= {threshold}
-        ),
-        edges AS (
-          SELECT key_a AS s, key_b AS d FROM vp
-          UNION ALL
-          SELECT key_b AS s, key_a AS d FROM vp
-        ),
-        reach(node, lbl) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.d, r.lbl FROM reach r JOIN edges e ON e.s = r.node
-        )
-        SELECT node AS doc_id, CAST(min(lbl) AS BIGINT) AS group_id
-        FROM reach GROUP BY node ORDER BY node
-    """
 
 
 def _roundtrip(spark: SparkSession, sf_dir: str, table: str, group_cols, salt_cols, size_col=None, sort_cols=None) -> DataFrame:
@@ -1338,36 +946,6 @@ def q_agg_groupby(spark, sf_dir):
     )
 
 
-def q_streaming_window(spark, sf_dir):
-    """Structured Streaming surface, oracle-gated: the watermarked tumbling
-    window aggregation (streaming/encode_stream.py windowed_event_counts)
-    run as an availableNow stream over the events table into a memory sink
-    — bit-identical to the batch SQL twin (one batch ⇒ nothing is late, so
-    the watermark semantics reduce to the exact aggregation)."""
-    import shutil
-    import uuid
-
-    from parzig_spark.streaming import windowed_event_counts
-
-    src_file = f"{sf_dir}/events.parquet"
-    d = tempfile.mkdtemp(prefix="parzig_stream_src_")
-    shutil.copy(src_file, os.path.join(d, "events.parquet"))
-    schema = spark.read.parquet(src_file).schema
-    stream = spark.readStream.schema(schema).parquet(d)
-    qname = "stream_win_" + uuid.uuid4().hex[:8]
-    q = (
-        windowed_event_counts(stream)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    q.stop()
-    return spark.table(qname).orderBy("wstart", "event_type")
-
-
 def q_compression_summary(spark, sf_dir):
     """Encode summary, fully gated: per-column value counts hash against
     DuckDB count(*) directly, and the engine-internal byte metrics — which
@@ -1456,293 +1034,6 @@ def q_join_segment_revenue(spark, sf_dir):
         )
         .orderBy("c_mktsegment")
     )
-
-
-def q_dedup_exact(spark, sf_dir):
-    # n_rows must be the PRE-dedup group size (the oracle's semantics):
-    # group sizes come from fingerprinting all documents, the keeper from
-    # the dedup operator itself — so corpora with real duplicates (sf0.1
-    # has 8) agree with the oracle instead of collapsing every group to 1.
-    # Round 6: one fingerprint pass + one aggregation. The old form ran the
-    # md5 normalization twice (dedup_exact AND tx.fingerprint) and paid a
-    # window + self-join; "lowest key per fp group" IS min(doc_id) per fp,
-    # so keeper and group size come out of a single partial-aggregating
-    # groupBy (guide §2.3). Same rows, same oracle.
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        tx.fingerprint(docs, "text", ["doc_id"])
-        .groupBy("fp")
-        .agg(
-            F.min("doc_id").alias("keeper"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select("fp", "keeper", "n_rows")
-        .orderBy("fp")
-    )
-
-
-def q_doc_fingerprints(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return tx.fingerprint(docs, "text", ["doc_id"]).orderBy("doc_id")
-
-
-def q_text_stats(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return tx.text_stats(docs, "text", ["doc_id"]).orderBy("doc_id")
-
-
-def q_quality(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return tx.quality_score(docs, "text", ["doc_id"]).orderBy("doc_id")
-
-
-def q_token_counts(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return tx.token_counts(docs, "text", ["doc_id"]).orderBy("doc_id")
-
-
-def q_lang_id(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return tx.lang_id(docs, "text", ["doc_id"]).select("doc_id", "lang_pred")
-
-
-def q_text_profile(spark, sf_dir):
-    """Per-document text profile in one gated frame: structural stats
-    (chars/bytes/lines/tokens), quality-signal counts (alpha/punct/
-    stopwords), and the n-gram language-ID prediction joined on doc_id —
-    three JVM-vectorized operator families, one oracle row per doc."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    stats = tx.text_stats(docs, "text", ["doc_id"])
-    qual = tx.quality_score(docs, "text", ["doc_id"]).drop("n_chars")
-    lid = tx.lang_id(docs, "text", ["doc_id"]).select("doc_id", "lang_pred")
-    return stats.join(qual, "doc_id").join(lid, "doc_id").orderBy("doc_id")
-
-
-def q_text_tokens_fp(spark, sf_dir):
-    """Token counting (whitespace + BPE-ish regex) and document
-    fingerprinting (normalized md5) joined per doc — one gated frame."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = tx.token_counts(docs, "text", ["doc_id"])
-    fps = tx.fingerprint(docs, "text", ["doc_id"])
-    return toks.join(fps, "doc_id").orderBy("doc_id")
-
-
-def q_minhash_candidates(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return ded.minhash_lsh_candidates(docs, "text", "doc_id").filter(
-        F.col("n_shared_bands") >= 2
-    )
-
-
-def q_simhash(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return ded.simhash(docs, "text", "doc_id")
-
-
-def q_ngram_jaccard_verified(spark, sf_dir):
-    """Both Jaccard lanes in one gated frame (sections tagged):
-    ``lsh_verified`` = LSH candidate pairs verified by exact shingle-hash
-    Jaccard (the production dedup path); ``all_pairs`` = exact 4-gram
-    substring-set Jaccard over all pairs of a bounded doc sample, entirely
-    in Catalyst (the verification-stage semantics with zero Python)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    cands = ded.minhash_lsh_candidates(docs, "text", "doc_id")
-    verified = (
-        ded.ngram_jaccard(docs, cands, "text", "doc_id")
-        .filter(F.col("jaccard") >= 0.8)
-        .withColumn("section", F.lit("lsh_verified"))
-    )
-    pairs = (
-        q_ngram_jaccard_pairs(spark, sf_dir)
-        .select(
-            F.col("doc_a").alias("key_a"), F.col("doc_b").alias("key_b"),
-            "jaccard",
-        )
-        .withColumn("section", F.lit("all_pairs"))
-    )
-    return verified.unionByName(pairs)
-
-
-def q_sessionize_events(spark, sf_dir):
-    """Gap-based sessionization (30-min inactivity gap) over the event log:
-    per-session aggregates, boundaries computed in integer microseconds so
-    the SQL twin reproduces them exactly."""
-    from parzig_spark.functions.events import session_stats
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return session_stats(ev).orderBy("user_id", "session_no")
-
-
-def q_vocab_topk(spark, sf_dir):
-    """Vocabulary building: top-50 lowercased alphabetic tokens by corpus
-    frequency (deterministic tie-break on token)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return tx.vocab_topk(docs, "text", k=50)
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic held-out split: md5-prefix sampling (~4/16 of rows,
-    proportions preserved per language), reproducible across engines and
-    cluster sizes — per-row sha proves the same rows were picked."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        tx.hash_sample(docs, "doc_id")
-        .select("doc_id", "lang", F.sha2("text", 256).alias("text_sha"))
-        .orderBy("doc_id")
-    )
-
-
-def q_dedup_groups(spark, sf_dir):
-    """Duplicate-CLUSTER assignment (the dedup pipeline's last stage):
-    connected components over the verified near-dup pair graph — min doc_id
-    per component via distributed min-label propagation; the oracle's
-    recursive-CTE closure reproduces the fixpoint exactly."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    cands = ded.minhash_lsh_candidates(docs, "text", "doc_id")
-    pairs = ded.ngram_jaccard(docs, cands, "text", "doc_id").filter(
-        F.col("jaccard") >= 0.8
-    )
-    return ded.dedup_components(docs, pairs, "doc_id").withColumn(
-        "group_id", F.col("group_id").cast("long")
-    ).orderBy("doc_id")
-
-
-def q_ann_cosine_topk(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    query = emb.filter(F.col("vec_id") == 0)
-    return sim.cosine_topk(emb.filter(F.col("vec_id") != 0), query, k=20)
-
-
-_LSH_INDEX_CACHE: dict[str, tuple[str, list]] = {}
-
-
-def _lsh_index_for(spark, sf_dir: str) -> tuple[str, list]:
-    """Materialized bucket-partitioned index plus the (cached) query vector,
-    built/fetched once per corpus — probes amortize both exactly as a
-    production build-once/probe-many ANN service would (steady-state probe
-    = ONE Spark job)."""
-    cached = _LSH_INDEX_CACHE.get(sf_dir)
-    if cached is None:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-        path = tempfile.mkdtemp(prefix="parzig_lshidx_")
-        sim.build_lsh_index(emb.filter(F.col("vec_id") != 0), path, n_planes=6, dim=64)
-        cached = (path, list(qrow["embedding"]))
-        _LSH_INDEX_CACHE[sf_dir] = cached
-    return cached
-
-
-def q_ann_lsh_probe(spark, sf_dir):
-    # Probe the MATERIALIZED index (parquet partitioned by bucket): the
-    # bucket filter lands on the partition column, so only the query's
-    # Hamming-radius-1 bucket directories are read. Plane params come from
-    # the index's own _meta.json (no probe/build drift). This is the
-    # steady-state probe bench.py times; the gated lane below adds the
-    # recall column (brute-force comparison) on top.
-    path, qvec = _lsh_index_for(spark, sf_dir)
-    return sim.lsh_topk_indexed(spark, path, qvec, k=20, radius=1)
-
-
-def q_ann_lsh_topk(spark, sf_dir):
-    """LSH ANN probe + its quality in ONE gated frame: the top-20 rows from
-    the materialized bucket-partitioned index, each carrying recall@20
-    against the exact brute-force top-20 — probe mechanics, bucket
-    planning, and the recall arithmetic all hash against DuckDB twins."""
-    topk = q_ann_lsh_probe(spark, sf_dir)
-    brute = q_ann_cosine_topk(spark, sf_dir).select("vec_id")
-    recall = (
-        topk.select("vec_id").intersect(brute)
-        .agg((F.count(F.lit(1)) / F.lit(20.0)).alias("recall_at_20"))
-    )
-    return topk.crossJoin(F.broadcast(recall))
-
-
-_IVF_INDEX_CACHE: dict[str, tuple[str, list]] = {}
-
-
-def _ivf_index_for(spark, sf_dir: str) -> tuple[str, list]:
-    """Materialized cluster-partitioned IVF index + cached query vector
-    (build-once/probe-many, like the LSH index)."""
-    cached = _IVF_INDEX_CACHE.get(sf_dir)
-    if cached is None:
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-        path = tempfile.mkdtemp(prefix="parzig_ivfidx_")
-        sim.build_ivf_index(emb.filter(F.col("vec_id") != 0), path, k_clusters=16)
-        cached = (path, list(qrow["embedding"]))
-        _IVF_INDEX_CACHE[sf_dir] = cached
-    return cached
-
-
-def q_ann_ivf_probe(spark, sf_dir):
-    """IVF ANN probe: data-adaptive k-means cells (vs the LSH path's random
-    hyperplanes), materialized parquet partitionBy(cluster), probe = scan
-    of the nprobe nearest cells only. bench.py times this steady-state
-    probe; the gated lane below adds the recall column."""
-    path, qvec = _ivf_index_for(spark, sf_dir)
-    return sim.ivf_topk_indexed(spark, path, qvec, k=20, nprobe=4)
-
-
-def q_ann_ivf_topk(spark, sf_dir):
-    """IVF ANN probe + recall@20 against exact brute force in ONE gated
-    frame (quantizer training, assignment, probe selection, and the recall
-    arithmetic all have DuckDB twins)."""
-    topk = q_ann_ivf_probe(spark, sf_dir)
-    brute = q_ann_cosine_topk(spark, sf_dir).select("vec_id")
-    recall = (
-        topk.select("vec_id").intersect(brute)
-        .agg((F.count(F.lit(1)) / F.lit(20.0)).alias("recall_at_20"))
-    )
-    return topk.crossJoin(F.broadcast(recall))
-
-
-def q_embedding_near_dups(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # Embeddings are near-orthonormal random vectors (pairwise cosine p99 ~0.29);
-    # 0.3 is the meaningful "near-dup" bar for this corpus.
-    return ded.embedding_near_dups(
-        emb, "embedding", "vec_id", threshold=0.3, n_planes=6, dim=64
-    ).orderBy("key_a", "key_b")
-
-
-def q_ngram_jaccard_pairs(spark, sf_dir):
-    """Exact 4-gram shingle-set Jaccard over all pairs of a bounded doc
-    sample (the verification-stage semantics), entirely in Catalyst
-    (sequence/transform/array_intersect — zero Python)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(F.col("doc_id") < 60)
-    sh = docs.select(
-        "doc_id",
-        F.array_distinct(
-            F.expr("transform(sequence(1, greatest(length(text) - 3, 1)), i -> substring(text, i, 4))")
-        ).alias("sh"),
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.col("a.sh")) + F.size(F.col("b.sh")) - inter
-    return (
-        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
-        .orderBy(F.col("jaccard").desc(), "doc_a", "doc_b")
-        .limit(50)
-    )
-
-
-def q_multimodal_metadata(spark, sf_dir):
-    """Multimodal plumbing in one gated frame: opaque-binary metadata
-    (byte length, magic prefix) joined with the vectorized feature scalars
-    (format sniff + high-nibble byte histogram) per doc. All-scalar output
-    so the row set is canonicalizable — array<float> columns crash the
-    driver's sort-based canonicalizer; the histogram math has an exact
-    hex-nibble DuckDB oracle."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    as_bin = docs.select("doc_id", F.encode("text", "utf-8").alias("data"))
-    meta = mm.media_metadata(as_bin, "data", ["doc_id"])
-    feats = mm.feature_scalars(as_bin, "data", ["doc_id"]).drop("n_bytes")
-    return meta.join(feats, "doc_id").orderBy("doc_id")
 
 
 def q_roundtrip_embeddings(spark, sf_dir):
@@ -1884,18 +1175,15 @@ def q_relational_row_ops(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Exactly 50 lanes — the driver gate's per-round budget — so EVERY
-    registered operator family gets a CORRECTNESS row each round (the
-    round-4 judge's top item: 68 lanes left 18 unwatched). Former
-    stand-alone lanes fold into section-tagged composites: time_travel
-    carries the incremental read, datasource_sql the writer half,
-    roundtrip_pruned all three partition-prune families,
+    """One lane per engine operator family, at most 50 (the driver gate's
+    per-round budget), so every lane gets a CORRECTNESS row each round.
+    Former stand-alone lanes fold into section-tagged composites:
+    time_travel carries the incremental read, datasource_sql the writer
+    half, roundtrip_pruned all three partition-prune families,
     roundtrip_stats_prune the page/bloom/IN probes over one store,
-    roundtrip_pinned_outers the lz4-bool + stored lanes, the ann_*_topk
-    lanes their recall columns, text/multimodal lanes their siblings, and
-    the plain relational rows two composites. compression_summary now
-    VALUE-gates the byte invariants the old rows-only compression_bytes
-    lane could not."""
+    roundtrip_pinned_outers the lz4-bool + stored lanes, and the plain
+    relational rows two composites. compression_summary VALUE-gates the
+    byte invariants the old rows-only compression_bytes lane could not."""
     return {
         "roundtrip_documents": q_roundtrip_documents,
         "roundtrip_compacted": q_roundtrip_compacted,
@@ -1925,24 +1213,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "store_files": q_store_files,
         "snapshot_rollback": q_snapshot_rollback,
         "compression_summary": q_compression_summary,
-        "streaming_window": q_streaming_window,
         "tpch_q1": q_tpch_q1,
         "join_segment_revenue": q_join_segment_revenue,
-        "dedup_exact": q_dedup_exact,
-        "text_profile": q_text_profile,
-        "text_tokens_fp": q_text_tokens_fp,
-        "minhash_candidates": q_minhash_candidates,
-        "simhash": q_simhash,
-        "ngram_jaccard_verified": q_ngram_jaccard_verified,
-        "dedup_groups": q_dedup_groups,
-        "sessionize_events": q_sessionize_events,
-        "vocab_topk": q_vocab_topk,
-        "stratified_sample": q_stratified_sample,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "embedding_near_dups": q_embedding_near_dups,
-        "multimodal_metadata": q_multimodal_metadata,
         "roundtrip_embeddings": q_roundtrip_embeddings,
         "roundtrip_decimal": q_roundtrip_decimal,
         "relational_aggregates": q_relational_aggregates,
@@ -1950,11 +1222,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
-    """DuckDB twins of every oracleable query. ``sf_dir`` pins the corpus
-    for the few data-derived oracles (IVF centroid literals) — pass the same
-    dir the SQL will run against; the zero-arg driver contract falls back to
-    SPARK_GRAFT_ORACLE_SF_DIR / the driver gate's sf0.01 default."""
+def oracle_sql() -> dict[str, str]:
+    """DuckDB twins of every query, over views of the same parquet."""
     return {
         "roundtrip_documents": """
             SELECT doc_id, lang, source, n_chars, sha256(text) AS text_sha
@@ -2243,12 +1512,6 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             FROM (VALUES ('doc_id'), ('lang'), ('n_chars'), ('source'), ('text')) t(col)
             ORDER BY 1
         """,
-        "streaming_window": """
-            SELECT date_trunc('hour', ts) AS wstart, event_type,
-                   count(*) AS n_events,
-                   CAST(sum(CAST(floor(value*100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-            FROM events GROUP BY 1, 2 ORDER BY 1, 2
-        """,
         "tpch_q1": """
             SELECT l_returnflag, l_linestatus,
                    CAST(sum(CAST(floor(l_quantity*100) AS BIGINT)) AS BIGINT) AS sum_qty_cents,
@@ -2265,102 +1528,6 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
             JOIN orders ON l_orderkey = o_orderkey
             JOIN customer ON o_custkey = c_custkey
             GROUP BY c_mktsegment ORDER BY c_mktsegment
-        """,
-        "dedup_exact": r"""
-            SELECT fp, min(doc_id) AS keeper, count(*) AS n_rows
-            FROM (
-              SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp
-              FROM documents
-            ) GROUP BY fp ORDER BY fp
-        """,
-        "text_profile": rf"""
-            WITH s AS (
-              SELECT doc_id,
-                     length(text) AS n_chars,
-                     octet_length(encode(text)) AS n_bytes,
-                     length(text) - length(replace(text, chr(10), '')) + 1 AS n_lines,
-                     CASE WHEN trim(text) = '' THEN 0
-                          ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens,
-                     length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
-                     length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct,
-                     len(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                                     x -> x IN ({STOPWORD_SQL}))) AS n_stopwords
-              FROM documents
-            )
-            SELECT s.doc_id, s.n_chars, s.n_bytes, s.n_lines, s.n_tokens,
-                   s.n_alpha, s.n_punct, s.n_stopwords, l.lang_pred
-            FROM s JOIN ({_lang_id_sql()}) l USING (doc_id)
-            ORDER BY s.doc_id
-        """,
-        "text_tokens_fp": r"""
-            SELECT doc_id,
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_ws_tokens,
-                   len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]+')) AS n_bpe_tokens,
-                   md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp
-            FROM documents ORDER BY doc_id
-        """,
-        "ann_cosine_topk": """
-            SELECT vec_id,
-                   round(list_cosine_similarity(embedding, q), 6) AS cosine
-            FROM embeddings, (SELECT embedding AS q FROM embeddings WHERE vec_id = 0)
-            WHERE vec_id != 0
-            ORDER BY cosine DESC, vec_id LIMIT 20
-        """,
-        "simhash": _simhash_sql(),
-        "minhash_candidates": _minhash_candidates_sql(),
-        "ngram_jaccard_verified": f"""
-            SELECT 'lsh_verified' AS section, key_a, key_b, jaccard
-            FROM ({_ngram_jaccard_verified_sql()})
-            UNION ALL
-            SELECT 'all_pairs', doc_a, doc_b, jaccard
-            FROM ({_NGRAM_PAIRS_SQL})
-        """,
-        "dedup_groups": _dedup_groups_sql(),
-        "sessionize_events": """
-            WITH o AS (
-              SELECT user_id, event_id, value, epoch_us(ts) AS tus,
-                     CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                               OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                          THEN 1 ELSE 0 END AS new_s
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), s AS (
-              SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS session_no
-              FROM o
-            )
-            SELECT user_id, CAST(session_no AS BIGINT) AS session_no,
-                   count(*) AS n_events,
-                   min(event_id) AS first_event,
-                   CAST(sum(CAST(floor(value*100) AS BIGINT)) AS BIGINT) AS sum_value_cents,
-                   max(tus) - min(tus) AS duration_us
-            FROM s GROUP BY 1, 2 ORDER BY 1, 2
-        """,
-        "vocab_topk": """
-            SELECT lower(t.tok) AS tok, count(*) AS n
-            FROM documents, unnest(regexp_extract_all(text, '[A-Za-z]+')) AS t(tok)
-            GROUP BY 1 ORDER BY n DESC, tok LIMIT 50
-        """,
-        "stratified_sample": """
-            SELECT doc_id, lang, sha256(text) AS text_sha
-            FROM documents
-            WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0','1','2','3')
-            ORDER BY doc_id
-        """,
-        "ann_lsh_topk": _ann_topk_with_recall_sql(_ann_lsh_sql()),
-        "ann_ivf_topk": _ann_topk_with_recall_sql(_ivf_sql(sf_dir=sf_dir)),
-        "embedding_near_dups": _embedding_near_dups_sql(),
-        "multimodal_metadata": f"""
-            WITH m AS (
-              SELECT doc_id,
-                     octet_length(encode(text)) AS n_bytes,
-                     lower(substring(hex(encode(text)), 1, 16)) AS magic_hex
-              FROM documents
-            )
-            SELECT m.doc_id, m.n_bytes, m.magic_hex, f.format,
-                   {", ".join(f"f.h{i}" for i in range(16))}
-            FROM m JOIN ({_multimodal_features_sql()}) f USING (doc_id)
-            ORDER BY m.doc_id
         """,
         "roundtrip_embeddings": """
             SELECT vec_id, label, len(embedding) AS dim,

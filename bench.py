@@ -65,42 +65,15 @@ def main() -> None:
     query_mode = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "all")
     corpus_only = query_mode == "corpus_only"
     reps = 1 if corpus_only else int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    qs = dict(entrymod.queries())
-    # Keep timing keys comparable across rounds: several correctness lanes
-    # merged siblings in round 5 (recall folded into topk, text/fingerprint
-    # lanes joined), so the bench times the UNMERGED building blocks under
-    # the historical names. ann_lsh_topk/ann_ivf_topk = the steady-state
-    # probe alone; ann_lsh_recall = probe + brute force + recall (exactly
-    # the merged registry lane's work, as in round 4).
-    qs["ann_lsh_topk"] = entrymod.q_ann_lsh_probe
-    qs["ann_ivf_topk"] = entrymod.q_ann_ivf_probe
-    qs["ann_lsh_recall"] = entrymod.queries()["ann_lsh_topk"]
-    qs["text_stats"] = entrymod.q_text_stats
-    qs["quality_score"] = entrymod.q_quality
-    qs["token_counts"] = entrymod.q_token_counts
-    qs["doc_fingerprints"] = entrymod.q_doc_fingerprints
-    qs["ngram_jaccard_pairs"] = entrymod.q_ngram_jaccard_pairs
+    qs = entrymod.queries()
     query_list = () if corpus_only else (
         "tpch_q1",
         "join_segment_revenue",
-        "text_stats",
-        "quality_score",
-        "dedup_exact",
-        "doc_fingerprints",
-        "minhash_candidates",
-        "simhash",
-        "ann_cosine_topk",
-        "ann_lsh_topk",
-        "ann_ivf_topk",
-        "embedding_near_dups",
         "roundtrip_documents",
         "roundtrip_lineitem_q1",
         "roundtrip_decimal",
         "roundtrip_forced_codecs",
         "roundtrip_nested",
-        "token_counts",
-        "ngram_jaccard_pairs",
-        "ann_lsh_recall",
     )
 
     if not corpus_only:
@@ -116,13 +89,7 @@ def main() -> None:
             decode_table(spark, warm_root).count()
         finally:
             shutil.rmtree(warm_root, ignore_errors=True)
-        qs["token_counts"](spark, sf_dir).count()
 
-    if "ann_lsh_topk" in query_list:
-        # Build the materialized ANN index once (reported separately);
-        # the timed ann_lsh_topk below is the steady-state probe, the
-        # number a production build-once/probe-many service sees.
-        timed("ann_lsh_build", lambda: qs["ann_lsh_topk"](spark, sf_dir).count())
     for _rep in range(reps):
         for name in query_list:
             timed(name, lambda n=name: qs[n](spark, sf_dir).count())

@@ -44,10 +44,6 @@ def value_hash(df: pd.DataFrame) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    # data-derived oracles (IVF centroid literals) must be generated from
-    # the same corpus the queries read; the driver's gate runs at sf0.01
-    # (the entry-point default), this harness can point anywhere
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
 
     import __spark_entry__ as entrymod
     from parzig_spark.session import get_spark
@@ -59,7 +55,7 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
     qs = entrymod.queries()
-    oracles = entrymod.oracle_sql(sf_dir=sf_dir)
+    oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
@@ -72,11 +68,6 @@ def main() -> int:
             failures.append(name)
             continue
         dt = time.time() - t0
-        if name not in oracles:
-            print(f"rows  {name}: {len(sdf)} rows, {dt:.1f}s (no oracle — rows-only)")
-            if len(sdf) == 0 and name not in ("ngram_jaccard_verified",):
-                print(f"  WARN {name}: 0 rows")
-            continue
         odf = con.execute(oracles[name]).df()
         ok_rows = len(sdf) == len(odf)
         ok_cols = sorted(sdf.columns) == sorted(odf.columns)

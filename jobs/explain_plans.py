@@ -88,30 +88,6 @@ def main() -> None:
 
     import tempfile
 
-    from parzig_spark.functions import similarity as sim
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    idx_path = tempfile.mkdtemp(prefix="explain_lshidx_")
-    sim.build_lsh_index(emb.filter(F.col("vec_id") != 0), idx_path, n_planes=6, dim=64)
-    grab(
-        "Materialized LSH ANN probe (bucket partition pruning)",
-        sim.lsh_topk_indexed(spark, idx_path, list(qrow["embedding"]), k=20, n_planes=6),
-        "The index is parquet partitioned by `bucket`; the probe's IN-filter lands in "
-        "`PartitionFilters`, so only the query's Hamming-radius-1 bucket directories "
-        "are read — the scan never touches the other ~57/64 buckets.",
-    )
-
-    ivf_path = tempfile.mkdtemp(prefix="explain_ivfidx_")
-    sim.build_ivf_index(emb.filter(F.col("vec_id") != 0), ivf_path, k_clusters=16)
-    grab(
-        "Materialized IVF ANN probe (cluster partition pruning)",
-        sim.ivf_topk_indexed(spark, ivf_path, list(qrow["embedding"]), k=20, nprobe=4),
-        "Data-adaptive variant of the LSH probe: the index is parquet partitioned by "
-        "`cluster` (k-means cells); the nprobe nearest cells land in "
-        "`PartitionFilters`, so the probe scans 4/16 cluster directories.",
-    )
-
     from parzig_spark.operators import decode_table, encode_table
     from parzig_spark.plans.manifest import ManifestStore
 

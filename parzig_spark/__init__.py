@@ -14,9 +14,10 @@ Spark-first:
   (``parzig_spark.operators``, ``parzig_spark.sources``), with explicit
   repartitioning + salting for skew;
 - a manifest checkpoint store with atomic per-partition commit markers and
-  anti-join resume (``parzig_spark.plans.manifest``);
-- training-data-pipeline operators (dedup, similarity search, text analysis,
-  multimodal plumbing) in ``parzig_spark.functions``.
+  anti-join resume (``parzig_spark.plans.manifest``), plus the store
+  operators over it (time travel, refs, WAP, CDC, delete, upsert, compact);
+- a Structured Streaming front-end that encodes each micro-batch
+  (``parzig_spark.streaming``).
 
 Reference parity citations use file:line into /root/reference.
 """

@@ -320,7 +320,6 @@ def encode_table(
     sort_cols: list[str] | None = None,
     size_col: str | None = None,
     target_bytes: int = 64 << 20,
-    num_partitions: int | None = None,
     resume: bool = True,
     outer: str | None = "auto",
     pid_namespace: int | None = None,
@@ -353,10 +352,6 @@ def encode_table(
     predicates then skip whole sections *within* a partition, reading only
     the surviving byte ranges of each blob. Part of the store identity
     (page boundaries must be a pure data property for resume).
-
-    ``num_partitions`` sets the encode stage's task count (default
-    ``min(n_buckets, task_slots)``, see :func:`map_pid_slices`); it moves
-    no pid, row or blob.
     """
     salt_cols = salt_cols or [c for c in df.columns if c not in group_cols][:1]
     if sort_cols is None:
@@ -441,9 +436,7 @@ def encode_table(
             local_store.write_partition(pid, rows, blobs)
         return summary_batch(rows, committed=not already)
 
-    return map_pid_slices(
-        with_pid, n_buckets, sort_cols, data_cols, encode_one, num_partitions
-    )
+    return map_pid_slices(with_pid, n_buckets, sort_cols, data_cols, encode_one)
 
 
 def append_pinned(df: DataFrame, store_root: str, cfg: dict, pid_namespace: int) -> None:
@@ -519,8 +512,7 @@ def skip_committed(with_pid: DataFrame, store: ManifestStore) -> DataFrame:
 
 
 def map_pid_slices(
-    with_pid: DataFrame, n_pids: int, sort_cols: list[str],
-    cols: list[str], per_pid, num_partitions: int | None = None,
+    with_pid: DataFrame, n_pids: int, sort_cols: list[str], cols: list[str], per_pid
 ) -> DataFrame:
     """Run ``per_pid(pid, table) -> SUMMARY_SCHEMA batch`` once per pid of
     ``with_pid``, ``table`` holding that pid's ``cols`` in canonical
@@ -528,13 +520,12 @@ def map_pid_slices(
     add_columns, so both see the same pids in the same row order.
 
     ``repartition(k, pid)`` keeps a pid inside one task; ``k`` is
-    ``num_partitions`` when given, else ``min(n_pids, task_slots)`` — one
-    wave of tasks, each holding several pids. The (pid, *sort_cols) sort
-    runs in the JVM: Tungsten sorts binary rows (spill-capable — an
-    oversized partition sorts through disk instead of OOMing the Python
-    worker) with the same order pa.Table.sort_by would give: ascending,
-    nulls last, byte-wise UTF8 comparison, NaN greatest. With no sort
-    columns (an all-nested table) it sorts by pid alone.
+    ``min(n_pids, task_slots)`` — one wave of tasks, each holding several
+    pids. The (pid, *sort_cols) sort runs in the JVM: Tungsten sorts binary
+    rows (spill-capable — an oversized partition sorts through disk instead
+    of OOMing the Python worker) with the same order pa.Table.sort_by would
+    give: ascending, nulls last, byte-wise UTF8 comparison, NaN greatest.
+    With no sort columns (an all-nested table) it sorts by pid alone.
 
     Rows arrive with ``pid`` leading, so the task streams: it buffers only
     the batch slices of the pid in progress and calls ``per_pid`` as soon
@@ -543,7 +534,7 @@ def map_pid_slices(
     (each pid is a run of zero-copy slices found by boundary detection on
     the pid lane), and string columns never become Python objects.
     """
-    k = num_partitions or max(1, min(n_pids, task_slots(with_pid.sparkSession)))
+    k = max(1, min(n_pids, task_slots(with_pid.sparkSession)))
     shuffled = with_pid.repartition(k, "pid").sortWithinPartitions(
         F.col("pid").asc(), *[F.col(c).asc_nulls_last() for c in sort_cols]
     )

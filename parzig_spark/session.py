@@ -116,7 +116,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     driver_memory: str = "48g",
-    arrow_batch_rows: int = 4096,
     task_cpus: int | None = None,
 ) -> SparkSession:
     cores = cpu_count()
@@ -152,7 +151,7 @@ def get_spark(
         .config("spark.driver.memory", driver_memory)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # the parzig Python data source plans its own partition pruning in

@@ -1,2 +1,1 @@
 from .source_code import source_code_table  # noqa: F401
-from .tables import load_table, register_views  # noqa: F401

@@ -1,1 +1,1 @@
-from .encode_stream import dedup_stream, encode_stream, windowed_event_counts  # noqa: F401
+from .encode_stream import encode_stream  # noqa: F401

@@ -6,18 +6,13 @@ is encoded incrementally. Each micro-batch runs the same idempotent
 ``encode_table`` — partition ids are content-derived and the manifest commit
 is first-marker-wins, so exactly-once at the partition level falls out of
 the batch machinery (a replayed micro-batch after a crash re-encodes only
-uncommitted partitions, byte-identically).
-
-Watermarked windowed aggregation over an event stream is included as the
-standard late-data pattern (applyInPandasWithState is not needed — the
-engine's stateful unit is the manifest store itself).
+uncommitted partitions, byte-identically). The stream always runs with an
+``availableNow`` trigger: it drains what the source holds, then stops.
 """
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.encode import batch_fingerprint, encode_table
@@ -37,7 +32,6 @@ def encode_stream(
     checkpoint_dir: str,
     size_col: str | None = None,
     target_bytes: int = 64 << 20,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """readStream source → incremental encode via foreachBatch.
 
@@ -73,58 +67,11 @@ def encode_stream(
             bucket_bits=_STREAM_BUCKET_BITS,
         ).count()
 
-    writer = (
+    return (
         stream_df.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
-
-def dedup_stream(
-    docs_stream: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    ts_col: str | None = None,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Cross-micro-batch exact deduplication as a stateful streaming op.
-
-    Fingerprints each document (md5 of whitespace-normalized lowercase —
-    the same fp as batch ``dedup_exact``) and drops repeats across ALL
-    previous micro-batches: Structured Streaming keeps the seen-fingerprint
-    set as managed state. With ``ts_col`` the state is bounded by
-    ``dropDuplicatesWithinWatermark`` (late re-occurrences past the
-    watermark age out — the production shape; unbounded state is the
-    alternative the watermark exists to avoid).
-    """
-    normalized = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    fp = docs_stream.withColumn("fp", F.md5(normalized))
-    if ts_col is not None:
-        fp = fp.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withWatermark(
-            ts_col, watermark
-        )
-        return fp.dropDuplicatesWithinWatermark(["fp"])
-    return fp.dropDuplicates(["fp"])
-
-
-def windowed_event_counts(
-    events_stream: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation (late data dropped after the
-    watermark), the canonical Structured Streaming stateful pattern."""
-    # Watermarks require TIMESTAMP (with zone); parquet NTZ columns cast up.
-    events_stream = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
-        )
-        .select(F.col("w.start").alias("wstart"), "event_type", "n_events", "sum_value_cents")
-    )

@@ -22,12 +22,10 @@ def test_queries_have_oracles_or_are_marked():
     # folded into compression_summary's value-gated invariants)
     assert set(oracles) == set(qs)
     for name in ("roundtrip_documents", "roundtrip_lineitem_q1", "roundtrip_orders",
-                 "tpch_q1", "dedup_exact", "text_profile", "ann_cosine_topk"):
+                 "tpch_q1"):
         assert name in oracles, name
 
 
 def test_fast_queries_run(spark):
     sf = "/root/testdata/sf0.001"
-    for name in ("tpch_q1", "text_tokens_fp", "simhash", "ann_cosine_topk"):
-        df = entrymod.queries()[name](spark, sf)
-        assert df.count() > 0, name
+    assert entrymod.queries()["tpch_q1"](spark, sf).count() > 0

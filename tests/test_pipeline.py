@@ -409,7 +409,7 @@ def test_plan_partitions_distributed_path_identical_pids(spark, tmp_path):
     assert ManifestStore(root).committed_pids() == set()
 
 
-def test_blobs_byte_identical_across_parallelism(spark, corpus, tmp_path):
+def test_blobs_byte_identical_across_parallelism(spark, corpus, tmp_path, monkeypatch):
     """The resume/retry contract's strongest form: encoding the same table
     with different task counts (different shuffle layouts and Arrow batch
     boundaries) must produce byte-identical blobs per (pid, column) —
@@ -417,10 +417,20 @@ def test_blobs_byte_identical_across_parallelism(spark, corpus, tmp_path):
     the data, never of the cluster shape."""
     import hashlib
 
+    from parzig_spark.operators import encode as enc
+
+    # the encode stage runs min(n_buckets, task_slots) tasks: the corpus
+    # must have enough buckets for 3 and 13 slots to differ
+    _, n_buckets = enc.plan_partitions(
+        corpus, ["repo", "lang"], ["path", "commit"], 256 << 10, "content"
+    )
+    assert min(n_buckets, 3) != min(n_buckets, 13), n_buckets
+
     roots = {}
     for np_part in (3, 13):
+        monkeypatch.setattr(enc, "task_slots", lambda _spark, n=np_part: n)
         root = str(tmp_path / f"store_{np_part}")
-        _encode(spark, corpus, root, num_partitions=np_part)
+        _encode(spark, corpus, root)
         roots[np_part] = root
 
     def blob_map(root):

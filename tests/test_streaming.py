@@ -1,4 +1,4 @@
-"""Structured Streaming: incremental encode + watermarked window agg."""
+"""Structured Streaming: incremental encode."""
 
 import shutil
 
@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from parzig_spark.operators import decode_table, verify_roundtrip
-from parzig_spark.streaming import encode_stream, windowed_event_counts
+from parzig_spark.streaming import encode_stream
 
 SF = "/root/testdata/sf0.001"
 
@@ -88,84 +88,6 @@ def test_streaming_two_distinct_batches_no_pid_collision(spark, tmp_path):
     report = verify_roundtrip(docs, decoded, ["doc_id"], ["text", "lang"])
     assert report["ok"], report
     assert decoded.count() == docs.count()
-
-
-def test_windowed_event_counts_matches_batch(spark, tmp_path):
-    d = tmp_path / "events_in"
-    d.mkdir()
-    shutil.copy(f"{SF}/events.parquet", d / "part-0.parquet")
-    batch = spark.read.parquet(str(d))
-    stream = spark.readStream.schema(batch.schema).parquet(str(d))
-    agg = windowed_event_counts(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["wstart"], r["event_type"]): (r["n_events"], r["sum_value_cents"])
-        for r in spark.sql("select * from win_counts").collect()
-    }
-    expected = {
-        (r["wstart"], r["event_type"]): (r["n_events"], r["sum_value_cents"])
-        for r in (
-            batch.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.floor(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
-            )
-            .select(F.col("w.start").alias("wstart"), "event_type", "n_events", "sum_value_cents")
-            .collect()
-        )
-    }
-    # The final windows may be withheld by the watermark in append mode;
-    # every emitted window must match the batch computation exactly.
-    assert got, "streaming produced no windows"
-    for k, v in got.items():
-        assert expected[k] == v, k
-
-
-def test_dedup_stream_across_batches(spark, tmp_path):
-    """Stateful streaming dedup: duplicates arriving in a LATER micro-batch
-    are dropped by streaming state; output fps equal batch dedup's."""
-    from parzig_spark.functions.dedup import dedup_exact
-    from parzig_spark.streaming import dedup_stream
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    d = tmp_path / "dedup_in"
-    d.mkdir()
-    first = docs.filter(F.col("doc_id") < 300)
-    out_dir = str(tmp_path / "dedup_out")
-    docs.filter(F.col("doc_id") < 150).write.parquet(str(d / "b0.parquet"))
-    stream = spark.readStream.schema(docs.schema).parquet(str(d) + "/*")
-
-    def run_once():
-        q = (
-            dedup_stream(stream)
-            .select("doc_id", "fp")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "cp"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    # batch 2 re-delivers all of batch 1 (exact duplicates) plus new docs;
-    # the streaming state (seen fingerprints, restored from the checkpoint)
-    # must drop the re-deliveries.
-    first.write.parquet(str(d / "b1.parquet"))
-    run_once()
-    emitted = spark.read.parquet(out_dir).collect()
-    got = {r["fp"] for r in emitted}
-    expected = {r["fp"] for r in dedup_exact(first, "text", "doc_id").select("fp").collect()}
-    assert got == expected
-    assert len(emitted) == len(expected)  # duplicates were stateful-dropped
 
 
 def test_streaming_duplicate_rows_batch_not_aliased(spark, tmp_path):
