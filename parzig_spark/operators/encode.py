@@ -37,7 +37,9 @@ from __future__ import annotations
 
 import hashlib
 import json
+import threading
 import time
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -49,7 +51,7 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 from ..codecs import dtypes, encode_column
 from ..plans.manifest import FORMAT_VERSION, ManifestStore
 from ..selector import choose_codec
-from ..session import task_slots
+from ..session import arrow_frame, task_slots
 
 SUMMARY_SCHEMA = (
     "pid long, column string, codec string, n_values long, raw_bytes long, "
@@ -129,6 +131,14 @@ def column_digest(arr: pa.Array) -> str:
 # stats there); re-exported here for the established import surface.
 from ..codecs.stats import STR_STAT_CHARS as _STR_STAT_CHARS  # noqa: F401
 from ..codecs.stats import column_agg_stats, column_bloom, column_distinct, column_minmax, string_upper_bound  # noqa: F401
+
+
+def pid_base(pid_namespace: int | None, bucket_bits: int) -> int:
+    """The first pid of ``pid_namespace``: its buckets are the pids
+    ``[pid_base, pid_base + n_buckets)`` (from 0 without a namespace)."""
+    if pid_namespace is None:
+        return 0
+    return (pid_namespace & ((1 << (63 - bucket_bits)) - 1)) << bucket_bits
 
 
 def plan_partitions(
@@ -231,7 +241,7 @@ def plan_partitions(
         F.xxhash64(*[F.col(c) for c in group_cols], salt.cast("long")), F.lit(n_buckets)
     )
     if pid_namespace is not None:
-        ns_base = (pid_namespace & ((1 << (63 - bucket_bits)) - 1)) << bucket_bits
+        ns_base = pid_base(pid_namespace, bucket_bits)
         pid = (F.lit(ns_base).cast("long") + bucket).alias("pid")
     else:
         pid = bucket
@@ -332,15 +342,20 @@ def encode_table(
     The returned DataFrame is the job's action — materializing it runs the
     encode. With ``resume=True``, partitions whose commit marker already
     exists are anti-joined away before any data is read (checkpoint/resume
-    per the north rule).
+    per the north rule); when every pid of the namespace is committed, the
+    summary is an empty local table and no scan runs at all.
 
     Each column's codec is chosen ONCE on the driver from a sample of
     ``_PLAN_SAMPLE_ROWS`` rows (column stats are stable across buckets of
     one table), instead of trial-encoding 2–4 candidates in every bucket — the
     per-bucket selector was 2× trial encodes × candidates × columns ×
-    buckets of pure overhead. Codec choice never feeds pid derivation, so
-    this cannot affect resume identity; within one job all task attempts
-    share the driver's plan, keeping retried blobs byte-identical.
+    buckets of pure overhead. The sample job and the selector run on a
+    helper thread while the sizing jobs run, so the plan costs no wall time
+    unless it outlasts them; a single-bucket encode, which chooses in its
+    one task, stops the helper after its current column. Codec choice never
+    feeds pid derivation, so this cannot affect resume identity; within one
+    job all task attempts share the driver's plan, keeping retried blobs
+    byte-identical.
 
     ``codec_overrides`` pins named columns to explicit codecs (bypassing the
     selector) — the per-encoding conformance lever, mirroring the
@@ -373,41 +388,27 @@ def encode_table(
             **({"page_values": page_values} if page_values else {}),
         }
     )
-    # Overlap the two O(1) planning actions: the codec-plan sample job runs
-    # on a helper thread while the driver blocks on the sizing aggregation
-    # inside plan_partitions (Spark schedules concurrent jobs from separate
-    # threads). Actions on this host cost ~1-3 s each in fixed latency, so
-    # hiding one behind the other cuts plan wall nearly in half; at real
-    # input sizes both remain constant-cost noise. An InheritableThread
-    # carries the caller's job group and description to the sample job, so
-    # cancelJobGroup stops it too.
-    sample_box: dict[str, object] = {}
-
-    def _take_sample():
-        try:
-            sample_box["table"] = df.limit(_PLAN_SAMPLE_ROWS).toArrow()
-        except Exception as exc:  # surface on join, never kill the thread
-            sample_box["error"] = exc
-
-    sample_thread = InheritableThread(target=_take_sample, daemon=True)
-    sample_thread.start()
-
-    with_pid, n_buckets = plan_partitions(
-        df, group_cols, salt_cols, target_bytes, size_col,
-        pid_namespace=pid_namespace, bucket_bits=bucket_bits,
-    )
-
+    # Plan the codecs off the critical path: a helper thread takes the
+    # sample and runs the selector on it while this thread blocks on the
+    # sizing jobs inside plan_partitions (Spark schedules concurrent jobs
+    # from separate threads), so planning costs max(sizing, sample +
+    # choose) instead of their sum. An InheritableThread carries the
+    # caller's job group and description to the sample job, so
+    # cancelJobGroup stops it too. The helper checks ``stop_plan`` before
+    # each column: an encode that throws the plan away waits for at most
+    # the sample job plus one column.
+    data_cols = list(df.columns)
     codec_plan: dict[str, str] = {}
     plan_lineage: dict[str, str] = {}
-    # Single-bucket tables choose once in-task anyway; the sampled plan only
-    # pays for itself when it replaces many per-bucket selector runs.
-    sample_thread.join()
-    if n_buckets > 1:
-        if "error" in sample_box:
-            raise sample_box["error"]
-        sample = sample_box["table"]
-        if sample.num_rows:
-            for column in df.columns:
+    plan_error: list[Exception] = []
+    stop_plan = threading.Event()
+
+    def _plan_codecs():
+        try:
+            sample = df.limit(_PLAN_SAMPLE_ROWS).toArrow()
+            for column in data_cols:
+                if stop_plan.is_set() or not sample.num_rows:
+                    return
                 if codec_overrides and column in codec_overrides:
                     continue
                 try:
@@ -419,10 +420,38 @@ def encode_table(
                     {"plan": "table_sample", "sample_rows": sample.num_rows, **lineage},
                     separators=(",", ":"),
                 )
+        except Exception as exc:  # surface on join, never kill the thread
+            plan_error.append(exc)
+
+    plan_thread = InheritableThread(target=_plan_codecs, daemon=True)
+    plan_thread.start()
+
+    with_pid, n_buckets = plan_partitions(
+        df, group_cols, salt_cols, target_bytes, size_col,
+        pid_namespace=pid_namespace, bucket_bits=bucket_bits,
+    )
+    committed = store.committed_pids() if resume else set()
+    first = pid_base(pid_namespace, bucket_bits)
+    done = n_buckets <= len(committed) and committed.issuperset(
+        range(first, first + n_buckets)
+    )
+    # Single-bucket tables choose once in-task anyway; the sampled plan only
+    # pays for itself when it replaces many per-bucket selector runs.
+    use_plan = n_buckets > 1 and not done
+    if not use_plan:
+        stop_plan.set()
+    plan_thread.join()
+    if done:
+        # resumed over a namespace whose every pid is committed: no scan
+        return arrow_frame(df.sparkSession, [], SUMMARY_ARROW)
+    if not use_plan:
+        # the helper may have planned a column before it stopped
+        codec_plan, plan_lineage = {}, {}
+    elif plan_error:
+        raise plan_error[0]
 
     if resume:
         with_pid = skip_committed(with_pid, store)
-    data_cols = list(df.columns)
 
     def encode_one(pid: int, table: pa.Table) -> pa.RecordBatch:
         rows, blobs = encode_partition_arrays(

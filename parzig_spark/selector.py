@@ -11,6 +11,17 @@ candidate and pick the smallest (ties break toward the faster codec). Trial
 encoding makes the choice measurable rather than heuristic — the stats only
 bound how many trials we pay for. Stats and trial sizes are returned so the
 encode manifest can record full lineage per partition-column.
+
+Trial order: the fast codecs first, then the slow ones of
+``SLOW_CODEC_FACTOR`` (FSST). A slow codec must come in under ``factor ×``
+the best fast trial, and FSST has a size floor known without encoding:
+every token emits one code byte and covers at most ``MAX_SYMBOL_LEN`` = 8
+input bytes, so no FSST blob of ``payload_bytes`` string bytes is smaller
+than ``payload_bytes // 8``. When that floor already exceeds the bar, the
+FSST trial (a training and one or two encodes) is skipped. On a column
+trialled whole the skip cannot change a choice; on a larger column the
+floor bounds the column's true FSST size, so it changes one only where the
+extrapolated estimate had fallen below that floor.
 """
 
 from __future__ import annotations
@@ -21,6 +32,7 @@ import numpy as np
 import pyarrow as pa
 
 from .codecs import dtypes, encode_column
+from .codecs.fsst import MAX_SYMBOL_LEN
 
 SAMPLE_VALUES = 4096
 SAMPLE_BYTES = 1 << 18  # cap string sample payload at 256 KiB
@@ -199,16 +211,12 @@ def choose_codec(
             blob, meta = encode_column(sample, codec, outer=outer)
         return len(blob) + len(json.dumps(meta).encode())
 
-    trials: dict[str, int] = {}
     if total_bytes <= 512 << 10:
         # Small column: trial-encode the whole thing — exact sizes, no
         # sampling machinery (the real encode of the winner costs the same
         # again, which is negligible at this size).
-        for codec in cands:
-            try:
-                trials[codec] = trial_encode(values, codec)
-            except (TypeError, ValueError):
-                continue
+        def trial_size(codec: str) -> int:
+            return trial_encode(values, codec)
     else:
         # Two-point trials: encode a small and a larger sample, extrapolate
         # linearly to the full column so flat-cost codecs (RLE on long runs)
@@ -219,17 +227,29 @@ def choose_codec(
         m1, m2 = min(512, nn, max(64, budget_vals // 4)), min(2048, nn, budget_vals)
         s_small = _sample(values, m1)
         s_big = _sample(values, m2)
-        for codec in cands:
-            try:
-                size2 = trial_encode(s_big, codec)
-                if m2 > m1 and nn > m2:
-                    size1 = trial_encode(s_small, codec)
-                    per_value = max(0.0, (size2 - size1) / (m2 - m1))
-                    trials[codec] = int(size1 + per_value * (nn - m1))
-                else:
-                    trials[codec] = size2
-            except (TypeError, ValueError):
-                continue
+
+        def trial_size(codec: str) -> int:
+            size2 = trial_encode(s_big, codec)
+            if m2 > m1 and nn > m2:
+                size1 = trial_encode(s_small, codec)
+                per_value = max(0.0, (size2 - size1) / (m2 - m1))
+                return int(size1 + per_value * (nn - m1))
+            return size2
+
+    trials: dict[str, int] = {}
+    # fast codecs first: a slow codec's bar is set by the best of them
+    for codec in sorted(cands, key=lambda c: c in SLOW_CODEC_FACTOR):
+        if codec == "fsst":
+            # no FSST blob is smaller than one code byte per token of at
+            # most MAX_SYMBOL_LEN input bytes
+            floor = len(dtypes.string_buffers(values)[1]) // MAX_SYMBOL_LEN
+            fast = [s for c, s in trials.items() if c not in SLOW_CODEC_FACTOR]
+            if fast and floor > SLOW_CODEC_FACTOR[codec] * min(fast):
+                continue  # FSST cannot earn its CPU here
+        try:
+            trials[codec] = trial_size(codec)
+        except (TypeError, ValueError):
+            continue
     if not trials:
         return "plain", {"stats": stats, "trials": {}}
     fast_sizes = {c: s for c, s in trials.items() if c not in SLOW_CODEC_FACTOR}

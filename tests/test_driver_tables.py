@@ -4,8 +4,9 @@
 ``applySchemaToPythonRDD``: every action on the result runs a job of Python
 tasks just to unpickle the rows. An Arrow table becomes a LocalRelation.
 These tests pin that rule (a guard on every engine call), the job count it
-buys ``encode_table``, and ``batch_fingerprint``, the other driver-side
-step of a streaming or WAP append."""
+buys ``encode_table``, the contract of ``encode_table``'s codec-plan helper
+thread, and ``batch_fingerprint``, the other driver-side step of a
+streaming or WAP append."""
 
 import contextlib
 import threading
@@ -24,6 +25,7 @@ from parzig_spark.operators import (
     refs_table,
     snapshots_table,
 )
+from parzig_spark.operators import encode as encode_mod
 from parzig_spark.operators.encode import SUMMARY_SCHEMA, batch_fingerprint
 from parzig_spark.plans.manifest import ManifestStore
 
@@ -154,6 +156,71 @@ def test_codec_sample_job_joins_the_callers_job_group(spark, tmp_path, monkeypat
         _encode(df, str(tmp_path / "store"), 64 << 10).collect()
     assert (True, "encode-sample") in groups, groups
     assert all(g == "encode-sample" for _h, g in groups), groups
+
+
+def test_encode_resumed_over_a_committed_namespace_runs_no_scan(spark, tmp_path):
+    """Every pid of the namespace already committed: the resumed encode
+    runs only its planning jobs (three for the sizing, the codec sample)
+    and returns an empty summary without touching the store."""
+    df = _frame(spark)
+    root = str(tmp_path / "store")
+    store = ManifestStore(root)
+    first = _encode(df, root, 64 << 10).collect()
+    pids = store.committed_pids()
+    # 7 buckets of 8 KB groups at a 64 KB target, none of them empty
+    assert {r["pid"] for r in first} == pids == set(range(7))
+    store.fresh_snapshot()
+    versions = store.versions()
+    with _job_group(spark, "encode-done") as jobs:
+        summary = _encode(df, root, 64 << 10)
+        assert jobs() == 4
+        assert summary.schema == DataType.fromDDL(SUMMARY_SCHEMA)
+        assert summary.collect() == []
+        assert jobs() == 4
+    assert store.committed_pids() == pids
+    assert store.versions() == versions
+
+
+def test_codec_plan_error_raises_only_when_the_plan_is_used(spark, tmp_path, monkeypatch):
+    """An error of the helper thread's selector surfaces on the caller of
+    a multi-bucket encode; a single-bucket encode never uses the plan, so
+    it encodes."""
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("selector broke")
+
+    monkeypatch.setattr(encode_mod, "choose_codec", broken)
+    df = _frame(spark)
+    with pytest.raises(RuntimeError, match="selector broke"):
+        _encode(df, str(tmp_path / "multi"), 64 << 10)
+    rows = _encode(df, str(tmp_path / "single"), 64 << 20).collect()
+    assert {r["pid"] for r in rows} == {0}
+
+
+def test_single_bucket_encode_stops_the_codec_plan(spark, tmp_path, monkeypatch):
+    """A single-bucket encode chooses its codecs in its one task: the
+    helper thread stops before its next column, so the driver runs the
+    selector on at most one column. The recorded selector call waits for
+    the sizing to finish, which makes the count independent of timing."""
+    sized = threading.Event()
+    calls = []
+    real_plan, real_choose = encode_mod.plan_partitions, encode_mod.choose_codec
+
+    def plan_partitions(*args, **kwargs):
+        out = real_plan(*args, **kwargs)
+        sized.set()
+        return out
+
+    def choose_codec(*args, **kwargs):
+        calls.append(threading.current_thread() is threading.main_thread())
+        sized.wait(60)
+        return real_choose(*args, **kwargs)
+
+    monkeypatch.setattr(encode_mod, "plan_partitions", plan_partitions)
+    monkeypatch.setattr(encode_mod, "choose_codec", choose_codec)
+    rows = _encode(_frame(spark), str(tmp_path / "store"), 64 << 20).collect()
+    assert {r["pid"] for r in rows} == {0}
+    assert calls in ([], [False]), calls
 
 
 def _map_frame(spark):

@@ -75,3 +75,38 @@ def test_stats_deterministic():
     arr = CASES["lowcard_string"][0]
     assert column_stats(arr) == column_stats(arr)
     assert choose_codec(arr)[0] == choose_codec(arr)[0]
+
+
+def test_corpus_codecs_pinned():
+    """The seed-7 ``corpus_roundtrip`` input (perfbench rows 28,005-32,004
+    of the source-code corpus): the codec of every column."""
+    from parzig_spark.sources.source_code import _gen_batch
+
+    table = pa.Table.from_pandas(_gen_batch(np.arange(28005, 32005), 0.4), preserve_index=False)
+    chosen = {c: choose_codec(table.column(c))[0] for c in table.column_names}
+    assert chosen == {
+        "repo": "dict", "lang": "dict",
+        "path": "delta_length", "commit": "delta_length", "content": "delta_length",
+    }
+
+
+def test_fsst_trial_skipped_below_its_floor(monkeypatch):
+    """Eight long low-entropy strings: FSST is a candidate, but its size
+    floor (one code byte per 8 input bytes, ~63 KB) is far above dict's
+    whole size, so FSST is never trialled."""
+    from parzig_spark.codecs import fsst
+
+    calls = []
+    real = fsst.compress
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    words = [(w * 100)[:250] for w in ("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta")]
+    arr = pa.array(np.random.default_rng(7).choice(words, 2000).tolist())
+    monkeypatch.setattr(fsst, "compress", counted)
+    codec, lineage = choose_codec(arr)
+    assert codec == "dict"
+    assert "fsst" not in lineage["trials"]
+    assert calls == []
