@@ -51,7 +51,7 @@ from ..plans import prune
 from ..plans.manifest import ManifestStore
 from ..session import task_slots
 from .decode import (
-    _arrow_target_type,
+    _arrow_type,
     column_metas,
     deal_pids,
     map_pids,
@@ -231,7 +231,7 @@ def _answer(
         | set(group_by)
     )
     metas = column_metas(store, used or None)
-    types = {c: _arrow_target_type(m) for c, m in metas.items()}
+    types = {c: _arrow_type(m, target=True) for c, m in metas.items()}
     kinds = {c: _kind(t) for c, t in types.items()}
     if missing := sorted(used - kinds.keys()):
         raise ValueError(f"unknown column {missing[0]!r} in {store.root}")
@@ -299,7 +299,7 @@ def _answer(
 
         # map_pids over the run indexes: at most task_slots of them, so each
         # task gets one run and folds all of its pids
-        ddl = from_arrow_schema(schema)  # the decode DDL's types: _arrow_target_type
+        ddl = from_arrow_schema(schema)  # the decode DDL's types: _arrow_type(target=True)
         parts.append(map_pids(spark, list(range(len(runs))), fold_run, ddl).toArrow())
     if full.any():
         parts.append(_meta_rows(stats, pids[full], group_by, specs, ref_col).select(schema.names))

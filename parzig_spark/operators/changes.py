@@ -56,11 +56,8 @@ def _rewrite_silent_pids(
 
     Anything murkier falls through to the decode diff — correct either
     way, this is purely noise suppression."""
-    from .compact import rewrite_records
-
     silent: set[int] = set()
-    window_ops = ops_a ^ ops_b
-    for rec in rewrite_records(store_root):
+    for rec in ManifestStore(store_root).rewrite_records():
         if not set(rec.get("purged_ops", [])) <= (ops_a & ops_b):
             continue
         for g in rec["groups"]:

@@ -39,14 +39,13 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.manifest import FORMAT_VERSION, ManifestStore
 from ..session import arrow_frame
-from .decode import _arrow_natural_type, decode_pid_rows, manifest_rows, map_pids
+from .decode import _arrow_type, decode_pid_rows, manifest_rows, map_pids
 from .encode import SUMMARY_ARROW, SUMMARY_SCHEMA, encode_partition_arrays, summary_batch
 
 
@@ -185,26 +184,10 @@ def compact_store(
             raise ValueError("zorder_cols needs >= 2 columns (use sort_cols for 1)")
     src = ManifestStore(src_root)
     src.check_format()
-    src_config = src.config()
-    if sort_cols is None and zorder_cols is None:
-        sort_cols = src_config.get("sort_cols") or []
-    sort_cols = sort_cols or []
-    groups = plan_compaction(src, target_bytes)
-    grouped_pids = {p for g in groups for p in g}
-    # merge-on-read → copy-on-write handoff: any partition carrying a
-    # committed delete bitmap must REWRITE (the rewrite filters deleted
-    # rows out), never pass through blob-for-blob — the destination store
-    # materializes post-delete rows and carries no delete files at all
-    delete_ops = src.committed_delete_ops()
-    purge_pids = {
-        pid
-        for pid in src.committed_pids()
-        if src.delete_bitmap_paths(pid, delete_ops)
-    }
-    for pid in sorted(purge_pids - grouped_pids):
-        groups.append([pid])
-        grouped_pids.add(pid)
-    passthrough = sorted(src.committed_pids() - grouped_pids)
+    src_config, sort_cols, groups, delete_ops = _plan_rewrite(
+        src, target_bytes, sort_cols, zorder_cols
+    )
+    passthrough = sorted(src.committed_pids() - {p for g in groups for p in g})
 
     dst = ManifestStore(dst_root)
     dst.ensure_config(
@@ -240,6 +223,26 @@ def compact_store(
         spark, src_root, dst_root, work, src_config, delete_ops,
         sort_cols, zorder_cols, outer, page_values, commit=True,
     )
+
+
+def _plan_rewrite(store, target_bytes, sort_cols, zorder_cols):
+    """(store config, sort_cols, merge groups, committed delete ops) of a
+    compaction of ``store`` — the one planner behind compact_store and
+    rewrite_store. ``sort_cols`` defaults to the store's own unless a
+    z-order is asked for. Any partition carrying a committed delete
+    bitmap must be REWRITTEN, since the rewrite filters deleted rows out,
+    never passed through blob-for-blob (the merge-on-read → copy-on-write
+    handoff), so each one plan_compaction left out becomes a group of its
+    own."""
+    config = store.config()
+    if sort_cols is None and zorder_cols is None:
+        sort_cols = config.get("sort_cols")
+    groups = plan_compaction(store, target_bytes)
+    grouped = {p for g in groups for p in g}
+    delete_ops = store.committed_delete_ops()
+    purge = {pid for pid in store.committed_pids() if store.delete_bitmap_paths(pid, delete_ops)}
+    groups += [[pid] for pid in sorted(purge - grouped)]
+    return config, sort_cols or [], groups, delete_ops
 
 
 def _rewrite_groups_job(
@@ -308,29 +311,8 @@ def _group_table(src_root, pids, src_config, delete_ops):
         table = pa.Table.from_batches(batches).combine_chunks()
     else:
         metas = {c: json.loads(first[c]["meta_json"]) for c in columns}
-        table = pa.table({c: pa.array([], _arrow_natural_type(m)) for c, m in metas.items()})
+        table = pa.table({c: pa.array([], _arrow_type(m)) for c, m in metas.items()})
     return table, {c: first[c]["codec"] for c in columns}
-
-
-def _rewrites_dir(root: str) -> str:
-    return os.path.join(root, "rewrites")
-
-
-def rewrite_records(root: str) -> list[dict]:
-    """All durable rewrite intent records, oldest first — each
-    ``{"groups": [{"dst": pid, "src": [pids]}], "purged_ops": [...]}``.
-    Metadata-scale lineage: changes_table and the stream reader consult
-    these to keep pure rewrites CDC-silent."""
-    d = _rewrites_dir(root)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for f in sorted(os.listdir(d)):
-        if not f.endswith(".json") or ".tmp-" in f:
-            continue
-        with open(os.path.join(d, f)) as fh:
-            out.append(json.load(fh))
-    return out
 
 
 def repair_rewrites(root: str) -> int:
@@ -343,7 +325,7 @@ def repair_rewrites(root: str) -> int:
     from byte-identical staging). Returns the number of groups repaired."""
     store = ManifestStore(root)
     fixed = 0
-    for rec in rewrite_records(root):
+    for rec in store.rewrite_records():
         for g in rec["groups"]:
             if store.is_committed(int(g["dst"])):
                 fixed += sum(store.retire_partition(int(s)) for s in g["src"])
@@ -388,19 +370,9 @@ def rewrite_store(
     store = ManifestStore(root)
     store.check_format()
     repair_rewrites(root)
-    config = store.config()
-    if sort_cols is None and zorder_cols is None:
-        sort_cols = config.get("sort_cols") or []
-    sort_cols = sort_cols or []
-    groups = plan_compaction(store, target_bytes)
-    grouped = {p for g in groups for p in g}
-    delete_ops = store.committed_delete_ops()
-    purge_pids = {
-        pid for pid in store.committed_pids()
-        if store.delete_bitmap_paths(pid, delete_ops)
-    }
-    for pid in sorted(purge_pids - grouped):
-        groups.append([pid])
+    config, sort_cols, groups, delete_ops = _plan_rewrite(
+        store, target_bytes, sort_cols, zorder_cols
+    )
     if not groups:
         snap = store.write_snapshot()
         return {"groups": 0, "rewritten_pids": [], "dst_pids": [],
@@ -418,19 +390,7 @@ def rewrite_store(
     mapping = [
         {"dst": _dst_pid(g), "src": sorted(int(p) for p in g)} for g in groups
     ]
-    rec = {"groups": mapping, "purged_ops": sorted(delete_ops)}
-    digest = hashlib.sha256(
-        json.dumps(rec, sort_keys=True).encode()
-    ).hexdigest()[:16]
-    d = _rewrites_dir(root)
-    os.makedirs(d, exist_ok=True)
-    final = os.path.join(d, f"rw-{digest}.json")
-    tmp = final + f".tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(rec, f, sort_keys=True)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, final)
+    store.write_rewrite_record({"groups": mapping, "purged_ops": sorted(delete_ops)})
 
     # phase 3: flip each group (dst marker, then retire sources)
     for g in mapping:

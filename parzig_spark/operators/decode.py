@@ -31,151 +31,69 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
 
 from ..codecs import decode_column
 from ..plans import prune
 from ..plans.manifest import ManifestStore
 from ..session import task_slots
 
-# Every token the encoder accepts maps to a Spark type (SURVEY §1.2
+# Spark has no unsigned, half-float, fixed-width binary, 64-bit date or
+# time-of-day type, and its timestamps are microseconds: the SURVEY §1.2
 # widenings, mirroring the reference's logical reinterpretations at
-# /root/reference/src/parquet/logical.zig:138-228: unsigned widens to the
-# next signed type, uint64 to decimal(20,0), times to their integer lane).
-_TOKEN_TO_SPARK = {
-    "bool": "boolean",
-    "int8": "tinyint",
-    "int16": "smallint",
-    "int32": "int",
-    "int64": "long",
-    "uint8": "smallint",
-    "uint16": "int",
-    "uint32": "long",
-    "uint64": "decimal(20,0)",
-    "float32": "float",
-    "float64": "double",
-    "date32": "date",
-    "date64": "date",
-    "time32[ms]": "int",
-    "time64[us]": "long",
-    "time64[ns]": "long",
-    "timestamp[us]": "timestamp",
-    "timestamp[ns]": "timestamp",
-    "timestamp[ms]": "timestamp",
-    "timestamp[s]": "timestamp",
-    "string": "string",
-    "large_string": "string",
-    "binary": "binary",
-    "large_binary": "binary",
-    "halffloat": "float",  # Float16 widens losslessly (ref logical.zig:216-228)
-}
-
-# Arrow-side cast applied after decode so the batch type matches the
-# declared Spark DDL exactly (Spark timestamps are microseconds; a store
-# encoded from s/ms/ns units would otherwise yield mismatched Arrow types).
-# ns→us truncates — Spark cannot represent nanoseconds; the codec-level
+# /root/reference/src/parquet/logical.zig:138-228 (unsigned widens to the
+# next signed type, uint64 to decimal(20,0), times to their integer lane,
+# Float16 losslessly to float32). ns→us truncates — the codec-level
 # round-trip (decode_column) stays bit-exact in the stored unit.
-_TOKEN_CAST = {
-    "uint8": pa.int16(),
-    "uint16": pa.int32(),
-    "uint32": pa.int64(),
-    "uint64": pa.decimal128(20, 0),
-    "date64": pa.date32(),
-    "time32[ms]": pa.int32(),
-    "time64[us]": pa.int64(),
-    "time64[ns]": pa.int64(),
-    "timestamp[s]": pa.timestamp("us"),
-    "timestamp[ms]": pa.timestamp("us"),
-    "timestamp[ns]": pa.timestamp("us"),
-    "halffloat": pa.float32(),
+_WIDEN = {
+    pa.uint8(): pa.int16(),
+    pa.uint16(): pa.int32(),
+    pa.uint32(): pa.int64(),
+    pa.uint64(): pa.decimal128(20, 0),
+    pa.float16(): pa.float32(),
+    pa.date64(): pa.date32(),
+    pa.time32("ms"): pa.int32(),
+    pa.time64("us"): pa.int64(),
+    pa.time64("ns"): pa.int64(),
 }
 
 
-def _arrow_natural_type(meta: dict) -> pa.DataType:
-    """The Arrow type ``decode_column`` produces for this meta, pre-cast."""
+def _arrow_type(meta: dict, target: bool = False) -> pa.DataType:
+    """The Arrow type ``decode_column`` produces for this meta or, with
+    ``target``, the one a Spark column holds (``_WIDEN`` applied through
+    list/map/struct children; the Spark type is ``from_arrow_type`` of
+    it)."""
     from ..codecs import dtypes
 
     codec = meta.get("codec")
     if codec == "paged":
-        return _arrow_natural_type(meta["pages"][0]["meta"])
+        return _arrow_type(meta["pages"][0]["meta"], target)
     if codec == "list":
         cls = pa.large_list if meta.get("large") else pa.list_
-        return cls(_arrow_natural_type(meta["child_meta"]))
+        return cls(_arrow_type(meta["child_meta"], target))
     if codec == "map":
         return pa.map_(
-            _arrow_natural_type(meta["keys_meta"]), _arrow_natural_type(meta["items_meta"])
+            _arrow_type(meta["keys_meta"], target), _arrow_type(meta["items_meta"], target)
         )
     if codec == "struct":
         return pa.struct(
-            [pa.field(n, _arrow_natural_type(cm)) for n, cm in zip(meta["fields"], meta["children"])]
+            [pa.field(n, _arrow_type(cm, target)) for n, cm in zip(meta["fields"], meta["children"])]
         )
     if codec == "decimal":
-        return dtypes.arrow_type(meta["dtype"])
-    if meta.get("fixed"):
-        return pa.binary(meta["fixed"])
-    if meta.get("halffloat"):
-        return pa.float16()
-    return dtypes.arrow_type(meta["codec_meta"]["dtype"])
-
-
-def _arrow_target_type(meta: dict) -> pa.DataType:
-    """The Arrow type matching the declared Spark DDL — _TOKEN_CAST widenings
-    applied recursively through list/map/struct children, so nested uint64 /
-    timestamp[s|ms|ns] / date64 / halffloat columns cast to the DDL type the
-    same way top-level ones do."""
-    from ..codecs import dtypes
-
-    codec = meta.get("codec")
-    if codec == "paged":
-        return _arrow_target_type(meta["pages"][0]["meta"])
-    if codec == "list":
-        cls = pa.large_list if meta.get("large") else pa.list_
-        return cls(_arrow_target_type(meta["child_meta"]))
-    if codec == "map":
-        return pa.map_(
-            _arrow_target_type(meta["keys_meta"]), _arrow_target_type(meta["items_meta"])
-        )
-    if codec == "struct":
-        return pa.struct(
-            [pa.field(n, _arrow_target_type(cm)) for n, cm in zip(meta["fields"], meta["children"])]
-        )
-    if codec == "decimal":
-        return dtypes.arrow_type(meta["dtype"])
-    if meta.get("fixed"):
-        return pa.binary()  # Spark has no fixed-width binary
-    if meta.get("halffloat"):
-        return pa.float32()  # lossless widening; Spark has no half
-    token = meta["codec_meta"]["dtype"]
-    if token.startswith("timestamp[") and "tz=" in token:
-        # tz-aware (Spark TimestampType / INT96-sourced): Spark's unit is us
-        tz = token.split(",tz=")[1].rstrip("]")
-        return pa.timestamp("us", tz)
-    return _TOKEN_CAST.get(token, dtypes.arrow_type(token))
-
-
-def _spark_type(meta: dict) -> str:
-    if meta.get("codec") == "paged":
-        return _spark_type(meta["pages"][0]["meta"])
-    codec_meta = meta.get("codec_meta", meta)
-    if meta.get("codec") == "list":
-        child = _spark_type(meta["child_meta"])
-        return f"array<{child}>"
-    if meta.get("codec") == "map":
-        return f"map<{_spark_type(meta['keys_meta'])},{_spark_type(meta['items_meta'])}>"
-    if meta.get("codec") == "struct":
-        inner = ",".join(
-            f"{name}:{_spark_type(cm)}" for name, cm in zip(meta["fields"], meta["children"])
-        )
-        return f"struct<{inner}>"
-    if meta.get("codec") == "decimal":
-        return "decimal" + meta["dtype"][len("decimal128") :]
-    if meta.get("fixed"):
-        return "binary"
-    if meta.get("halffloat"):
-        return "float"
-    token = codec_meta["dtype"]
-    if token.startswith("timestamp[") and "tz=" in token:
-        return "timestamp"  # Spark TimestampType (LTZ)
-    return _TOKEN_TO_SPARK[token]
+        t = dtypes.arrow_type(meta["dtype"])
+    elif meta.get("fixed"):
+        t = pa.binary(meta["fixed"])
+    elif meta.get("halffloat"):
+        t = pa.float16()
+    else:
+        t = dtypes.arrow_type(meta["codec_meta"]["dtype"])
+    if not target:
+        return t
+    if pa.types.is_fixed_size_binary(t):
+        return pa.binary()
+    if pa.types.is_timestamp(t):
+        return pa.timestamp("us", t.tz)
+    return _WIDEN.get(t, t)
 
 
 def column_metas(store: ManifestStore, columns=None) -> dict[str, dict]:
@@ -214,9 +132,9 @@ def schema_of(
         if columns is not None and name not in columns:
             continue
         cols.append(name)
-        ddl.append(f"{name} {_spark_type(meta)}")
-        target = _arrow_target_type(meta)
-        if target != _arrow_natural_type(meta):
+        target = _arrow_type(meta, target=True)
+        ddl.append(f"{name} {from_arrow_type(target).simpleString()}")
+        if target != _arrow_type(meta):
             casts[name] = target
     if columns is not None:
         order = {c: i for i, c in enumerate(columns)}
@@ -367,7 +285,7 @@ def plan_read(
     store = ManifestStore(store_root)
     _version, snap, delete_ops = resolve_view(store, snapshot, ref)
     metas = column_metas(store, {c for c, _op, _v in predicates}) if predicates else {}
-    prune.check_rows({c: _arrow_target_type(m) for c, m in metas.items()}, predicates)
+    prune.check_rows({c: _arrow_type(m, target=True) for c, m in metas.items()}, predicates)
     _stats, all_pids, state = prune.plan(
         snap, predicates, {c: prune.lane(m) for c, m in metas.items()}
     )
@@ -506,7 +424,7 @@ def decode_pid_rows(
             return decoded[name]
 
         if pred_cols and keep.any():
-            typed = {c: column(c).cast(_arrow_target_type(metas[c]), safe=False) for c in pred_cols}
+            typed = {c: column(c).cast(_arrow_type(metas[c], target=True), safe=False) for c in pred_cols}
             keep &= prune.row_mask(pa.table(typed), predicates)
         if not keep.any():
             continue  # nothing matches: the other columns stay encoded

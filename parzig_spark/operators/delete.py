@@ -57,6 +57,19 @@ def delete_op_id(predicates, committed_pids) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()[:24]
 
 
+def write_bitmap(store_root: str, op_id: str, pid: int, mask, prior_ops) -> dict:
+    """Write ``pid``'s bitmap of ``op_id`` (``mask`` over its physical
+    rows, True = deleted) write-ahead into the op's unmarked, invisible
+    dir, and return its summary row: ``n_new`` counts the rows no op of
+    ``prior_ops`` had deleted yet."""
+    local = ManifestStore(store_root)
+    prior = local.load_delete_mask(pid, len(mask), prior_ops)
+    n_match = int(mask.sum())
+    n_new = n_match if prior is None else int((mask & ~prior).sum())
+    local.write_delete_bitmap(op_id, pid, mask)
+    return {"pid": pid, "n_rows": len(mask), "n_match": n_match, "n_new": n_new}
+
+
 def delete_rows(
     spark: SparkSession, store_root: str, predicates: list[tuple]
 ) -> dict:
@@ -89,17 +102,8 @@ def delete_rows(
         # types a read compares at
         table = pa.Table.from_batches(list(read_pid(store_root, pid, pred_cols, casts)))
         mask = prune.row_mask(table, predicates)
-        if not mask.any():
-            return
-        local = ManifestStore(store_root)
-        prior = local.load_delete_mask(pid, table.num_rows, existing_ops)
-        n_new = int(mask.sum() if prior is None else (mask & ~prior).sum())
-        # write-ahead into the (unmarked, invisible) op dir
-        local.write_delete_bitmap(op_id, pid, mask)
-        yield pa.RecordBatch.from_pylist(
-            [{"pid": pid, "n_rows": table.num_rows, "n_match": int(mask.sum()),
-              "n_new": n_new}]
-        )
+        if mask.any():
+            yield pa.RecordBatch.from_pylist([write_bitmap(store_root, op_id, pid, mask, existing_ops)])
 
     summary = map_pids(spark, pids, scan, DELETE_SUMMARY_SCHEMA).toArrow()
     # the job succeeded and every touched partition's bitmap is in place —

@@ -178,7 +178,7 @@ def plan_partitions(
     as Arrow and its salted groups handed back as a broadcast LocalRelation
     (saves recomputing the aggregation; an Arrow table, unlike a Python
     list, needs no Python job to reach Spark); above it the salt table is
-    persisted and joined distributed — no unbounded collect on the driver.
+    joined distributed — no unbounded collect on the driver.
     """
     spark = df.sparkSession
     size_expr = F.octet_length(F.col(size_col)) if size_col else F.lit(256)
@@ -191,27 +191,22 @@ def plan_partitions(
             F.greatest(F.lit(1), F.ceil(F.col("_grp_bytes") / F.lit(target_bytes))).cast("int"),
         )
     )
-    # One sizing scan, ONE Spark action in the common path: collect at most
-    # limit+1 rows of the per-group table. Getting ≤ limit rows proves we
-    # hold the complete group set (totals computed driver-side); limit+1
-    # rows means the group count is unbounded → switch to the fully
-    # distributed path (persisted salt table + executor-side join + 1-row
-    # totals action) so the driver never materializes millions of groups.
-    sizes = sizes.persist()  # both planning actions reuse the one sizing scan
+    # ONE Spark action in the common path: collect at most limit+1 rows of
+    # the per-group table. Getting ≤ limit rows proves we hold the complete
+    # group set (totals computed driver-side); limit+1 rows means the group
+    # count is unbounded → switch to the fully distributed path (a 1-row
+    # totals action + executor-side join) so the driver never materializes
+    # millions of groups. Nothing is cached: that path pays a column-pruned
+    # sizing scan for the totals and one more in the encode's join, and
+    # never leaks a groups-sized cached table into session storage for the
+    # lifetime of a long-running (e.g. streaming) driver.
     size_tbl = sizes.limit(broadcast_group_limit + 1).toArrow()
     distributed = size_tbl.num_rows > broadcast_group_limit
     if distributed:
         totals = sizes.agg(F.sum("_grp_bytes").alias("_total")).first()
         total_bytes = int(totals["_total"] or 0)
-        # Unpersist before the (lazy) join below: the encode job recomputes
-        # the sizing aggregation once more during its shuffle, which costs
-        # one extra column-pruned scan in this rare >65k-groups path but
-        # never leaks a groups-sized cached table into session storage for
-        # the lifetime of a long-running (e.g. streaming) driver.
-        sizes.unpersist()
     else:
         total_bytes = pc.sum(size_tbl.column("_grp_bytes")).as_py() or 0
-        sizes.unpersist()
     # n_buckets is a *data* property (bytes/target), never a cluster
     # property: partition ids must be identical across cluster sizes or a
     # resume on a different cluster re-encodes everything.
@@ -219,8 +214,7 @@ def plan_partitions(
     if pid_namespace is not None:
         n_buckets = min(n_buckets, 1 << bucket_bits)
     if distributed:
-        # AQE picks the physical join; the persisted aggregate is reused,
-        # so this still costs one sizing scan total.
+        # AQE picks the physical join
         out = df.join(sizes.select(*group_cols, "_nsalt"), on=group_cols, how="left")
     else:
         # Only groups above the target carry a salt; a group missing from

@@ -36,7 +36,6 @@ original column plus the new ones.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame
 
@@ -132,7 +131,7 @@ def add_columns(
 
     def backfill_one(pid, table):
         src_local = ManifestStore(src_root)
-        if not os.path.exists(src_local.manifest_path(pid)):
+        if not src_local.is_staged(pid):
             raise ValueError(
                 f"add_columns: pid {pid} has no source manifest in "
                 f"{src_root} — the DataFrame's rows do not reproduce the "

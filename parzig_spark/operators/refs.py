@@ -18,12 +18,13 @@ long as the ref exists (``expire_snapshots`` respecting refs). Dropping
 the ref releases the pin; the next GC reclaims whatever nothing else
 holds.
 
-Storage: one JSON file per ref under ``{root}/refs/`` — metadata-scale
-(bytes per ref), driver-written. Tag creation is atomic via the
-write-then-hardlink claim (the marker appears WITH its content, and
-``os.link`` fails iff the name exists — no create/write crash window);
-branch moves are tmp+rename last-writer-wins, the same single-driver
-maintenance discipline as ``write_snapshot``. The reference is read-only
+Storage: one JSON record per ref, which ``ManifestStore`` owns
+(``refs/<name>.json``; it checks the name before building a path).
+Metadata-scale (bytes per ref), driver-written. A tag is created with
+the store's first-writer-wins claim, so it appears WITH its content and
+a second creator sees the first one's record; a branch move replaces
+the record (last writer wins), the same single-driver maintenance
+discipline as ``write_snapshot``. The reference is read-only
 and has no history surface; the nearest citation is the footer
 ``FileMetaData`` its CLI dumps per file (one immutable version per file —
 /root/reference/src/parquet/File.zig:58-91), which refs generalize to a
@@ -32,33 +33,13 @@ multi-version store.
 
 from __future__ import annotations
 
-import json
-import os
-import re
-import uuid
-
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.manifest import ManifestStore, version_of
 from ..session import arrow_frame
 
-_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
-
 REFS_SCHEMA = pa.schema([("name", pa.string()), ("kind", pa.string()), ("snapshot", pa.int64())])
-
-
-def _refs_dir(root: str) -> str:
-    return os.path.join(root, "refs")
-
-
-def _ref_path(root: str, name: str) -> str:
-    if not _NAME_RE.match(name):
-        raise ValueError(
-            f"invalid ref name {name!r} (allowed: [A-Za-z0-9._-], "
-            "must start alphanumeric, <=128 chars)"
-        )
-    return os.path.join(_refs_dir(root), f"{name}.json")
 
 
 def create_ref(
@@ -80,30 +61,16 @@ def create_ref(
     else:
         store.snapshot_path(version)  # raises if the snapshot doesn't exist
     rec = {"name": name, "kind": kind, "snapshot": int(version)}
-    path = _ref_path(root, name)
-    os.makedirs(_refs_dir(root), exist_ok=True)
-    payload = json.dumps(rec, sort_keys=True)
-    tmp = os.path.join(_refs_dir(root), f".tmp-{name}-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        f.write(payload)
-        f.flush()
-        os.fsync(f.fileno())
     if kind == "branch":
-        os.replace(tmp, path)  # movable pointer: last writer wins
+        store.write_ref(rec)  # movable pointer: last writer wins
         return rec
-    try:
-        os.link(tmp, path)  # atomic tag claim: fails iff the name exists
-        return rec
-    except FileExistsError:
-        existing = read_ref(root, name)
-        if existing == rec:
-            return rec  # idempotent replay
-        raise ValueError(
-            f"{root}: ref {name!r} already exists as {existing} — tags are "
-            "immutable (drop_ref first, or use a branch)"
-        )
-    finally:
-        os.unlink(tmp)
+    existing = store.claim_ref(rec)
+    if existing is None or existing == rec:
+        return rec  # created, or an idempotent replay
+    raise ValueError(
+        f"{root}: ref {name!r} already exists as {existing} — tags are "
+        "immutable (drop_ref first, or use a branch)"
+    )
 
 
 def update_ref(root: str, name: str, version: int) -> dict:
@@ -121,23 +88,13 @@ def update_ref(root: str, name: str, version: int) -> dict:
     store = ManifestStore(root)
     store.snapshot_path(version)  # must exist
     rec = {"name": name, "kind": "branch", "snapshot": int(version)}
-    path = _ref_path(root, name)
-    tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        f.write(json.dumps(rec, sort_keys=True))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
+    store.write_ref(rec)
     return rec
 
 
 def read_ref(root: str, name: str) -> dict | None:
     """The ref record, or None if absent."""
-    path = _ref_path(root, name)
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
+    return ManifestStore(root).read_ref(name)
 
 
 def resolve_ref(root: str, name: str) -> int:
@@ -151,26 +108,12 @@ def resolve_ref(root: str, name: str) -> int:
 
 def drop_ref(root: str, name: str) -> bool:
     """Remove a ref (releasing its GC pin). Returns False if absent."""
-    path = _ref_path(root, name)
-    try:
-        os.unlink(path)
-        return True
-    except FileNotFoundError:
-        return False
+    return ManifestStore(root).drop_ref(name)
 
 
 def list_refs(root: str) -> list[dict]:
     """All ref records, name-sorted (driver-side; refs are metadata-scale)."""
-    d = _refs_dir(root)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for f in sorted(os.listdir(d)):
-        if not f.endswith(".json") or f.startswith(".tmp-"):
-            continue
-        with open(os.path.join(d, f)) as fh:
-            out.append(json.load(fh))
-    return out
+    return ManifestStore(root).refs()
 
 
 def pinned_versions(root: str) -> set[int]:

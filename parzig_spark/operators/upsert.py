@@ -46,8 +46,8 @@ from pyspark.sql import functions as F
 
 from ..plans.manifest import ManifestStore, claim_namespace
 from ..session import task_slots
-from .decode import decode_table
-from .delete import DELETE_SUMMARY_SCHEMA
+from .decode import decode_table, manifest_rows
+from .delete import DELETE_SUMMARY_SCHEMA, write_bitmap
 from .encode import append_pinned
 
 
@@ -104,13 +104,7 @@ def upsert_rows(
     digest = f"{dig_row['s']}/{n_updates}"
     committed = store.committed_pids()
     op_id = upsert_op_id(digest, key_cols, committed)
-    if store.is_delete_op_committed(op_id):
-        return {
-            "op_id": op_id, "committed": False,
-            "partitions_touched": 0, "rows_replaced": 0,
-            "rows_inserted": 0,
-        }
-    if n_updates == 0:
+    if n_updates == 0 or store.is_delete_op_committed(op_id):
         return {
             "op_id": op_id, "committed": False,
             "partitions_touched": 0, "rows_replaced": 0, "rows_inserted": 0,
@@ -125,40 +119,22 @@ def upsert_rows(
     matches = stored_keys.join(upd_keys, on=list(key_cols), how="left_semi").select(
         F.col("_pid").alias("pid"), F.col("_pos").alias("pos")
     )
-    # physical row counts ride along for bitmap sizing (metadata join)
-    snap = spark.read.parquet(store.fresh_snapshot())
     ref_col = store_cols[0]
-    pid_n = snap.filter(F.col("column") == ref_col).select("pid", "n_values")
-    matched = matches.join(pid_n, on="pid", how="inner")
 
     def write_bitmaps(batches):
-        local = ManifestStore(store_root)
-        by_pid: dict[int, tuple[int, list]] = {}
+        by_pid: dict[int, list[int]] = {}
         for batch in batches:
-            pids = batch.column("pid").to_numpy(zero_copy_only=False)
-            poss = batch.column("pos").to_numpy(zero_copy_only=False)
-            ns = batch.column("n_values").to_numpy(zero_copy_only=False)
-            for p, q, n in zip(pids, poss, ns):
-                by_pid.setdefault(int(p), (int(n), []))[1].append(int(q))
-        out = []
-        for pid, (n_phys, positions) in by_pid.items():
+            for p, q in zip(batch.column("pid").to_pylist(), batch.column("pos").to_pylist()):
+                by_pid.setdefault(p, []).append(q)
+        for pid, positions in by_pid.items():
+            # the partition's physical row count, from its manifest
+            n_phys = manifest_rows(store_root, pid, ["n_values"], [ref_col])[0]["n_values"]
             mask = np.zeros(n_phys, dtype=bool)
             mask[np.asarray(positions, dtype=np.int64)] = True
-            prior = local.load_delete_mask(pid, n_phys, existing_ops)
-            n_new = int(mask.sum() if prior is None else (mask & ~prior).sum())
-            local.write_delete_bitmap(op_id, pid, mask)
-            out.append(
-                {"pid": pid, "n_rows": n_phys, "n_match": int(mask.sum()),
-                 "n_new": n_new}
-            )
-        schema = pa.schema(
-            [("pid", pa.int64()), ("n_rows", pa.int64()),
-             ("n_match", pa.int64()), ("n_new", pa.int64())]
-        )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+            yield pa.RecordBatch.from_pylist([write_bitmap(store_root, op_id, pid, mask, existing_ops)])
 
     summary = (
-        matched.repartition(task_slots(spark), "pid")
+        matches.repartition(task_slots(spark), "pid")
         .mapInArrow(write_bitmaps, schema=DELETE_SUMMARY_SCHEMA)
         .groupBy()
         .agg(

@@ -24,8 +24,10 @@ byte-identical blobs.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -99,6 +101,7 @@ FORMAT_VERSION = 7
 
 
 _MARK = "_committed_"
+_REF_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 
 
 class ManifestStore:
@@ -116,12 +119,20 @@ class ManifestStore:
       (versions compare as integers, :meth:`versions`);
     - ``deletes/<op>/<pid>.bin`` + ``deletes/_committed_<op>``: a delete
       op's per-partition bitmaps and its commit marker;
-    - ``*.tmp-*``: an unfinished tmp+rename, reclaimed by :meth:`reclaim`.
+    - ``refs/<name>.json``: a named snapshot ref (:meth:`read_ref`,
+      :meth:`write_ref`, :meth:`claim_ref`);
+    - ``rewrites/rw-<16 hex>.json``: the durable intent of one in-place
+      rewrite (:meth:`write_rewrite_record`, :meth:`rewrite_records`);
+    - ``namespaces/ns_<n>``: the batch fingerprint that claimed a pid
+      namespace (:func:`claim_namespace`);
+    - ``*.tmp-*``: an unfinished write, reclaimed by :meth:`reclaim`.
 
-    ``namespaces/`` belongs to :func:`claim_namespace`, ``refs/`` to
-    ``operators/refs.py`` and ``rewrites/`` to ``operators/compact.py``.
-    Reads never create a directory; each write creates the ones it needs,
-    so a read of a mistyped root leaves nothing behind."""
+    A file with content lands through one of two primitives:
+    :func:`_write_file` (tmp + rename, last writer wins) or
+    :func:`_claim_file` (tmp + hardlink, first writer wins); markers are
+    empty ``O_EXCL`` files (:func:`_create_marker`). Reads never create a
+    directory; each write creates the ones it needs, so a read of a
+    mistyped root leaves nothing behind."""
 
     def __init__(self, root: str):
         self.root = root
@@ -134,8 +145,7 @@ class ManifestStore:
     def config(self) -> dict | None:
         """The pinned store config; None when ``root`` holds no store."""
         try:
-            with open(os.path.join(self.root, "store_config.json")) as f:
-                return json.load(f)
+            return _read_json(os.path.join(self.root, "store_config.json"))
         except FileNotFoundError:
             return None
 
@@ -297,8 +307,7 @@ class ManifestStore:
         (older stores) fall back to the empty list: their rows were written
         before row-level deletes existed."""
         try:
-            with open(self._snap_path(version, ".deletes.json")) as f:
-                return json.load(f)
+            return _read_json(self._snap_path(version, ".deletes.json"))
         except FileNotFoundError:
             return []
 
@@ -393,7 +402,7 @@ class ManifestStore:
         for op in src.committed_delete_ops():
             os.makedirs(self.deletes_dir(op), exist_ok=True)
             for f in _listdir(src.deletes_dir(op)):
-                if ".tmp-" not in f:
+                if not _is_tmp(f):
                     link_file(
                         os.path.join(src.deletes_dir(op), f),
                         os.path.join(self.deletes_dir(op), f),
@@ -420,6 +429,65 @@ class ManifestStore:
             with open(p, "rb") as f:
                 deleted |= decode_u64(f.read(), n_phys, 1).astype(bool)
         return deleted
+
+    # -- refs (operators/refs.py) and rewrite intents (operators/compact.py) --
+    def _ref_path(self, name: str) -> str:
+        # a ref name is outside input: check it before it becomes a path
+        if not _REF_NAME_RE.match(name):
+            raise ValueError(
+                f"invalid ref name {name!r} (allowed: [A-Za-z0-9._-], "
+                "must start alphanumeric, <=128 chars)"
+            )
+        return os.path.join(self.root, "refs", f"{name}.json")
+
+    def read_ref(self, name: str) -> dict | None:
+        """The ref record ``name``, or None if absent."""
+        try:
+            return _read_json(self._ref_path(name))
+        except FileNotFoundError:
+            return None
+
+    def write_ref(self, rec: dict) -> None:
+        """Publish ``rec`` at its name, replacing any record there (a
+        branch move: last writer wins)."""
+        path = self._ref_path(rec["name"])
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        _write_file(path, _record_bytes(rec), durable=True)
+
+    def claim_ref(self, rec: dict) -> dict | None:
+        """Publish ``rec`` iff its name is free (a tag); None when this
+        call created it, else the record already there."""
+        existing = _claim_file(self._ref_path(rec["name"]), _record_bytes(rec))
+        return None if existing is None else json.loads(existing)
+
+    def drop_ref(self, name: str) -> bool:
+        """Remove ref ``name``. False when it was absent."""
+        return _remove(self._ref_path(name))
+
+    def refs(self) -> list[dict]:
+        """Every ref record, name-sorted."""
+        d = os.path.join(self.root, "refs")
+        return [_read_json(os.path.join(d, f)) for f in sorted(_listdir(d)) if f.endswith(".json")]
+
+    def write_rewrite_record(self, rec: dict) -> None:
+        """Durably record one in-place rewrite's intent under a name
+        derived from its content, so a replayed rewrite rewrites it."""
+        data = _record_bytes(rec)
+        d = os.path.join(self.root, "rewrites")
+        os.makedirs(d, exist_ok=True)
+        name = f"rw-{hashlib.sha256(data).hexdigest()[:16]}.json"
+        _write_file(os.path.join(d, name), data, durable=True)
+
+    def rewrite_records(self) -> list[dict]:
+        """Every rewrite intent record, each ``{"groups": [{"dst": pid,
+        "src": [pids]}], "purged_ops": [...]}``: the crash-repair log, and
+        the lineage changes_table and the stream reader consult to keep
+        pure rewrites CDC-silent."""
+        d = os.path.join(self.root, "rewrites")
+        return [
+            _read_json(os.path.join(d, f)) for f in sorted(_listdir(d))
+            if f.startswith("rw-") and f.endswith(".json")
+        ]
 
     # -- readers ------------------------------------------------------------
     def blob_path(self, pid: int, column: str) -> str:
@@ -530,7 +598,7 @@ class ManifestStore:
 
         def drop_tmp(d: str) -> None:
             for f in _listdir(d):
-                if ".tmp-" in f and old_enough(os.path.join(d, f)):
+                if _is_tmp(f) and old_enough(os.path.join(d, f)):
                     drop(os.path.join(d, f), "tmp_files")
 
         # uncommitted blob dirs + stray tmp files inside committed ones
@@ -574,6 +642,8 @@ class ManifestStore:
                     stats["bytes_reclaimed"] += os.path.getsize(side)
                     os.unlink(side)
         drop_tmp(self.snapshot_dir)
+        for d in ("refs", "rewrites", "namespaces"):
+            drop_tmp(os.path.join(self.root, d))
         return stats
 
 
@@ -590,16 +660,70 @@ def _listdir(d: str) -> list[str]:
         return []
 
 
-def _write_file(final: str, data: "bytes | pa.Table") -> None:
+def _write_file(final: str, data: "bytes | pa.Table", durable: bool = False) -> None:
     """Write ``data`` (bytes, or a table as parquet) through a ``.tmp-``
-    sibling and an atomic rename: no reader ever sees a partial file."""
+    sibling and an atomic rename: no reader ever sees a partial file.
+    ``durable`` fsyncs the bytes before the rename."""
     tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
     if isinstance(data, pa.Table):
         pq.write_table(data, tmp)
     else:
         with open(tmp, "wb") as f:
             f.write(data)
+            if durable:
+                f.flush()
+                os.fsync(f.fileno())
     os.replace(tmp, final)
+
+
+def _claim_file(final: str, data: bytes) -> bytes | None:
+    """Create ``final`` holding ``data`` iff no file is there: write and
+    fsync a ``.tmp-`` sibling, then hardlink it, which fails iff ``final``
+    exists, so the file appears WITH its content. None when this call
+    created it, else the content already there. An empty ``final`` (a
+    crash between create and write in an older protocol) was never owned:
+    it is unlinked and the link retried, so two racing claimers cannot
+    both adopt it."""
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    for _ in range(4):
+        tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
+        with open(tmp, "wb") as f:
+            f.write(data)
+            f.flush()
+            os.fsync(f.fileno())
+        try:
+            os.link(tmp, final)
+            return None
+        except FileExistsError:
+            pass
+        finally:
+            os.unlink(tmp)
+        try:
+            with open(final, "rb") as f:
+                existing = f.read()
+        except FileNotFoundError:
+            continue  # a racing claimer unlinked it: retry the link
+        if existing:
+            return existing
+        _remove(final)
+    raise RuntimeError(f"could not claim {final} after repeated empty-file races")
+
+
+def _record_bytes(rec: dict) -> bytes:
+    return json.dumps(rec, sort_keys=True).encode()
+
+
+def _read_json(path: str):
+    with open(path) as f:
+        return json.load(f)
+
+
+def _is_tmp(name: str) -> bool:
+    """Whether ``name`` is an unfinished write's ``.tmp-`` sibling. Final
+    names end in ``.bin``, ``.parquet`` or ``.json`` (or are ``ns_<n>``),
+    which a ``.tmp-`` suffix never does, so a column or ref whose name
+    holds ``.tmp-`` is still a live file."""
+    return ".tmp-" in name and not name.endswith((".bin", ".parquet", ".json"))
 
 
 def _remove(path: str) -> bool:
@@ -635,52 +759,13 @@ def link_file(src: str, dst: str) -> None:
 def claim_namespace(store_root: str, namespace: int, digest_hex: str) -> None:
     """Loud cross-batch aliasing guard: even a (47-bit) namespace collision
     can never silently drop rows — the namespace is claimed with the FULL
-    256-bit batch fingerprint via an O_EXCL marker; a different batch landing
-    on a claimed namespace fails here instead of being anti-joined away,
-    while an identical replayed batch (crash recovery) matches and proceeds
-    to its normal resume skip."""
-    d = os.path.join(store_root, "namespaces")
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, f"ns_{namespace}")
-    # Write-then-hardlink: the marker appears atomically WITH its digest.
-    # (An O_EXCL create followed by a write can crash in between, leaving an
-    # empty marker that would permanently reject replays of the same batch.)
-    existing = None
-    for _ in range(4):
-        tmp = os.path.join(d, f".tmp-{namespace}-{os.getpid()}-{digest_hex[:8]}")
-        with open(tmp, "w") as f:
-            f.write(digest_hex)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, path)  # atomic claim: fails iff the marker exists
-            return
-        except FileExistsError:
-            pass
-        finally:
-            os.unlink(tmp)
-        try:
-            with open(path) as f:
-                existing = f.read()
-        except FileNotFoundError:
-            continue  # a racing adopter unlinked it — retry the atomic claim
-        if existing != "":
-            break
-        # Partial marker from a pre-fix crash window: no batch ever owned it
-        # (the digest never landed). Unlink it and RETRY the atomic link —
-        # an unconditional rewrite here would let two concurrent batches
-        # both adopt the namespace; with unlink+link exactly one wins and
-        # the loser falls through to the digest comparison below.
-        try:
-            os.unlink(path)
-        except FileNotFoundError:
-            pass
-    else:
-        raise RuntimeError(
-            f"claim_namespace: could not claim namespace {namespace} in "
-            f"{store_root} after repeated empty-marker races"
-        )
-    if existing != digest_hex:
+    256-bit batch fingerprint (:func:`_claim_file`); a different batch
+    landing on a claimed namespace fails here instead of being anti-joined
+    away, while an identical replayed batch (crash recovery) matches and
+    proceeds to its normal resume skip."""
+    path = os.path.join(store_root, "namespaces", f"ns_{namespace}")
+    existing = (_claim_file(path, digest_hex.encode()) or b"").decode()
+    if existing and existing != digest_hex:
         raise RuntimeError(
             f"pid namespace collision in {store_root}: namespace {namespace} "
             f"was claimed by a different batch (fingerprint {existing[:16]}… "

@@ -102,7 +102,7 @@ class _PidReads:
     task_slots: int | None = None
 
     def _init_read(self, options, schema_cols: list[str]) -> None:
-        from ..operators.decode import _arrow_target_type, column_metas, schema_of
+        from ..operators.decode import _arrow_type, column_metas, schema_of
         from ..plans.manifest import ManifestStore
 
         self.root = options.get("path")
@@ -112,7 +112,7 @@ class _PidReads:
         store.check_format()
         metas = column_metas(store, schema_cols)
         self.cols, _ddl, self.casts = schema_of(metas, schema_cols)
-        self.types = {c: _arrow_target_type(m) for c, m in metas.items()}
+        self.types = {c: _arrow_type(m, target=True) for c, m in metas.items()}
         self.predicates: list[tuple] = []
 
     def read(self, partition):

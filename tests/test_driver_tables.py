@@ -110,7 +110,7 @@ def _job_group(spark, name):
 
 
 def test_encode_table_job_count(spark, tmp_path):
-    """Jobs of one multi-bucket ``encode_table(...).collect()``: three for
+    """Jobs of one multi-bucket ``encode_table(...).collect()``: two for
     the sizing aggregation's limited collect, the codec-sample job on the
     helper thread, one for the scan that feeds the pid shuffle and one for
     the encode stage. When a Python list carried the salt table, every
@@ -122,7 +122,7 @@ def test_encode_table_job_count(spark, tmp_path):
     root = str(tmp_path / "packed")
     with _job_group(spark, "encode-packed") as jobs:
         n_pids = len({r["pid"] for r in _encode(df, root, 64 << 10).collect()})
-        assert jobs() == 6
+        assert jobs() == 5
     assert n_pids > 1
     # resumed after two pids lost their markers: the broadcast of the
     # committed pids adds one JVM job
@@ -130,12 +130,12 @@ def test_encode_table_job_count(spark, tmp_path):
         ManifestStore(root).retire_partition(pid)
     with _job_group(spark, "encode-resumed") as jobs:
         assert len({r["pid"] for r in _encode(df, root, 64 << 10).collect()}) == 2
-        assert jobs() == 7
+        assert jobs() == 6
     # at a 4 KB target every group salts: the Arrow salt table's broadcast
     # is a JVM job of its own
     with _job_group(spark, "encode-salted") as jobs:
         _encode(df, str(tmp_path / "salted"), 4 << 10).collect()
-        assert jobs() == 7
+        assert jobs() == 6
 
 
 def test_codec_sample_job_joins_the_callers_job_group(spark, tmp_path, monkeypatch):
@@ -160,7 +160,7 @@ def test_codec_sample_job_joins_the_callers_job_group(spark, tmp_path, monkeypat
 
 def test_encode_resumed_over_a_committed_namespace_runs_no_scan(spark, tmp_path):
     """Every pid of the namespace already committed: the resumed encode
-    runs only its planning jobs (three for the sizing, the codec sample)
+    runs only its planning jobs (two for the sizing, the codec sample)
     and returns an empty summary without touching the store."""
     df = _frame(spark)
     root = str(tmp_path / "store")
@@ -173,10 +173,10 @@ def test_encode_resumed_over_a_committed_namespace_runs_no_scan(spark, tmp_path)
     versions = store.versions()
     with _job_group(spark, "encode-done") as jobs:
         summary = _encode(df, root, 64 << 10)
-        assert jobs() == 4
+        assert jobs() == 3
         assert summary.schema == DataType.fromDDL(SUMMARY_SCHEMA)
         assert summary.collect() == []
-        assert jobs() == 4
+        assert jobs() == 3
     assert store.committed_pids() == pids
     assert store.versions() == versions
 

@@ -2,6 +2,7 @@
 
 import json
 import os
+import re
 
 import pyarrow.parquet as pq
 
@@ -139,10 +140,20 @@ def test_failed_read_of_missing_root_creates_nothing(tmp_path):
     assert not os.path.exists(typo)
 
 
-# Store-layout literals: only plans/manifest.py may name a store file.
+# Store-layout literals: only plans/manifest.py may name a store file. The
+# directory names are quoted so that ``refs_table`` or ``from .refs`` do
+# not match.
 _LAYOUT_LITERALS = (
     "store_config.json", "snap-", "_committed_", "part-", ".deletes.json",
     "_marker_path", "_delete_marker_path",
+    '"refs"', '"rewrites"', '"namespaces"', '"rw-', '"ns_',
+)
+
+# File-system calls: only plans/manifest.py may open, list, link, rename
+# or remove a file.
+_FILE_CALLS = re.compile(
+    r"\bos\.(path\.(exists|isdir|isfile|getsize|getmtime)|listdir|scandir|walk|makedirs|"
+    r"link|unlink|remove|replace|rename|fsync)\b|\bshutil\.|(?<![.\w])open\("
 )
 
 
@@ -164,7 +175,86 @@ def test_store_layout_has_one_owner():
                         f"{os.path.relpath(path, pkg)}:{n}: {lit}"
                         for lit in _LAYOUT_LITERALS if lit in line
                     ]
+                    if _FILE_CALLS.search(line):
+                        offenders.append(f"{os.path.relpath(path, pkg)}:{n}: {line.strip()}")
     assert offenders == []
+
+
+def _tiny_store(root):
+    store = ManifestStore(root)
+    store.ensure_config({"format": FORMAT_VERSION})
+    store.write_partition(1, [_row(1)], {"c": b"one"})
+    store.write_snapshot()
+    return store
+
+
+def test_ref_rewrite_and_namespace_records_keep_their_bytes(tmp_path):
+    """The records under refs/, rewrites/ and namespaces/ are the bytes
+    earlier engine versions wrote, so their stores stay readable."""
+    from parzig_spark.operators.refs import create_ref, update_ref
+    from parzig_spark.plans.manifest import claim_namespace
+
+    root = str(tmp_path)
+    store = _tiny_store(root)
+    create_ref(root, "v1")
+    create_ref(root, "prod", kind="branch")
+    update_ref(root, "prod", 0)
+    store.write_rewrite_record({"groups": [{"dst": 5, "src": [1, 2]}], "purged_ops": ["op1"]})
+    claim_namespace(root, 777, "c" * 64)
+
+    def files(d):
+        return {
+            f: open(os.path.join(root, d, f), "rb").read()
+            for f in os.listdir(os.path.join(root, d))
+        }
+
+    assert files("refs") == {
+        "v1.json": b'{"kind": "tag", "name": "v1", "snapshot": 0}',
+        "prod.json": b'{"kind": "branch", "name": "prod", "snapshot": 0}',
+    }
+    assert files("rewrites") == {
+        "rw-eb6db5228c40640e.json":
+            b'{"groups": [{"dst": 5, "src": [1, 2]}], "purged_ops": ["op1"]}',
+    }
+    assert files("namespaces") == {"ns_777": b"c" * 64}
+
+
+def test_killed_ref_rewrite_and_claim_writes_leave_reclaimable_litter(tmp_path):
+    """A write killed between its tmp file and the rename or link leaves a
+    ``.tmp-`` file in refs/, rewrites/ or namespaces/: readers ignore it,
+    and gc reclaims it — but never a live record whose name holds
+    ``.tmp-``."""
+    from parzig_spark.operators.compact import gc_store
+    from parzig_spark.operators.refs import create_ref, list_refs
+    from parzig_spark.plans.manifest import claim_namespace
+
+    root = str(tmp_path)
+    store = _tiny_store(root)
+    tag = create_ref(root, "v1")
+    odd = create_ref(root, "a.tmp-b", kind="branch")
+    rec = {"groups": [{"dst": 5, "src": [1, 2]}], "purged_ops": []}
+    store.write_rewrite_record(rec)
+    claim_namespace(root, 777, "c" * 64)
+    litter = {
+        "refs": [".tmp-v2-0123abcd", "v1.json.tmp-0123abcd"],
+        "rewrites": ["rw-0123456789abcdef.json.tmp-4242"],
+        "namespaces": [".tmp-778-4242-dddddddd", "ns_778.tmp-0123abcd"],
+    }
+    for d, names in litter.items():
+        for f in names:
+            with open(os.path.join(root, d, f), "w") as fh:
+                fh.write('{"name": "x", "kind": "tag", "snapshot": 0}')
+
+    assert list_refs(root) == [odd, tag]
+    assert store.rewrite_records() == [rec]
+    claim_namespace(root, 778, "d" * 64)  # the litter claims nothing
+    claim_namespace(root, 777, "c" * 64)
+
+    assert gc_store(root, min_age_s=0)["tmp_files"] == 5
+    assert sorted(os.listdir(os.path.join(root, "refs"))) == ["a.tmp-b.json", "v1.json"]
+    assert os.listdir(os.path.join(root, "rewrites")) == ["rw-6eb154b40841f4e8.json"]
+    assert sorted(os.listdir(os.path.join(root, "namespaces"))) == ["ns_777", "ns_778"]
+    assert list_refs(root) == [odd, tag]
 
 
 def _iceberg_on_classpath(spark) -> bool:
@@ -246,3 +336,40 @@ def test_iceberg_manifest_backend(spark, tmp_path):
         for r in spark.sql("SELECT DISTINCT pid FROM ice.db.parzig_manifests").collect()
     }
     assert got2 == {0, 1, 2}
+
+
+def test_racing_claims_have_one_winner(tmp_path):
+    """Claimers racing on one name agree on one winner: every other claim
+    returns the winner's bytes, and no ``.tmp-`` file is left."""
+    import sys
+    import threading
+
+    from parzig_spark.plans.manifest import _claim_file
+
+    path = str(tmp_path / "namespaces" / "ns_1")
+    n = 16
+    results = {}
+    start = threading.Barrier(n)
+
+    def claim(i):
+        start.wait(timeout=30)
+        results[i] = _claim_file(path, b"%d" % i)
+
+    threads = [threading.Thread(target=claim, args=(i,)) for i in range(n)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and len(results) == n
+    winners = [i for i, r in results.items() if r is None]
+    assert len(winners) == 1
+    with open(path, "rb") as f:
+        content = f.read()
+    assert content == b"%d" % winners[0]
+    assert all(r == content for r in results.values() if r is not None)
+    assert os.listdir(os.path.dirname(path)) == ["ns_1"]

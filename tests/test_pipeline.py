@@ -1191,3 +1191,84 @@ def test_in_list_pruning_all_levels(spark, tmp_path):
     assert page_may([5, 17_000]) is True
     assert page_may([9_000, 17_000]) is False
     assert page_may([]) is False  # empty -> excluded
+
+
+def test_decoded_schema_of_every_token(spark, tmp_path):
+    """The Spark DDL and the post-decode Arrow casts of a store holding
+    every token the encoder accepts, including the Arrow-only types Spark
+    widens and nested children, are the ones the hand-written token
+    tables gave before the Spark type came from ``from_arrow_type``."""
+    import json
+
+    import numpy as np
+    from pyspark.sql.types import DataType
+
+    from parzig_spark.codecs import encode_column
+    from parzig_spark.operators.decode import decoded_schema
+    from parzig_spark.plans.manifest import FORMAT_VERSION
+
+    units = ("s", "ms", "us", "ns")
+    cols = {
+        "b": pa.array([True, False, None]),
+        "i8": pa.array([1, -2, 3], pa.int8()),
+        "i16": pa.array([1, -2, 3], pa.int16()),
+        "i32": pa.array([1, -2, 3], pa.int32()),
+        "i64": pa.array([1, -2, 3], pa.int64()),
+        "u8": pa.array([0, 255, 7], pa.uint8()),
+        "u16": pa.array([0, 65535, 7], pa.uint16()),
+        "u32": pa.array([0, 2**32 - 1, 7], pa.uint32()),
+        "u64": pa.array([0, 2**64 - 1, 7], pa.uint64()),
+        "f16": pa.array(np.array([1.5, -2.0, 0.25], np.float16)),
+        "f32": pa.array([1.5, -2.0, 0.25], pa.float32()),
+        "f64": pa.array([1.5, -2.0, 0.25], pa.float64()),
+        "d32": pa.array([0, 1, 2], pa.date32()),
+        "d64": pa.array([0, 86400000, 2 * 86400000], pa.date64()),
+        "t32": pa.array([0, 1, 86399999], pa.time32("ms")),
+        "t64us": pa.array([0, 1, 2], pa.time64("us")),
+        "t64ns": pa.array([0, 1, 2], pa.time64("ns")),
+        **{f"ts_{u}": pa.array([0, 1, 2], pa.timestamp(u)) for u in units},
+        **{f"tz_{u}": pa.array([0, 1, 2], pa.timestamp(u, "UTC")) for u in units},
+        "s": pa.array(["a", "b", None]),
+        "ls": pa.array(["a", "b", None], pa.large_string()),
+        "bin": pa.array([b"a", b"b", None]),
+        "lbin": pa.array([b"a", b"b", None], pa.large_binary()),
+        "fx": pa.array([b"ab", b"cd", b"ef"], pa.binary(2)),
+        "dec": pa.array([1, 2, 3], pa.decimal128(12, 2)),
+        "lst": pa.array([[1], [], [2, 3]], pa.list_(pa.uint16())),
+        "llst": pa.array([[1], [], [2, 3]], pa.large_list(pa.timestamp("ms"))),
+        "mp": pa.array([{"x": 1}, {}, {"y": 2}], pa.map_(pa.string(), pa.uint64())),
+        "st": pa.array(
+            [{"a": 1, "b": "x"}, {"a": 2, "b": "y"}, {"a": 3, "b": None}],
+            pa.struct([("a", pa.uint32()), ("b", pa.string())]),
+        ),
+    }
+    store = ManifestStore(str(tmp_path / "tokens"))
+    store.ensure_config({"format": FORMAT_VERSION})
+    rows, blobs = [], {}
+    for name, arr in cols.items():
+        blobs[name], meta = encode_column(arr, "plain")
+        rows.append({"pid": 0, "column": name, "codec": meta["codec"], "meta_json": json.dumps(meta)})
+    store.write_partition(0, rows, blobs)
+
+    names, ddl, casts = decoded_schema(store)
+    assert names == list(cols)
+    expected_ddl = (
+        "b boolean, i8 tinyint, i16 smallint, i32 int, i64 long, u8 smallint, "
+        "u16 int, u32 long, u64 decimal(20,0), f16 float, f32 float, f64 double, "
+        "d32 date, d64 date, t32 int, t64us long, t64ns long, ts_s timestamp, "
+        "ts_ms timestamp, ts_us timestamp, ts_ns timestamp, tz_s timestamp, "
+        "tz_ms timestamp, tz_us timestamp, tz_ns timestamp, s string, ls string, "
+        "bin binary, lbin binary, fx binary, dec decimal(12,2), lst array<int>, "
+        "llst array<timestamp>, mp map<string,decimal(20,0)>, st struct<a:long,b:string>"
+    )
+    assert DataType.fromDDL(ddl) == DataType.fromDDL(expected_ddl)
+    assert {c: str(t) for c, t in casts.items()} == {
+        "u8": "int16", "u16": "int32", "u32": "int64", "u64": "decimal128(20, 0)",
+        "f16": "float", "d64": "date32[day]", "t32": "int32", "t64us": "int64",
+        "t64ns": "int64", "ts_s": "timestamp[us]", "ts_ms": "timestamp[us]",
+        "ts_ns": "timestamp[us]", "tz_s": "timestamp[us, tz=UTC]",
+        "tz_ms": "timestamp[us, tz=UTC]", "tz_ns": "timestamp[us, tz=UTC]",
+        "fx": "binary", "lst": "list<item: int32>",
+        "llst": "large_list<item: timestamp[us]>",
+        "mp": "map<string, decimal128(20, 0)>", "st": "struct<a: int64, b: string>",
+    }
